@@ -19,10 +19,13 @@ import org.apache.spark.sql.types._
   * per-column min/max) built from parquet FOOTERS only — column-chunk
   * statistics are already in every footer, so building the index costs
   * O(files) KB-sized footer reads distributed over the cluster, never a
-  * data scan. Query time, the stats table prunes to the files whose
-  * [min,max] interval intersects the predicate and reads only those,
-  * with the predicate re-applied as a residual filter (pruning is
-  * file-granular; correctness never depends on it).
+  * data scan. Every consumer reads the written index on the DRIVER
+  * ([[readIndex]]: parquet-hadoop in-process, no Spark job, no schema
+  * inference — the index is ~150 bytes per data file and immutable
+  * once written). Query time, a driver-side filter over its rows prunes
+  * to the files whose [min,max] interval intersects the predicate and
+  * only those are read, with the predicate re-applied as a residual
+  * filter (pruning is file-granular; correctness never depends on it).
   *
   * This is exactly the mechanism behind lakehouse "data skipping"
   * (Delta/Iceberg file stats, Snowflake micro-partition pruning): on a
@@ -37,6 +40,81 @@ object SkippingIndex {
     * survived the interval test.
     */
   final case class Prune(filesTotal: Int, filesKept: Int, kept: Seq[String])
+
+  /** A written stats index, read on the driver: its schema and rows (one
+    * per data file, `file` first). `covered` is the one coverage test
+    * every consumer applies — name AND type, so a long consumer never
+    * numerically compares a string index (or the reverse).
+    */
+  final case class StatsIndex(schema: StructType, rows: IndexedSeq[Row]) {
+    def covered(column: String, dt: DataType): Boolean =
+      Seq(s"${column}_min", s"${column}_max").forall(n =>
+        schema.fields.exists(f => f.name == n && f.dataType == dt))
+
+    /** The rows as a local relation: collecting or broadcasting it runs
+      * no job. */
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** Read the stats index written at `path` on the driver — parquet-hadoop
+    * record reads of its part files, no Spark job and no schema inference
+    * (`spark.read.parquet` would run a footer job to infer the schema,
+    * then one per action, to fetch a few KB). None when nothing is
+    * there. Index columns are strings and longs ([[statsSchemaOf]]).
+    */
+  def readIndex(spark: SparkSession, path: String): Option[StatsIndex] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.io.ColumnIOFactory
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val parts =
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.map(_.getPath)
+        .filter(p => p.getName.endsWith(".parquet") &&
+          !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .sortBy(_.getName)
+    var schema: StructType = null
+    val rows = IndexedSeq.newBuilder[Row]
+    parts.foreach { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try {
+        val msg = reader.getFooter.getFileMetaData.getSchema
+        val types = msg.getFields.asScala.map { f =>
+          f.asPrimitiveType.getPrimitiveTypeName match {
+            case PrimitiveTypeName.INT64 => LongType
+            case PrimitiveTypeName.BINARY => StringType
+            case other => throw new IllegalArgumentException(
+              s"stats index $path: column ${f.getName} has unsupported type $other")
+          }
+        }.toIndexedSeq
+        if (schema == null) schema = StructType(msg.getFields.asScala.zip(types)
+          .map { case (f, t) => StructField(f.getName, t, nullable = true) }.toSeq)
+        require(schema.head.name == "file" && schema.head.dataType == StringType,
+          s"stats index $path: first column must be the string `file`")
+        val io = new ColumnIOFactory().getColumnIO(msg)
+        var store = reader.readNextRowGroup()
+        while (store != null) {
+          val records = io.getRecordReader(store, new GroupRecordConverter(msg))
+          var i = 0L
+          while (i < store.getRowCount) {
+            val g: Group = records.read()
+            rows += Row.fromSeq(types.indices.map { c =>
+              if (g.getFieldRepetitionCount(c) == 0) null
+              else if (types(c) == LongType) g.getLong(c, 0)
+              else g.getString(c, 0)
+            })
+            i += 1
+          }
+          store = reader.readNextRowGroup()
+        }
+      } finally reader.close()
+    }
+    Option(schema).map(StatsIndex(_, rows.result()))
+  }
 
   private def statsSchema(cols: Seq[String]): StructType =
     statsSchemaOf(cols, "long")
@@ -316,20 +394,28 @@ object SkippingIndex {
 
   /** Evaluate the interval test over the stats table: keep files whose
     * [min,max] on `column` intersects [lo, hi], plus files with NULL
-    * stats (unknown ⇒ cannot skip). The collect is the FILE LIST — the
+    * stats (unknown ⇒ cannot skip). A driver-side filter over the index
+    * read by [[readIndex]] — zero Spark jobs; the index rows are the
     * same driver-side footprint every file index (Spark's own
-    * InMemoryFileIndex, a Delta snapshot) carries; data rows never leave
-    * the executors.
+    * InMemoryFileIndex, a Delta snapshot) carries.
     */
   def prune(spark: SparkSession, statsPath: String, column: String,
+      lo: Long, hi: Long): Prune =
+    prune(readIndex(spark, statsPath).getOrElse(
+      throw new IllegalArgumentException(s"no stats index at $statsPath")),
+      column, lo, hi)
+
+  /** [[prune]] over an index already on the driver. */
+  private[operators] def prune(index: StatsIndex, column: String,
       lo: Long, hi: Long): Prune = {
-    val stats = spark.read.parquet(statsPath)
-    val total = stats.count().toInt
-    val kept = stats.filter(
-        col(s"${column}_min").isNull || col(s"${column}_max").isNull ||
-        (col(s"${column}_min") <= hi && col(s"${column}_max") >= lo))
-      .select("file").collect().map(_.getString(0)).sorted.toSeq
-    Prune(total, kept.length, kept)
+    require(index.covered(column, LongType),
+      s"stats index has no long min/max for $column")
+    val (iMin, iMax) = (index.schema.fieldIndex(s"${column}_min"),
+      index.schema.fieldIndex(s"${column}_max"))
+    val kept = index.rows.filter(r => r.isNullAt(iMin) || r.isNullAt(iMax) ||
+        (r.getLong(iMin) <= hi && r.getLong(iMax) >= lo))
+      .map(_.getString(0)).sorted
+    Prune(index.rows.length, kept.length, kept)
   }
 
   /** Read only the files the stats table cannot rule out for
@@ -427,12 +513,14 @@ object SkippingIndex {
     *    exactly the full-sort page whatever the stats said; pruning is
     *    an I/O bound, never a semantics change.
     *
-    * The stats stay DISTRIBUTED: the walk sorts the stats frame once
-    * into executor memory ([[StatsSource]]) and each page pulls only
-    * the few candidate rows it actually walks (`toLocalIterator` over
-    * the sorted cache), so driver residency is O(files-walked), never
-    * O(table files) — at millions of files a full per-walk collect
-    * would re-pull ~100 MB of stats per walk. A cursor provably past
+    * Footer-built stats stay DISTRIBUTED: the walk sorts the stats frame
+    * once into executor memory ([[StatsSource]]) and each page pulls
+    * only the few candidate rows it actually walks (`toLocalIterator`
+    * over the sorted cache), so driver residency is O(files-walked),
+    * never O(table files) — at millions of files a full per-walk
+    * collect would re-pull ~100 MB of stats per walk. An ATTACHED index
+    * is read whole on the driver ([[readIndex]], O(table files) rows)
+    * and walked from there without a job. A cursor provably past
     * the data returns the correctly-empty page from the stats alone —
     * an empty relation, no table scan. Build via
     * [[SkippingIndex.keysetWalk]] (attached-stats dirs) or
@@ -724,28 +812,14 @@ object SkippingIndex {
     * read, nothing written).
     */
   def keysetWalk(spark: SparkSession, dir: String, column: String): KeysetWalk = {
-    val statsPath = new Path(statsPathFor(dir))
     // coverage includes the stats TYPE: a stats table attached for the
     // same column via statsRowsString passes the name check but would
     // ClassCastException inside the walk — a non-long index falls back
     // to the footer build, which throws its own clear error when the
     // column genuinely isn't INT32/INT64
-    val covered = statsPath
-      .getFileSystem(spark.sessionState.newHadoopConf()).exists(statsPath) && {
-        val s = spark.read.parquet(statsPath.toString)
-        s.columns.contains(s"${column}_min") && s.columns.contains(s"${column}_max") &&
-          s.schema(s"${column}_min").dataType == LongType
-      }
-    val df =
-      if (covered) spark.read.parquet(statsPath.toString)
-      else {
-        val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-        val files = fs.listStatus(new Path(dir))
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toString).sorted.toSeq
-        require(files.nonEmpty, s"no parquet files under $dir")
-        statsRows(spark, files, Seq(column))
-      }
+    val df = readIndex(spark, statsPathFor(dir)).filter(_.covered(column, LongType))
+      .map(_.frame(spark))
+      .getOrElse(statsRows(spark, listParquet(spark, dir), Seq(column)))
     keysetWalkFromStats(spark, df, column)
   }
 
@@ -761,16 +835,9 @@ object SkippingIndex {
     */
   def keysetWalkString(spark: SparkSession, dir: String,
       column: String): TypedKeysetWalk[String] = {
-    val statsPath = new Path(statsPathFor(dir))
-    val covered = statsPath
-      .getFileSystem(spark.sessionState.newHadoopConf()).exists(statsPath) && {
-        val s = spark.read.parquet(statsPath.toString)
-        s.columns.contains(s"${column}_min") && s.columns.contains(s"${column}_max") &&
-          s.schema(s"${column}_min").dataType == StringType
-      }
-    val df =
-      if (covered) spark.read.parquet(statsPath.toString)
-      else statsRowsString(spark, listParquet(spark, dir), Seq(column))
+    val df = readIndex(spark, statsPathFor(dir)).filter(_.covered(column, StringType))
+      .map(_.frame(spark))
+      .getOrElse(statsRowsString(spark, listParquet(spark, dir), Seq(column)))
     keysetWalkStringFromStats(spark, df, column)
   }
 
@@ -894,26 +961,13 @@ object SkippingIndex {
     */
   def scanBetween(spark: SparkSession, dir: String, column: String,
       lo: Long, hi: Long): (DataFrame, Option[Prune]) = {
-    val statsPath = new Path(statsPathFor(dir))
-    val hasStats = statsPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(statsPath)
     // covered includes the stats TYPE: long bounds against a string
     // index (attachStatsString for the same column name) must fall back
     // to the plain scan, not numerically compare strings
-    val covered = hasStats && {
-      val s = spark.read.parquet(statsPath.toString)
-      s.columns.contains(s"${column}_min") && s.columns.contains(s"${column}_max") &&
-        s.schema(s"${column}_min").dataType == LongType
-    }
-    if (!covered)
-      (spark.read.parquet(dir).filter(col(column).between(lo, hi)), None)
-    else {
-      val p = prune(spark, statsPath.toString, column, lo, hi)
-      if (p.filesKept == 0)
-        (spark.read.parquet(dir).filter(col(column).between(lo, hi)), Some(p))
-      else
-        (spark.read.parquet(p.kept: _*).filter(col(column).between(lo, hi)), Some(p))
-    }
+    val p = readIndex(spark, statsPathFor(dir)).filter(_.covered(column, LongType))
+      .map(prune(_, column, lo, hi))
+    val files = p.filter(_.filesKept > 0).fold(Seq(dir))(_.kept)
+    (spark.read.parquet(files: _*).filter(col(column).between(lo, hi)), p)
   }
 
   // ---------------------------------------------------------------------

@@ -1,9 +1,11 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Versioned snapshot table: the manifest layer that unifies
   * [[Upsert]] (CDC merge), [[Layout]] (compaction) and [[SkippingIndex]]
@@ -310,13 +312,20 @@ object SnapshotTable {
     * COLUMN serve NULL for the columns they predate (by-name resolution
     * — no mergeSchema footer sweep needed at plan time).
     */
-  def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
-    val fl = files(spark, dir, version)
+  def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame =
+    readFiles(spark, dir, version, files(spark, dir, version))
+
+  /** `fl` (files of `version`) read under the version's committed schema:
+    * no footer inference, and a subset of the files sees exactly the
+    * columns a full [[read]] does — a dropped column stays dropped, an
+    * added one is NULL on files that predate it.
+    */
+  private def readFiles(spark: SparkSession, dir: String, version: Option[Long],
+      fl: Seq[String]): DataFrame =
     schemaOf(spark, dir, version) match {
       case Some(s) => spark.read.schema(s).parquet(fl: _*)
       case None => spark.read.parquet(fl: _*)
     }
-  }
 
   private def nonce(): String = java.util.UUID.randomUUID.toString.take(8)
 
@@ -446,8 +455,12 @@ object SnapshotTable {
   /** File-pruned latest-wins MERGE of `changes` (tombstones honored via
     * `deleteCol`) into the current version, committed as version n+1:
     *
-    *  1. per-file [min,max] of `keyCol` from footers only
-    *     ([[SkippingIndex.statsRows]]);
+    *  1. per-file [min,max] of `keyCol`: carried in the manifest's
+    *     `#stats:` headers, else taken from the version's attached stats
+    *     index (read on the driver, no job), else footer-scanned
+    *     ([[SkippingIndex.statsRows]], one job) — a table whose index is
+    *     refreshed per commit ([[attachStatsIncremental]]) reads no
+    *     footer here;
     *  2. a file is AFFECTED iff some change key falls inside its range
     *     (stats × distinct-keys broadcast range join; files with no
     *     stats are conservatively affected);
@@ -529,9 +542,9 @@ object SnapshotTable {
       // and stream the change keys through, so the file selection scales
       // with changes, not files × keys; distinct file paths are the
       // collected FILE LIST (the standard driver-side index footprint).
-      // Since the carried-stats redesign the stats side is a LOCAL
-      // relation (manifest-carried entries + the lazily footer-scanned
-      // remainder), so the broadcast costs no job of its own.
+      // The stats side is a LOCAL relation (manifest-carried entries,
+      // the version's index rows, the footer-scanned remainder), so the
+      // broadcast costs no job of its own.
       def pruneWith(stats: DataFrame, keys: DataFrame): Set[String] =
         keys.join(broadcast(stats),
             col("kmin").isNull || col("kmax").isNull ||
@@ -580,11 +593,17 @@ object SnapshotTable {
       val (affected, keyStats) =
         if (statKind.isEmpty) (live.toSet, Map.empty[String, ManifestStat])
         else try {
-          // footer-scan ONLY the files no earlier commit scanned — in
-          // steady state the previous commit's new files, O(batch) not
-          // O(table); carried entries are verbatim prior footer folds of
-          // these immutable files, so the prune decision is identical
-          val unknown = live.filterNot(f => carriedKey.get(f).exists(_.known))
+          // footer-scan ONLY the files neither an earlier commit nor the
+          // version's index covers — without an index the previous
+          // commit's new files, O(batch) not O(table); with one refreshed
+          // per commit, none. Carried entries and index rows are verbatim
+          // prior footer folds of these immutable files, so the prune
+          // decision is identical
+          val uncarried = live.filterNot(f => carriedKey.get(f).exists(_.known))
+          val indexed =
+            if (uncarried.isEmpty) Map.empty[String, ManifestStat]
+            else indexedKeyStats(spark, dir, v, keyCol, statKind.get, uncarried.toSet)
+          val unknown = uncarried.filterNot(indexed.contains)
           pruneStatsScanned.addAndGet(unknown.length.toLong)
           val scanned: Map[String, ManifestStat] =
             if (unknown.isEmpty) Map.empty
@@ -596,7 +615,7 @@ object SnapshotTable {
                 if (r.isNullAt(4)) None else Some(r.getLong(4)),
                 Some(r.getLong(1)))
             }.toMap
-          val known = carriedKey ++ scanned
+          val known = carriedKey ++ indexed ++ scanned
           val vt: org.apache.spark.sql.types.DataType =
             if (statKind.contains("string")) org.apache.spark.sql.types.StringType
             else org.apache.spark.sql.types.LongType
@@ -666,7 +685,10 @@ object SnapshotTable {
   /** Rewrite the CURRENT version's rows into ~ceil(n/targetRecords)
     * bounded files ([[Layout.compact]]'s arithmetic), committed as a new
     * version. Readers pinned to older versions are untouched — their
-    * files are still on disk until [[vacuum]].
+    * files are still on disk until [[vacuum]]. `n` is the sum of the
+    * version's attached stats index `n_rows` (footer row counts, read on
+    * the driver) when that index lists exactly the live files; otherwise
+    * a count job over the version.
     *
     * `zOrderOn = Some((x, y, bits))` makes the rewrite a
     * [[Layout]] z-order CLUSTERING pass: files become contiguous Morton
@@ -694,7 +716,7 @@ object SnapshotTable {
       val v = currentVersion(spark, dir).getOrElse(
         throw new IllegalArgumentException(s"no table under $dir"))
       val df = read(spark, dir, Some(v))
-      val n = df.count()
+      val n = indexedRowCount(spark, dir, v).getOrElse(df.count())
       val nf = math.max(1L, (n + targetRecords - 1) / targetRecords).toInt
       val shaped = (zOrderOn, sortOn) match {
         case (Some((x, y, bits)), _) =>
@@ -940,6 +962,62 @@ object SnapshotTable {
   private def statsDir(dir: String, v: Long): String =
     s"$dir/stats/" + f"v$v%05d"
 
+  /** Key stats of the `wanted` files from version `v`'s attached index,
+    * when it covers `keyCol` with the type of the manifest stats `kind`
+    * (never `micros`: a long index holds the writer's raw timestamp
+    * unit). Index rows are footer folds of the same immutable files, so
+    * they equal what a footer scan returns; an unreadable index yields
+    * nothing (the caller footer-scans).
+    */
+  private def indexedKeyStats(spark: SparkSession, dir: String, v: Long,
+      keyCol: String, kind: String, wanted: Set[String]): Map[String, ManifestStat] = {
+    val dt = kind match {
+      case "long" => Some(LongType)
+      case "string" => Some(StringType)
+      case _ => None
+    }
+    val index =
+      try dt.flatMap(t => SkippingIndex.readIndex(spark, statsDir(dir, v))
+        .filter(_.covered(keyCol, t)))
+      catch { case scala.util.control.NonFatal(_) => None }
+    index.fold(Map.empty[String, ManifestStat]) { ix =>
+      val s = ix.schema
+      val (iRows, iMin, iMax) = (s.fieldIndex("n_rows"),
+        s.fieldIndex(s"${keyCol}_min"), s.fieldIndex(s"${keyCol}_max"))
+      val iNulls = Some(s"${keyCol}_nulls").filter(s.fieldNames.contains).map(s.fieldIndex)
+      ix.rows.filter(r => wanted.contains(r.getString(0)) && !r.isNullAt(iRows))
+        .map { r =>
+          def opt(i: Int): Option[Any] = if (r.isNullAt(i)) None else Some(r.get(i))
+          r.getString(0) -> ManifestStat(opt(iMin), opt(iMax),
+            iNulls.flatMap(opt).map(_.asInstanceOf[Long]), Some(r.getLong(iRows)))
+        }.toMap
+    }
+  }
+
+  /** Version `v`'s row count from its attached index (sum of `n_rows`),
+    * when the index lists exactly the version's live files. */
+  private def indexedRowCount(spark: SparkSession, dir: String, v: Long): Option[Long] = {
+    val live = files(spark, dir, Some(v)).toSet
+    val index =
+      try SkippingIndex.readIndex(spark, statsDir(dir, v))
+      catch { case scala.util.control.NonFatal(_) => None }
+    index.flatMap { ix =>
+      val iRows = ix.schema.fieldIndex("n_rows")
+      if (ix.rows.length == live.size && ix.rows.map(_.getString(0)).toSet == live &&
+          !ix.rows.exists(_.isNullAt(iRows))) Some(ix.rows.map(_.getLong(iRows)).sum)
+      else None
+    }
+  }
+
+  /** Write `rows` (already on the driver, [[SkippingIndex.statsRows]]'
+    * shape) as version `v`'s stats index: one local relation, one file,
+    * one job. Rows are sorted by file so rebuilds are deterministic.
+    */
+  private def writeIndex(spark: SparkSession, dir: String, v: Long,
+      rows: Seq[Row], schema: StructType): Unit =
+    spark.createDataFrame(rows.sortBy(_.getString(0)).asJava, schema)
+      .coalesce(1).write.mode("overwrite").parquet(statsDir(dir, v))
+
   /** Stats rows for `fl` over `cols` in [[SkippingIndex.statsRows]]'
     * shape, serving MANIFEST-CARRIED entries for every file all requested
     * columns know (verbatim prior footer folds of immutable files —
@@ -988,18 +1066,20 @@ object SnapshotTable {
     * index, because each snapshot is a different file set. Files whose
     * stats the manifest already carries (earlier upsert prunes over the
     * same immutable files) are served from it; only the rest pay a
-    * footer read.
+    * footer read (one distributed job), and the rows are written from the
+    * driver ([[writeIndex]], one job).
     */
   def attachStats(spark: SparkSession, dir: String, cols: Seq[String],
-      version: Option[Long] = None): Unit = {
+      version: Option[Long] = None): Unit =
+    attachStatsOf(spark, dir, cols, version, "long")
+
+  private def attachStatsOf(spark: SparkSession, dir: String, cols: Seq[String],
+      version: Option[Long], kind: String): Unit = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    // repartition(1), not coalesce(1): coalesce is a NARROW dependency,
-    // so it would collapse the distributed footer-parse stage itself to
-    // one task (every footer read serialized); the exchange keeps the
-    // parse parallel and only the KB-sized result lands in one writer
-    statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), cols, "long")
-      .repartition(1).write.mode("overwrite").parquet(statsDir(dir, v))
+    writeIndex(spark, dir, v,
+      statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), cols, kind).collect().toSeq,
+      SkippingIndex.statsSchemaOf(cols, kind))
   }
 
   /** Metadata-only SHALLOW CLONE: commit a NEW table at `dstDir` whose
@@ -1231,7 +1311,10 @@ object SnapshotTable {
     * per-commit footer cost is O(new files), never O(table files):
     * what keeps index maintenance flat as the table grows toward
     * millions of files, where re-reading every footer per commit would
-    * dominate the commit itself. Falls back to the full build when no
+    * dominate the commit itself. Older indexes are read on the driver
+    * ([[SkippingIndex.readIndex]]), so the refresh costs at most two
+    * jobs: the new files' footer scan and the write of reused + fresh
+    * rows as one local relation. Falls back to the full build when no
     * older version carries an index over the same columns. Returns
     * (reused, scanned) file counts — the maintenance-cost evidence the
     * spec asserts; the written index is row-identical to a full
@@ -1241,47 +1324,33 @@ object SnapshotTable {
       cols: Seq[String], version: Option[Long] = None): (Long, Long) = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    val f = fs(spark, dir)
-    val want = (Seq("file", "n_rows") ++
-      cols.flatMap(c => Seq(s"${c}_min", s"${c}_max", s"${c}_nulls"))).toSet
-    val prior = versions(spark, dir).filter(_ < v).reverse.find { pv =>
-      val sp = new Path(statsDir(dir, pv))
-      f.exists(sp) && (
-        try spark.read.parquet(sp.toString).columns.toSet == want
-        catch { case scala.util.control.NonFatal(_) => false })
-    }
+    val schema = SkippingIndex.statsSchemaOf(cols, "long")
+    def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
+    // same column set AND types: a string index over the same names
+    // must not seed a long one
+    val prior = versions(spark, dir).filter(_ < v).reverseIterator.map { pv =>
+      try SkippingIndex.readIndex(spark, statsDir(dir, pv))
+      catch { case scala.util.control.NonFatal(_) => None }
+    }.collectFirst { case Some(ix) if columns(ix.schema) == columns(schema) => ix }
     val live = files(spark, dir, Some(v))
     prior match {
       case None =>
         attachStats(spark, dir, cols, Some(v))
         (0L, live.length.toLong)
-      case Some(pv) =>
-        val prev = spark.read.parquet(statsDir(dir, pv))
-        // one row per file on both sides — index-sized, not data-sized
-        val prevFiles = prev.select("file").collect().map(_.getString(0)).toSet
+      case Some(prev) =>
+        val liveSet = live.toSet
+        val prevFiles = prev.rows.map(_.getString(0)).toSet
         val newFiles = live.filterNot(prevFiles.contains)
-        val liveDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(live.map(org.apache.spark.sql.Row(_)), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("file",
-              org.apache.spark.sql.types.StringType, nullable = false))))
-        val reused = prev.join(liveDf, "file")
+        // prior rows in this index's column order
+        val order = schema.fieldNames.map(prev.schema.fieldIndex)
+        val reused = prev.rows.filter(r => liveSet.contains(r.getString(0)))
+          .map(r => Row.fromSeq(order.map(r.get)))
+        // manifest-carried entries (earlier upsert prunes) cover part or
+        // all of the new files — footer-scan only the remainder
         val fresh =
-          if (newFiles.isEmpty) prev.limit(0)
-          // manifest-carried entries (earlier upsert prunes) cover part
-          // or all of the new files — footer-scan only the remainder
-          else statsRowsVia(spark, dir, v, newFiles, cols, "long")
-        // write via a temp dir: the union READS the prior index, which
-        // may BE the target dir when re-attaching the same version
-        val out = statsDir(dir, v)
-        val tmp = out + s".tmp_${nonce()}"
-        // repartition(1), not coalesce(1): keep the NEW files' footer
-        // parses parallel (coalesce would pull them into the one writer)
-        reused.unionByName(fresh).repartition(1)
-          .write.mode("overwrite").parquet(tmp)
-        f.delete(new Path(out), true)
-        require(f.rename(new Path(tmp), new Path(out)),
-          s"could not move stats index into place: $tmp -> $out")
+          if (newFiles.isEmpty) Seq.empty
+          else statsRowsVia(spark, dir, v, newFiles, cols, "long").collect().toSeq
+        writeIndex(spark, dir, v, reused ++ fresh, schema)
         ((live.length - newFiles.length).toLong, newFiles.length.toLong)
     }
   }
@@ -1438,31 +1507,27 @@ object SnapshotTable {
   /** Range scan of a pinned snapshot, consulting its attached stats
     * index automatically when present (file prune + residual filter —
     * [[SkippingIndex.scanBetween]]'s contract on a versioned file set).
-    * Results always equal the full-snapshot filter.
+    * The prune is a driver-side filter over the index and the kept files
+    * are read under the version's committed schema, so building the plan
+    * runs no Spark job and the result always equals the full-snapshot
+    * filter, columns included (after a DROP or ADD COLUMN too).
     */
   def scanBetween(spark: SparkSession, dir: String, column: String,
       lo: Long, hi: Long,
       version: Option[Long] = None): (DataFrame, Option[SkippingIndex.Prune]) = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    val sp = new Path(statsDir(dir, v))
-    val f = fs(spark, dir)
     // type-validated coverage, like SkippingIndex.scanBetween: long
     // bounds never compare against a string-typed attached index
-    val covered = f.exists(sp) && {
-      val s = spark.read.parquet(sp.toString)
-      s.columns.contains(s"${column}_min") && s.columns.contains(s"${column}_max") &&
-        s.schema(s"${column}_min").dataType ==
-          org.apache.spark.sql.types.LongType
-    }
-    if (!covered)
-      (read(spark, dir, Some(v)).filter(col(column).between(lo, hi)), None)
-    else {
-      val p = SkippingIndex.prune(spark, sp.toString, column, lo, hi)
-      if (p.filesKept == 0)
-        (read(spark, dir, Some(v)).filter(col(column).between(lo, hi)).limit(0), Some(p))
-      else
-        (spark.read.parquet(p.kept: _*).filter(col(column).between(lo, hi)), Some(p))
+    val p = SkippingIndex.readIndex(spark, statsDir(dir, v))
+      .filter(_.covered(column, LongType))
+      .map(SkippingIndex.prune(_, column, lo, hi))
+    val between = col(column).between(lo, hi)
+    p match {
+      case Some(pr) if pr.filesKept > 0 =>
+        (readFiles(spark, dir, Some(v), pr.kept).filter(between), p)
+      case Some(_) => (read(spark, dir, Some(v)).filter(between).limit(0), p)
+      case None => (read(spark, dir, Some(v)).filter(between), p)
     }
   }
 
@@ -1481,20 +1546,13 @@ object SnapshotTable {
       version: Option[Long] = None): SkippingIndex.KeysetWalk = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    val sp = new Path(statsDir(dir, v))
     // coverage includes the stats TYPE (LongType min/max): an index
     // attached for the same column with string stats falls back to the
     // footer build rather than ClassCastException inside the walk
-    val covered = fs(spark, dir).exists(sp) && {
-      val s = spark.read.parquet(sp.toString)
-      s.columns.contains(s"${column}_min") && s.columns.contains(s"${column}_max") &&
-        s.schema(s"${column}_min").dataType ==
-          org.apache.spark.sql.types.LongType
-    }
-    val df =
-      if (covered) spark.read.parquet(sp.toString)
-      else statsRowsVia(spark, dir, v, files(spark, dir, Some(v)),
-        Seq(column), "long")
+    val df = SkippingIndex.readIndex(spark, statsDir(dir, v))
+      .filter(_.covered(column, LongType)).map(_.frame(spark))
+      .getOrElse(statsRowsVia(spark, dir, v, files(spark, dir, Some(v)),
+        Seq(column), "long"))
     SkippingIndex.keysetWalkFromStats(spark, df, column)
   }
 
@@ -1504,14 +1562,8 @@ object SnapshotTable {
     * the column types decide which consumers engage).
     */
   def attachStatsString(spark: SparkSession, dir: String, cols: Seq[String],
-      version: Option[Long] = None): Unit = {
-    val v = version.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no table under $dir"))
-    // repartition(1), not coalesce(1) — same parallel-parse rationale
-    // as attachStats above; manifest-carried string stats served first
-    statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), cols, "string")
-      .repartition(1).write.mode("overwrite").parquet(statsDir(dir, v))
-  }
+      version: Option[Long] = None): Unit =
+    attachStatsOf(spark, dir, cols, version, "string")
 
   /** [[keysetWalk]] for a STRING-keyed clustered snapshot (string
     * doc_ids — the shape a real paging user hits first): per-file bounds
@@ -1525,17 +1577,10 @@ object SnapshotTable {
       version: Option[Long] = None): SkippingIndex.TypedKeysetWalk[String] = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    val sp = new Path(statsDir(dir, v))
-    val covered = fs(spark, dir).exists(sp) && {
-      val s = spark.read.parquet(sp.toString)
-      s.columns.contains(s"${column}_min") && s.columns.contains(s"${column}_max") &&
-        s.schema(s"${column}_min").dataType ==
-          org.apache.spark.sql.types.StringType
-    }
-    val df =
-      if (covered) spark.read.parquet(sp.toString)
-      else statsRowsVia(spark, dir, v, files(spark, dir, Some(v)),
-        Seq(column), "string")
+    val df = SkippingIndex.readIndex(spark, statsDir(dir, v))
+      .filter(_.covered(column, StringType)).map(_.frame(spark))
+      .getOrElse(statsRowsVia(spark, dir, v, files(spark, dir, Some(v)),
+        Seq(column), "string"))
     SkippingIndex.keysetWalkStringFromStats(spark, df, column)
   }
 

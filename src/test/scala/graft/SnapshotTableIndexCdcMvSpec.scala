@@ -902,4 +902,57 @@ class SnapshotTableIndexCdcMvSpec extends AnyFunSuite {
       .orderBy("key").as[(Long, Long, Double, Double)].collect().toSeq
     assert(got.map(_._2).sum == 50L, s"repopulated view wrong: $got")
   }
+
+  /** Known `#stats:` entries of version `v`'s manifest, per header:
+    * "kind:column" → file → "min,max,nulls,nrows". */
+  private def manifestStatsEntries(dir: String, v: Long): Map[String, Map[String, String]] = {
+    val src = scala.io.Source.fromFile(f"$dir/manifest/v$v%05d.manifest", "UTF-8")
+    val lines = try src.getLines().toList finally src.close()
+    val files = lines.filterNot(_.startsWith("#"))
+    lines.filter(_.startsWith("#stats:")).map { l =>
+      val Array(_, kind, column, payload) = l.split(":", 4)
+      s"$kind:$column" ->
+        files.zip(payload.split(";", -1)).filterNot(_._2 == "?,?,?,?").toMap
+    }.toMap
+  }
+
+  test("index-served upsert and compact equal footer-served ones on a shallow clone") {
+    val src = freshDir("snap-idx-eq")
+    val clone = freshDir("snap-idx-eq-clone")
+    SnapshotTable.create(spark, mkBase(8000).repartitionByRange(8, col("k")), src)
+    // v2's new files are not carried in its manifest; the incremental
+    // refresh footer-scans them into v2's index
+    val ch1 = (100 until 120).map(i => (i.toLong, s"u$i", 1L, false))
+      .toDF("k", "payload", "commit_v", "_deleted")
+    SnapshotTable.upsert(spark, src, ch1, "k", "commit_v", "payload")
+    SnapshotTable.attachStatsIncremental(spark, src, Seq("k"))
+    // same files and manifest stats as src's v2, but no stats dir
+    SnapshotTable.shallowClone(spark, src, clone)
+    val ch2 = ((110 until 130).map(i => (i.toLong, s"w$i", 2L, false)) ++
+      (4000 until 4010).map(i => (i.toLong, "", 2L, true)))
+      .toDF("k", "payload", "commit_v", "_deleted")
+    def upsertScanning(dir: String) = {
+      val s0 = SnapshotTable.pruneStatsScanned.get()
+      val c = SnapshotTable.upsert(spark, dir, ch2, "k", "commit_v", "payload")
+      (c, SnapshotTable.pruneStatsScanned.get() - s0)
+    }
+    val (a, indexedScanned) = upsertScanning(src)
+    val (b, cloneScanned) = upsertScanning(clone)
+    assert(indexedScanned == 0L, s"the indexed table footer-scanned $indexedScanned files")
+    assert(cloneScanned > 0L, "the clone has no index: it must footer-scan v2's new files")
+    assert(a.filesReused == b.filesReused && a.files.length == b.files.length, s"$a vs $b")
+    def rows(dir: String) = SnapshotTable.read(spark, dir).collect()
+      .map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(src) == rows(clone) && rows(src).length == 7990)
+    assert(manifestStatsEntries(src, a.version) == manifestStatsEntries(clone, b.version),
+      "carried #stats: entries must not depend on where the key stats came from")
+    assert(manifestStatsEntries(src, a.version).nonEmpty)
+    // compact sizes from the index's n_rows on src, from a count on clone
+    SnapshotTable.attachStatsIncremental(spark, src, Seq("k"))
+    val ca = SnapshotTable.compact(spark, src, 1500L, sortOn = Some("k"))
+    val cb = SnapshotTable.compact(spark, clone, 1500L, sortOn = Some("k"))
+    assert(ca.files.length == cb.files.length && ca.files.length >= 6,
+      s"compact file counts differ: ${ca.files.length} vs ${cb.files.length}")
+    assert(rows(src) == rows(clone))
+  }
 }

@@ -797,4 +797,87 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(reads <= 1L,
       s"upsert performed $reads full manifest reads; the memo allows 1")
   }
+
+  /** Jobs started while `body` runs (listener events drained on both
+    * sides, so earlier work is not charged to it). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  test("pruned scanBetween after dropColumn serves the committed columns, not the files'") {
+    val dir = freshDir("snap-scan-drop")
+    SnapshotTable.create(spark, mkBase(4000).repartitionByRange(4, col("k")), dir)
+    val c = SnapshotTable.dropColumn(spark, dir, "payload")
+    SnapshotTable.attachStats(spark, dir, Seq("k"))
+    val (scan, pr) = SnapshotTable.scanBetween(spark, dir, "k", 100L, 199L)
+    assert(pr.exists(p => p.filesKept < p.filesTotal), s"must prune: $pr")
+    val want = SnapshotTable.read(spark, dir, Some(c.version))
+      .filter(col("k").between(100L, 199L))
+    assert(scan.columns.toSeq == want.columns.toSeq,
+      s"dropped column resurfaced: ${scan.columns.mkString(",")}")
+    assert(rowsOf(scan) == rowsOf(want) && rowsOf(scan).length == 100)
+  }
+
+  test("pruned scanBetween over files older than an ADD COLUMN serves the new column as NULL") {
+    val dir = freshDir("snap-scan-add")
+    SnapshotTable.create(spark, mkBase(8000).repartitionByRange(8, col("k")), dir)
+    // the upsert adds `extra` and rewrites only the file holding 100..119
+    val ch = (100 until 120).map(i => (i.toLong, s"u$i", 1L, s"x$i", false))
+      .toDF("k", "payload", "commit_v", "extra", "_deleted")
+    val c = SnapshotTable.upsert(spark, dir, ch, "k", "commit_v", "payload")
+    SnapshotTable.attachStatsIncremental(spark, dir, Seq("k"))
+    // every file kept for 5000..5999 predates the column
+    val (scan, pr) = SnapshotTable.scanBetween(spark, dir, "k", 5000L, 5999L)
+    assert(pr.exists(p => p.filesKept < p.filesTotal &&
+      p.kept.forall(_.contains("/data/v00001_"))),
+      s"kept files must all predate the column: $pr")
+    val want = SnapshotTable.read(spark, dir, Some(c.version))
+      .filter(col("k").between(5000L, 5999L))
+    assert(scan.columns.toSeq == want.columns.toSeq && scan.columns.contains("extra"),
+      s"added column lost: ${scan.columns.mkString(",")}")
+    assert(rowsOf(scan) == rowsOf(want) && rowsOf(scan).length == 1000)
+  }
+
+  test("driver-side index: prune and scan planning run no job, the scan one, the refresh at most two") {
+    val dir = freshDir("snap-jobs")
+    SnapshotTable.create(spark, mkBase(8000).repartitionByRange(8, col("k")), dir)
+    SnapshotTable.attachStats(spark, dir, Seq("k"))
+    // a one-file upsert, then the incremental refresh of its index
+    val ch = (100 until 110).map(i => (i.toLong, s"u$i", 1L, false))
+      .toDF("k", "payload", "commit_v", "_deleted")
+    val c = SnapshotTable.upsert(spark, dir, ch, "k", "commit_v", "payload")
+    val ((reused, scanned), refreshJobs) =
+      jobsDuring(SnapshotTable.attachStatsIncremental(spark, dir, Seq("k")))
+    assert(scanned == (c.files.length - c.filesReused).toLong &&
+      reused == c.filesReused.toLong && reused >= 6L, s"narrow upsert expected: $c")
+    assert(refreshJobs <= 2, s"index refresh launched $refreshJobs jobs")
+    val statsPath = f"$dir/stats/v${c.version}%05d"
+    val (p, pruneJobs) = jobsDuring(
+      graft.operators.SkippingIndex.prune(spark, statsPath, "k", 3000L, 3099L))
+    assert(pruneJobs == 0, s"prune launched $pruneJobs jobs")
+    assert(p.filesTotal == c.files.length && p.filesKept <= 2, s"$p")
+    val ((scan, pr), planJobs) = jobsDuring(
+      SnapshotTable.scanBetween(spark, dir, "k", 3000L, 3099L))
+    assert(planJobs == 0, s"building the scan plan launched $planJobs jobs")
+    assert(pr.contains(p))
+    val (rows, collectJobs) = jobsDuring(scan.collect())
+    assert(collectJobs == 1, s"collecting the scan launched $collectJobs jobs")
+    assert(rows.length == 100)
+  }
 }
