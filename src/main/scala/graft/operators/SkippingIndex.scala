@@ -2,12 +2,13 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.query.MetadataInspector
 
 /** File-level min/max data-skipping index — the read-side complement of
   * [[Layout]]'s clustered writes (no reference counterpart: the reference
@@ -18,11 +19,15 @@ import org.apache.spark.sql.types._
   * The index is a tiny stats table (one row per data file: row count plus
   * per-column min/max) built from parquet FOOTERS only — column-chunk
   * statistics are already in every footer, so building the index costs
-  * O(files) KB-sized footer reads distributed over the cluster, never a
-  * data scan. Every consumer reads the written index on the DRIVER
-  * ([[readIndex]]: parquet-hadoop in-process, no Spark job, no schema
-  * inference — the index is ~150 bytes per data file and immutable
-  * once written). Query time, a driver-side filter over its rows prunes
+  * O(files) KB-sized footer reads, never a data scan. The footer fold
+  * runs on the driver, one footer after another, each opened with the
+  * session's Hadoop conf ([[graft.query.MetadataInspector.openReader]]):
+  * a sub-millisecond footer read is far cheaper than scheduling a job
+  * for it. The index
+  * is written ([[writeIndex]]) and read ([[readIndex]]) on the DRIVER
+  * with parquet-hadoop — no Spark job, no schema inference; it is ~150
+  * bytes per data file and immutable once written. Query time, a
+  * driver-side filter over its rows prunes
   * to the files whose [min,max] interval intersects the predicate and
   * only those are read, with the predicate re-applied as a residual
   * filter (pruning is file-granular; correctness never depends on it).
@@ -57,6 +62,17 @@ object SkippingIndex {
       spark.createDataFrame(rows.asJava, schema)
   }
 
+  /** The part files of a stats index at `root`, in name order: `.parquet`
+    * files that are not hidden. [[writeIndex]]'s in-flight temp file is
+    * dot-prefixed, so a reader never sees it, nor one left by a crash.
+    */
+  private def indexParts(fs: FileSystem, root: Path): Seq[Path] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") &&
+        !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .sortBy(_.getName)
+
   /** Read the stats index written at `path` on the driver — parquet-hadoop
     * record reads of its part files, no Spark job and no schema inference
     * (`spark.read.parquet` would run a footer job to infer the schema,
@@ -64,23 +80,51 @@ object SkippingIndex {
     * there. Index columns are strings and longs ([[statsSchemaOf]]).
     */
   def readIndex(spark: SparkSession, path: String): Option[StatsIndex] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    readIndexListed(conf, path, () => indexParts(fs, root))
+  }
+
+  /** [[readIndex]] over the part files `list` returns. A part that
+    * vanishes between listing and opening means a rewrite
+    * ([[writeIndex]]) replaced the index: when the listing has changed
+    * since, the read starts over from the new one. There is no retry
+    * count — each retry follows a rewrite that landed while this read
+    * was open. A part missing from an unchanged listing is an error.
+    */
+  private[graft] def readIndexListed(conf: Configuration, path: String,
+      list: () => Seq[Path]): Option[StatsIndex] = {
+    @annotation.tailrec
+    def attempt(parts: Seq[Path]): Option[StatsIndex] = {
+      val read =
+        try Right(readParts(conf, path, parts))
+        catch {
+          // a vanished part (or its checksum file) surfaces as either
+          // exception, depending on the file system
+          case e @ (_: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException) =>
+            Left(e)
+        }
+      read match {
+        case Right(index) => index
+        case Left(e) =>
+          val now = list()
+          if (now == parts) throw e else attempt(now)
+      }
+    }
+    attempt(list())
+  }
+
+  private def readParts(conf: Configuration, path: String,
+      parts: Seq[Path]): Option[StatsIndex] = {
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
     import org.apache.parquet.io.ColumnIOFactory
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val parts =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet") &&
-          !p.getName.startsWith("_") && !p.getName.startsWith("."))
-        .sortBy(_.getName)
     var schema: StructType = null
     val rows = IndexedSeq.newBuilder[Row]
     parts.foreach { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val reader = MetadataInspector.openReader(conf, p)
       try {
         val msg = reader.getFooter.getFileMetaData.getSchema
         val types = msg.getFields.asScala.map { f =>
@@ -116,8 +160,70 @@ object SkippingIndex {
     Option(schema).map(StatsIndex(_, rows.result()))
   }
 
-  private def statsSchema(cols: Seq[String]): StructType =
-    statsSchemaOf(cols, "long")
+  /** Write `rows` ([[statsSchemaOf]]' shape, string and long columns) as
+    * the stats index at `path`, on the driver: one snappy parquet file
+    * written with parquet-hadoop, no Spark job. Rows are sorted by file
+    * so rebuilds are deterministic. The file is written under a
+    * dot-prefixed temp name, the index's previous part files are
+    * deleted, and then the temp file is renamed into place, so a reader
+    * ([[readIndex]], `spark.read.parquet`) sees the old index, no index
+    * (every consumer then reads footers instead), or the whole new
+    * index — never a partial file. Two writers racing on one path may
+    * each leave a part file; the index is rebuilt per version by one
+    * writer.
+    */
+  private[graft] def writeIndex(spark: SparkSession, path: String, schema: StructType,
+      rows: Seq[Row]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.parquet.schema.Type.Repetition
+    val msg = new MessageType("spark_schema", schema.fields.toSeq.map[Type] { f =>
+      val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
+      f.dataType match {
+        case LongType => Types.primitive(PrimitiveTypeName.INT64, rep).named(f.name)
+        case StringType => Types.primitive(PrimitiveTypeName.BINARY, rep)
+          .as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case other => throw new IllegalArgumentException(
+          s"stats index column ${f.name} has unsupported type ${other.simpleString}")
+      }
+    }.asJava)
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    fs.mkdirs(root)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val tmp = new Path(root, s".$name.tmp")
+    try {
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(msg)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        // what Spark writes: spark.read.parquet restores the exact schema
+        .withExtraMetaData(Map(
+          "org.apache.spark.sql.parquet.row.metadata" -> schema.json).asJava)
+        .build()
+      try rows.sortBy(_.getString(0)).foreach { r =>
+        val g = new SimpleGroup(msg)
+        schema.fields.indices.foreach { i =>
+          if (!r.isNullAt(i)) schema.fields(i).dataType match {
+            case LongType => g.add(i, r.getLong(i))
+            case _ => g.add(i, r.getString(i))
+          }
+        }
+        writer.write(g)
+      } finally writer.close()
+      indexParts(fs, root).foreach(fs.delete(_, false))
+      if (!fs.rename(tmp, new Path(root, name)))
+        throw new java.io.IOException(s"could not rename $tmp into place")
+    } catch {
+      case e: Throwable =>
+        scala.util.Try(fs.delete(tmp, false))
+        throw e
+    }
+  }
 
   /** The stats-table schema per kind token (long | string | micros —
     * micros stats are longs). Shared with [[SnapshotTable]]'s
@@ -149,9 +255,8 @@ object SkippingIndex {
 
   /** Build the stats table for integer-typed `cols` over every
     * `*.parquet` file under `dir`, and write it to `statsOut` (one small
-    * parquet file — the index itself). Footer-only I/O, parallelized
-    * across the cluster via a paths RDD like
-    * [[graft.query.MetadataInspector.directoryMetadata]].
+    * parquet file — the index itself, [[writeIndex]]). Footer-only I/O
+    * ([[statsRows]]).
     *
     * Min/max are the footer's column-chunk statistics folded across row
     * groups. Columns must be INT32/INT64 (stored as long) — the gate
@@ -159,80 +264,146 @@ object SkippingIndex {
     * [[prune]] treats as "cannot skip" (conservative, never wrong).
     */
   def buildStats(spark: SparkSession, dir: String, cols: Seq[String],
-      statsOut: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val files = fs.listStatus(new Path(dir))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).sorted.toSeq
-    require(files.nonEmpty, s"no parquet files under $dir")
-    // repartition(1), not coalesce(1): coalesce is a narrow dependency
-    // and would collapse the distributed footer-parse to ONE task; the
-    // exchange keeps the parse parallel, only the tiny result single-files
-    statsRows(spark, files, cols)
-      .repartition(1).write.mode("overwrite").parquet(statsOut)
+      statsOut: String): Unit =
+    writeIndex(spark, statsOut, statsSchemaOf(cols, "long"),
+      footerRows(spark, listParquet(spark, dir), cols, "long"))
+
+  /** One file's stats row in [[statsSchemaOf]]' shape — file, n_rows,
+    * then min, max and null count per column — folded from its footer's
+    * column-chunk statistics across row groups. `kind` says how a chunk's
+    * min/max become index values: `long` (INT32/INT64), `string`
+    * (BINARY/UTF8 in unsigned byte order) or `micros` (INT64 timestamps
+    * normalized to epoch micros). A chunk without statistics, or with no
+    * non-null value, yields NULL min/max ("cannot skip").
+    */
+  private def footerRow(conf: Configuration, p: String, cols: Seq[String],
+      kind: String): Row = {
+    val reader = MetadataInspector.openReader(conf, new Path(p))
+    try {
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val nRows = blocks.map(_.getRowCount).sum
+      val perCol = cols.flatMap { c =>
+        val chunks = blocks.flatMap(_.getColumns.asScala)
+          .filter(_.getPath.toDotString == c)
+        // a ZERO-ROW file has no row groups at all: no stats to read,
+        // and no evidence the column name is wrong either — serve the
+        // honest null-stat row (a "blind" file, which every pruning
+        // layer already handles) instead of failing into the caller's
+        // all-files-affected fallback
+        require(chunks.nonEmpty || blocks.isEmpty, s"column $c not found in $p")
+        val stats = chunks.map(_.getStatistics)
+        val (mn, mx) =
+          if (stats.isEmpty || stats.exists(s => s == null || !s.hasNonNullValue))
+            (null, null)
+          else kind match {
+            case "string" => stringMinMax(c, stats)
+            case "micros" => microsMinMax(c, chunks.head, stats)
+            case _ => longMinMax(c, stats)
+          }
+        Seq(mn, mx, nullCount(stats))
+      }
+      Row.fromSeq(p +: nRows +: perCol)
+    } finally reader.close()
   }
+
+  private type Stats = Seq[org.apache.parquet.column.statistics.Statistics[_]]
+
+  private def longMinMax(c: String, stats: Stats): (Any, Any) = {
+    def asLong(v: Any): Long = v match {
+      case i: java.lang.Integer => i.longValue
+      case l: java.lang.Long => l.longValue
+      case other => throw new IllegalArgumentException(
+        s"$c: unsupported stats type ${other.getClass.getName} " +
+          "(INT32/INT64 columns only)")
+    }
+    (stats.map(s => asLong(s.genericGetMin)).min,
+      stats.map(s => asLong(s.genericGetMax)).max)
+  }
+
+  private def stringMinMax(c: String, stats: Stats): (Any, Any) = {
+    def bin(v: Any): Array[Byte] = v match {
+      case b: org.apache.parquet.io.api.Binary => b.getBytes
+      case other => throw new IllegalArgumentException(
+        s"$c: unsupported stats type ${other.getClass.getName} " +
+          "(BINARY/UTF8 columns only)")
+    }
+    // fold across row groups in the SAME unsigned byte order the footer
+    // stats are computed in (java String compareTo is UTF-16 code-unit
+    // order and disagrees past the BMP)
+    val ord = new Ordering[Array[Byte]] {
+      def compare(a: Array[Byte], b: Array[Byte]): Int = {
+        var i = 0
+        val n = math.min(a.length, b.length)
+        while (i < n) {
+          val d = (a(i) & 0xff) - (b(i) & 0xff)
+          if (d != 0) return d
+          i += 1
+        }
+        a.length - b.length
+      }
+    }
+    (new String(stats.map(s => bin(s.genericGetMin)).min(ord), "UTF-8"),
+      new String(stats.map(s => bin(s.genericGetMax)).max(ord), "UTF-8"))
+  }
+
+  private def microsMinMax(c: String,
+      chunk: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
+      stats: Stats): (Any, Any) = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    def asLong(v: Any): Long = v match {
+      case l: java.lang.Long => l.longValue
+      case other => throw new IllegalArgumentException(
+        s"$c: unsupported stats type ${other.getClass.getName} " +
+          "(INT64 timestamp columns only)")
+    }
+    val (mins, maxs) = (stats.map(s => asLong(s.genericGetMin)),
+      stats.map(s => asLong(s.genericGetMax)))
+    val unit = chunk.getPrimitiveType.getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit
+      case other => throw new IllegalArgumentException(
+        s"$c: not a Timestamp-annotated column (annotation=$other; " +
+          "INT96 legacy timestamps have no usable ordered stats)")
+    }
+    def toMicros(v: Long, ceil: Boolean): Long = unit match {
+      case TimeUnit.MILLIS => Math.multiplyExact(v, 1000L)
+      case TimeUnit.MICROS => v
+      case TimeUnit.NANOS =>
+        // addExact: a max stat within 999ns of Long.MaxValue must throw
+        // (landing in the caller's all-files-affected degrade) rather
+        // than wrap negative and shrink the interval into a wrong prune
+        // — same contract as the MILLIS path's multiplyExact
+        if (ceil) Math.floorDiv(Math.addExact(v, 999L), 1000L)
+        else Math.floorDiv(v, 1000L)
+    }
+    (mins.map(toMicros(_, ceil = false)).min, maxs.map(toMicros(_, ceil = true)).max)
+  }
+
+  /** Footer-stats rows for `files` on the driver, in file order: one
+    * in-process fold, no Spark job. What index writes, the upsert prune
+    * and the keyset walks consume.
+    */
+  private[operators] def footerRows(spark: SparkSession, files: Seq[String],
+      cols: Seq[String], kind: String): Seq[Row] = {
+    require(files.nonEmpty, "footer stats need at least one file")
+    val conf = spark.sessionState.newHadoopConf()
+    files.map(footerRow(conf, _, cols, kind))
+  }
+
+  /** [[footerRows]] as a local relation: building, collecting or
+    * broadcasting it runs no job. */
+  private def footerFrame(spark: SparkSession, files: Seq[String],
+      cols: Seq[String], kind: String): DataFrame =
+    spark.createDataFrame(footerRows(spark, files, cols, kind).asJava,
+      statsSchemaOf(cols, kind))
 
   /** The stats table for an EXPLICIT file list (no directory listing) —
     * the form a manifest-based table ([[SnapshotTable]]) consumes, since
-    * its live files span several commit directories. Same footer-only
-    * distributed build.
+    * its live files span several commit directories. Footer-only reads,
+    * folded on the driver ([[footerRows]]).
     */
   def statsRows(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): DataFrame = {
-    require(files.nonEmpty, "statsRows needs at least one file")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val colsB = cols.toArray
-    val rows = spark.sparkContext
-      .parallelize(files,
-        // ~8 footers per task: one task per file paid a per-task Hadoop
-        // Configuration deserialization that outweighed the 5-15 ms
-        // footer read (r17 job profile: 74 files = 1.05 s); batching
-        // amortizes it, and large file counts still fan out to 64 tasks
-        math.max(1, math.min((files.length + 7) / 8, 64)))
-      .map { p =>
-        val in = HadoopInputFile.fromPath(new Path(p), conf.value)
-        val reader = ParquetFileReader.open(in)
-        try {
-          val f = reader.getFooter
-          val blocks = f.getBlocks.asScala.toSeq
-          val nRows = blocks.map(_.getRowCount).sum
-          val minMax: Seq[(Any, Any, Any)] = colsB.toSeq.map { c =>
-            val chunks = blocks.flatMap(_.getColumns.asScala)
-              .filter(_.getPath.toDotString == c)
-            // a ZERO-ROW file has no row groups at all: no stats to
-            // read, and no evidence the column name is wrong either —
-            // serve the honest null-stat row (a "blind" file, which
-            // every pruning layer already handles) instead of failing
-            // the job into the caller's all-files-affected fallback
-            require(chunks.nonEmpty || blocks.isEmpty,
-              s"column $c not found in $p")
-            val stats = chunks.map(_.getStatistics)
-            val nulls = nullCount(stats)
-            if (stats.isEmpty ||
-                stats.exists(s => s == null || !s.hasNonNullValue)) (null, null, nulls)
-            else {
-              val mins = stats.map(s => (s.genericGetMin: Any) match {
-                case i: java.lang.Integer => i.longValue
-                case l: java.lang.Long => l.longValue
-                case other => throw new IllegalArgumentException(
-                  s"$c: unsupported stats type ${other.getClass.getName} " +
-                    "(INT32/INT64 columns only)")
-              })
-              val maxs = stats.map(s => (s.genericGetMax: Any) match {
-                case i: java.lang.Integer => i.longValue
-                case l: java.lang.Long => l.longValue
-                case other => throw new IllegalArgumentException(
-                  s"$c: unsupported stats type ${other.getClass.getName}")
-              })
-              (mins.min, maxs.max, nulls)
-            }
-          }
-          Row.fromSeq(p +: nRows +: minMax.flatMap { case (a, b, n) => Seq(a, b, n) })
-        } finally reader.close()
-      }
-    spark.createDataFrame(rows, statsSchema(cols))
-  }
+      cols: Seq[String]): DataFrame =
+    footerFrame(spark, files, cols, "long")
 
   /** [[statsRows]] for STRING (parquet BINARY/UTF8) columns: min/max are
     * the footer's unsigned-lexicographic byte-order statistics rendered
@@ -242,71 +413,8 @@ object SkippingIndex {
     * code-unit order and disagrees on supplementary characters.
     */
   def statsRowsString(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): DataFrame = {
-    require(files.nonEmpty, "statsRowsString needs at least one file")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val colsB = cols.toArray
-    val rows = spark.sparkContext
-      .parallelize(files,
-        // ~8 footers per task: one task per file paid a per-task Hadoop
-        // Configuration deserialization that outweighed the 5-15 ms
-        // footer read (r17 job profile: 74 files = 1.05 s); batching
-        // amortizes it, and large file counts still fan out to 64 tasks
-        math.max(1, math.min((files.length + 7) / 8, 64)))
-      .map { p =>
-        val in = HadoopInputFile.fromPath(new Path(p), conf.value)
-        val reader = ParquetFileReader.open(in)
-        try {
-          val f = reader.getFooter
-          val blocks = f.getBlocks.asScala.toSeq
-          val nRows = blocks.map(_.getRowCount).sum
-          val minMax: Seq[(Any, Any, Any)] = colsB.toSeq.map { c =>
-            val chunks = blocks.flatMap(_.getColumns.asScala)
-              .filter(_.getPath.toDotString == c)
-            // a ZERO-ROW file has no row groups at all: no stats to
-            // read, and no evidence the column name is wrong either —
-            // serve the honest null-stat row (a "blind" file, which
-            // every pruning layer already handles) instead of failing
-            // the job into the caller's all-files-affected fallback
-            require(chunks.nonEmpty || blocks.isEmpty,
-              s"column $c not found in $p")
-            val stats = chunks.map(_.getStatistics)
-            val nulls = nullCount(stats)
-            if (stats.isEmpty ||
-                stats.exists(s => s == null || !s.hasNonNullValue)) (null, null, nulls)
-            else {
-              def bin(v: Any): Array[Byte] = v match {
-                case b: org.apache.parquet.io.api.Binary => b.getBytes
-                case other => throw new IllegalArgumentException(
-                  s"$c: unsupported stats type ${other.getClass.getName} " +
-                    "(BINARY/UTF8 columns only)")
-              }
-              // fold across row groups in the SAME unsigned byte order the
-              // footer stats are computed in (java String compareTo is
-              // UTF-16 code-unit order and disagrees past the BMP)
-              val ord = new Ordering[Array[Byte]] {
-                def compare(a: Array[Byte], b: Array[Byte]): Int = {
-                  var i = 0
-                  val n = math.min(a.length, b.length)
-                  while (i < n) {
-                    val d = (a(i) & 0xff) - (b(i) & 0xff)
-                    if (d != 0) return d
-                    i += 1
-                  }
-                  a.length - b.length
-                }
-              }
-              (new String(stats.map(s => bin(s.genericGetMin)).min(ord), "UTF-8"),
-                new String(stats.map(s => bin(s.genericGetMax)).max(ord), "UTF-8"),
-                nulls)
-            }
-          }
-          Row.fromSeq(p +: nRows +: minMax.flatMap { case (a, b, n) => Seq(a, b, n) })
-        } finally reader.close()
-      }
-    spark.createDataFrame(rows, statsSchemaOf(cols, "string"))
-  }
+      cols: Seq[String]): DataFrame =
+    footerFrame(spark, files, cols, "string")
 
   /** [[statsRows]] for TIMESTAMP (parquet INT64 with a Timestamp logical
     * annotation) columns: min/max normalized to EPOCH MICROS whatever
@@ -319,78 +427,8 @@ object SkippingIndex {
     * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`.
     */
   def statsRowsMicros(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): DataFrame = {
-    require(files.nonEmpty, "statsRowsMicros needs at least one file")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val colsB = cols.toArray
-    val rows = spark.sparkContext
-      .parallelize(files,
-        // ~8 footers per task: one task per file paid a per-task Hadoop
-        // Configuration deserialization that outweighed the 5-15 ms
-        // footer read (r17 job profile: 74 files = 1.05 s); batching
-        // amortizes it, and large file counts still fan out to 64 tasks
-        math.max(1, math.min((files.length + 7) / 8, 64)))
-      .map { p =>
-        val in = HadoopInputFile.fromPath(new Path(p), conf.value)
-        val reader = ParquetFileReader.open(in)
-        try {
-          val f = reader.getFooter
-          val blocks = f.getBlocks.asScala.toSeq
-          val nRows = blocks.map(_.getRowCount).sum
-          val minMax: Seq[(Any, Any, Any)] = colsB.toSeq.map { c =>
-            val chunks = blocks.flatMap(_.getColumns.asScala)
-              .filter(_.getPath.toDotString == c)
-            // a ZERO-ROW file has no row groups at all: no stats to
-            // read, and no evidence the column name is wrong either —
-            // serve the honest null-stat row (a "blind" file, which
-            // every pruning layer already handles) instead of failing
-            // the job into the caller's all-files-affected fallback
-            require(chunks.nonEmpty || blocks.isEmpty,
-              s"column $c not found in $p")
-            // lazy: a zero-row file has no chunks to read the unit from
-            // (and takes the null-stat branch below, never touching it)
-            lazy val unit = chunks.head.getPrimitiveType.getLogicalTypeAnnotation match {
-              case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit
-              case other => throw new IllegalArgumentException(
-                s"$c: not a Timestamp-annotated column (annotation=$other; " +
-                  "INT96 legacy timestamps have no usable ordered stats)")
-            }
-            import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-            def toMicros(v: Long, ceil: Boolean): Long = unit match {
-              case TimeUnit.MILLIS => Math.multiplyExact(v, 1000L)
-              case TimeUnit.MICROS => v
-              case TimeUnit.NANOS =>
-                // addExact: a max stat within 999ns of Long.MaxValue must
-                // throw (landing in the caller's all-files-affected
-                // degrade) rather than wrap negative and shrink the
-                // interval into a wrong prune — same contract as the
-                // MILLIS path's multiplyExact
-                if (ceil) Math.floorDiv(Math.addExact(v, 999L), 1000L)
-                else Math.floorDiv(v, 1000L)
-            }
-            val stats = chunks.map(_.getStatistics)
-            val nulls = nullCount(stats)
-            if (stats.isEmpty ||
-                stats.exists(s => s == null || !s.hasNonNullValue)) (null, null, nulls)
-            else {
-              def asLong(v: Any): Long = v match {
-                case l: java.lang.Long => l.longValue
-                case other => throw new IllegalArgumentException(
-                  s"$c: unsupported stats type ${other.getClass.getName} " +
-                    "(INT64 timestamp columns only)")
-              }
-              (stats.map(s => toMicros(asLong(s.genericGetMin), ceil = false)).min,
-                stats.map(s => toMicros(asLong(s.genericGetMax), ceil = true)).max,
-                nulls)
-            }
-          }
-          Row.fromSeq(p +: nRows +: minMax.flatMap { case (a, b, n) => Seq(a, b, n) })
-        } finally reader.close()
-      }
-    spark.createDataFrame(rows, statsSchema(cols))
-  }
+      cols: Seq[String]): DataFrame =
+    footerFrame(spark, files, cols, "micros")
 
   /** Evaluate the interval test over the stats table: keep files whose
     * [min,max] on `column` intersects [lo, hi], plus files with NULL
@@ -513,14 +551,13 @@ object SkippingIndex {
     *    exactly the full-sort page whatever the stats said; pruning is
     *    an I/O bound, never a semantics change.
     *
-    * Footer-built stats stay DISTRIBUTED: the walk sorts the stats frame
-    * once into executor memory ([[StatsSource]]) and each page pulls
-    * only the few candidate rows it actually walks (`toLocalIterator`
-    * over the sorted cache), so driver residency is O(files-walked),
-    * never O(table files) — at millions of files a full per-walk
-    * collect would re-pull ~100 MB of stats per walk. An ATTACHED index
-    * is read whole on the driver ([[readIndex]], O(table files) rows)
-    * and walked from there without a job. A cursor provably past
+    * The walk's stats come from an ATTACHED index, read whole on the
+    * driver ([[readIndex]]), or from a footer fold on the driver
+    * ([[footerRows]]): either way O(table files) rows are on the driver
+    * while the walk is built. Above `graft.keyset.eagerStatsMax` files
+    * the walk sorts them once into executor memory ([[StatsSource]]) and
+    * each page pulls only the few candidate rows it actually walks
+    * (`toLocalIterator` over the sorted cache). A cursor provably past
     * the data returns the correctly-empty page from the stats alone —
     * an empty relation, no table scan. Build via
     * [[SkippingIndex.keysetWalk]] (attached-stats dirs) or
@@ -646,14 +683,15 @@ object SkippingIndex {
     *    a few hundred KB of driver heap, bounded) keep the eager array:
     *    page planning is pure driver memory, zero Spark jobs per page —
     *    the interactive-pagination latency the bench gates measure;
-    *  - above the threshold the stats stay DISTRIBUTED: the frame is
-    *    sorted once per direction into executor cache and each page
-    *    streams candidate rows through `toLocalIterator` with the
-    *    cursor filter applied executor-side, so the driver holds only
-    *    the rows a page actually walks.
+    *  - above the threshold the frame is sorted once per direction into
+    *    executor cache and each page streams candidate rows through
+    *    `toLocalIterator` with the cursor filter applied executor-side,
+    *    so the walk itself holds only the rows a page actually walks.
     *
-    * Driver residency is therefore bounded by
-    * min(files, eagerStatsMax) + files-walked at ANY table size.
+    * The walk's own residency is therefore bounded by
+    * min(files, eagerStatsMax) + files-walked at ANY table size. The
+    * stats it is built from are rows on the driver already (an attached
+    * index or a driver-side footer fold, see [[KeysetWalk]]).
     *
     * Ordering note (lazy path): the executor-side sort must match the
     * walk's driver-side `Ordering[K]` — LongType sorts numerically
@@ -808,8 +846,8 @@ object SkippingIndex {
 
   /** A [[KeysetWalk]] over `dir`: consults the attached stats index
     * ([[attachStats]]) when it covers `column`, otherwise builds the
-    * stats in memory from the files' footers (footer-only distributed
-    * read, nothing written).
+    * stats in memory from the files' footers (a footer fold on the
+    * driver, nothing written).
     */
   def keysetWalk(spark: SparkSession, dir: String, column: String): KeysetWalk = {
     // coverage includes the stats TYPE: a stats table attached for the
@@ -946,8 +984,8 @@ object SkippingIndex {
     * miscompare).
     */
   def attachStatsString(spark: SparkSession, dir: String, cols: Seq[String]): Unit =
-    statsRowsString(spark, listParquet(spark, dir), cols)
-      .repartition(1).write.mode("overwrite").parquet(statsPathFor(dir))
+    writeIndex(spark, statsPathFor(dir), statsSchemaOf(cols, "string"),
+      footerRows(spark, listParquet(spark, dir), cols, "string"))
 
   /** Scan `dir` for `column BETWEEN lo AND hi`, consulting an attached
     * stats index AUTOMATICALLY when one exists and covers `column`:

@@ -458,7 +458,8 @@ object SnapshotTable {
     *  1. per-file [min,max] of `keyCol`: carried in the manifest's
     *     `#stats:` headers, else taken from the version's attached stats
     *     index (read on the driver, no job), else footer-scanned
-    *     ([[SkippingIndex.statsRows]], one job) — a table whose index is
+    *     ([[SkippingIndex.footerRows]]: folded on the driver, no job)
+    *     — a table whose index is
     *     refreshed per commit ([[attachStatsIncremental]]) reads no
     *     footer here;
     *  2. a file is AFFECTED iff some change key falls inside its range
@@ -580,11 +581,6 @@ object SnapshotTable {
         case _ =>
           changes.select(col(keyCol).cast("long").as("__k")).distinct()
       }
-      def footerStats(fl: Seq[String]): DataFrame = statKind.get match {
-        case "string" => SkippingIndex.statsRowsString(spark, fl, Seq(keyCol))
-        case "micros" => SkippingIndex.statsRowsMicros(spark, fl, Seq(keyCol))
-        case _ => SkippingIndex.statsRows(spark, fl, Seq(keyCol))
-      }
       val priorStats = manifestStatsOf(spark, dir, Some(v))
       // carried entries for THIS key column (kind must match — a column
       // upserted as a long key cannot serve string-kind entries)
@@ -607,7 +603,7 @@ object SnapshotTable {
           pruneStatsScanned.addAndGet(unknown.length.toLong)
           val scanned: Map[String, ManifestStat] =
             if (unknown.isEmpty) Map.empty
-            else footerStats(unknown).collect().map { r =>
+            else SkippingIndex.footerRows(spark, unknown, Seq(keyCol), statKind.get).map { r =>
               // statsRows row shape: (file, n_rows, min, max, nulls)
               r.getString(0) -> ManifestStat(
                 if (r.isNullAt(2)) None else Some(r.get(2)),
@@ -1009,28 +1005,15 @@ object SnapshotTable {
     }
   }
 
-  /** Write `rows` (already on the driver, [[SkippingIndex.statsRows]]'
-    * shape) as version `v`'s stats index: one local relation, one file,
-    * one job. Rows are sorted by file so rebuilds are deterministic.
-    */
-  private def writeIndex(spark: SparkSession, dir: String, v: Long,
-      rows: Seq[Row], schema: StructType): Unit =
-    spark.createDataFrame(rows.sortBy(_.getString(0)).asJava, schema)
-      .coalesce(1).write.mode("overwrite").parquet(statsDir(dir, v))
-
   /** Stats rows for `fl` over `cols` in [[SkippingIndex.statsRows]]'
-    * shape, serving MANIFEST-CARRIED entries for every file all requested
-    * columns know (verbatim prior footer folds of immutable files —
-    * value-identical to a rescan) and footer-scanning only the remainder.
-    * With full coverage the frame is a local relation: zero footer I/O.
+    * shape, on the driver: MANIFEST-CARRIED entries for every file all
+    * requested columns know (verbatim prior footer folds of immutable
+    * files — value-identical to a rescan), footer-folded
+    * ([[SkippingIndex.footerRows]]) for the rest. With full coverage:
+    * zero footer I/O.
     */
   private def statsRowsVia(spark: SparkSession, dir: String, v: Long,
-      fl: Seq[String], cols: Seq[String], kind: String): DataFrame = {
-    def footer(files: Seq[String]): DataFrame = kind match {
-      case "string" => SkippingIndex.statsRowsString(spark, files, cols)
-      case "micros" => SkippingIndex.statsRowsMicros(spark, files, cols)
-      case _ => SkippingIndex.statsRows(spark, files, cols)
-    }
+      fl: Seq[String], cols: Seq[String], kind: String): Seq[Row] = {
     val perCol = {
       val ms =
         try manifestStatsOf(spark, dir, Some(v))
@@ -1041,33 +1024,32 @@ object SnapshotTable {
     val covered =
       if (cols.isEmpty) Seq.empty
       else fl.filter(f => perCol.forall(_.get(f).exists(_.known)))
-    if (covered.isEmpty) footer(fl)
-    else {
-      val coveredSet = covered.toSet
-      val uncovered = fl.filterNot(coveredSet.contains)
-      val localRows = covered.map { f =>
-        org.apache.spark.sql.Row.fromSeq(
-          f +: perCol.head(f).nRows.get +: perCol.flatMap { m =>
-            val s = m(f)
-            Seq(s.min.orNull, s.max.orNull, s.nulls.map(Long.box).orNull)
-          })
-      }
-      // LocalRelation: consumed either by a 1-file index write or a
-      // driver-side walk — no parallelize job needed
-      val local = spark.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(localRows).asJava,
-        SkippingIndex.statsSchemaOf(cols, kind))
-      if (uncovered.isEmpty) local else local.unionByName(footer(uncovered))
+    val carried = covered.map { f =>
+      Row.fromSeq(f +: perCol.head(f).nRows.get +: perCol.flatMap { m =>
+        val s = m(f)
+        Seq(s.min.orNull, s.max.orNull, s.nulls.map(Long.box).orNull)
+      })
     }
+    val coveredSet = covered.toSet
+    val rest = fl.filterNot(coveredSet.contains)
+    if (rest.isEmpty) carried
+    else carried ++ SkippingIndex.footerRows(spark, rest, cols, kind)
   }
+
+  /** [[statsRowsVia]] as a local relation, for the keyset walks. */
+  private def statsFrameVia(spark: SparkSession, dir: String, v: Long,
+      fl: Seq[String], cols: Seq[String], kind: String): DataFrame =
+    spark.createDataFrame(statsRowsVia(spark, dir, v, fl, cols, kind).asJava,
+      SkippingIndex.statsSchemaOf(cols, kind))
 
   /** Build the [[SkippingIndex]] stats table for a version's live files
     * at the version-scoped stats location — each snapshot gets its own
     * index, because each snapshot is a different file set. Files whose
     * stats the manifest already carries (earlier upsert prunes over the
     * same immutable files) are served from it; only the rest pay a
-    * footer read (one distributed job), and the rows are written from the
-    * driver ([[writeIndex]], one job).
+    * footer read, folded on the driver, and the rows are written from
+    * the driver ([[SkippingIndex.writeIndex]]): the build runs no Spark
+    * job.
     */
   def attachStats(spark: SparkSession, dir: String, cols: Seq[String],
       version: Option[Long] = None): Unit =
@@ -1077,9 +1059,8 @@ object SnapshotTable {
       version: Option[Long], kind: String): Unit = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    writeIndex(spark, dir, v,
-      statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), cols, kind).collect().toSeq,
-      SkippingIndex.statsSchemaOf(cols, kind))
+    SkippingIndex.writeIndex(spark, statsDir(dir, v), SkippingIndex.statsSchemaOf(cols, kind),
+      statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), cols, kind))
   }
 
   /** Metadata-only SHALLOW CLONE: commit a NEW table at `dstDir` whose
@@ -1312,9 +1293,9 @@ object SnapshotTable {
     * what keeps index maintenance flat as the table grows toward
     * millions of files, where re-reading every footer per commit would
     * dominate the commit itself. Older indexes are read on the driver
-    * ([[SkippingIndex.readIndex]]), so the refresh costs at most two
-    * jobs: the new files' footer scan and the write of reused + fresh
-    * rows as one local relation. Falls back to the full build when no
+    * ([[SkippingIndex.readIndex]]), the new files' footers are folded on
+    * the driver and reused + fresh rows are written from the driver
+    * ([[SkippingIndex.writeIndex]]), so a refresh runs no Spark job. Falls back to the full build when no
     * older version carries an index over the same columns. Returns
     * (reused, scanned) file counts — the maintenance-cost evidence the
     * spec asserts; the written index is row-identical to a full
@@ -1349,8 +1330,8 @@ object SnapshotTable {
         // all of the new files — footer-scan only the remainder
         val fresh =
           if (newFiles.isEmpty) Seq.empty
-          else statsRowsVia(spark, dir, v, newFiles, cols, "long").collect().toSeq
-        writeIndex(spark, dir, v, reused ++ fresh, schema)
+          else statsRowsVia(spark, dir, v, newFiles, cols, "long")
+        SkippingIndex.writeIndex(spark, statsDir(dir, v), schema, reused ++ fresh)
         ((live.length - newFiles.length).toLong, newFiles.length.toLong)
     }
   }
@@ -1551,7 +1532,7 @@ object SnapshotTable {
     // footer build rather than ClassCastException inside the walk
     val df = SkippingIndex.readIndex(spark, statsDir(dir, v))
       .filter(_.covered(column, LongType)).map(_.frame(spark))
-      .getOrElse(statsRowsVia(spark, dir, v, files(spark, dir, Some(v)),
+      .getOrElse(statsFrameVia(spark, dir, v, files(spark, dir, Some(v)),
         Seq(column), "long"))
     SkippingIndex.keysetWalkFromStats(spark, df, column)
   }
@@ -1579,7 +1560,7 @@ object SnapshotTable {
       throw new IllegalArgumentException(s"no table under $dir"))
     val df = SkippingIndex.readIndex(spark, statsDir(dir, v))
       .filter(_.covered(column, StringType)).map(_.frame(spark))
-      .getOrElse(statsRowsVia(spark, dir, v, files(spark, dir, Some(v)),
+      .getOrElse(statsFrameVia(spark, dir, v, files(spark, dir, Some(v)),
         Seq(column), "string"))
     SkippingIndex.keysetWalkStringFromStats(spark, df, column)
   }
@@ -1599,7 +1580,7 @@ object SnapshotTable {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
     SkippingIndex.keysetWalkMicrosFromStats(spark,
-      statsRowsVia(spark, dir, v, files(spark, dir, Some(v)),
+      statsFrameVia(spark, dir, v, files(spark, dir, Some(v)),
         Seq(column), "micros"), column)
   }
 

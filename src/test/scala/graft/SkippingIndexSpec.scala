@@ -517,4 +517,97 @@ class SkippingIndexSpec extends AnyFunSuite {
     val (pg3, _) = walk.page(6300L, 50)
     assert(pg3.collect().map(_.getLong(0)).toSeq == (6301L until 6351L))
   }
+
+  // ---- driver-side footer folds and index writes ----------------------
+
+  /** Files with a long `k`, a string `s` and a MICROS timestamp `t`: four
+    * key-ranged files, one ZERO-ROW file and one whose keys are all NULL
+    * (its chunks record no non-null value).
+    */
+  private lazy val foldFiles: Seq[String] = {
+    import spark.implicits._
+    val d = TestSpark.scratch("fold_kinds")
+    val p0 = new org.apache.hadoop.fs.Path(d)
+    val fs = p0.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(p0, true)
+    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    try {
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      val rows = spark.range(400).select(col("id").as("k"),
+        format_string("s%04d", col("id")).as("s"),
+        timestamp_seconds(lit(1600000000L) + col("id") * 60L).as("t"))
+      rows.repartitionByRange(4, col("k")).write.parquet(s"$d/ranged")
+      rows.limit(0).coalesce(1).write.parquet(s"$d/empty")
+      Seq((None: Option[Long], None: Option[String], None: Option[java.sql.Timestamp]))
+        .toDF("k", "s", "t").coalesce(1).write.parquet(s"$d/nulls")
+    } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    Seq("ranged", "empty", "nulls").flatMap(sub =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$d/$sub")).map(_.getPath.toString)
+        .filter(_.endsWith(".parquet")).sorted.toSeq)
+  }
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("driver footer folds match a data aggregate per file for long, string and micros keys") {
+    val files = foldFiles
+    assert(files.length == 6, s"expected 4 ranged + 1 empty + 1 all-NULL file: $files")
+    // the same (n_rows, min, max, nulls) computed from the DATA, one file
+    // at a time: every file here has one row group, so footer min/max are
+    // the data's (strings compare as unsigned bytes in both), and a
+    // zero-row or all-NULL file aggregates to NULL bounds like its footer
+    def fromData(f: String, key: org.apache.spark.sql.Column) = {
+      val r = spark.read.parquet(f).select(key.as("x"))
+        .agg(count(lit(1)), min("x"), max("x"), count(when(col("x").isNull, 1))).head()
+      org.apache.spark.sql.Row(f, r.get(0), r.get(1), r.get(2), r.get(3))
+    }
+    val folds = Seq[(String, Seq[String] => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.Column)](
+      ("long", fl => SkippingIndex.statsRows(spark, fl, Seq("k")), col("k")),
+      ("string", fl => SkippingIndex.statsRowsString(spark, fl, Seq("s")), col("s")),
+      ("micros", fl => SkippingIndex.statsRowsMicros(spark, fl, Seq("t")), unix_micros(col("t"))))
+    folds.foreach { case (kind, fold, key) =>
+      val stats = fold(files)
+      assert(isLocal(stats), s"$kind: the fold must be a local relation")
+      val (got, want) = (stats.collect().toSeq, files.map(fromData(_, key)))
+      assert(got == want, s"$kind: footer fold $got != data aggregate $want")
+      // the zero-row file: 0 rows, NULL bounds; the all-NULL file: NULL
+      // bounds, one null counted
+      assert(got.map(r => (r.getLong(1), r.isNullAt(2), r.isNullAt(3), r.get(4))).takeRight(2) ==
+        Seq((0L, true, true, 0L), (1L, true, true, 1L)), s"$kind: $got")
+      assert(got.take(4).forall(r => !r.isNullAt(2) && !r.isNullAt(3)), s"$kind: $got")
+    }
+    val micros = SkippingIndex.statsRowsMicros(spark, files.take(1), Seq("t")).head()
+    assert(micros.getLong(2) == 1600000000L * 1000000L, s"epoch micros expected: $micros")
+  }
+
+  test("a driver-written index reads back like a Spark-written one, through Spark and readIndex") {
+    val files = foldFiles
+    Seq(SkippingIndex.statsRows(spark, files, Seq("k")),
+        SkippingIndex.statsRowsString(spark, files, Seq("s"))).zipWithIndex.foreach {
+      case (stats, i) =>
+        val rows = stats.collect().toSeq
+        val (byDriver, bySpark) =
+          (TestSpark.scratch(s"index_driver_$i"), TestSpark.scratch(s"index_spark_$i"))
+        SkippingIndex.writeIndex(spark, byDriver, stats.schema, rows.reverse)
+        stats.coalesce(1).write.mode("overwrite").parquet(bySpark)
+        val (d, s) = (spark.read.parquet(byDriver), spark.read.parquet(bySpark))
+        assert(d.schema == s.schema, s"${d.schema} != ${s.schema}")
+        // the driver writes rows sorted by file, Spark in collect order
+        assert(d.collect().toSeq == rows.sortBy(_.getString(0)))
+        assert(s.collect().toSeq == rows)
+        val (rd, rs) = (SkippingIndex.readIndex(spark, byDriver).get,
+          SkippingIndex.readIndex(spark, bySpark).get)
+        assert(rd.schema == rs.schema && rd.rows == rs.rows.sortBy(_.getString(0)))
+        // the footer carries the index schema itself, nullability included
+        val footer = graft.query.MetadataInspector.footer(spark,
+          new java.io.File(byDriver).listFiles().map(_.getPath)
+            .filter(p => p.endsWith(".parquet") && !new java.io.File(p).getName.startsWith("."))
+            .head)
+        assert(footer.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata") == stats.schema.json)
+    }
+  }
 }
+

@@ -854,10 +854,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(rowsOf(scan) == rowsOf(want) && rowsOf(scan).length == 1000)
   }
 
-  test("driver-side index: prune and scan planning run no job, the scan one, the refresh at most two") {
+  test("driver-side index: build, refresh and planning run no job, the scan one") {
     val dir = freshDir("snap-jobs")
     SnapshotTable.create(spark, mkBase(8000).repartitionByRange(8, col("k")), dir)
-    SnapshotTable.attachStats(spark, dir, Seq("k"))
+    // 8 files, under the listing threshold: footers fold on the driver
+    // and the index is written from it
+    val (_, buildJobs) = jobsDuring(SnapshotTable.attachStats(spark, dir, Seq("k")))
+    assert(buildJobs == 0, s"index build launched $buildJobs jobs")
     // a one-file upsert, then the incremental refresh of its index
     val ch = (100 until 110).map(i => (i.toLong, s"u$i", 1L, false))
       .toDF("k", "payload", "commit_v", "_deleted")
@@ -866,7 +869,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       jobsDuring(SnapshotTable.attachStatsIncremental(spark, dir, Seq("k")))
     assert(scanned == (c.files.length - c.filesReused).toLong &&
       reused == c.filesReused.toLong && reused >= 6L, s"narrow upsert expected: $c")
-    assert(refreshJobs <= 2, s"index refresh launched $refreshJobs jobs")
+    assert(refreshJobs == 0, s"index refresh launched $refreshJobs jobs")
     val statsPath = f"$dir/stats/v${c.version}%05d"
     val (p, pruneJobs) = jobsDuring(
       graft.operators.SkippingIndex.prune(spark, statsPath, "k", 3000L, 3099L))
@@ -880,4 +883,49 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(collectJobs == 1, s"collecting the scan launched $collectJobs jobs")
     assert(rows.length == 100)
   }
+
+  test("index rewrites leave one part file; readers ignore a stale temp and see the old, no or the new index") {
+    val dir = freshDir("snap-index-race")
+    SnapshotTable.create(spark, mkBase(4000).repartitionByRange(6, col("k")), dir)
+    SnapshotTable.attachStats(spark, dir, Seq("k"))
+    val stats = new java.io.File(s"$dir/stats/v00001")
+    def parts = stats.listFiles().map(_.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_"))
+    val index = graft.operators.SkippingIndex.readIndex(spark, stats.getPath).get
+    assert(index.rows.length == 6 && parts.length == 1)
+    // a writer that crashed mid-write leaves its dot-prefixed temp file
+    java.nio.file.Files.write(new java.io.File(stats,
+        ".part-00000-crashed.snappy.parquet.tmp").toPath, "PAR1 torn".getBytes)
+    java.nio.file.Files.write(new java.io.File(stats,
+        ".part-00001-crashed.snappy.parquet").toPath, "PAR1 torn".getBytes)
+    assert(graft.operators.SkippingIndex.readIndex(spark, stats.getPath).contains(index))
+    assert(spark.read.parquet(stats.getPath).count() == 6L)
+    // the states a rewrite passes through, one at a time: the new file
+    // written under its temp name (readers see the old index), the old
+    // part deleted (no index), the temp renamed into place (the new one)
+    val old = new java.io.File(stats, parts.head)
+    val tmp = new java.io.File(stats, s".${old.getName}.tmp")
+    java.nio.file.Files.copy(old.toPath, tmp.toPath)
+    assert(graft.operators.SkippingIndex.readIndex(spark, stats.getPath).contains(index))
+    assert(old.delete())
+    assert(graft.operators.SkippingIndex.readIndex(spark, stats.getPath).isEmpty)
+    assert(tmp.renameTo(new java.io.File(stats, "part-00000-renamed.snappy.parquet")))
+    assert(graft.operators.SkippingIndex.readIndex(spark, stats.getPath).contains(index))
+    // a part listed, then deleted by a rewrite before it is opened: the
+    // read starts over from the new listing; a part missing from an
+    // unchanged listing is an error
+    val conf = spark.sessionState.newHadoopConf()
+    val vanished = new org.apache.hadoop.fs.Path(old.getPath)
+    def current = parts.toSeq.map(n => new org.apache.hadoop.fs.Path(new java.io.File(stats, n).getPath))
+    val listings = Iterator(Seq(vanished)) ++ Iterator.continually(current)
+    assert(graft.operators.SkippingIndex.readIndexListed(conf, stats.getPath,
+      () => listings.next()).contains(index))
+    intercept[java.io.IOException](graft.operators.SkippingIndex.readIndexListed(
+      conf, stats.getPath, () => Seq(vanished)))
+    // rewrites of the same version's index replace its one part file
+    (1 to 3).foreach(_ => SnapshotTable.attachStats(spark, dir, Seq("k")))
+    assert(parts.length == 1, s"rewrites must leave one part file: ${parts.toSeq}")
+    assert(graft.operators.SkippingIndex.readIndex(spark, stats.getPath).contains(index))
+  }
 }
+
