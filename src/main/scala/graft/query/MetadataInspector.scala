@@ -129,10 +129,11 @@ object MetadataInspector {
         java.util.Base64.getEncoder.encodeToString(raw.getFooter_signing_key_metadata)
       else null))
 
+  /** [[footerKvRows]] of one file, read on the driver, as a local
+    * relation: collecting it runs no Spark job.
+    */
   def fileMetadata(spark: SparkSession, path: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(footerKvRows(path, rawFooter(spark, path)), 1),
-      schema)
+    spark.createDataFrame(footerKvRows(path, rawFooter(spark, path)).asJava, schema)
 
   /** [[fileMetadata]] for an EXPLICIT file list — one key/value block per
     * file, concatenated in list order, with every thrift footer read in
@@ -156,7 +157,8 @@ object MetadataInspector {
 
   /** Per-row-group, per-column chunk detail: compression, sizes, value
     * counts and min/max statistics — the drill-down level DuckDB's
-    * parquet_metadata() exposes.
+    * parquet_metadata() exposes. One footer read on the driver, returned
+    * as a local relation.
     */
   def rowGroupMetadata(spark: SparkSession, path: String): DataFrame = {
     val f = footer(spark, path)
@@ -182,6 +184,6 @@ object MetadataInspector {
       StructField("stats_min", StringType, nullable = true),
       StructField("stats_max", StringType, nullable = true),
       StructField("num_nulls", StringType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), sch)
+    spark.createDataFrame(rows.asJava, sch)
   }
 }

@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Sort direction + field, as the reference models it
   * (reference: src/paginator.ts:1-12 QueryObject/SortObject).
@@ -61,28 +62,20 @@ object PageCursor {
   * (unlike monotonically_increasing_id, which shifts with shuffle fetch
   * order on uncached inputs); rows identical in every column share a
   * hash, and any order among full duplicates is content-identical.
+  *
+  * Where the hash is computed: `new Paginator(df)` adds it to every page
+  * plan, so each page hashes every row it sorts. [[QueryEngine]] instead
+  * caches its result with the tiebreaker already attached
+  * ([[Paginator.withTiebreaker]], the same hash over the same columns)
+  * and pages it through the package-private constructor, which takes
+  * `df` together with that frame (`withRid`) and trusts its column, so
+  * a page turn over the cached result hashes no rows. Both give the
+  * same pages.
   */
-final class Paginator(df: DataFrame) {
+final class Paginator private[query] (df: DataFrame, withRid: DataFrame) {
 
-  // the synthetic tiebreaker would silently replace (and then drop) a
-  // user column of the same name, and the hash would cover the wrong data
-  require(!df.columns.contains(Paginator.RID),
-    s"input already has a '${Paginator.RID}' column — rename it before paging")
-
-  private val withRid = {
-    // maps aren't hashable (or orderable) in Spark — leave them out of
-    // the tiebreaker; ties then only collapse rows equal in all other
-    // columns, which a map-keyed UI page can live with
-    def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-      case _ => true
-    }
-    val cols = df.schema.fields.filter(f => hashable(f.dataType)).map(f => col(f.name))
-    df.withColumn(Paginator.RID,
-      if (cols.isEmpty) lit(0L) else xxhash64(cols.toSeq: _*))
-  }
+  /** Pages `df`, hashing the tiebreaker in every page plan. */
+  def this(df: DataFrame) = this(df, Paginator.withTiebreaker(df))
 
   private def normalized(search: Option[String]): Option[String] =
     search.filter(s => s != null && s.nonEmpty)
@@ -314,4 +307,24 @@ final class Paginator(df: DataFrame) {
 object Paginator {
   /** Synthetic tiebreaker column name (dropped from every page). */
   val RID = "__graft_rid"
+
+  /** `df` plus the tiebreaker column: xxhash64 over its hashable columns
+    * in schema order. Maps aren't hashable (or orderable) in Spark, so
+    * they are left out; ties then only collapse rows equal in all other
+    * columns, which a map-keyed UI page can live with.
+    */
+  private[query] def withTiebreaker(df: DataFrame): DataFrame = {
+    // the synthetic tiebreaker would silently replace (and then drop) a
+    // user column of the same name, and the hash would cover the wrong data
+    require(!df.columns.contains(RID),
+      s"input already has a '$RID' column — rename it before paging")
+    def hashable(dt: DataType): Boolean = dt match {
+      case _: MapType => false
+      case s: StructType => s.fields.forall(f => hashable(f.dataType))
+      case a: ArrayType => hashable(a.elementType)
+      case _ => true
+    }
+    val cols = df.schema.fields.filter(f => hashable(f.dataType)).map(f => Search.column(f.name))
+    df.withColumn(RID, if (cols.isEmpty) lit(0L) else xxhash64(cols.toSeq: _*))
+  }
 }

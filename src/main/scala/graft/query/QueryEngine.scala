@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Tables
@@ -41,8 +41,22 @@ final class QueryEngine(val spark: SparkSession, val path: String) {
   }
   data.createOrReplaceTempView("data")
 
-  private var cached: Option[DataFrame] = None
-  private var searchCached: Option[(String, DataFrame)] = None
+  /** A persisted result: `cached` is `frame` persisted, the user's
+    * columns plus the paging tiebreaker when `tiebroken`; `visible` is
+    * the user's columns alone, a projection that reads the same cache.
+    * When the tiebreaker cannot be added (see [[query]]) both are the
+    * same frame, and paging it fails as `new Paginator(visible)` does.
+    */
+  private final class Result(frame: DataFrame, val tiebroken: Boolean) {
+    val cached: DataFrame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+    val visible: DataFrame = if (tiebroken) cached.drop(Paginator.RID) else cached
+    def paginator: Paginator =
+      if (tiebroken) new Paginator(visible, cached) else new Paginator(visible)
+    def release(): Unit = cached.unpersist(blocking = false)
+  }
+
+  private var current: Option[Result] = None
+  private var searchCached: Option[(String, Result)] = None
 
   def defaultQuery: String = "SELECT *\nFROM data\nLIMIT 1000"
 
@@ -57,48 +71,85 @@ final class QueryEngine(val spark: SparkSession, val path: String) {
     * exactly one `query_result` table alive, worker.ts:236-310): a caller
     * still holding the old DataFrame keeps a valid plan but silently
     * recomputes on next use — hold at most the latest result.
+    *
+    * What is persisted is the result plus the paging tiebreaker
+    * ([[Paginator.withTiebreaker]]), hashed once while the cache fills,
+    * so [[paginator]] pages sort the cached column instead of hashing
+    * every cached row per page. The returned frame, `queryResult` and
+    * the `query_result` view are a projection of that cache without the
+    * tiebreaker; calling `unpersist` on them does not release it
+    * ([[close]] and the next `query` do).
+    *
+    * A result the tiebreaker cannot be built over — one that already
+    * has a [[Paginator.RID]] column, repeats a column name, or holds a
+    * type the hash does not take — is cached as it is: the query and
+    * everything but paging work, and paging fails with the public
+    * Paginator's error.
     */
   def query(sql: String): DataFrame = {
-    cached.foreach(_.unpersist(blocking = false))
-    dropSearchCache()
+    close()
     val rewritten = QueryEngine.PathPlaceholder.replaceAllIn(sql, "data")
-    val out = spark.sql(rewritten).persist(StorageLevel.MEMORY_AND_DISK)
-    out.createOrReplaceTempView("query_result")
-    cached = Some(out)
-    out
+    val out = spark.sql(rewritten)
+    val withRid =
+      try Some(Paginator.withTiebreaker(out))
+      catch { case _: IllegalArgumentException | _: AnalysisException => None }
+    val r = withRid.fold(new Result(out, tiebroken = false))(new Result(_, tiebroken = true))
+    r.visible.createOrReplaceTempView("query_result")
+    current = Some(r)
+    r.visible
   }
 
   private def dropSearchCache(): Unit = {
-    searchCached.foreach(_._2.unpersist(blocking = false))
+    searchCached.foreach(_._2.release())
     searchCached = None
   }
+
+  private def result: Result = current.getOrElse { query(defaultQuery); current.get }
 
   /** The current query result with the free-text search applied,
     * materialized ONCE and re-used — the reference materializes the
     * filtered result as a `query_result_filtered` table and pages/counts
     * that (reference: src/worker.ts:134-180); re-filtering the corpus on
     * every page request would re-scan it each time at 100 TB.
+    *
+    * The filter runs over the cached result WITH its tiebreaker (the
+    * predicate built from the user's columns only), so the searched
+    * cache carries the tiebreaker too and [[searchPaginator]] pages hash
+    * nothing. The same term returns the same frame. An empty term
+    * returns the query result itself, whose cache only [[query]] and
+    * [[close]] release.
     */
-  def searchResult(term: String): DataFrame = searchCached match {
-    case Some((t, f)) if t == term => f
+  def searchResult(term: String): DataFrame = searched(term).visible
+
+  private def searched(term: String): Result = searchCached match {
+    case Some((t, r)) if t == term => r
     case _ =>
       dropSearchCache()
-      val f = Search.search(queryResult, term).persist(StorageLevel.MEMORY_AND_DISK)
-      f.createOrReplaceTempView("query_result_filtered")
-      searchCached = Some((term, f))
-      f
+      val base = result
+      if (term == null || term.isEmpty) {
+        base.visible.createOrReplaceTempView("query_result_filtered")
+        base
+      } else {
+        val r = new Result(base.cached.filter(Search.predicate(base.visible, term)),
+          base.tiebroken)
+        r.visible.createOrReplaceTempView("query_result_filtered")
+        searchCached = Some((term, r))
+        r
+      }
   }
 
   /** Paginator over the materialized searched result: page bounds and
     * page fetches both read the persisted filtered frame, so requests
     * need not re-carry the search term.
     */
-  def searchPaginator(term: String): Paginator = new Paginator(searchResult(term))
+  def searchPaginator(term: String): Paginator = searched(term).paginator
 
-  def queryResult: DataFrame = cached.getOrElse(query(defaultQuery))
+  def queryResult: DataFrame = result.visible
 
-  /** Paginator over the current query result. */
-  def paginator: Paginator = new Paginator(queryResult)
+  /** Paginator over the current query result; its pages read the cached
+    * tiebreaker (see [[query]]) and equal `new Paginator(queryResult)`'s.
+    */
+  def paginator: Paginator = result.paginator
 
   /** Paginator over the raw file (the reference's Data tab pages the file
     * directly; reference: src/duckdb-paginator.ts readFromFile).
@@ -192,8 +243,8 @@ final class QueryEngine(val spark: SparkSession, val path: String) {
     graft.exporters.Exporter.toTsvString(paginator.page(req))
 
   def close(): Unit = {
-    cached.foreach(_.unpersist(blocking = false))
-    cached = None
+    current.foreach(_.release())
+    current = None
     dropSearchCache()
   }
 }

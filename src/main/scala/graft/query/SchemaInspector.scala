@@ -103,10 +103,16 @@ object SchemaInspector {
     }
   }
 
+  private val describeSchema = StructType(Seq(
+    StructField("column_name", StringType, nullable = false),
+    StructField("column_type", StringType, nullable = false),
+    StructField("null", StringType, nullable = false)))
+
   /** DESCRIBE of a parquet file from its footer alone (no data scan):
     * one row per column, types rendered exactly as DuckDB's DESCRIBE
     * renders them for the same file (reference: duckdb-backend.ts
     * initializeSchema). Repetition OPTIONAL → "YES", REQUIRED → "NO".
+    * A local relation: collecting it runs no Spark job.
     */
   def describeParquet(spark: SparkSession, path: String): DataFrame = {
     val msg = MetadataInspector.footer(spark, path)
@@ -115,28 +121,19 @@ object SchemaInspector {
       Row(f.getName, duckTypeName(f),
         if (f.getRepetition == org.apache.parquet.schema.Type.Repetition.REQUIRED) "NO" else "YES")
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("column_name", StringType, nullable = false),
-        StructField("column_type", StringType, nullable = false),
-        StructField("null", StringType, nullable = false))))
+    spark.createDataFrame(rows.asJava, describeSchema)
   }
 
   /** One row per column: (column_name, column_type, null) — the DESCRIBE
-    * shape the reference's schema tab paginates over.
+    * shape the reference's schema tab paginates over. Built from the
+    * schema alone as a local relation, so collecting it runs no Spark job.
     */
   def describe(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val rows = df.schema.fields.toSeq.map { f =>
       Row(f.name, duckTypeName(f.dataType), if (f.nullable) "YES" else "NO")
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("column_name", StringType, nullable = false),
-        StructField("column_type", StringType, nullable = false),
-        StructField("null", StringType, nullable = false))))
+    spark.createDataFrame(rows.asJava, describeSchema)
   }
 
   /** Flattened leaf paths (a.b.c; array elements as a[].b, map entries as

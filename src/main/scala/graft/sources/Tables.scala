@@ -1,6 +1,11 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog over the driver-generated star schema (TESTDATA.md) plus
   * generic file loading by extension, mirroring the reference's
@@ -140,6 +145,14 @@ object Tables {
     * (Spark's hadoop-aws connector scheme); actually reading S3 requires
     * hadoop-aws + credentials on the cluster classpath (reference maps s3
     * URIs the same way, duckdb-backend.ts:166-176).
+    *
+    * A single parquet file (no glob, a file rather than a directory) is
+    * opened without Spark's schema-inference job: its footer is read on
+    * the driver and converted by Spark's own footer-to-schema conversion
+    * under the session's reader flags, which is what inference would
+    * run on that one footer ([[parquetFooterSchema]]). Directories and
+    * globs, and files whose footer cannot be read (so Spark reports the
+    * error as it always has), keep Spark's inference.
     */
   def openAs(spark: SparkSession, rawPath: String, format: String): DataFrame = {
     val path =
@@ -156,10 +169,43 @@ object Tables {
       case "avro" =>
         spark.read.format(avroProvider).load(path)
       case "orc" => spark.read.orc(path)
-      case "parquet" | "pq" | "parq" => spark.read.parquet(path)
+      case "parquet" | "pq" | "parq" =>
+        parquetFooterSchema(spark, path)
+          .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
       case other =>
         throw new UnsupportedOperationException(s"unsupported format: $other")
     }
+  }
+
+  /** The schema `spark.read.parquet(path)` infers when `path` is one
+    * parquet file, from its footer read on the driver; None for globs,
+    * directories and anything whose footer read fails. The converter
+    * takes the session flags Spark's own inference passes it
+    * (`ParquetFileFormat.mergeSchemasInParallel`) and leaves the rest at
+    * their defaults, as inference does.
+    */
+  private def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val p = new Path(path)
+      val conf = spark.sessionState.newHadoopConf()
+      val status = p.getFileSystem(conf).getFileStatus(p)
+      if (!status.isFile) None
+      else {
+        val reader = graft.query.MetadataInspector.openReader(conf, status.getPath)
+        val footer = try reader.getFooter finally reader.close()
+        val sql = spark.sessionState.conf
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = sql.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+          nanosAsLong = sql.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+        Some(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(status.getPath, footer), converter))
+      }
+    } catch { case NonFatal(_) => None }
   }
 
   /** The avro DataSource provider, by full class name. The classes ship

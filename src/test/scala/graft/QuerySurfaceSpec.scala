@@ -715,3 +715,452 @@ class QueryEngineSnapshotSpec extends AnyFunSuite {
     assert(Tables.open(spark, s"${TestSpark.sf}/region.parquet").count() == 5)
   }
 }
+
+/** The engine caches its result with the paging tiebreaker attached and
+  * pages that column; these pin that its pages are the public
+  * Paginator's, that no page plan hashes, and that the column stays
+  * hidden.
+  */
+class QueryEngineTiebreakerSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import org.apache.spark.sql.DataFrame
+
+  /** Orders with many full-duplicate rows and a map column that is a
+    * function of the hashable columns (rows equal in every hashable
+    * column are then equal in the map too, so every order among tied
+    * rows is content-identical).
+    */
+  private lazy val file: String = {
+    val base = Tables.load(spark, TestSpark.sf, "orders").select(
+      col("o_orderpriority"), col("o_orderstatus"), (col("o_orderkey") % 40).as("k"),
+      map(col("o_orderstatus"), col("o_orderkey") % 40).as("m"))
+    val out = TestSpark.scratch("qe_tiebreak") + "/t.parquet"
+    base.union(base.limit(400)).coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  }
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+
+  /** Pages of a cursor walk (rows and cursors), `n` pages long. */
+  private def walk(p: Paginator, req: PageRequest, n: Int): Seq[(Seq[Seq[Any]], Option[PageCursor])] =
+    Iterator.iterate(p.pageWithCursor(req)) { case (_, c) => p.pageWithCursor(req, c) }
+      .take(n).map { case (r, c) => (r.map(_.toSeq), c) }.toSeq
+
+  private def hashesInPlan(df: DataFrame): (Int, Boolean) = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val hashes = plan.collect { case n => n.expressions.flatMap(_.collect {
+        case h: org.apache.spark.sql.catalyst.expressions.XxHash64 => h
+      }) }.flatten
+      val cached = plan.collect {
+        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+      }.nonEmpty
+      (hashes.size, cached)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("engine pages equal the public Paginator's: offset, sorted, multi-sort, goto, cursor, search") {
+    val qe = new QueryEngine(spark, file)
+    try {
+      qe.query("SELECT * FROM data")
+      val eng = qe.paginator
+      val pub = new Paginator(qe.queryResult)
+      assert(eng.totalItems == pub.totalItems)
+      val size = Some(37)
+      val sortK = SortSpec("k", ascending = false)
+      val multi = Seq(SortSpec("o_orderpriority", ascending = false), SortSpec("k"))
+      val reqs = (1 to 3).map(n => PageRequest(n, size)) ++
+        (1 to 3).map(n => PageRequest(n, size, sort = Some(sortK))) ++
+        Seq(2, 5, 30).map(n => PageRequest(n, size, sorts = multi))
+      reqs.foreach(r => assert(rows(eng.page(r)) == rows(pub.page(r)), s"page differs for $r"))
+      val last = pub.totalPages(size).toInt
+      val goto = PageRequest(last - 1, size, sort = Some(sortK))
+      assert(rows(eng.gotoPage(goto)) == rows(pub.gotoPage(goto)))
+      assert(rows(eng.lastPage(goto)) == rows(pub.lastPage(goto)))
+      Seq(PageRequest(1, size, sort = Some(sortK)), PageRequest(3, size, sorts = multi),
+        PageRequest(1, size)).foreach { r =>
+        assert(walk(eng, r, 6) == walk(pub, r, 6), s"cursor walk differs for $r")
+      }
+      val c = pub.cursorOfPage(PageRequest(2, size, sort = Some(sortK)))
+      assert(eng.cursorOfPage(PageRequest(2, size, sort = Some(sortK))) == c)
+      assert(rows(eng.pageAfter(PageRequest(1, size, sort = Some(sortK)), c.get)) ==
+        rows(pub.pageAfter(PageRequest(1, size, sort = Some(sortK)), c.get)))
+      // the search paginator pages the searched cache; the same pages come
+      // from the public Paginator over the searched frame and from a
+      // per-request search over the whole result
+      val term = "HIGH"
+      val es = qe.searchPaginator(term)
+      val ps = new Paginator(qe.searchResult(term))
+      assert(es.totalItems == pub.totalItems(Some(term)))
+      Seq(PageRequest(1, size), PageRequest(2, size, sort = Some(sortK)),
+        PageRequest(3, size, sorts = multi)).foreach { r =>
+        val want = rows(pub.page(r.copy(search = Some(term))))
+        assert(rows(es.page(r)) == want, s"search page differs for $r")
+        assert(rows(ps.page(r)) == want)
+      }
+      val sr = PageRequest(1, size, sort = Some(sortK))
+      assert(walk(es, sr, 4) == walk(ps, sr, 4))
+    } finally qe.close()
+  }
+
+  test("an engine page plan hashes nothing; a public Paginator page plan does") {
+    val qe = new QueryEngine(spark, file)
+    try {
+      qe.query("SELECT * FROM data")
+      val req = PageRequest(2, Some(50), sort = Some(SortSpec("k")))
+      assert(hashesInPlan(qe.paginator.page(req)) == ((0, true)))
+      assert(hashesInPlan(qe.searchPaginator("HIGH").page(req)) == ((0, true)))
+      val (publicHashes, _) = hashesInPlan(new Paginator(qe.queryResult).page(req))
+      assert(publicHashes > 0, "the reference plan must hash, or the check above shows nothing")
+    } finally qe.close()
+  }
+
+  test("the tiebreaker column never shows: results, views, schema, pages and exports") {
+    val qe = new QueryEngine(spark, file)
+    val rid = Paginator.RID
+    try {
+      val res = qe.query("SELECT * FROM data")
+      val visible = Seq("o_orderpriority", "o_orderstatus", "k", "m")
+      assert(res.columns.toSeq == visible)
+      assert(qe.queryResult.columns.toSeq == visible)
+      assert(spark.table("query_result").columns.toSeq == visible)
+      assert(qe.searchResult("HIGH").columns.toSeq == visible)
+      assert(spark.table("query_result_filtered").columns.toSeq == visible)
+      assert(qe.schema.collect().map(_.getString(0)).toSeq == visible)
+      assert(qe.paginator.page(PageRequest(1, Some(5))).columns.toSeq == visible)
+      assert(qe.searchPaginator("HIGH").pageWithCursor(PageRequest(1, Some(5)))._1
+        .forall(_.length == visible.length))
+      assert(qe.copyPage(PageRequest(1, Some(5))).linesIterator.next().split("\t").toSeq == visible)
+      val out = TestSpark.scratch("qe_tiebreak_export")
+      qe.export("parquet", s"$out/pq", search = Some("HIGH"))
+      assert(spark.read.parquet(s"$out/pq").columns.toSeq == visible)
+      qe.export("json", s"$out/json", sort = Some(SortSpec("k")))
+      assert(!spark.read.json(s"$out/json").columns.contains(rid))
+      // the result's own rows, counted through the visible frame
+      assert(res.count() == spark.read.parquet(file).count())
+    } finally qe.close()
+  }
+
+  test("a result that already has the tiebreaker's name queries as before and refuses paging") {
+    val qe = new QueryEngine(spark, s"${TestSpark.sf}/orders.parquet")
+    try {
+      val res = qe.query(s"SELECT o_orderkey, o_orderkey * 2 AS ${Paginator.RID} FROM data")
+      assert(res.columns.toSeq == Seq("o_orderkey", Paginator.RID))
+      assert(res.count() == 1500)
+      assert(spark.table("query_result").columns.contains(Paginator.RID))
+      val want = intercept[IllegalArgumentException](new Paginator(res)).getMessage
+      assert(intercept[IllegalArgumentException](qe.paginator).getMessage == want)
+      assert(intercept[IllegalArgumentException](qe.searchPaginator("1")).getMessage == want)
+    } finally qe.close()
+  }
+
+  test("an unaliased expression's dotted name queries, pages and searches") {
+    val qe = new QueryEngine(spark, s"${TestSpark.sf}/orders.parquet")
+    try {
+      val res = qe.query("SELECT o_orderkey, o_totalprice * 1.1 FROM data")
+      val name = res.columns(1)
+      assert(name.contains("."), name)
+      assert(spark.table("query_result").count() == 1500)
+      assert(qe.schema.collect().map(_.getString(0)).toSeq == Seq("o_orderkey", name))
+      val pub = new Paginator(qe.queryResult)
+      val req = PageRequest(3, Some(25), sort = Some(SortSpec("o_orderkey")))
+      assert(rows(qe.paginator.page(req)) == rows(pub.page(req)))
+      assert(hashesInPlan(qe.paginator.page(req)) == ((0, true)))
+      assert(rows(qe.searchPaginator("7").page(req)) == rows(pub.page(req.copy(search = Some("7")))))
+      // only the decimal column can render a '.', so every row matching
+      // shows the search reads that column
+      assert(qe.searchResult(".").count() == 1500)
+    } finally qe.close()
+  }
+
+  test("a result the tiebreaker cannot be built over queries as before and refuses paging") {
+    import org.apache.spark.sql.AnalysisException
+    val orders = s"${TestSpark.sf}/orders.parquet"
+    val width = spark.read.parquet(orders).columns.length
+    val qe = new QueryEngine(spark, orders)
+    try {
+      // repeated column names (the hash cannot resolve them) and a VARIANT
+      // column (the hash does not take it)
+      Seq("SELECT * FROM data a JOIN data b ON a.o_orderkey = b.o_orderkey" -> 2 * width,
+        """SELECT o_orderkey, parse_json('{"a": 1}') AS v FROM data""" -> 2).foreach {
+        case (sql, cols) =>
+          val res = qe.query(sql)
+          assert(res.count() == 1500, sql)
+          assert(spark.table("query_result").columns.length == cols, sql)
+          assert(qe.schema.count() == cols, sql)
+          // the messages hold plan expression ids, so compare the error class
+          val want = intercept[AnalysisException](new Paginator(res)).getCondition
+          assert(want != null)
+          assert(intercept[AnalysisException](qe.paginator).getCondition == want, sql)
+          assert(intercept[AnalysisException](qe.searchPaginator("1")).getCondition != null, sql)
+      }
+    } finally qe.close()
+  }
+
+  test("an empty search leaves the query result's cache in place") {
+    def cached(view: String): Boolean =
+      spark.table(view).queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.nonEmpty
+    val qe = new QueryEngine(spark, file)
+    try {
+      qe.query("SELECT * FROM data")
+      assert(qe.searchResult("") eq qe.queryResult)
+      assert(qe.searchResult("HIGH").count() < qe.queryResult.count())
+      assert(cached("query_result") && cached("query_result_filtered"))
+      assert(qe.searchResult("").count() == qe.queryResult.count())
+      assert(qe.searchResult("LOW").count() < qe.queryResult.count())
+      assert(cached("query_result"))
+      assert(hashesInPlan(qe.paginator.page(PageRequest(2, Some(50)))) == ((0, true)))
+    } finally qe.close()
+  }
+}
+
+/** Search leaves out columns whose text rendering cannot hold the term. */
+class SearchAlphabetSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import org.apache.spark.sql.types._
+
+  /** Edge values per pruned type, as SQL expressions of exactly that type. */
+  private val edges: Seq[(DataType, Seq[String])] = Seq(
+    ByteType -> Seq("CAST(-128 AS TINYINT)", "CAST(127 AS TINYINT)", "CAST(0 AS TINYINT)"),
+    ShortType -> Seq("CAST(-32768 AS SMALLINT)", "CAST(32767 AS SMALLINT)"),
+    IntegerType -> Seq("CAST(-2147483648 AS INT)", "CAST(2147483647 AS INT)"),
+    LongType -> Seq("CAST('-9223372036854775808' AS BIGINT)", "CAST('9223372036854775807' AS BIGINT)"),
+    FloatType -> Seq("CAST('-3.4028235E38' AS FLOAT)", "CAST('3.4028235E38' AS FLOAT)",
+      "CAST('1.4E-45' AS FLOAT)", "CAST('-0.0' AS FLOAT)", "CAST('0.0' AS FLOAT)",
+      "CAST('NaN' AS FLOAT)", "CAST('Infinity' AS FLOAT)", "CAST('-Infinity' AS FLOAT)",
+      "CAST('1e-7' AS FLOAT)", "CAST('1e30' AS FLOAT)", "CAST('123.456' AS FLOAT)"),
+    DoubleType -> Seq("CAST('-1.7976931348623157E308' AS DOUBLE)",
+      "CAST('1.7976931348623157E308' AS DOUBLE)", "CAST('4.9E-324' AS DOUBLE)",
+      "CAST('-0.0' AS DOUBLE)", "CAST('NaN' AS DOUBLE)", "CAST('Infinity' AS DOUBLE)",
+      "CAST('-Infinity' AS DOUBLE)", "CAST('1e300' AS DOUBLE)", "CAST('1e-300' AS DOUBLE)",
+      "CAST('-1e-300' AS DOUBLE)", "CAST('1e-7' AS DOUBLE)", "CAST('0.1' AS DOUBLE)"),
+    DecimalType(38, 0) -> Seq("CAST('99999999999999999999999999999999999999' AS DECIMAL(38,0))",
+      "CAST('-99999999999999999999999999999999999999' AS DECIMAL(38,0))"),
+    DecimalType(38, 37) -> Seq("CAST('0.0000000000000000000000000000000000001' AS DECIMAL(38,37))",
+      "CAST('-9.9999999999999999999999999999999999999' AS DECIMAL(38,37))",
+      "CAST(0 AS DECIMAL(38,37))"),
+    DecimalType(10, 10) -> Seq("CAST(0 AS DECIMAL(10,10))", "CAST('1e-10' AS DECIMAL(10,10))"),
+    DecimalType(5, 2) -> Seq("CAST('-123.45' AS DECIMAL(5,2))"),
+    DateType -> Seq("make_date(-44, 3, 15)", "make_date(12345, 1, 1)", "make_date(1, 1, 1)",
+      "make_date(0, 12, 31)", "make_date(9999, 12, 31)"),
+    TimestampType -> Seq("make_timestamp(-44, 3, 15, 10, 0, 0.5)",
+      "make_timestamp(12345, 1, 1, 0, 0, 0)", "make_timestamp(1970, 1, 1, 0, 0, 0.000001)",
+      "make_timestamp(2024, 2, 29, 23, 59, 59.999999)", "make_timestamp(-290000, 1, 1, 0, 0, 0)"),
+    TimestampNTZType -> Seq("make_timestamp_ntz(-44, 3, 15, 10, 0, 0.5)",
+      "make_timestamp_ntz(12345, 1, 1, 0, 0, 0)", "make_timestamp_ntz(1970, 1, 1, 0, 0, 0.000001)",
+      "make_timestamp_ntz(2024, 2, 29, 23, 59, 59.999999)"),
+    BooleanType -> Seq("true", "false"))
+
+  test("each pruned type's alphabet holds every character Spark's cast renders for its edge values") {
+    val rendered = edges.flatMap { case (dt, es) =>
+      val df = spark.range(1).select(es.zipWithIndex.map { case (e, i) => expr(e).as(s"v$i") }: _*)
+      df.schema.fields.zip(es).foreach { case (f, e) =>
+        assert(f.dataType == dt, s"$e is ${f.dataType}, not $dt")
+      }
+      val alphabet = Search.castAlphabet(dt).getOrElse(fail(s"$dt has no alphabet"))
+      val strs = df.select(df.columns.map(c => col(c).cast(StringType)): _*).head().toSeq
+        .map(_.asInstanceOf[String])
+      strs.zip(es).foreach { case (s, e) =>
+        assert(s != null, e)
+        val outside = s.filterNot(alphabet.contains)
+        assert(outside.isEmpty, s"$dt renders $e as '$s', with '$outside' outside its alphabet")
+      }
+      strs
+    }
+    Seq("1.0E-7", "-0044-03-15", "+12345-01-01", "NaN", "-Infinity", "true").foreach { s =>
+      assert(rendered.exists(_.contains(s)), s"no rendering contains $s: $rendered")
+    }
+    // open-ended renderings are always searched
+    Seq(StringType, BinaryType, ArrayType(IntegerType), MapType(StringType, LongType),
+      new StructType().add("a", IntegerType), CalendarIntervalType, DayTimeIntervalType(),
+      YearMonthIntervalType(), NullType).foreach(dt => assert(Search.castAlphabet(dt).isEmpty, dt))
+  }
+
+  /** Every edge value, one row per value index, alongside string, binary
+    * and complex columns. */
+  private lazy val mixed = {
+    val n = edges.map(_._2.length).max
+    val typed = edges.zipWithIndex.map { case ((_, es), i) =>
+      expr(s"element_at(array(${es.mkString(", ")}), CAST(id % ${es.length} + 1 AS INT))").as(s"c$i")
+    }
+    val strs = Seq("bada", "é-1", "50%", "a_b", "back\\\\slash", "+1:2.3E", "true", "NaN", "xInfinity")
+    val s = expr(s"element_at(array(${strs.map(x => s"'$x'").mkString(", ")}), CAST(id % ${strs.length} + 1 AS INT))")
+    spark.range(0, n + strs.length).select(Seq(col("id"), s.as("s"), s.cast("binary").as("bin"),
+      struct(col("id").as("i"), s.as("t")).as("st"), array(col("id"), -col("id")).as("arr"),
+      map(s, col("id")).as("mp")) ++ typed: _*)
+  }
+
+  test("pruned and unpruned search return the same rows for symbol, number and word terms") {
+    val df = mixed
+    val terms = Seq("1", "-", ".", "E", "NaN", "Infinity", "true", ":", "+", "%", "_", "\\", "é", "bada",
+      "0.1", "-0044", "12345", "1.0E-7", "E+", "alse", " ")
+    terms.foreach { t =>
+      def ids(prune: Boolean) = df.filter(Search.predicate(df, t, prune)).select("id")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      val unpruned = ids(prune = false)
+      assert(ids(prune = true) == unpruned, s"term '$t'")
+      assert(Search.search(df, t).count() == unpruned.length)
+    }
+    // some terms hit only through a number or date column, so the parity
+    // above covers columns that pruning keeps
+    val numericOnly = df.select(col("id") +: df.columns.filter(_.startsWith("c")).map(col): _*)
+    Seq("Infinity", "-0044", "1.0E-7", "true").foreach { t =>
+      assert(numericOnly.filter(Search.predicate(numericOnly, t, pruneByAlphabet = true)).count() > 0, t)
+    }
+  }
+
+  test("a word search casts no number, date or boolean") {
+    val df = mixed
+    def casts(t: String) = df.filter(Search.predicate(df, t)).queryExecution.analyzed.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.collect {
+        case c: org.apache.spark.sql.catalyst.expressions.Cast => c.child.dataType
+      }
+    }.flatten
+    assert(casts("bada").toSet == Set(BinaryType), "only the binary column is cast for a word")
+    assert(casts("1").toSet.size > 10, "a digit is searched in every number and date column")
+  }
+}
+
+/** `Tables.open` of one parquet file reads its schema from the footer on
+  * the driver; it must be the schema Spark's inference gives.
+  */
+class OpenSchemaSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def assertSameOpen(f: String): Unit = {
+    val inferred = spark.read.parquet(f).schema
+    assert(Tables.open(spark, f).schema == inferred, f)
+  }
+
+  /** A parquet file written by parquet-hadoop alone: no Spark row
+    * metadata, so the schema comes from the parquet types and the
+    * session's reader flags. */
+  private lazy val plainFile: String = {
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message plain {
+        |  required int64 ts_nanos (TIMESTAMP(NANOS,true));
+        |  optional int64 ts_micros_ntz (TIMESTAMP(MICROS,false));
+        |  optional int64 ts_millis (TIMESTAMP(MILLIS,true));
+        |  optional int96 legacy;
+        |  required int32 i;
+        |  optional int32 d (DATE);
+        |  optional int32 small (INTEGER(16,true));
+        |  optional binary s (STRING);
+        |  optional binary raw;
+        |  optional fixed_len_byte_array(16) dec (DECIMAL(38,4));
+        |  optional int64 dec18 (DECIMAL(18,3));
+        |  optional group lst (LIST) { repeated group list { optional int32 element; } }
+        |  optional group mp (MAP) { repeated group key_value { required binary key (STRING); optional double value; } }
+        |  optional group st { required int32 a; optional binary b (STRING); }
+        |}""".stripMargin)
+    val f = TestSpark.scratch("open_schema") + "/plain.parquet"
+    Seq(f, f.replace("plain.parquet", ".plain.parquet.crc")).foreach(new java.io.File(_).delete())
+    val conf = spark.sessionState.newHadoopConf()
+    ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      .withType(schema).withConf(conf).build().close()
+    f
+  }
+
+  test("driver-read schemas equal Spark's inferred ones for Spark-written files") {
+    val dir = TestSpark.scratch("open_schema")
+    val df = spark.range(0, 20).select(
+      col("id"), // not null: written REQUIRED
+      (col("id") * 1.5).cast("decimal(38,10)").as("dec"),
+      (col("id") / 4).cast("decimal(9,2)").as("dec9"),
+      timestamp_seconds(col("id") * 86400).as("ts"),
+      expr("to_timestamp_ntz('2024-01-01 10:00:00')").as("ntz"),
+      to_date(timestamp_seconds(col("id") * 86400)).as("d"),
+      struct(col("id").as("a"), array(col("id").cast("string")).as("b")).as("st"),
+      map(col("id").cast("string"), col("id").cast("double")).as("m"),
+      array(struct(col("id").as("x"))).as("arr"),
+      col("id").cast("string").cast("binary").as("bin"),
+      col("id").cast("float").as("f"), (col("id") % 2 === 0).as("b"),
+      col("id").cast("tinyint").as("by"))
+    Seq("INT96", "TIMESTAMP_MICROS", "TIMESTAMP_MILLIS").foreach { tt =>
+      val out = s"$dir/spark_$tt"
+      withConf("spark.sql.parquet.outputTimestampType" -> tt) {
+        df.coalesce(1).write.mode("overwrite").parquet(out)
+      }
+      val f = new java.io.File(out).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).head
+      Seq("true", "false").foreach { ntz =>
+        withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> ntz) { assertSameOpen(f) }
+      }
+      def json(d: org.apache.spark.sql.DataFrame) =
+        d.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq
+      assert(json(Tables.open(spark, f)) == json(spark.read.parquet(f)))
+      // the directory and a glob keep Spark's inference
+      assert(Tables.openAs(spark, out, "parquet").schema == spark.read.parquet(out).schema)
+      assert(Tables.openAs(spark, s"$out/*.parquet", "parquet").schema == spark.read.parquet(f).schema)
+    }
+    Seq("events", "orders", "lineitem").foreach(t => assertSameOpen(s"${TestSpark.sf}/$t.parquet"))
+  }
+
+  test("driver-read schemas equal Spark's for a file without Spark's row metadata") {
+    for (ntz <- Seq("true", "false"); binStr <- Seq("true", "false"))
+      withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> ntz,
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+        "spark.sql.parquet.binaryAsString" -> binStr) { assertSameOpen(plainFile) }
+    // NANOS without nanosAsLong is unreadable: the open fails as Spark's does
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
+      val want = intercept[Exception](spark.read.parquet(plainFile))
+      val got = intercept[Exception](Tables.open(spark, plainFile))
+      assert(got.getClass == want.getClass && got.getMessage == want.getMessage)
+    }
+    // a missing file and a non-parquet file fail as Spark's read does
+    val missing = TestSpark.scratch("open_schema") + "/missing.parquet"
+    assert(intercept[Exception](Tables.open(spark, missing)).getClass ==
+      intercept[Exception](spark.read.parquet(missing)).getClass)
+    val junk = TestSpark.scratch("open_schema") + "/junk.parquet"
+    java.nio.file.Files.write(java.nio.file.Paths.get(junk), "not parquet".getBytes("UTF-8"))
+    assert(intercept[Exception](Tables.open(spark, junk).collect()).getClass ==
+      intercept[Exception](spark.read.parquet(junk).collect()).getClass)
+  }
+}
+
+/** Spark jobs per engine step on a parquet file: what the driver already
+  * holds (the footer, the result's schema) is served without a job. */
+class QueryEngineJobsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  test("open, schema and metadata run no Spark job; an engine page runs one") {
+    val f = s"${TestSpark.sf}/orders.parquet"
+    val (qe, openJobs) = TestSpark.jobsDuring(new QueryEngine(spark, f))
+    try {
+      assert(openJobs == 0, s"open ran $openJobs jobs")
+      qe.query("SELECT * FROM data WHERE o_totalprice > 1000")
+      qe.paginator.page(PageRequest(1, Some(50))).collect() // fills the cache
+      val (schema, schemaJobs) = TestSpark.jobsDuring(qe.schema.collect())
+      assert(schemaJobs == 0 && schema.length == qe.queryResult.columns.length,
+        s"schema ran $schemaJobs jobs")
+      val (meta, metaJobs) = TestSpark.jobsDuring(qe.metadata.collect())
+      assert(metaJobs == 0 && meta.exists(_.getString(0) == "num_rows"), s"metadata ran $metaJobs jobs")
+      Seq(PageRequest(2, Some(50)), PageRequest(3, Some(50), sort = Some(SortSpec("o_totalprice"))))
+        .foreach { r =>
+          val (rows, pageJobs) = TestSpark.jobsDuring(qe.paginator.page(r).collect())
+          assert(pageJobs == 1 && rows.length == 50, s"page $r ran $pageJobs jobs")
+        }
+      val (_, rgJobs) = TestSpark.jobsDuring(MetadataInspector.rowGroupMetadata(spark, f).collect())
+      assert(rgJobs == 0, s"row-group metadata ran $rgJobs jobs")
+      val (_, dpJobs) = TestSpark.jobsDuring(SchemaInspector.describeParquet(spark, f).collect())
+      assert(dpJobs == 0, s"describeParquet ran $dpJobs jobs")
+    } finally qe.close()
+  }
+}

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SnapshotTable
+import graft.TestSpark.jobsDuring
 
 class SnapshotTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -796,25 +797,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     // come from the memoized lines) — the commit itself reads nothing
     assert(reads <= 1L,
       s"upsert performed $reads full manifest reads; the memo allows 1")
-  }
-
-  /** Jobs started while `body` runs (listener events drained on both
-    * sides, so earlier work is not charged to it). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (r, jobs.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =

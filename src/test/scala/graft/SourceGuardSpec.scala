@@ -5,12 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-scan guards for call patterns that compile but cost too much. */
 class SourceGuardSpec extends AnyFunSuite {
 
-  /** The argument lists of every `ParquetFileReader.open(` call in
+  /** The argument lists of every call to `marker` (which ends in `(`) in
     * `code`, comments stripped first.
     */
-  private def openCalls(code: String): Seq[String] = {
+  private def calls(code: String, marker: String): Seq[String] = {
     val bare = code.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-    val marker = "ParquetFileReader.open("
     Iterator.iterate(bare.indexOf(marker))(i => bare.indexOf(marker, i + 1))
       .takeWhile(_ >= 0).map { i =>
         val start = i + marker.length
@@ -27,15 +26,36 @@ class SourceGuardSpec extends AnyFunSuite {
       }.toSeq
   }
 
-  /** Whether an argument list has a single argument: no comma outside
+  private def openCalls(code: String): Seq[String] = calls(code, "ParquetFileReader.open(")
+
+  /** The top-level arguments of an argument list: split at commas outside
     * nested parentheses. */
-  private def oneArgument(args: String): Boolean =
-    args.foldLeft((0, 0)) { case ((depth, commas), ch) => ch match {
-      case '(' => (depth + 1, commas)
-      case ')' => (depth - 1, commas)
-      case ',' if depth == 0 => (depth, commas + 1)
-      case _ => (depth, commas)
-    }}._2 == 0
+  private def arguments(args: String): Seq[String] = {
+    val (parts, last, _) = args.foldLeft((Vector.empty[String], "", 0)) {
+      case ((done, cur, depth), ch) => ch match {
+        case '(' => (done, cur + ch, depth + 1)
+        case ')' => (done, cur + ch, depth - 1)
+        case ',' if depth == 0 => (done :+ cur.trim, "", depth)
+        case _ => (done, cur + ch, depth)
+      }
+    }
+    parts :+ last.trim
+  }
+
+  private def oneArgument(args: String): Boolean = arguments(args).length == 1
+
+  /** `parallelize(` calls whose slice count is the literal 1: rows the
+    * driver already holds, shipped to one task to be collected back. */
+  private def oneSliceParallelize(code: String): Seq[String] =
+    calls(code, "parallelize(").filter(a => arguments(a).lift(1).contains("1"))
+
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+
+  private def source(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
 
   test("the scan tells a one-argument ParquetFileReader.open from one with read options") {
     val calls = openCalls(
@@ -49,17 +69,33 @@ class SourceGuardSpec extends AnyFunSuite {
   test("src/main opens parquet footers with read options, never the one-argument open") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
     val offenders = scalaFiles(root).flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      openCalls(src).filter(oneArgument).map(a => s"${f.getPath}: open($a)")
+      openCalls(source(f)).filter(oneArgument).map(a => s"${f.getPath}: open($a)")
     }
     // the one-argument open builds a fresh Hadoop Configuration per file
     // (~12 ms) — pass HadoopReadOptions.builder(conf), as
     // MetadataInspector.openReader does
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the scan finds parallelize calls with a literal slice count of 1") {
+    val found = oneSliceParallelize(
+      """sc.parallelize(rows, 1)
+        |sc.parallelize(Seq(1, 2), math.max(1, n))
+        |// sc.parallelize(rows, 1) in a comment is not a call
+        |sc.parallelize(f(a, b), 1 )
+        |sc.parallelize(rows)""".stripMargin)
+    assert(found == Seq("rows, 1", "f(a, b), 1 "), found)
+  }
+
+  test("src/main/scala/graft/query builds driver-held rows as local relations, not one-slice RDDs") {
+    val root = new java.io.File("src/main/scala/graft/query")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val offenders = scalaFiles(root).flatMap { f =>
+      oneSliceParallelize(source(f)).map(a => s"${f.getPath}: parallelize($a)")
+    }
+    // a one-slice RDD of rows the driver holds costs a Spark job per
+    // collect; createDataFrame(rows.asJava, schema) is a local relation
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
