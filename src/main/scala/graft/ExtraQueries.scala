@@ -441,7 +441,8 @@ object ExtraQueries {
       // snapshot table with per-file [min,max,n_rows,nulls] stats the page
       // becomes file-bounded — the walk reads only the 2-3 files that
       // provably contain it, at ANY table size (SkippingIndex.KeysetWalk;
-      // flatness across a 10x corpus probed by ScaleProbe's keyset row).
+      // flatness across a 10x corpus: the keyset_page row of the
+      // committed BENCH_sf1_r13.json).
       // Gate: an 11-page ascending walk and a 3-page descending walk over
       // a snapshot of orders; both final pages mirror pure-SQL offsets on
       // the unique key. Stats collect once per walk; each page is one

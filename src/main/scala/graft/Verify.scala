@@ -69,11 +69,6 @@ object Verify {
             } catch { case e: Throwable =>
               System.err.println(s"[verify] $name failed: ${e.getMessage}")
             }
-            // operators that persist internally (the dedup family) must
-            // not accumulate MEMORY_AND_DISK blocks across the
-            // 178-query session; a concurrent query whose cache is
-            // dropped mid-flight just recomputes (results unaffected)
-            spark.catalog.clearCache()
           }
         })
     }

@@ -19,52 +19,17 @@ import graft.functions.expr.GraftFunctions
   * multi-consumer intermediates (shingles, prefixes, band rows) so the
   * expensive kernels run once per invocation, not once per join side.
   * The returned frame is lazy and still reads those intermediates, so
-  * they cannot be unpersisted inside the operator — instead every persist
-  * is registered, and a long-lived session calls [[Dedup.releaseCaches]]
-  * once the result is materialized (or writes the shingle table out once,
-  * the real 100 TB shape). Bench/gate runs clear the cache between
-  * queries, which drops the same entries.
+  * they cannot be unpersisted inside the operator. Nor can a caller
+  * safely unpersist "its own" frames: Spark's CacheManager merges
+  * persists of equal plans into one entry, so two invocations over the
+  * same input (say ngramJaccard and ngramContainment, which shingle it
+  * identically) share their `docs` entry, and one caller's unpersist
+  * drops the other's mid-job. The caller frees the intermediates with
+  * `spark.catalog.clearCache()` at a barrier it owns, once its results
+  * are materialized and no graft query is running on the session (or
+  * writes the shingle table out once, the real 100 TB shape).
   */
 object Dedup {
-
-  // persisted intermediates of past invocations, released on demand —
-  // see the cache note above
-  private val registeredCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  // drain only past this backlog: storageLevel is a cache-manager plan
-  // lookup, so draining on EVERY tracked() call would cost O(N²) lookups
-  // across a long-lived session (round-6 advice). 64 plans of backlog is
-  // a few MB; beyond it, sweep the already-released entries.
-  private val DrainThreshold = 64
-
-  private def tracked(df: DataFrame): DataFrame = {
-    // lazy drain: entries whose cache is already gone (released via
-    // releaseCaches() or an external catalog.clearCache()) would otherwise
-    // be retained — whole analyzed plans — for the life of the session; a
-    // long-lived service calling dedup per batch must not accumulate them
-    if (registeredCaches.size > DrainThreshold) {
-      val it = registeredCaches.iterator()
-      while (it.hasNext) {
-        if (it.next().storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          it.remove()
-      }
-    }
-    registeredCaches.add(df)
-    df
-  }
-
-  /** Unpersist every intermediate frame persisted by dedup operators so
-    * far. Call after the results of the invocations are materialized; the
-    * results themselves stay valid (they recompute from source if re-used).
-    */
-  def releaseCaches(): Unit = {
-    var df = registeredCaches.poll()
-    while (df != null) {
-      df.unpersist(blocking = false)
-      df = registeredCaches.poll()
-    }
-  }
 
   /** Ensure the expensive per-document kernels (shingling, signatures)
     * run with full parallelism: a small/single-file scan arrives as one
@@ -170,7 +135,7 @@ object Dedup {
       onStats: DedupStats => Unit = _ => ()): DataFrame = {
     val rows = numHashes / bands
     // sorted shingles: verification uses the linear-merge intersect kernel
-    val docs = tracked(spread(df, idCol).select(
+    val docs = spread(df, idCol).select(
       col(idCol).as("id"),
       H.shingles(col(textCol), shingleSize).as("sh"))
       .withColumn("sz", size(col("sh")))
@@ -179,7 +144,7 @@ object Dedup {
       // shingling is the expensive stage and this frame feeds the band
       // index plus BOTH sides of the verify join — materialize it once
       // (the 100 TB pipeline writes this table out; in-session, persist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // width count runs on the PERSISTED projection (materializing it into
     // cache), so a derived/expensive upstream plan is not executed an
     // extra time just to size the candidate stage
@@ -210,11 +175,11 @@ object Dedup {
     // portableHash: md5-derived token hashes so the whole signature (and
     // therefore the hamming-pair set) is replayable in DuckDB oracle SQL;
     // production keeps the ~3x cheaper xxh64 path (identical plan/spans)
-    val docs = tracked(spread(df, idCol).select(col(idCol).as("id"),
+    val docs = spread(df, idCol).select(col(idCol).as("id"),
       GraftFunctions.simhash64(T.tokens(col(textCol)), portableHash).as("sig"))
       // consumed 3x (band index + both sides of the hamming verify join):
       // persist so the tokenize+simhash kernel runs once per invocation
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // width count runs on the persisted narrow projection, not the raw
     // input — a derived upstream plan must not execute an extra time
     val width = adaptiveWidth(df, numPartitions,
@@ -241,28 +206,18 @@ object Dedup {
     * frequent shingles would otherwise produce quadratic buckets.
     * Candidates are then verified with one exact set-Jaccard per pair.
     */
-  /** `onJoinStats`: when set, the CANDIDATE-PAIR count (post prefix +
-    * length + positional filters, pre exact-verify) is measured and
-    * delivered — the adjudication evidence for scale probes (candidates
-    * tracking output = the prefix filter holds; candidates exploding =
-    * filter degradation). Costs one extra count over the (persisted)
-    * candidate set, so it is opt-in and off on the gate path.
-    */
-  final case class NgramJoinStats(candidatePairs: Long)
-
   def ngramJaccard(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, threshold: Double = 0.5,
-      numPartitions: Option[Int] = None,
-      onJoinStats: Option[NgramJoinStats => Unit] = None): DataFrame = {
+      numPartitions: Option[Int] = None): DataFrame = {
     val session = df.sparkSession.sessionState.conf.numShufflePartitions
-    val docs = tracked(spread(df, idCol).select(col(idCol).as("id"),
+    val docs = spread(df, idCol).select(col(idCol).as("id"),
       H.shingles(col(textCol), shingleSize).as("sh"))
       .withColumn("sz", size(col("sh")))
       .filter(col("sz") > 0)
       // reused by the inverted index and BOTH sides of the verify join;
       // without this the shingle kernel runs 3x over the corpus
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // width count runs on the persisted shingle projection (materializing
     // it into cache) — compressed text parquet is far too small on disk
     // for a bytes-only estimate, and a derived upstream plan must not
@@ -284,7 +239,7 @@ object Dedup {
     // a row_number window: the re-group by id still shuffles, but there is
     // no per-partition sort of the whole inverted index, and the rarity
     // order is computed on each doc's own shingles only
-    val prefix = tracked(inv.join(dfreq, "shingle")
+    val prefix = inv.join(dfreq, "shingle")
       .groupBy("id").agg(any_value(col("sz")).as("sz"),
         collect_list(struct(col("docfreq"), col("shingle"))).as("byRarity"))
       .withColumn("pref", slice(array_sort(col("byRarity")), lit(1),
@@ -296,7 +251,7 @@ object Dedup {
         posexplode(col("pref.shingle")).as(Seq("pos", "shingle")))
       // both sides of the candidate self-join read this — materialized
       // once it is built once, not twice (measured 2x end-to-end)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // data-proportional width for the candidate self-join, applied ONLY
     // when it widens past the session default: at small scale the planner's
     // own exchanges (AQE-coalesced, broadcast-eligible) beat a pinned
@@ -329,15 +284,7 @@ object Dedup {
           col("b_sz") - col("b_pos") - 1) >=
         ceil(lit(threshold / (1.0 + threshold)) * (col("a_sz") + col("b_sz")) - lit(1e-9)))
       .select("a", "b").distinct()
-    val counted = onJoinStats match {
-      case None => candidates
-      case Some(cb) =>
-        val c = tracked(candidates
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        cb(NgramJoinStats(c.count()))
-        c
-    }
-    verifyJaccard(counted, docs, threshold)
+    verifyJaccard(candidates, docs, threshold)
   }
 
   /** Exact n-gram CONTAINMENT join — the ASYMMETRIC near-dup face
@@ -365,16 +312,15 @@ object Dedup {
   def ngramContainment(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, threshold: Double = 0.8,
-      numPartitions: Option[Int] = None,
-      onJoinStats: Option[NgramJoinStats => Unit] = None): DataFrame = {
+      numPartitions: Option[Int] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold in (0,1], got $threshold")
     val session = df.sparkSession.sessionState.conf.numShufflePartitions
-    val docs = tracked(spread(df, idCol).select(col(idCol).as("id"),
+    val docs = spread(df, idCol).select(col(idCol).as("id"),
       H.shingles(col(textCol), shingleSize).as("sh"))
       .withColumn("sz", size(col("sh")))
       .filter(col("sz") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val width = adaptiveWidth(df, numPartitions,
       rowCount = if (numPartitions.isEmpty) Some(docs.count()) else None)
     val inv = docs.select(col("id"), col("sz"), explode(col("sh")).as("shs"))
@@ -385,8 +331,8 @@ object Dedup {
     // over the full list stays valid over the survivor list)
     val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("docfreq"))
       .filter(col("docfreq") >= 2)
-    val survivors = tracked(inv.join(dfreq, "shingle")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val survivors = inv.join(dfreq, "shingle")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // probe prefix: C >= t forces overlap >= ceil(t*|A|), so a match must
     // share a token within A's first |A| - ceil(t*|A|) + 1 rarity-sorted
     // tokens (1e-9 slack: ceil of the rounded product must not
@@ -416,15 +362,7 @@ object Dedup {
       .filter(lit(1) + (col("a_sz") - col("a_pos") - 1) >=
         ceil(col("a_sz") * threshold - lit(1e-9)))
       .select("a", "b").distinct()
-    val counted = onJoinStats match {
-      case None => candidates
-      case Some(cb) =>
-        val c = tracked(candidates
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        cb(NgramJoinStats(c.count()))
-        c
-    }
-    counted
+    candidates
       .join(docs.select(col("id").as("a"), col("sh").as("a_sh"),
         col("sz").as("a_sz")), "a")
       .join(docs.select(col("id").as("b"), col("sh").as("b_sh")), "b")
@@ -469,9 +407,9 @@ object Dedup {
       onStats: DedupStats => Unit = _ => ()): DataFrame = {
     // multi-consumer narrow projection: corpus count (auto-k + width),
     // band build, and both verify-join sides read it — persist once
-    val docs = tracked(spread(df, idCol)
+    val docs = spread(df, idCol)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val width = adaptiveWidth(df, numPartitions,
       rowCount = if (numPartitions.isEmpty) Some(docs.count()) else None)
     // k (bits/table) must scale with the corpus: expected bucket size is
@@ -537,14 +475,14 @@ object Dedup {
     // materialize the narrow (id, vector) projection ONCE: train scans it
     // per Lloyd iteration and assignment scans it again — without this,
     // an expensive upstream (e.g. featurization) recomputes 4-5x
-    val vecs = tracked(df.select(col(idCol).as("id"),
+    val vecs = df.select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = IvfIndex.train(vecs, "id", "v", nClusters,
       seed = seed, sampleFraction = sampleFraction)
-    val assigned = tracked(IvfIndex.index(vecs, "id", "v", centroids)
+    val assigned = IvfIndex.index(vecs, "id", "v", centroids)
       .select(col("id"), col("cell"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val smallCells = assigned.groupBy("cell").agg(count(lit(1)).as("csz"))
       .filter(col("csz").between(2, maxCluster)).select("cell")
     val paired = assigned.join(smallCells, Seq("cell"), "left_semi")
@@ -744,12 +682,12 @@ object Dedup {
     // reuse this one hash exchange, so the whole candidate stage runs
     // shuffle-free after a single 12-byte-row exchange. `width` is the
     // caller's data-proportional partition count (adaptiveWidth).
-    val banded = tracked(bandedRaw.repartition(width, col("band"), col("key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sizes = tracked(banded.groupBy("band", "key")
+    val banded = bandedRaw.repartition(width, col("band"), col("key"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = banded.groupBy("band", "key")
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the cap must not fail SILENT: one eager aggregate over the (already
     // persisted) bucket sizes measures what the cap discards, delivered to
     // the caller's `onStats` (per-invocation, race-free — the JVM-wide

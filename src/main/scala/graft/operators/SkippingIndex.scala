@@ -522,7 +522,7 @@ object SkippingIndex {
     * every excluded file lies entirely beyond that boundary, so none can
     * hold any of the page's rows. Per-page cost is then
     * O(page ÷ rows-per-file) FILES at ANY table size — measured: the
-    * `keyset_page` row of BENCH_sf1_r13.json (tools/ScaleProbe) shows
+    * `keyset_page` row of the committed BENCH_sf1_r13.json shows
     * files_kept ≤ 8 per 1000-row page at BOTH sf0.1 and the 10× sf1
     * corpus (rows-per-file held constant, file count 32→320), with
     * median wall 69→107 ms/page — the residual growth is driver-side

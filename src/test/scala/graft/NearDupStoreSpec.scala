@@ -34,7 +34,7 @@ class NearDupStoreSpec extends AnyFunSuite {
     assert(oneShot.nonEmpty)
     assert(inc.toSet == oneShot,
       s"incremental union diverged: +${(inc.toSet -- oneShot).take(3)} -${(oneShot -- inc.toSet).take(3)}")
-    Dedup.releaseCaches()
+    spark.catalog.clearCache()
   }
 
   test("a replayed batch is idempotent: same pairs, no duplicate store rows") {
@@ -78,7 +78,7 @@ class NearDupStoreSpec extends AnyFunSuite {
       shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(oneShot.nonEmpty && streamed == oneShot)
-    Dedup.releaseCaches()
+    spark.catalog.clearCache()
   }
 
   test("a batch with no near-dups of history emits nothing but still lands in the store") {
@@ -170,7 +170,7 @@ class NearDupStoreSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(want.nonEmpty && got == want,
       s"compaction changed pair emission: +${(got -- want).take(3)} -${(want -- got).take(3)}")
-    Dedup.releaseCaches()
+    spark.catalog.clearCache()
   }
 
   test("string ids above 2^53 don't collide in the first-arrival anti-join") {

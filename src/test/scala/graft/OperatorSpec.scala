@@ -162,20 +162,6 @@ class DedupSpec extends AnyFunSuite {
       shingleSize = 3, threshold = 0.5).isEmpty)
   }
 
-  test("releaseCaches drops every operator-internal persisted frame") {
-    spark.catalog.clearCache()
-    val sample = docs.filter(col("doc_id") < 200)
-    Dedup.minhashLsh(sample, "doc_id", "text").collect()
-    Dedup.ngramJaccard(sample.filter(col("doc_id") < 100), "doc_id", "text").collect()
-    val emb = Tables.load(spark, TestSpark.sf, "embeddings").filter(col("vec_id") < 200)
-    Dedup.semanticDedup(emb, "vec_id", "embedding", nClusters = 4, threshold = 0.9).collect()
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "dedup operators persist multi-consumer intermediates")
-    Dedup.releaseCaches()
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "releaseCaches must unpersist every operator-internal frame")
-  }
-
   test("ngram jaccard keeps boundary pairs with Jaccard exactly the threshold") {
     import spark.implicits._
     // engineered so pair (1,2) has J == 0.25 exactly AND its shared tokens
@@ -365,7 +351,7 @@ class DedupSpec extends AnyFunSuite {
       onStats = s => cleanStats = Some(s)).count()
     assert(cleanStats.exists(s => s.bucketsTotal > 0 && s.bucketsDropped == 0L),
       s"uncapped corpus must report zero drops, got $cleanStats")
-    Dedup.releaseCaches()
+    spark.catalog.clearCache()
   }
 
   test("embedding near-dup auto-scales bucket bits: 20k vectors with default k find planted pairs") {
@@ -392,7 +378,7 @@ class DedupSpec extends AnyFunSuite {
       s"missed ${(planted -- got).size} of 1000 planted exact duplicates")
     // the drop diagnostic is populated and NOT the silent-no-op signature
     assert(autoStats.exists(_.dropFraction < 1.0))
-    Dedup.releaseCaches()
+    spark.catalog.clearCache()
     // the OLD parameterization (autoBits off, k=3 => 8 buckets/table) is
     // the (near-)silent no-op: ~2500 expected per bucket, nearly all
     // capped out — recall collapses, and the drop diagnostic must say so
@@ -406,7 +392,7 @@ class DedupSpec extends AnyFunSuite {
       s"fixed k=3 at 20k vectors should miss most planted pairs, missed only ${(planted -- oldGot).size}")
     assert(oldStats.exists(_.dropFraction > 0.5),
       "the collapsed-recall run must be observable via the drop fraction")
-    Dedup.releaseCaches()
+    spark.catalog.clearCache()
   }
 }
 

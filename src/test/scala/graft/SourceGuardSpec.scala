@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-scan guards for call patterns that compile but cost too much. */
+/** Source-scan guards for call patterns that compile but cost too much,
+  * or that break another caller on a shared session. */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** The argument lists of every call to `marker` (which ends in `(`) in
@@ -96,6 +97,41 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     // a one-slice RDD of rows the driver holds costs a Spark job per
     // collect; createDataFrame(rows.asJava, schema) is a local relation
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the scan finds clearCache calls, not clearCache in comments") {
+    val found = calls(
+      """spark.catalog.clearCache()
+        |// spark.catalog.clearCache() in a comment is not a call
+        |/* nor in a block: spark.catalog.clearCache() */
+        |session.sharedState.cacheManager.clearCache()""".stripMargin,
+      "clearCache(")
+    assert(found.length == 2, found)
+  }
+
+  test("only Bench clears the session cache in src/main") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val offenders = scalaFiles(root).filter(_.getName != "Bench.scala")
+      .filter(f => calls(source(f), "clearCache(").nonEmpty).map(_.getPath)
+    // Spark's CacheManager merges persists of equal plans into one entry,
+    // so a clearCache (or an unpersist) issued while another graft query
+    // runs drops that query's intermediates mid-job. Library code and
+    // Verify's pool workers never clear; a caller clears at a barrier it
+    // owns, as Bench does between sequential queries.
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("src/main has no process-global cache registry and no graft.tools package") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    assert(!new java.io.File(root, "graft/tools").exists(), "src/main/scala/graft/tools exists")
+    val offenders = scalaFiles(root).flatMap { f =>
+      val code = source(f)
+      Seq("package graft.tools", "releaseCaches", "registeredCaches")
+        .filter(code.contains).map(m => s"${f.getPath}: $m")
+    }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
