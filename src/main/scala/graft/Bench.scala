@@ -34,25 +34,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val loadBefore = loadavg()
-    // library session defaults (the AQE SMJ→SHJ threshold, see
-    // GraftExtensions.sessionDefaults) applied FIRST so the bench
-    // measures exactly the plans a defaults-following user session gets
-    val spark = GraftExtensions.withSessionDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the generated-code cache defaults to 100 entries; a 100+-query
-      // suite swept in FULL passes (see below) evicts every query's
-      // compiled stages between its two samples, so each timed run would
-      // re-pay Janino compilation — a near-uniform ~1.5-2x inflation
-      // measured on the r8 interleave. Sizing the cache to the suite
-      // keeps the warmup's compiles live through both sweeps: samples
-      // time query EXECUTION (what a cluster repeats), not driver-side
-      // codegen latency (paid once, which is the warmup's job).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.localSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Session warmup: scan init paid once, outside any timed section. A
     // failure here (bad SF dir, unreadable table) is ONE clear crash, not

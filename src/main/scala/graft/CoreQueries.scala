@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -601,4 +601,53 @@ object Scratch {
     new java.io.File(d).mkdirs()
     d
   }
+
+  /** `dir/name`, emptied: a gate rebuilds its tables there from nothing,
+    * so a rerun never reads an earlier run's state. */
+  def fresh(spark: SparkSession, name: String): String = {
+    val d = s"$dir/$name"
+    val p = new org.apache.hadoop.fs.Path(d)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    d
+  }
+}
+
+/** Setup the snapshot-table gates share, and its oracle-SQL replay. */
+object Fixtures {
+
+  /** Creates the snapshot table `tdir` from `base`: every row at
+    * commit_v = 0, written as `files` files range-clustered on `key`, so
+    * each file holds a narrow key band. */
+  def snapshot(s: SparkSession, tdir: String, base: DataFrame, key: String,
+      files: Int): Unit =
+    graft.operators.SnapshotTable.create(s,
+      base.withColumn("commit_v", lit(0L)).repartitionByRange(files, col(key)),
+      tdir)
+
+  /** The change set the q57 family upserts as commit_v = 1 over `base`
+    * (orders rows keyed by o_orderkey): keys ≡3 (mod 10) set `updated` to
+    * `update`, keys ≡7 are tombstones, and keys ≡1 are inserted again at
+    * key + 10M, past every file's band. [[mixedSql]] replays it. */
+  def changeMix(base: DataFrame, updated: String, update: Column): DataFrame = {
+    val m = pmod(col("o_orderkey"), lit(10))
+    base.filter(m === 3).withColumn(updated, update)
+      .withColumn("_deleted", lit(false))
+      .unionByName(base.filter(m === 7).withColumn("_deleted", lit(true)))
+      .unionByName(base.filter(m === 1)
+        .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
+        .withColumn("_deleted", lit(false)))
+      .withColumn("commit_v", lit(1L))
+  }
+
+  /** [[changeMix]] merged into the oracle CTE `b` (orders rows with an
+    * o_orderkey column), as the CTE `mixed` with b's columns in b's order;
+    * `update` is the SQL of the updated column's new value. */
+  def mixedSql(updated: String, update: String): String =
+    s"""mixed AS (
+       |  SELECT * REPLACE (CASE WHEN o_orderkey % 10 = 3 THEN $update
+       |                         ELSE $updated END AS $updated)
+       |  FROM b WHERE o_orderkey % 10 != 7
+       |  UNION ALL
+       |  SELECT * REPLACE (o_orderkey + 10000000 AS o_orderkey)
+       |  FROM b WHERE o_orderkey % 10 = 1)""".stripMargin
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.AsOfJoin
+import graft.operators.{AsOfJoin, MaterializedView, SnapshotTable}
 import graft.sources.Tables
 
 /** Additional §2 operators: as-of join (custom operator Spark lacks),
@@ -447,15 +447,10 @@ object ExtraQueries {
       // a snapshot of orders; both final pages mirror pure-SQL offsets on
       // the unique key. Stats collect once per walk; each page is one
       // bounded job.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q63_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q63_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(12, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 12)
       SnapshotTable.attachStats(s, tdir, Seq("o_orderkey"))
       val walk = SnapshotTable.keysetWalk(s, tdir, "o_orderkey")
       def walkTo(pages: Int, ascending: Boolean): org.apache.spark.sql.DataFrame = {
@@ -486,16 +481,11 @@ object ExtraQueries {
       // spec-asserted). Zero-padded keys make lexicographic order ==
       // numeric order, so the range-clustered layout gives tight
       // per-file bands and both final pages mirror pure-SQL offsets.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q64_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q64_table")
       val base = t(s, dir, "orders")
         .select(concat(lit("K"), lpad(col("o_orderkey").cast("string"), 9, "0")).as("okey"),
           col("o_custkey"), col("o_totalprice"))
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(12, col("okey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "okey", 12)
       SnapshotTable.attachStatsString(s, tdir, Seq("okey"))
       val walk = SnapshotTable.keysetWalkString(s, tdir, "okey")
       def walkTo(pages: Int, ascending: Boolean): org.apache.spark.sql.DataFrame = {
@@ -526,24 +516,12 @@ object ExtraQueries {
       // must equal the merged truth however the files were rewritten.
       // Both versions are plain SQL over orders, so the whole
       // manifest/commit/merge/compact machinery driver-hashes.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q57_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q57_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
-      val m = pmod(col("o_orderkey"), lit(10))
-      val changes = base.filter(m === 3)
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("_deleted", lit(false))
-        .unionByName(base.filter(m === 7).withColumn("_deleted", lit(true)))
-        .unionByName(base.filter(m === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("_deleted", lit(false)))
-        .withColumn("commit_v", lit(1L))
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
+      val changes = Fixtures.changeMix(base, "o_custkey",
+        col("o_custkey") + lit(1000000L))
       SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v", "o_custkey")
       SnapshotTable.compact(s, tdir, targetRecords = 4096L)
       val v1 = SnapshotTable.read(s, tdir, Some(1L)).withColumn("snap", lit(1L))
@@ -564,28 +542,14 @@ object ExtraQueries {
       // (keys ≡3 mod 10, flagged 'upd'), tombstones (≡7), inserts at
       // key+10M (≡1, flagged 'ins'); every surviving base row — merged
       // or reused — must serve o_flag = NULL.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q62_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q62_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       val m = pmod(col("o_orderkey"), lit(10))
-      val changes = base.filter(m === 3)
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("o_flag", lit("upd"))
-        .withColumn("_deleted", lit(false))
-        .unionByName(base.filter(m === 7)
-          .withColumn("o_flag", lit(null).cast("string"))
-          .withColumn("_deleted", lit(true)))
-        .unionByName(base.filter(m === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("o_flag", lit("ins"))
-          .withColumn("_deleted", lit(false)))
-        .withColumn("commit_v", lit(1L))
+      val changes = Fixtures.changeMix(base, "o_custkey",
+          col("o_custkey") + lit(1000000L))
+        .withColumn("o_flag", when(m === 3, "upd").when(m === 1, "ins"))
       SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v", "o_custkey")
       val v1 = SnapshotTable.read(s, tdir, Some(1L)).withColumn("snap", lit(1L))
         .withColumn("o_flag", lit(null).cast("string"))
@@ -608,17 +572,12 @@ object ExtraQueries {
       // enough to skip; the skip itself is an I/O property
       // (spec-asserted for Layout + SnapshotTable stats), never a
       // semantic one.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q67_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q67_table")
       val li = t(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
       // created UNCLUSTERED in the key (orderkey ranges): the z-order
       // compaction is what makes partkey scans skippable
-      SnapshotTable.create(s,
-        li.withColumn("commit_v", lit(0L))
-          .repartitionByRange(12, col("l_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, li, "l_orderkey", 12)
       SnapshotTable.compact(s, tdir, targetRecords = 8192L,
         zOrderOn = Some(("l_partkey", "l_suppkey", 8)))
       SnapshotTable.attachStats(s, tdir, Seq("l_partkey"))
@@ -652,10 +611,7 @@ object ExtraQueries {
       // removes false positives). Oracle = the plain equality filter:
       // skipping is an I/O property, never a semantic one (prune
       // evidence spec-asserted in SkippingIndex/SnapshotTable specs).
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q73_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q73_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       SnapshotTable.create(s,
@@ -677,15 +633,10 @@ object ExtraQueries {
       // planted value (lives only in rewritten files) and a pre-existing
       // one (served by REUSED bitmaps): a stale or missing reused bitmap
       // is a false negative and hash-mismatches the plain filter replay.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q77_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q77_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(12, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 12)
       SnapshotTable.attachBloom(s, tdir, "o_custkey",
         expectedItemsPerFile = 4096L)
       val changes = base.filter(col("o_orderkey").between(500L, 700L))
@@ -795,9 +746,7 @@ object ExtraQueries {
       // along cross-engine-hashable).
       import graft.operators.EventAnalytics
       import graft.streaming.SketchRollup
-      val store = s"${Scratch.dir}/q76_sketches"
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val store = Scratch.fresh(s, "q76_sketches")
       val ev = t(s, dir, "events")
       val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
       val assigned = ev
@@ -833,15 +782,10 @@ object ExtraQueries {
       // scan THROUGH the incrementally-built index — a stale or wrong
       // reused row yields wrong rows and hash-mismatches the plain
       // filter replay.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q70_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q70_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(12, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 12)
       SnapshotTable.attachStats(s, tdir, Seq("o_orderkey"))
       val changes = base.filter(col("o_orderkey").between(500L, 700L))
         .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
@@ -864,10 +808,7 @@ object ExtraQueries {
       // plain SQL over orders, so the whole find/rewrite/commit path
       // driver-hashes. NULL-predicate rows are kept (SQL DELETE deletes
       // only where TRUE) — spec-asserted in SnapshotTableSpec.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q68_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q68_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       SnapshotTable.create(s,
@@ -893,16 +834,10 @@ object ExtraQueries {
       // v1 serving post-upsert rows) hash-mismatches. Instant
       // monotonicity, mtime fallback and pre-create errors are spec'd
       // in SnapshotTableSpec.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q79_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      val fsys = p.getFileSystem(s.sessionState.newHadoopConf())
-      fsys.delete(p, true)
+      val tdir = Scratch.fresh(s, "q79_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       val v1PublishedAt = SnapshotTable.commitInstantOf(s, tdir, 1L)
       val changes = base.filter(col("o_orderkey").between(500L, 700L))
         .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
@@ -925,15 +860,10 @@ object ExtraQueries {
       // commit instant) unioned with the current merged truth; a
       // mis-resolved instant or a leaked version hash-mismatches.
       graft.GraftExtensions.register(s)
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q87_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q87_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       val i1 = SnapshotTable.commitInstantOf(s, tdir, 1L)
       val changes = base.filter(col("o_orderkey").between(500L, 700L))
         .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
@@ -962,18 +892,11 @@ object ExtraQueries {
       // hash-matches DuckDB's full recompute of the merged truth; any
       // drift (missed delete, double-applied update, float order) is a
       // mismatch. Refresh cost shape + no-op freshness spec'd.
-      import graft.operators.{MaterializedView, SnapshotTable}
-      val tdir = s"${Scratch.dir}/q84_table"
-      val mdir = s"${Scratch.dir}/q84_mv"
-      for (d <- Seq(tdir, mdir)) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      }
+      val tdir = Scratch.fresh(s, "q84_table")
+      val mdir = Scratch.fresh(s, "q84_mv")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-        .withColumn("commit_v", lit(0L))
-      SnapshotTable.create(s,
-        base.repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       MaterializedView.create(s, tdir, mdir, "o_custkey", "o_totalprice")
       val upd = base.filter(col("o_orderkey") % 10 === 2)
         .withColumn("o_totalprice", col("o_totalprice") + lit(500.0))
@@ -1002,20 +925,13 @@ object ExtraQueries {
       // SQL sum-of-nothing-is-NULL contract are both exercised; the
       // mixed upsert + delta-sized refresh (ignoreCols drops commit_v
       // churn) must equal DuckDB's full recompute exactly.
-      import graft.operators.{MaterializedView, SnapshotTable}
-      val tdir = s"${Scratch.dir}/q86_table"
-      val mdir = s"${Scratch.dir}/q86_mv"
-      for (d <- Seq(tdir, mdir)) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      }
+      val tdir = Scratch.fresh(s, "q86_table")
+      val mdir = Scratch.fresh(s, "q86_mv")
       val base = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           when(col("o_orderkey") % 7 === 0, lit(null).cast("double"))
             .otherwise(col("o_totalprice") + lit(1.25)).as("o_fee"))
-        .withColumn("commit_v", lit(0L))
-      SnapshotTable.create(s,
-        base.repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       MaterializedView.create(s, tdir, mdir, "o_custkey",
         Seq("o_totalprice", "o_fee"))
       val upd = base.filter(col("o_orderkey") % 10 === 3)
@@ -1042,30 +958,18 @@ object ExtraQueries {
       // stays writable (a further upsert lands on the narrowed schema).
       // The resurrection guard (re-adding a dropped name serves stale
       // values until compact) is spec-asserted in SnapshotTableSpec.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q91_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q91_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
-      val m = pmod(col("o_orderkey"), lit(10))
-      val changes = base.filter(m === 3)
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("_deleted", lit(false))
-        .unionByName(base.filter(m === 7).withColumn("_deleted", lit(true)))
-        .unionByName(base.filter(m === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("_deleted", lit(false)))
-        .withColumn("commit_v", lit(1L))
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
+      val changes = Fixtures.changeMix(base, "o_custkey",
+        col("o_custkey") + lit(1000000L))
       SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v",
         "o_custkey")
       SnapshotTable.dropColumn(s, tdir, "o_orderstatus")
       // the table stays WRITABLE after the drop: a further upsert on
       // the narrowed schema commits v4
-      val upd2 = base.filter(m === 5)
+      val upd2 = base.filter(pmod(col("o_orderkey"), lit(10)) === 5)
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .withColumn("o_totalprice", col("o_totalprice") + lit(100.0))
         .withColumn("commit_v", lit(2L)).withColumn("_deleted", lit(false))
@@ -1088,19 +992,12 @@ object ExtraQueries {
       // plan serve() builds (one code path, two faces), pinned to the
       // current committed view version. Same oracle as q84: the
       // SQL-served view must equal DuckDB's full recompute.
-      import graft.operators.{MaterializedView, SnapshotTable}
       graft.GraftExtensions.register(s)
-      val tdir = s"${Scratch.dir}/q93_table"
-      val mdir = s"${Scratch.dir}/q93_mv"
-      for (d <- Seq(tdir, mdir)) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      }
+      val tdir = Scratch.fresh(s, "q93_table")
+      val mdir = Scratch.fresh(s, "q93_mv")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-        .withColumn("commit_v", lit(0L))
-      SnapshotTable.create(s,
-        base.repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       MaterializedView.create(s, tdir, mdir, "o_custkey", "o_totalprice")
       val upd = base.filter(col("o_orderkey") % 10 === 2)
         .withColumn("o_totalprice", col("o_totalprice") + lit(500.0))
@@ -1128,25 +1025,13 @@ object ExtraQueries {
       // same manifest-symmetric-difference plan the Scala changes()
       // builds, same oracle (only the TRUE changes; every carry-over
       // row the rewrite moved must stay silent).
-      import graft.operators.SnapshotTable
       graft.GraftExtensions.register(s)
-      val tdir = s"${Scratch.dir}/q94_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q94_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
-      val m = pmod(col("o_orderkey"), lit(10))
-      val changes = base.filter(m === 3)
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("_deleted", lit(false))
-        .unionByName(base.filter(m === 7).withColumn("_deleted", lit(true)))
-        .unionByName(base.filter(m === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("_deleted", lit(false)))
-        .withColumn("commit_v", lit(1L))
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
+      val changes = Fixtures.changeMix(base, "o_custkey",
+        col("o_custkey") + lit(1000000L))
       SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v",
         "o_custkey")
       s.sql(
@@ -1164,15 +1049,10 @@ object ExtraQueries {
       // under the new name — a NULLed value or a leaked old column
       // hash-mismatches; the pinned v1 read keeps the old name, and the
       // table stays writable on the renamed schema.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q92_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q92_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       SnapshotTable.renameColumn(s, tdir, "o_orderstatus", "status")
       val m = pmod(col("o_orderkey"), lit(10))
       val upd = base.filter(m === 3)
@@ -1230,21 +1110,14 @@ object ExtraQueries {
       // single-key view never exercises; the delete mix and commit_v
       // ignoreCols ride along from q86. Must equal DuckDB's full
       // recompute of the merged truth exactly.
-      import graft.operators.{MaterializedView, SnapshotTable}
-      val tdir = s"${Scratch.dir}/q88_table"
-      val mdir = s"${Scratch.dir}/q88_mv"
-      for (d <- Seq(tdir, mdir)) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      }
+      val tdir = Scratch.fresh(s, "q88_table")
+      val mdir = Scratch.fresh(s, "q88_mv")
       val base = t(s, dir, "orders")
         .select(col("o_orderkey"),
           pmod(col("o_custkey"), lit(100L)).as("cust_b"),
           substring(col("o_orderpriority"), 1, 1).as("prio"),
           col("o_totalprice"))
-        .withColumn("commit_v", lit(0L))
-      SnapshotTable.create(s,
-        base.repartitionByRange(8, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       MaterializedView.create(s, tdir, mdir, Seq("cust_b", "prio"),
         Seq("o_totalprice"))
       val upd = base.filter(col("o_orderkey") % 10 === 3)
@@ -1271,18 +1144,11 @@ object ExtraQueries {
       // independence) while the clone serves the merged truth. Either
       // side leaking into the other hash-mismatches. Storage-dependence
       // (source vacuum hazard) and zero-copy evidence are spec'd.
-      import graft.operators.SnapshotTable
-      val src = s"${Scratch.dir}/q83_src"
-      val dst = s"${Scratch.dir}/q83_clone"
-      for (d <- Seq(src, dst)) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      }
+      val src = Scratch.fresh(s, "q83_src")
+      val dst = Scratch.fresh(s, "q83_clone")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-        .withColumn("commit_v", lit(0L))
-      SnapshotTable.create(s,
-        base.repartitionByRange(8, col("o_orderkey")), src)
+      Fixtures.snapshot(s, src, base, "o_orderkey", 8)
       SnapshotTable.shallowClone(s, src, dst)
       val changes = base.filter(col("o_orderkey") % 10 === 4)
         .withColumn("o_totalprice", col("o_totalprice") + lit(100000.0))
@@ -1308,15 +1174,10 @@ object ExtraQueries {
       // hash-mismatches the merged truth. Retention/grace/orphan
       // semantics are spec-asserted in SnapshotTableSpec; this gates the
       // live-file safety property against the DuckDB replay.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q78_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q78_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(12, col("o_orderkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 12)
       val changes = base.filter(col("o_orderkey").between(500L, 700L))
         .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
         .withColumn("commit_v", lit(1L))
@@ -1338,10 +1199,7 @@ object ExtraQueries {
       // equal v1 exactly. CDC-across-restore, vacuum keeping restored
       // files, and restore-after-vacuum failure are spec-asserted in
       // SnapshotTableSpec.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q69_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q69_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       SnapshotTable.create(s,
@@ -1366,10 +1224,7 @@ object ExtraQueries {
       // both final pages mirror pure-SQL offsets exactly. MICROS output
       // is required for ordered footer stats (INT96 has none) — set for
       // the snapshot write, restored after.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q66_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q66_table")
       val base = t(s, dir, "events").select("ts", "event_id", "value")
       val prev = s.conf.get("spark.sql.parquet.outputTimestampType")
       try {
@@ -1406,24 +1261,12 @@ object ExtraQueries {
       // exactly the true changes, so the hash enforces that silence.
       // commit_v is ignoreCols: the merge bumps it on every winning row,
       // which is version churn, not a content change.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q65_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q65_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), tdir)
-      val m = pmod(col("o_orderkey"), lit(10))
-      val changes = base.filter(m === 3)
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("_deleted", lit(false))
-        .unionByName(base.filter(m === 7).withColumn("_deleted", lit(true)))
-        .unionByName(base.filter(m === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("_deleted", lit(false)))
-        .withColumn("commit_v", lit(1L))
+      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
+      val changes = Fixtures.changeMix(base, "o_custkey",
+        col("o_custkey") + lit(1000000L))
       SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v", "o_custkey")
       SnapshotTable.changes(s, tdir, "o_orderkey", 1L, 2L,
           ignoreCols = Seq("commit_v"))
@@ -1440,17 +1283,12 @@ object ExtraQueries {
       // 'Z' prefix puts inserts past every band (pure-insert path).
       // Narrow-band prune evidence is spec-asserted (SnapshotTableSpec);
       // the gate replays v1 and the post-upsert v2 in pure SQL.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q60_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q60_table")
       val o = t(s, dir, "orders")
       def k(prefix: String) = concat(lit(prefix),
         lpad(col("o_orderkey").cast("string"), 9, "0"))
       val base = o.select(k("K").as("okey"), col("o_custkey"), col("o_totalprice"))
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("okey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "okey", 8)
       val m = pmod(col("o_orderkey"), lit(10))
       val changes = o.filter(m === 3)
         .select(k("K").as("okey"),
@@ -1480,17 +1318,12 @@ object ExtraQueries {
       // land a million days past every band (pure-insert path).
       // Narrow-band prune evidence is spec-asserted (SnapshotTableSpec
       // DATE-key test); the gate replays v1 and post-upsert v2 in SQL.
-      import graft.operators.SnapshotTable
-      val tdir = s"${Scratch.dir}/q61_table"
-      val p = new org.apache.hadoop.fs.Path(tdir)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val tdir = Scratch.fresh(s, "q61_table")
       val o = t(s, dir, "orders")
       def k(off: Long) = date_add(to_date(lit("1990-01-01")),
         (col("o_orderkey") + lit(off)).cast("int"))
       val base = o.select(k(0).as("dkey"), col("o_custkey"), col("o_totalprice"))
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("dkey")), tdir)
+      Fixtures.snapshot(s, tdir, base, "dkey", 8)
       val m = pmod(col("o_orderkey"), lit(10))
       val changes = o.filter(m === 3)
         .select(k(0).as("dkey"),
@@ -1714,6 +1547,25 @@ object ExtraQueries {
     }),
   )
 
+  /** The q57 change mix as the CDC feed v1 -> v2 emits it. */
+  private val changeFeedSql =
+    """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
+      |SELECT 'insert' AS _change_type, o_orderkey + 10000000 AS o_orderkey,
+      |  o_custkey, o_totalprice
+      |FROM b WHERE o_orderkey % 10 = 1
+      |UNION ALL
+      |SELECT 'delete' AS _change_type, o_orderkey, o_custkey, o_totalprice
+      |FROM b WHERE o_orderkey % 10 = 7
+      |UNION ALL
+      |SELECT 'update_preimage' AS _change_type, o_orderkey, o_custkey,
+      |  o_totalprice
+      |FROM b WHERE o_orderkey % 10 = 3
+      |UNION ALL
+      |SELECT 'update_postimage' AS _change_type, o_orderkey,
+      |  o_custkey + 1000000 AS o_custkey, o_totalprice
+      |FROM b WHERE o_orderkey % 10 = 3
+      |ORDER BY o_orderkey, _change_type""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     // full replay of the z-order math: equal-width bucket + Morton
     // interleave (rendered by the same Layout helpers the Spark side
@@ -1837,20 +1689,12 @@ object ExtraQueries {
     // merged truth (updates/deletes/inserts by key mod 10) — commit,
     // file-pruned merge and compaction must all be content-invisible
     "q57_snapshot" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-        |v3 AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
-        |         ELSE o_custkey END AS o_custkey,
-        |    o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 7
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000 AS o_orderkey, o_custkey, o_totalprice
-        |  FROM b WHERE o_orderkey % 10 = 1)
-        |SELECT CAST(1 AS BIGINT) AS snap, * FROM b
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT) AS snap, * FROM v3
-        |ORDER BY snap, o_orderkey""".stripMargin,
+      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
+         |SELECT CAST(1 AS BIGINT) AS snap, * FROM b
+         |UNION ALL
+         |SELECT CAST(3 AS BIGINT) AS snap, * FROM mixed
+         |ORDER BY snap, o_orderkey""".stripMargin,
 
     // the keyset walk's page 11 must equal the offset page exactly —
     // seek is a pure execution-strategy change, never a semantic one
@@ -1861,26 +1705,19 @@ object ExtraQueries {
 
     // schema evolution: v1 (old schema, read through an explicit NULL
     // column) and the evolved v2 replayed from orders — changed rows
-    // carry the new column's values, every surviving base row NULL
+    // carry the new column's values (inserts sit at key + 10M), every
+    // surviving base row NULL
     "q62_snapshot_evolve" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-        |v2 AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
-        |         ELSE o_custkey END AS o_custkey,
-        |    o_totalprice,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN 'upd'
-        |         ELSE CAST(NULL AS VARCHAR) END AS o_flag
-        |  FROM b WHERE o_orderkey % 10 != 7
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000 AS o_orderkey, o_custkey,
-        |    o_totalprice, 'ins' AS o_flag
-        |  FROM b WHERE o_orderkey % 10 = 1)
-        |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
-        |  o_totalprice, CAST(NULL AS VARCHAR) AS o_flag FROM b
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
-        |ORDER BY snap, o_orderkey""".stripMargin,
+      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
+         |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
+         |  o_totalprice, CAST(NULL AS VARCHAR) AS o_flag FROM b
+         |UNION ALL
+         |SELECT CAST(2 AS BIGINT) AS snap, *,
+         |  CASE WHEN o_orderkey % 10 = 3 THEN 'upd'
+         |       WHEN o_orderkey >= 10000000 THEN 'ins' END AS o_flag
+         |FROM mixed
+         |ORDER BY snap, o_orderkey""".stripMargin,
 
     // identical sorted-fold means, identical dense spine, identical ffill
     "q74_resample" ->
@@ -2165,23 +2002,7 @@ object ExtraQueries {
         |ORDER BY o_custkey""".stripMargin,
 
     // the SQL-face CDC feed equals q65's true-changes replay
-    "q94_changes_sql" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
-        |SELECT 'insert' AS _change_type, o_orderkey + 10000000 AS o_orderkey,
-        |  o_custkey, o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 1
-        |UNION ALL
-        |SELECT 'delete' AS _change_type, o_orderkey, o_custkey, o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 7
-        |UNION ALL
-        |SELECT 'update_preimage' AS _change_type, o_orderkey, o_custkey,
-        |  o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 3
-        |UNION ALL
-        |SELECT 'update_postimage' AS _change_type, o_orderkey,
-        |  o_custkey + 1000000 AS o_custkey, o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 3
-        |ORDER BY o_orderkey, _change_type""".stripMargin,
+    "q94_changes_sql" -> changeFeedSql,
 
     // v1 = original truth under the OLD name; v3 = post-rename,
     // post-upsert truth — un-updated rows must carry their ORIGINAL
@@ -2202,29 +2023,20 @@ object ExtraQueries {
     // v2 = merged truth WITH the status column; v4 = the post-drop,
     // post-second-upsert truth, status gone (NULL through the union)
     "q91_snapshot_drop" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
-        |             o_totalprice FROM orders),
-        |v2 AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
-        |         ELSE o_custkey END AS o_custkey,
-        |    o_orderstatus, o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 7
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_custkey, o_orderstatus,
-        |    o_totalprice
-        |  FROM b WHERE o_orderkey % 10 = 1),
-        |v4 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey % 10 = 5 THEN o_totalprice + 100.0
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM v2)
-        |SELECT CAST(2 AS BIGINT) AS snap, o_orderkey, o_custkey,
-        |  o_totalprice, o_orderstatus FROM v2
-        |UNION ALL
-        |SELECT CAST(4 AS BIGINT) AS snap, o_orderkey, o_custkey,
-        |  o_totalprice, CAST(NULL AS VARCHAR) AS o_orderstatus FROM v4
-        |ORDER BY snap, o_orderkey""".stripMargin,
+      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
+         |             o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")},
+         |v4 AS (
+         |  SELECT o_orderkey, o_custkey,
+         |    CASE WHEN o_orderkey % 10 = 5 THEN o_totalprice + 100.0
+         |         ELSE o_totalprice END AS o_totalprice
+         |  FROM mixed)
+         |SELECT CAST(2 AS BIGINT) AS snap, o_orderkey, o_custkey,
+         |  o_totalprice, o_orderstatus FROM mixed
+         |UNION ALL
+         |SELECT CAST(4 AS BIGINT) AS snap, o_orderkey, o_custkey,
+         |  o_totalprice, CAST(NULL AS VARCHAR) AS o_orderstatus FROM v4
+         |ORDER BY snap, o_orderkey""".stripMargin,
 
     // the SQL face serves q72's triangle — same replay
     "q89_cohort_sql" ->
@@ -2367,23 +2179,7 @@ object ExtraQueries {
     // the CDC feed replayed directly from orders: the oracle contains
     // ONLY the true changes, so every carry-over row the copy-on-write
     // rewrite moved into new files must be absent from the Spark side
-    "q65_snapshot_changes" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
-        |SELECT 'insert' AS _change_type, o_orderkey + 10000000 AS o_orderkey,
-        |  o_custkey, o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 1
-        |UNION ALL
-        |SELECT 'delete' AS _change_type, o_orderkey, o_custkey, o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 7
-        |UNION ALL
-        |SELECT 'update_preimage' AS _change_type, o_orderkey, o_custkey,
-        |  o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 3
-        |UNION ALL
-        |SELECT 'update_postimage' AS _change_type, o_orderkey,
-        |  o_custkey + 1000000 AS o_custkey, o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 3
-        |ORDER BY o_orderkey, _change_type""".stripMargin,
+    "q65_snapshot_changes" -> changeFeedSql,
 
     // the string-key snapshot: v1 and the post-upsert v2 replayed from
     // orders with the same zero-padded key derivation

@@ -46,21 +46,46 @@ object GraftExtensions {
   val sessionDefaults: Map[String, String] = Map(
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m")
 
-  /** Apply [[sessionDefaults]] to a session builder:
+  /** Library defaults that are STATIC confs: a session takes them only
+    * from its builder, and `spark.conf.set` on a built session rejects
+    * them.
+    *
+    *  - `spark.sql.codegen.cache.maxEntries=10000`: Spark's generated-code
+    *    cache holds 100 classes, fewer than one cold curation pass
+    *    compiles (about 111), so every later pass re-pays Janino
+    *    compilation; sized at 10,000, repeated passes compile nothing. The
+    *    cache is JVM-wide and sized once, when code generation first
+    *    initializes in the JVM: a later builder, or a second session in
+    *    the same JVM, cannot change it.
+    */
+  val staticDefaults: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "10000")
+
+  /** Apply [[sessionDefaults]] and [[staticDefaults]] to a session builder:
     * `GraftExtensions.withSessionDefaults(SparkSession.builder)...`.
     */
   def withSessionDefaults(
       b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
-    sessionDefaults.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    (sessionDefaults ++ staticDefaults).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
-  /** Apply [[sessionDefaults]] to an ALREADY-BUILT session (they are all
-    * runtime SQL confs). Returns the session for chaining.
+  /** The local session Bench, Verify and the specs run on, so all three
+    * check the plans users get: the library defaults, `cores` task slots
+    * and as many shuffle partitions, UTC session time, and the UI off.
+    * Parquet timestamps are read the way `graft.sources.Tables.load`
+    * expects: NANOS int64 as a long (`nanosAsLong`), and
+    * TIMESTAMP(isAdjustedToUTC=false) as the stored micros taken as an
+    * instant (`inferTimestampNTZ.enabled=false`), which is what DuckDB's
+    * epoch_us sees.
     */
-  def applySessionDefaults(
-      spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    sessionDefaults.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark
-  }
+  def localSession(cores: Int): org.apache.spark.sql.SparkSession =
+    withSessionDefaults(org.apache.spark.sql.SparkSession.builder())
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 
   private def intArg(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, _) => v

@@ -308,9 +308,7 @@ object PipelineQueries {
       val model = graft.operators.PqIndex.train(
         e.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", "embedding",
         nCells = 16, m = 8, kCodes = 16, sampleFraction = 1.0)
-      val idx = s"${Scratch.dir}/ivfpq_delete_index"
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val idx = Scratch.fresh(s, "ivfpq_delete_index")
       graft.operators.PqIndex.writeIndex(
         graft.operators.PqIndex.encode(e, "vec_id", "embedding", model), idx)
       graft.operators.PqIndex.deleteFromIndex(s,
@@ -360,9 +358,7 @@ object PipelineQueries {
       // (plan-asserted in PlanSpec), df exact from the loaded lists —
       // the round trip is result-invisible, so the SAME oracle SQL
       // gates it
-      val idx = s"${Scratch.dir}/bm25_index"
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val idx = Scratch.fresh(s, "bm25_index")
       TextAnalysis.buildBm25Index(t(s, dir, "documents"), "doc_id", "text",
         idx, nBuckets = 64)
       TextAnalysis.bm25SearchIndexed(s, idx, "doc_id",
@@ -377,9 +373,7 @@ object PipelineQueries {
       // store must equal the full-corpus replay — same oracle as
       // text_bm25/text_bm25_indexed: a lost posting, double-counted
       // stat, or wrong bucket hash-mismatches.
-      val idx = s"${Scratch.dir}/bm25_append_index"
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val idx = Scratch.fresh(s, "bm25_append_index")
       val docs = t(s, dir, "documents")
       TextAnalysis.buildBm25Index(docs.filter(col("doc_id") < 250),
         "doc_id", "text", idx, nBuckets = 64)
@@ -399,9 +393,7 @@ object PipelineQueries {
       // first-arrival keeper and batch. The oracle recomputes the store
       // minus the banned hash set from scratch: a leaked tombstoned
       // hash, a lost untouched row, or a drifted keeper mismatches.
-      val store = s"${Scratch.dir}/dedup_takedown_store"
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val store = Scratch.fresh(s, "dedup_takedown_store")
       val docs = t(s, dir, "documents")
       graft.operators.DedupStore.ingest(
         s, docs.filter(col("doc_id") < 2000), "doc_id", "text", store, 0L)
@@ -426,9 +418,7 @@ object PipelineQueries {
       // rescan). Serving anti-joins the tombstones BEFORE df, so the
       // search must equal the replay over the survivors — a leaked
       // deleted doc, stale df, or unsubtracted stat hash-mismatches.
-      val idx = s"${Scratch.dir}/bm25_delete_index"
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val idx = Scratch.fresh(s, "bm25_delete_index")
       val docs = t(s, dir, "documents")
       TextAnalysis.buildBm25Index(docs, "doc_id", "text", idx, nBuckets = 64)
       TextAnalysis.deleteFromBm25Index(s, idx,
@@ -447,9 +437,7 @@ object PipelineQueries {
       // full-corpus oracle as text_bm25/_indexed/_append gates the
       // round trip — this is the steady-state face that stops serve
       // cost growing with ingest batch count.
-      val idx = s"${Scratch.dir}/bm25_compact_index"
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val idx = Scratch.fresh(s, "bm25_compact_index")
       val docs = t(s, dir, "documents")
       TextAnalysis.buildBm25Index(docs.filter(col("doc_id") < 250),
         "doc_id", "text", idx, nBuckets = 64)
@@ -467,9 +455,7 @@ object PipelineQueries {
       // then vacuum reclaims the superseded filesets and the store
       // still serves — the same one-shot PMI oracle gates the whole
       // compact-then-reclaim round trip.
-      val store = s"${Scratch.dir}/colloc_compact_store"
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val store = Scratch.fresh(s, "colloc_compact_store")
       val docs = t(s, dir, "documents")
       TextAnalysis.buildCountStore(
         docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), "text", store,
@@ -685,9 +671,7 @@ object PipelineQueries {
       // are integers and the PMI arithmetic is the identical fixed
       // order, so the one-shot oracle replays with no tolerance. An
       // append is O(batch), never a corpus rescan.
-      val store = s"${Scratch.dir}/colloc_store"
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val store = Scratch.fresh(s, "colloc_store")
       val docs = t(s, dir, "documents")
       TextAnalysis.buildCountStore(
         docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), "text", store,
@@ -743,9 +727,7 @@ object PipelineQueries {
       // brute-force Jaccard oracle as dedup_minhash (banding recall 1 at
       // these params). Each pair is emitted exactly once — by the batch
       // its later member arrives in. Store cleared first: idempotent gate.
-      val store = s"${Scratch.dir}/neardup_store"
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val store = Scratch.fresh(s, "neardup_store")
       val docs = t(s, dir, "documents")
       Seq(col("doc_id") < 1000,
           col("doc_id") >= 1000 && col("doc_id") < 3000,
@@ -768,9 +750,7 @@ object PipelineQueries {
       // re-derives it from the keeper's id range — a genuine
       // first-arrival-semantics check, not an echo. The store dir is
       // cleared first so re-runs cannot leak prior state.
-      val store = s"${Scratch.dir}/dedup_store"
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      val store = Scratch.fresh(s, "dedup_store")
       val docs = t(s, dir, "documents")
       Seq((0, col("doc_id") < 1000),
           (1, col("doc_id") >= 1000 && col("doc_id") < 3000),

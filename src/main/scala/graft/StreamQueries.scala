@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.{MaterializedView, SnapshotTable}
 import graft.sources.Tables
 import graft.streaming.{EventStreams, SketchRollup}
 
@@ -36,9 +37,7 @@ object StreamQueries {
       // guaranteed rank band) — mergeability across arrival batching,
       // driver-hashed.
       import graft.functions.expr.KllFunctions
-      val store = s"${Scratch.dir}/stream_kll_store"
-      val fsp = new org.apache.hadoop.fs.Path(store)
-      fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+      val store = Scratch.fresh(s, "stream_kll_store")
       val ev = Tables.load(s, dir, "events")
         .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
           col("value").as("v"), col("event_id"))
@@ -85,9 +84,7 @@ object StreamQueries {
       // serialize → merge → serialize cycles across updates.
       import org.apache.spark.sql.expressions.Window
       import graft.functions.expr.FreqFunctions
-      val store = s"${Scratch.dir}/stream_freq_store"
-      val fsp = new org.apache.hadoop.fs.Path(store)
-      fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+      val store = Scratch.fresh(s, "stream_freq_store")
       val ev = Tables.load(s, dir, "events")
         .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
           col("user_id"), col("event_id"))
@@ -124,29 +121,15 @@ object StreamQueries {
       // content must equal the source's v2 HOWEVER the feed was
       // batched: per-key latest-wins makes arrival slicing invisible,
       // and the oracle replays v2 directly from orders.
-      import graft.operators.SnapshotTable
-      val srcDir = s"${Scratch.dir}/stream_cdc_src"
-      val repDir = s"${Scratch.dir}/stream_cdc_rep"
-      val feedDir = s"${Scratch.dir}/stream_cdc_feed"
-      val ckpt = s"${Scratch.dir}/stream_cdc_ckpt"
-      Seq(srcDir, repDir, feedDir, ckpt).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      }
+      val srcDir = Scratch.fresh(s, "stream_cdc_src")
+      val repDir = Scratch.fresh(s, "stream_cdc_rep")
+      val feedDir = Scratch.fresh(s, "stream_cdc_feed")
+      val ckpt = Scratch.fresh(s, "stream_cdc_ckpt")
       val base = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), srcDir)
-      val m = pmod(col("o_orderkey"), lit(10))
-      val ch = base.filter(m === 3)
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("_deleted", lit(false))
-        .unionByName(base.filter(m === 7).withColumn("_deleted", lit(true)))
-        .unionByName(base.filter(m === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("_deleted", lit(false)))
-        .withColumn("commit_v", lit(1L))
+      Fixtures.snapshot(s, srcDir, base, "o_orderkey", 8)
+      val ch = Fixtures.changeMix(base, "o_custkey",
+        col("o_custkey") + lit(1000000L))
       SnapshotTable.upsert(s, srcDir, ch, "o_orderkey", "commit_v", "o_custkey")
       // CDC feed → maintainStream's change-row shape (tombstones from
       // deletes, post-images upsert, pre-images drop)
@@ -178,30 +161,16 @@ object StreamQueries {
       // slicing invisible, so the served view must equal DuckDB's full
       // recompute of the final truth — a missed delete, double-applied
       // update or stale refresh hash-mismatches.
-      import graft.operators.{MaterializedView, SnapshotTable}
-      val srcDir = s"${Scratch.dir}/stream_mv_src"
-      val repDir = s"${Scratch.dir}/stream_mv_rep"
-      val mvDir = s"${Scratch.dir}/stream_mv_view"
-      val feedDir = s"${Scratch.dir}/stream_mv_feed"
-      val ckpt = s"${Scratch.dir}/stream_mv_ckpt"
-      Seq(srcDir, repDir, mvDir, feedDir, ckpt).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-      }
+      val srcDir = Scratch.fresh(s, "stream_mv_src")
+      val repDir = Scratch.fresh(s, "stream_mv_rep")
+      val mvDir = Scratch.fresh(s, "stream_mv_view")
+      val feedDir = Scratch.fresh(s, "stream_mv_feed")
+      val ckpt = Scratch.fresh(s, "stream_mv_ckpt")
       val base = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      SnapshotTable.create(s,
-        base.withColumn("commit_v", lit(0L))
-          .repartitionByRange(8, col("o_orderkey")), srcDir)
-      val m = pmod(col("o_orderkey"), lit(10))
-      val ch = base.filter(m === 3)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(500.0))
-        .withColumn("_deleted", lit(false))
-        .unionByName(base.filter(m === 7).withColumn("_deleted", lit(true)))
-        .unionByName(base.filter(m === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("_deleted", lit(false)))
-        .withColumn("commit_v", lit(1L))
+      Fixtures.snapshot(s, srcDir, base, "o_orderkey", 8)
+      val ch = Fixtures.changeMix(base, "o_totalprice",
+        col("o_totalprice") + lit(500.0))
       SnapshotTable.upsert(s, srcDir, ch, "o_orderkey", "commit_v",
         "o_totalprice")
       val feed = SnapshotTable.changes(s, srcDir, "o_orderkey", 1L, 2L,
@@ -235,10 +204,7 @@ object StreamQueries {
       // cross-engine; est tolerance-checked per the q50 scheme. The
       // foreachBatch streaming face of the same maintainer is spec-run
       // in StreamingSpec.
-      val store = s"${Scratch.dir}/stream_sk_store"
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(store), true) // idempotent gate
+      val store = Scratch.fresh(s, "stream_sk_store")
       val ev = Tables.load(s, dir, "events")
         .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
           col("user_id"), col("event_id"))
@@ -270,35 +236,21 @@ object StreamQueries {
     // the replicated table replayed directly from orders: whatever the
     // feed's micro-batch slicing, the replica must land on exactly v2
     "stream_snapshot_cdc" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
-        |SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
-        |       ELSE o_custkey END AS o_custkey,
-        |  o_totalprice
-        |FROM b WHERE o_orderkey % 10 != 7
-        |UNION ALL
-        |SELECT o_orderkey + 10000000 AS o_orderkey, o_custkey, o_totalprice
-        |FROM b WHERE o_orderkey % 10 = 1
-        |ORDER BY o_orderkey""".stripMargin,
+      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
+         |SELECT * FROM mixed ORDER BY o_orderkey""".stripMargin,
 
     // the continuously-refreshed view replayed as one full recompute of
     // the final truth: micro-batch slicing must be invisible (integer-
     // cents algebra + latest-wins)
     "stream_mv" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-        |m AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice + 500.0
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 7
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_custkey, o_totalprice
-        |  FROM b WHERE o_orderkey % 10 = 1)
-        |SELECT o_custkey, count(*) AS n_rows,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_value
-        |FROM m GROUP BY o_custkey
-        |ORDER BY o_custkey""".stripMargin,
+      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_totalprice", "o_totalprice + 500.0")}
+         |SELECT o_custkey, count(*) AS n_rows,
+         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+         |    / 100.0 AS sum_value
+         |FROM mixed GROUP BY o_custkey
+         |ORDER BY o_custkey""".stripMargin,
 
     // exact counts cross-engine; `ok` follows the q50 scheme (each engine
     // inside its own sketch's 5% band). The one-shot DuckDB truth is

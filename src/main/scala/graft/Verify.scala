@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,15 +14,8 @@ object Verify {
         !sys.env.contains("SPARK_GRAFT_SCRATCH"))
       System.setProperty("graft.scratch.dir",
         "/root/repo/target/scratch_verify")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.localSession(
+      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4))
     spark.sparkContext.setLogLevel("WARN")
     // local-iteration filter (unset on the driver): comma-separated query
     // names; both the parquet dumps and oracle_sql.json honor it so

@@ -103,12 +103,14 @@ object TextFunctions {
     * oracle face; production keeps xxh64.
     */
   def kgramHashes(text: Column, k: Int, portable: Boolean = false): Column = {
-    val n = length(text)
     val h: Column => Column =
       if (portable) g => conv(substring(md5(g), 1, 8), 16, 10).cast("long")
       else g => xxhash64(g)
-    when(n < k, array().cast("array<bigint>")).otherwise(
-      transform(sequence(lit(0), n - k), i => h(text.substr(i + 1, lit(k)))))
+    let(text) { t =>
+      val n = length(t)
+      when(n < k, array().cast("array<bigint>")).otherwise(
+        transform(sequence(lit(0), n - k), i => h(t.substr(i + 1, lit(k)))))
+    }
   }
 
   /** Winnowing fingerprint (Schleimer et al., SIGMOD 2003): distinct
@@ -116,12 +118,20 @@ object TextFunctions {
     * near-dup detection; built entirely from array builtins.
     */
   def winnowingFingerprint(text: Column, k: Int = 5, w: Int = 4,
-      portable: Boolean = false): Column = {
-    val hs = kgramHashes(lower(text), k, portable)
-    val nWin = size(hs) - (w - 1)
-    when(size(hs) === 0, array().cast("array<bigint>"))
-      .when(nWin <= 0, array(array_min(hs)))
-      .otherwise(array_distinct(
-        transform(sequence(lit(0), nWin - 1), j => array_min(slice(hs, j + 1, lit(w))))))
-  }
+      portable: Boolean = false): Column =
+    let(kgramHashes(lower(text), k, portable)) { hs =>
+      val nWin = size(hs) - (w - 1)
+      when(size(hs) === 0, array().cast("array<bigint>"))
+        .when(nWin <= 0, array(array_min(hs)))
+        .otherwise(array_distinct(
+          transform(sequence(lit(0), nWin - 1), j => array_min(slice(hs, j + 1, lit(w))))))
+    }
+
+  /** `body(v)` with `v` evaluated once per row. Higher-order functions run
+    * interpreted and re-evaluate a captured expression on every lambda
+    * call, so a lambda over a derived array (or text) must read it through
+    * a lambda variable: a one-element `transform` binds it.
+    */
+  private def let(v: Column)(body: Column => Column): Column =
+    element_at(transform(array(v), body), 1)
 }

@@ -1026,6 +1026,32 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(fp1.intersect(fp4).isEmpty)
   }
 
+  test("winnowing fingerprint equals a plain-Scala winnowing reference") {
+    def md5Hash(g: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(g.getBytes("UTF-8"))
+        .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
+    def xxHash(g: String): Long =
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+        org.apache.spark.unsafe.types.UTF8String.fromString(g), 42L)
+    // minima of every w consecutive k-gram hashes, first occurrences kept
+    def reference(text: String, k: Int, w: Int, h: String => Long): Seq[Long] = {
+      val t = text.toLowerCase
+      val hs = (0 to t.length - k).map(i => h(t.substring(i, i + k)))
+      if (hs.isEmpty) Nil
+      else if (hs.length < w) Seq(hs.min)
+      else hs.sliding(w).map(_.min).toSeq.distinct
+    }
+    val rnd = new scala.util.Random(7)
+    val long = Seq.fill(600)(Seq("Spark", "parquet", "engine", "Data", "the",
+      "of", "winnow")(rnd.nextInt(7))).mkString(" ")
+    // shorter than k, exactly k, fewer than w k-grams, a long document
+    for (text <- Seq("abc", "AbCdE", "abcdefg", long);
+         (portable, h) <- Seq(true -> (md5Hash _), false -> (xxHash _))) {
+      val got = one(T.winnowingFingerprint(lit(text), 5, 4, portable)).getSeq[Long](0)
+      assert(got == reference(text, 5, 4, h), s"portable=$portable, ${text.take(20)}")
+    }
+  }
+
   test("quality score lands in [0,1] and separates dense prose from junk") {
     val docs = Tables.load(spark, TestSpark.sf, "documents")
     val scores = TextAnalysis.analyze(docs, "doc_id", "text")

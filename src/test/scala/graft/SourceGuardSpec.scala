@@ -134,4 +134,24 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  /** Files under `src` that contain `text`, with how often. */
+  private def occurrences(text: String): Seq[(String, Int)] = {
+    val root = new java.io.File("src")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    scalaFiles(root).map(f => f.getPath -> (source(f).split(
+      java.util.regex.Pattern.quote(text), -1).length - 1)).filter(_._2 > 0)
+  }
+
+  test("GraftExtensions.localSession is the only session builder in src") {
+    // Bench, Verify and the specs must run the plans users get; a second
+    // builder drifts from the library defaults
+    val found = occurrences("SparkSession" + ".builder(")
+    assert(found == Seq("src/main/scala/graft/GraftExtensions.scala" -> 1), found)
+  }
+
+  test("the codegen cache size is set in GraftExtensions only") {
+    val found = occurrences("codegen.cache" + ".maxEntries").map(_._1)
+    assert(found == Seq("src/main/scala/graft/GraftExtensions.scala"), found)
+  }
 }

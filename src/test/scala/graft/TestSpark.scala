@@ -4,18 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for all suites (Test/fork runs them in one JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // testdata timestamps are parquet TIMESTAMP(isAdjustedToUTC=false):
-    // read the stored micros as the instant (pre-3.4 behavior) so Spark
-    // and DuckDB see identical epoch values under the UTC session
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftExtensions.localSession(4)
 
   val sf = "/root/testdata/sf0.001"
 

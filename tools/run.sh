@@ -12,6 +12,5 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
