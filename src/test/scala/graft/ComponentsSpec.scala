@@ -86,7 +86,7 @@ class ComponentsSpec extends AnyFunSuite {
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(Components.connectedComponents(empty).count() == 0)
   }
-  test("GraftExtensions session defaults: the shared test session carries every library default") {
+  test("GraftExtensions session defaults: plain sessions get the AQE SHJ rewrite conf") {
     // the specs check the plans Bench, Verify and users run: the AQE
     // SMJ->SHJ rewrite threshold and the codegen cache size both reach
     // the test session through GraftExtensions.localSession
@@ -97,5 +97,11 @@ class ComponentsSpec extends AnyFunSuite {
     }
     assert(spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) == 10000)
+    // a plain session on the same context starts from the context's conf,
+    // where the builder put the defaults: it needs no separate apply step
+    val s2 = spark.newSession()
+    GraftExtensions.sessionDefaults.foreach {
+      case (k, v) => assert(s2.conf.get(k) == v, k)
+    }
   }
 }
