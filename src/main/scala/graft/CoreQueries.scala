@@ -650,4 +650,63 @@ object Fixtures {
        |  UNION ALL
        |  SELECT * REPLACE (o_orderkey + 10000000 AS o_orderkey)
        |  FROM b WHERE o_orderkey % 10 = 1)""".stripMargin
+
+  /** Upserts into `tdir` the narrow change the q70 family commits as
+    * commit_v = 1 over `base` (orders o_orderkey, o_custkey,
+    * o_totalprice): keys 500 to 700 get o_custkey + 1M, a few files'
+    * worth. [[narrowCustkeySql]] replays it. */
+  def narrowUpsert(s: SparkSession, tdir: String, base: DataFrame): Unit = {
+    val changes = base.filter(col("o_orderkey").between(500L, 700L))
+      .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
+      .withColumn("commit_v", lit(1L))
+      .withColumn("_deleted", lit(false))
+    graft.operators.SnapshotTable.upsert(s, tdir, changes, "o_orderkey",
+      "commit_v", "o_custkey")
+  }
+
+  /** o_custkey after [[narrowUpsert]], as an oracle select item over orders. */
+  val narrowCustkeySql: String =
+    """CASE WHEN o_orderkey BETWEEN 500 AND 700
+      |       THEN o_custkey + 1000000 ELSE o_custkey END AS o_custkey""".stripMargin
+
+  /** The q84 view setup: the snapshot table `tdir` of `base` (orders
+    * o_orderkey, o_custkey, o_totalprice), a materialized view at `mdir`
+    * of o_totalprice per o_custkey, then one commit_v = 1 upsert (keys ≡2
+    * (mod 10) get o_totalprice + 500, keys ≡6 are inserted again at key
+    * + 10M, keys ≡8 are tombstones) refreshed into the view from its
+    * change feed. [[refreshedViewSql]] recomputes the view. */
+  def refreshedView(s: SparkSession, tdir: String, mdir: String,
+      base: DataFrame): Unit = {
+    snapshot(s, tdir, base, "o_orderkey", 8)
+    graft.operators.MaterializedView.create(s, tdir, mdir, "o_custkey", "o_totalprice")
+    def at(m: Int) = base.filter(col("o_orderkey") % 10 === m)
+    def change(df: DataFrame, deleted: Boolean) =
+      df.withColumn("commit_v", lit(1L)).withColumn("_deleted", lit(deleted))
+    val upd = at(2).withColumn("o_totalprice", col("o_totalprice") + lit(500.0))
+    val ins = at(6).withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
+    graft.operators.SnapshotTable.upsert(s, tdir,
+      change(upd, false).unionByName(change(ins, false))
+        .unionByName(change(at(8), true)),
+      "o_orderkey", "commit_v", "o_totalprice")
+    graft.operators.MaterializedView.refresh(s, tdir, mdir, "o_orderkey",
+      "o_custkey", "o_totalprice")
+  }
+
+  /** Full recompute of the [[refreshedView]] view over orders, with its
+    * columns o_custkey, n_rows and sum_value (cent-integer sums). */
+  val refreshedViewSql: String =
+    """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+      |m AS (
+      |  SELECT o_orderkey, o_custkey,
+      |    CASE WHEN o_orderkey % 10 = 2 THEN o_totalprice + 500.0
+      |         ELSE o_totalprice END AS o_totalprice
+      |  FROM b WHERE o_orderkey % 10 != 8
+      |  UNION ALL
+      |  SELECT o_orderkey + 10000000, o_custkey, o_totalprice
+      |  FROM b WHERE o_orderkey % 10 = 6)
+      |SELECT o_custkey, count(*) AS n_rows,
+      |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+      |    / 100.0 AS sum_value
+      |FROM m GROUP BY o_custkey
+      |ORDER BY o_custkey""".stripMargin
 }

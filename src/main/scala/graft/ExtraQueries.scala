@@ -787,11 +787,7 @@ object ExtraQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice")
       Fixtures.snapshot(s, tdir, base, "o_orderkey", 12)
       SnapshotTable.attachStats(s, tdir, Seq("o_orderkey"))
-      val changes = base.filter(col("o_orderkey").between(500L, 700L))
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("commit_v", lit(1L))
-        .withColumn("_deleted", lit(false))
-      SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v", "o_custkey")
+      Fixtures.narrowUpsert(s, tdir, base)
       SnapshotTable.attachStatsIncremental(s, tdir, Seq("o_orderkey"))
       val (scan, _) = SnapshotTable.scanBetween(s, tdir, "o_orderkey", 400L, 900L)
       scan.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -839,11 +835,7 @@ object ExtraQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice")
       Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       val v1PublishedAt = SnapshotTable.commitInstantOf(s, tdir, 1L)
-      val changes = base.filter(col("o_orderkey").between(500L, 700L))
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("commit_v", lit(1L))
-        .withColumn("_deleted", lit(false))
-      SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v", "o_custkey")
+      Fixtures.narrowUpsert(s, tdir, base)
       val asOf = SnapshotTable.readAsOf(s, tdir, v1PublishedAt)
         .withColumn("snap", lit(1L))
       val current = SnapshotTable.read(s, tdir).withColumn("snap", lit(2L))
@@ -865,12 +857,7 @@ object ExtraQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice")
       Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
       val i1 = SnapshotTable.commitInstantOf(s, tdir, 1L)
-      val changes = base.filter(col("o_orderkey").between(500L, 700L))
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("commit_v", lit(1L))
-        .withColumn("_deleted", lit(false))
-      SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v",
-        "o_custkey")
+      Fixtures.narrowUpsert(s, tdir, base)
       s.sql(
         s"""SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
            |  o_totalprice
@@ -896,20 +883,7 @@ object ExtraQueries {
       val mdir = Scratch.fresh(s, "q84_mv")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
-      MaterializedView.create(s, tdir, mdir, "o_custkey", "o_totalprice")
-      val upd = base.filter(col("o_orderkey") % 10 === 2)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(500.0))
-        .withColumn("commit_v", lit(1L)).withColumn("_deleted", lit(false))
-      val ins = base.filter(col("o_orderkey") % 10 === 6)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-        .withColumn("commit_v", lit(1L)).withColumn("_deleted", lit(false))
-      val del = base.filter(col("o_orderkey") % 10 === 8)
-        .withColumn("commit_v", lit(1L)).withColumn("_deleted", lit(true))
-      SnapshotTable.upsert(s, tdir, upd.unionByName(ins).unionByName(del),
-        "o_orderkey", "commit_v", "o_totalprice")
-      MaterializedView.refresh(s, tdir, mdir, "o_orderkey", "o_custkey",
-        "o_totalprice")
+      Fixtures.refreshedView(s, tdir, mdir, base)
       MaterializedView.serve(s, mdir)
         .select(col("key").as("o_custkey"), col("n_rows"),
           col("sum_o_totalprice").as("sum_value"))
@@ -997,20 +971,7 @@ object ExtraQueries {
       val mdir = Scratch.fresh(s, "q93_mv")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      Fixtures.snapshot(s, tdir, base, "o_orderkey", 8)
-      MaterializedView.create(s, tdir, mdir, "o_custkey", "o_totalprice")
-      val upd = base.filter(col("o_orderkey") % 10 === 2)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(500.0))
-        .withColumn("commit_v", lit(1L)).withColumn("_deleted", lit(false))
-      val ins = base.filter(col("o_orderkey") % 10 === 6)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-        .withColumn("commit_v", lit(1L)).withColumn("_deleted", lit(false))
-      val del = base.filter(col("o_orderkey") % 10 === 8)
-        .withColumn("commit_v", lit(1L)).withColumn("_deleted", lit(true))
-      SnapshotTable.upsert(s, tdir, upd.unionByName(ins).unionByName(del),
-        "o_orderkey", "commit_v", "o_totalprice")
-      MaterializedView.refresh(s, tdir, mdir, "o_orderkey", "o_custkey",
-        "o_totalprice")
+      Fixtures.refreshedView(s, tdir, mdir, base)
       s.sql(
         s"""SELECT key AS o_custkey, n_rows,
            |  sum_o_totalprice AS sum_value
@@ -1178,11 +1139,7 @@ object ExtraQueries {
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       Fixtures.snapshot(s, tdir, base, "o_orderkey", 12)
-      val changes = base.filter(col("o_orderkey").between(500L, 700L))
-        .withColumn("o_custkey", col("o_custkey") + lit(1000000L))
-        .withColumn("commit_v", lit(1L))
-        .withColumn("_deleted", lit(false))
-      SnapshotTable.upsert(s, tdir, changes, "o_orderkey", "commit_v", "o_custkey")
+      Fixtures.narrowUpsert(s, tdir, base)
       SnapshotTable.vacuum(s, tdir, keepLast = 1, graceMs = 0L)
       SnapshotTable.read(s, tdir)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1547,6 +1504,17 @@ object ExtraQueries {
     }),
   )
 
+  /** Version 1 (before) and version 2 (after [[Fixtures.narrowUpsert]])
+    * of the narrow-upsert table, unioned with their version numbers. */
+  private val narrowAsOfSql =
+    s"""WITH v1 AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+       |v2 AS (SELECT o_orderkey, ${Fixtures.narrowCustkeySql},
+       |         o_totalprice FROM orders)
+       |SELECT CAST(1 AS BIGINT) AS snap, * FROM v1
+       |UNION ALL
+       |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
+       |ORDER BY snap, o_orderkey""".stripMargin
+
   /** The q57 change mix as the CDC feed v1 -> v2 emits it. */
   private val changeFeedSql =
     """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
@@ -1759,20 +1727,7 @@ object ExtraQueries {
     // full recompute of the merged truth — the incrementally-refreshed
     // view must equal it exactly (cent-integer sums, no float order)
     "q84_snapshot_mv" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-        |m AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey % 10 = 2 THEN o_totalprice + 500.0
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 8
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_custkey, o_totalprice
-        |  FROM b WHERE o_orderkey % 10 = 6)
-        |SELECT o_custkey, count(*) AS n_rows,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_value
-        |FROM m GROUP BY o_custkey
-        |ORDER BY o_custkey""".stripMargin,
+      Fixtures.refreshedViewSql,
 
     // full recompute of the multi-aggregate view: per-column cents sums
     // and non-null-count-divided avgs, SQL NULL-sum semantics — the
@@ -1986,20 +1941,7 @@ object ExtraQueries {
 
     // the SQL-served view equals q84's full recompute — same replay
     "q93_mv_sql" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-        |m AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey % 10 = 2 THEN o_totalprice + 500.0
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 8
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_custkey, o_totalprice
-        |  FROM b WHERE o_orderkey % 10 = 6)
-        |SELECT o_custkey, count(*) AS n_rows,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_value
-        |FROM m GROUP BY o_custkey
-        |ORDER BY o_custkey""".stripMargin,
+      Fixtures.refreshedViewSql,
 
     // the SQL-face CDC feed equals q65's true-changes replay
     "q94_changes_sql" -> changeFeedSql,
@@ -2087,9 +2029,8 @@ object ExtraQueries {
     // a range scan served through the incrementally-maintained stats
     // index must equal the plain filter over the merged truth
     "q70_snapshot_stats_inc" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey BETWEEN 500 AND 700
-        |       THEN o_custkey + 1000000 ELSE o_custkey END AS o_custkey,
+      s"""SELECT o_orderkey,
+        |  ${Fixtures.narrowCustkeySql},
         |  o_totalprice
         |FROM orders WHERE o_orderkey BETWEEN 400 AND 900
         |ORDER BY o_orderkey""".stripMargin,
@@ -2111,36 +2052,19 @@ object ExtraQueries {
     // the SQL-face time travel serves the same two truths as q79 —
     // same replay
     "q87_snapshot_sql" ->
-      """WITH v1 AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-        |v2 AS (SELECT o_orderkey,
-        |         CASE WHEN o_orderkey BETWEEN 500 AND 700
-        |              THEN o_custkey + 1000000 ELSE o_custkey END AS o_custkey,
-        |         o_totalprice FROM orders)
-        |SELECT CAST(1 AS BIGINT) AS snap, * FROM v1
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
-        |ORDER BY snap, o_orderkey""".stripMargin,
+      narrowAsOfSql,
 
     // the as-of read at v1's publish instant is the pre-upsert truth;
     // the current read is the merged truth
     "q79_snapshot_asof" ->
-      """WITH v1 AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-        |v2 AS (SELECT o_orderkey,
-        |         CASE WHEN o_orderkey BETWEEN 500 AND 700
-        |              THEN o_custkey + 1000000 ELSE o_custkey END AS o_custkey,
-        |         o_totalprice FROM orders)
-        |SELECT CAST(1 AS BIGINT) AS snap, * FROM v1
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
-        |ORDER BY snap, o_orderkey""".stripMargin,
+      narrowAsOfSql,
 
     // the post-vacuum current version must be the merged truth — a
     // vacuum that deleted a live (reused) file loses rows or fails the
     // read outright
     "q78_snapshot_vacuum" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey BETWEEN 500 AND 700
-        |       THEN o_custkey + 1000000 ELSE o_custkey END AS o_custkey,
+      s"""SELECT o_orderkey,
+        |  ${Fixtures.narrowCustkeySql},
         |  o_totalprice
         |FROM orders
         |ORDER BY o_orderkey""".stripMargin,

@@ -8,9 +8,22 @@ import graft.functions.expr._
 
 /** SparkSessionExtensions entry point: registers the graft native
   * expressions as SQL functions, so `spark.sql("SELECT graft_cosine(a,b)
-  * ...")` works anywhere the library's Column API does.
+  * ...")` works anywhere the library's Column API does; plans the native
+  * as-of join ([[graft.plans.AsOfJoinStrategy]]); and binds filter
+  * constants at run time ([[graft.plans.BindFilterConstants]]).
   *
-  * Usage: `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * The filter rule rewrites executed `Filter` conditions only: each
+  * non-null int, long, short, byte, float, double, boolean, date or
+  * timestamp literal compared in one becomes a `bound(v)` value read at
+  * run time, so reads that differ only in such a constant (a point key, a
+  * scan range, a page cursor) reuse generated code instead of compiling
+  * new classes. Scans keep the literals, so parquet pushdown and pruning
+  * are unchanged; strings, decimals, nulls, `IN` lists and `LIKE`
+  * patterns are left as they are.
+  *
+  * Sessions built through [[GraftExtensions.withSessionDefaults]] get the
+  * extension. Others add it with
+  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -22,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectTableFunction((name, info, builder))
     }
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    ext.injectColumnar(_ => graft.plans.BindFilterConstants)
   }
 }
 
@@ -61,12 +75,16 @@ object GraftExtensions {
   val staticDefaults: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "10000")
 
-  /** Apply [[sessionDefaults]] and [[staticDefaults]] to a session builder:
-    * `GraftExtensions.withSessionDefaults(SparkSession.builder)...`.
+  /** Apply [[sessionDefaults]] and [[staticDefaults]] to a session builder
+    * and add the graft extension:
+    * `GraftExtensions.withSessionDefaults(SparkSession.builder)...`. The
+    * extension is added next to any `spark.sql.extensions` the caller set.
     */
   def withSessionDefaults(
       b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
-    (sessionDefaults ++ staticDefaults).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    (sessionDefaults ++ staticDefaults).foldLeft(b.withExtensions(new GraftExtensions)) {
+      case (bb, (k, v)) => bb.config(k, v)
+    }
 
   /** The local session Bench, Verify and the specs run on, so all three
     * check the plans users get: the library defaults, `cores` task slots

@@ -145,12 +145,13 @@ object AsOfJoinNative {
 
   /** Install the planner strategy into an existing session (idempotent).
     * Sessions built via `withExtensions(new GraftExtensions)` get it
-    * automatically.
+    * automatically, and this adds no second one to them.
     */
   def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.exists(_.isInstanceOf[AsOfJoinStrategy]))
-      exp.extraStrategies = exp.extraStrategies :+ new AsOfJoinStrategy
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (!classic.sessionState.planner.strategies.exists(_.isInstanceOf[AsOfJoinStrategy]))
+      classic.experimental.extraStrategies =
+        classic.experimental.extraStrategies :+ new AsOfJoinStrategy
   }
 
   def leftAsOf(

@@ -1,7 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Sort direction + field, as the reference models it
@@ -70,12 +73,14 @@ object PageCursor {
   * and pages it through the package-private constructor, which takes
   * `df` together with that frame (`withRid`) and trusts its column, so
   * a page turn over the cached result hashes no rows. Both give the
-  * same pages.
+  * same pages. `overCache` says `withRid` is that in-memory cache, which
+  * changes how a cursor page seeks (see `atOrAfterCursor`).
   */
-final class Paginator private[query] (df: DataFrame, withRid: DataFrame) {
+final class Paginator private[query] (df: DataFrame, withRid: DataFrame,
+    overCache: Boolean) {
 
   /** Pages `df`, hashing the tiebreaker in every page plan. */
-  def this(df: DataFrame) = this(df, Paginator.withTiebreaker(df))
+  def this(df: DataFrame) = this(df, Paginator.withTiebreaker(df), overCache = false)
 
   private def normalized(search: Option[String]): Option[String] =
     search.filter(s => s != null && s.nonEmpty)
@@ -150,13 +155,16 @@ final class Paginator private[query] (df: DataFrame, withRid: DataFrame) {
     * REDUNDANT range conjunct on the LEADING sort column alone is added —
     * that one pushes into the parquet scan (min/max row-group pruning +
     * PushedFilters), which is where the depth-independence actually
-    * comes from.
+    * comes from. `overCache` pages leave it out: cache batches are not
+    * ordered by the sort column, so over QueryEngine's cached result it
+    * prunes nothing; they bind the cursor's constants instead
+    * ([[seekValue]]).
     */
   private def atOrAfterCursor(search: Option[String], sorts: Seq[SortSpec],
       cursor: PageCursor): DataFrame = {
     val base = searched(search)
     if (sorts.isEmpty) {
-      base.filter(col(Paginator.RID) >= lit(cursor.rid))
+      base.filter(col(Paginator.RID) >= seekValue(cursor.rid))
     } else {
       require(cursor.sortValues.length == sorts.length, s"cursor has " +
         s"${cursor.sortValues.length} sort values but the request sorts by " +
@@ -166,16 +174,37 @@ final class Paginator private[query] (df: DataFrame, withRid: DataFrame) {
         require(v != null, s"null sort values are not seekable ('${s.field}')")
       }
       // lexicographic "at or after": fold from the innermost comparator out
-      val cond = sv.foldRight(col(Paginator.RID) >= lit(cursor.rid)) {
+      val cond = sv.foldRight(col(Paginator.RID) >= seekValue(cursor.rid)) {
         case ((s, v), inner) =>
-          val strict = if (s.ascending) col(s.field) > lit(v) else col(s.field) < lit(v)
-          strict || (col(s.field) === lit(v) && inner)
+          val c = seekValue(v)
+          val strict = if (s.ascending) col(s.field) > c else col(s.field) < c
+          strict || (col(s.field) === c && inner)
       }
-      val (lead, lv) = sv.head
-      val range =
-        if (lead.ascending) col(lead.field) >= lit(lv) else col(lead.field) <= lit(lv)
-      base.filter(range && cond)
+      if (overCache) base.filter(cond)
+      else {
+        val (lead, lv) = sv.head
+        val range =
+          if (lead.ascending) col(lead.field) >= lit(lv) else col(lead.field) <= lit(lv)
+        base.filter(range && cond)
+      }
     }
+  }
+
+  /** A cursor constant of the seek filter. In `overCache` pages a
+    * primitive-typed constant is a [[graft.plans.BoundValue]]: the
+    * cache's batch pruning, which would prune nothing, then builds no
+    * stats predicate for it, and the page compiles no class that only
+    * its constants tell apart.
+    */
+  private def seekValue(v: Any): Column = v match {
+    case _: java.lang.Number | _: java.lang.Boolean | _: java.util.Date |
+        _: java.time.temporal.Temporal if overCache =>
+      Literal(v) match {
+        case Literal(x, dt) if CodeGenerator.isPrimitiveType(dt) =>
+          ColumnBridge.column(graft.plans.BoundValue(x, dt))
+        case _ => lit(v)
+      }
+    case _ => lit(v)
   }
 
   /** Driver-side value equality matching Catalyst `===` semantics for the

@@ -51,7 +51,8 @@ final class QueryEngine(val spark: SparkSession, val path: String) {
     val cached: DataFrame = frame.persist(StorageLevel.MEMORY_AND_DISK)
     val visible: DataFrame = if (tiebroken) cached.drop(Paginator.RID) else cached
     def paginator: Paginator =
-      if (tiebroken) new Paginator(visible, cached) else new Paginator(visible)
+      if (tiebroken) new Paginator(visible, cached, overCache = true)
+      else new Paginator(visible)
     def release(): Unit = cached.unpersist(blocking = false)
   }
 

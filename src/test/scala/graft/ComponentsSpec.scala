@@ -104,4 +104,23 @@ class ComponentsSpec extends AnyFunSuite {
       case (k, v) => assert(s2.conf.get(k) == v, k)
     }
   }
+
+  test("GraftExtensions: localSession runs the filter-constant rule exactly once") {
+    assert(spark.sessionState.columnarRules.count(_ eq graft.plans.BindFilterConstants) == 1)
+  }
+
+  test("GraftExtensions: withSessionDefaults leaves a caller's spark.sql.extensions alone") {
+    // the extension is added through withExtensions, next to the classes
+    // spark.sql.extensions names: the builder of the test session wrote
+    // no value there that would replace a caller's
+    assert(spark.sparkContext.getConf.getOption("spark.sql.extensions").isEmpty)
+    assert(spark.conf.getOption("spark.sql.extensions").isEmpty)
+  }
+
+  test("GraftExtensions: ensureStrategy plans no second as-of join strategy") {
+    graft.plans.AsOfJoinNative.ensureStrategy(spark)
+    graft.plans.AsOfJoinNative.ensureStrategy(spark)
+    val strategies = spark.sessionState.planner.strategies
+    assert(strategies.count(_.isInstanceOf[graft.plans.AsOfJoinStrategy]) == 1, strategies)
+  }
 }
