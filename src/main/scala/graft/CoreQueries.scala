@@ -692,6 +692,25 @@ object Fixtures {
       "o_custkey", "o_totalprice")
   }
 
+  /** The 11th ascending and 3rd descending 100-row pages of `walk` over
+    * `key`, each page's cursor the previous page's last key (from an
+    * unbounded start), as one frame tagged `dirn` asc / desc: what the
+    * keyset-walk gates q63, q64 and q66 return. */
+  def walkedPages(walk: graft.operators.SkippingIndex.KeysetWalk, key: String): DataFrame = {
+    def walkTo(pages: Int, ascending: Boolean): DataFrame = {
+      var after: Option[Any] = None
+      var page: DataFrame = null
+      (0 until pages).foreach { _ =>
+        page = walk.page(after, 100, ascending)._1
+        val keys = page.select(key).collect()
+        if (keys.nonEmpty) after = Some(keys.last.get(0))
+      }
+      page
+    }
+    walkTo(11, ascending = true).withColumn("dirn", lit("asc"))
+      .unionByName(walkTo(3, ascending = false).withColumn("dirn", lit("desc")))
+  }
+
   /** Full recompute of the [[refreshedView]] view over orders, with its
     * columns o_custkey, n_rows and sum_value (cent-integer sums). */
   val refreshedViewSql: String =

@@ -444,29 +444,15 @@ object ExtraQueries {
       // flatness across a 10x corpus: the keyset_page row of the
       // committed BENCH_sf1_r13.json).
       // Gate: an 11-page ascending walk and a 3-page descending walk over
-      // a snapshot of orders; both final pages mirror pure-SQL offsets on
-      // the unique key. Stats collect once per walk; each page is one
-      // bounded job.
+      // a snapshot of orders ([[Fixtures.walkedPages]]); both final pages
+      // mirror pure-SQL offsets on the unique key. Stats collect once per
+      // walk (from the attached index); each page is one bounded job.
       val tdir = Scratch.fresh(s, "q63_table")
       val base = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       Fixtures.snapshot(s, tdir, base, "o_orderkey", 12)
       SnapshotTable.attachStats(s, tdir, Seq("o_orderkey"))
-      val walk = SnapshotTable.keysetWalk(s, tdir, "o_orderkey")
-      def walkTo(pages: Int, ascending: Boolean): org.apache.spark.sql.DataFrame = {
-        var after = if (ascending) Long.MinValue else Long.MaxValue
-        var page: org.apache.spark.sql.DataFrame = null
-        (0 until pages).foreach { _ =>
-          val (df, _) = walk.page(after, 100, ascending)
-          page = df
-          val keys = df.select("o_orderkey").collect()
-          if (keys.nonEmpty) after = keys.last.getLong(0)
-        }
-        page
-      }
-      val asc = walkTo(11, ascending = true).withColumn("dirn", lit("asc"))
-      val desc = walkTo(3, ascending = false).withColumn("dirn", lit("desc"))
-      asc.unionByName(desc)
+      Fixtures.walkedPages(SnapshotTable.keysetWalk(s, tdir, "o_orderkey"), "o_orderkey")
         .select("dirn", "o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("dirn", "o_orderkey")
     }),
@@ -474,34 +460,19 @@ object ExtraQueries {
     "q64_page_keyset_str" -> ((s, dir) => {
       // q63's FILE-BOUNDED keyset pagination under a STRING key — the
       // shape a real paging user (string doc_ids) hits first: per-file
-      // bounds from the BINARY/UTF8 footer stats of the pinned snapshot
-      // (SnapshotTable.attachStatsString), walked in unsigned UTF-8 byte
-      // order (TypedKeysetWalk[String]; exactness across the
-      // UTF-16/UTF-8 supplementary-character divergence is
-      // spec-asserted). Zero-padded keys make lexicographic order ==
-      // numeric order, so the range-clustered layout gives tight
+      // STRING bounds attached from the BINARY/UTF8 footer stats of the
+      // pinned snapshot, walked in UTF8String (unsigned byte) order
+      // (exactness across the UTF-16/UTF-8 supplementary-character
+      // divergence is spec-asserted). Zero-padded keys make lexicographic
+      // order == numeric order, so the range-clustered layout gives tight
       // per-file bands and both final pages mirror pure-SQL offsets.
       val tdir = Scratch.fresh(s, "q64_table")
       val base = t(s, dir, "orders")
         .select(concat(lit("K"), lpad(col("o_orderkey").cast("string"), 9, "0")).as("okey"),
           col("o_custkey"), col("o_totalprice"))
       Fixtures.snapshot(s, tdir, base, "okey", 12)
-      SnapshotTable.attachStatsString(s, tdir, Seq("okey"))
-      val walk = SnapshotTable.keysetWalkString(s, tdir, "okey")
-      def walkTo(pages: Int, ascending: Boolean): org.apache.spark.sql.DataFrame = {
-        var after: Option[String] = None
-        var page: org.apache.spark.sql.DataFrame = null
-        (0 until pages).foreach { _ =>
-          val (df, _) = walk.page(after, 100, ascending)
-          page = df
-          val keys = df.select("okey").collect()
-          if (keys.nonEmpty) after = Some(keys.last.getString(0))
-        }
-        page
-      }
-      val asc = walkTo(11, ascending = true).withColumn("dirn", lit("asc"))
-      val desc = walkTo(3, ascending = false).withColumn("dirn", lit("desc"))
-      asc.unionByName(desc)
+      SnapshotTable.attachStats(s, tdir, Seq("okey"))
+      Fixtures.walkedPages(SnapshotTable.keysetWalk(s, tdir, "okey"), "okey")
         .select("dirn", "okey", "o_custkey", "o_totalprice")
         .orderBy("dirn", "okey")
     }),
@@ -1173,14 +1144,14 @@ object ExtraQueries {
     "q66_page_keyset_micros" -> ((s, dir) => {
       // q63/q64's FILE-BOUNDED keyset pagination under a TIMESTAMP key —
       // the event-time paging shape (live dashboards walking an
-      // ingestion-time-clustered table): cursors are epoch micros,
-      // per-file bounds come from the pinned version's normalized INT64
-      // timestamp footer stats (SnapshotTable.keysetWalkMicros), and the
-      // plan predicate `ts > timestamp_micros(cursor)` pushes down like
-      // any timestamp comparison. events.ts is unique at every SF, so
-      // both final pages mirror pure-SQL offsets exactly. MICROS output
-      // is required for ordered footer stats (INT96 has none) — set for
-      // the snapshot write, restored after.
+      // ingestion-time-clustered table): cursors are the key's timestamp
+      // values, per-file TIMESTAMP bounds come from the pinned version's
+      // INT64 timestamp footer stats (normalized to micros), and the plan
+      // predicate `ts > cursor` pushes down like any timestamp
+      // comparison. events.ts is unique at every SF, so both final pages
+      // mirror pure-SQL offsets exactly. MICROS output is required for
+      // ordered footer stats (INT96 has none) — set for the snapshot
+      // write, restored after.
       val tdir = Scratch.fresh(s, "q66_table")
       val base = t(s, dir, "events").select("ts", "event_id", "value")
       val prev = s.conf.get("spark.sql.parquet.outputTimestampType")
@@ -1188,21 +1159,7 @@ object ExtraQueries {
         s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         SnapshotTable.create(s, base.repartitionByRange(12, col("ts")), tdir)
       } finally s.conf.set("spark.sql.parquet.outputTimestampType", prev)
-      val walk = SnapshotTable.keysetWalkMicros(s, tdir, "ts")
-      def walkTo(pages: Int, ascending: Boolean): org.apache.spark.sql.DataFrame = {
-        var after: Option[Long] = None
-        var page: org.apache.spark.sql.DataFrame = null
-        (0 until pages).foreach { _ =>
-          val (df, _) = walk.page(after, 100, ascending)
-          page = df
-          val keys = df.select(unix_micros(col("ts"))).collect()
-          if (keys.nonEmpty) after = Some(keys.last.getLong(0))
-        }
-        page
-      }
-      val asc = walkTo(11, ascending = true).withColumn("dirn", lit("asc"))
-      val desc = walkTo(3, ascending = false).withColumn("dirn", lit("desc"))
-      asc.unionByName(desc)
+      Fixtures.walkedPages(SnapshotTable.keysetWalk(s, tdir, "ts"), "ts")
         .select("dirn", "ts", "event_id", "value")
         .orderBy("dirn", "ts")
     }),
@@ -1233,8 +1190,8 @@ object ExtraQueries {
 
     "q60_snapshot_strkey" -> ((s, dir) => {
       // q57's machinery under a STRING merge key: file pruning rides the
-      // parquet BINARY/UTF8 footer stats (SkippingIndex.statsRowsString,
-      // unsigned-byte order on both sides) instead of the INT64 surface.
+      // parquet BINARY/UTF8 footer stats, folded as STRING bounds
+      // (unsigned-byte order on both sides) instead of the INT64 ones.
       // Zero-padded keys make lexicographic order == numeric order, so
       // the key-clustered layout still gives tight per-file bands; the
       // 'Z' prefix puts inserts past every band (pure-insert path).

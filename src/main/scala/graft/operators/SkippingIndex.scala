@@ -4,9 +4,17 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation,
+  IntLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation, TimeUnit}
+import org.apache.parquet.schema.PrimitiveType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.query.MetadataInspector
 
@@ -77,7 +85,8 @@ object SkippingIndex {
     * record reads of its part files, no Spark job and no schema inference
     * (`spark.read.parquet` would run a footer job to infer the schema,
     * then one per action, to fetch a few KB). None when nothing is
-    * there. Index columns are strings and longs ([[statsSchemaOf]]).
+    * there. Index columns are read as the types [[writeIndex]] writes:
+    * longs, dates, timestamps and strings ([[statsSchemaOf]]).
     */
   def readIndex(spark: SparkSession, path: String): Option[StatsIndex] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -120,21 +129,16 @@ object SkippingIndex {
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
     import org.apache.parquet.io.ColumnIOFactory
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     var schema: StructType = null
     val rows = IndexedSeq.newBuilder[Row]
     parts.foreach { p =>
       val reader = MetadataInspector.openReader(conf, p)
       try {
         val msg = reader.getFooter.getFileMetaData.getSchema
-        val types = msg.getFields.asScala.map { f =>
-          f.asPrimitiveType.getPrimitiveTypeName match {
-            case PrimitiveTypeName.INT64 => LongType
-            case PrimitiveTypeName.BINARY => StringType
-            case other => throw new IllegalArgumentException(
-              s"stats index $path: column ${f.getName} has unsupported type $other")
-          }
-        }.toIndexedSeq
+        val prims = msg.getFields.asScala.map(_.asPrimitiveType).toIndexedSeq
+        val types = prims.map(t => parquetStatsType(t).getOrElse(
+          throw new IllegalArgumentException(
+            s"stats index $path: column ${t.getName} has unsupported type $t")))
         if (schema == null) schema = StructType(msg.getFields.asScala.zip(types)
           .map { case (f, t) => StructField(f.getName, t, nullable = true) }.toSeq)
         require(schema.head.name == "file" && schema.head.dataType == StringType,
@@ -148,8 +152,11 @@ object SkippingIndex {
             val g: Group = records.read()
             rows += Row.fromSeq(types.indices.map { c =>
               if (g.getFieldRepetitionCount(c) == 0) null
-              else if (types(c) == LongType) g.getLong(c, 0)
-              else g.getString(c, 0)
+              else external(catalystValue(prims(c), prims(c).getPrimitiveTypeName match {
+                case PrimitiveTypeName.INT32 => g.getInteger(c, 0)
+                case PrimitiveTypeName.INT64 => g.getLong(c, 0)
+                case _ => g.getBinary(c, 0)
+              }, ceil = false), types(c))
             })
             i += 1
           }
@@ -160,9 +167,9 @@ object SkippingIndex {
     Option(schema).map(StatsIndex(_, rows.result()))
   }
 
-  /** Write `rows` ([[statsSchemaOf]]' shape, string and long columns) as
-    * the stats index at `path`, on the driver: one snappy parquet file
-    * written with parquet-hadoop, no Spark job. Rows are sorted by file
+  /** Write `rows` ([[statsSchemaOf]]' shape) as the stats index at
+    * `path`, on the driver: one snappy parquet file written with
+    * parquet-hadoop, no Spark job. Rows are sorted by file
     * so rebuilds are deterministic. The file is written under a
     * dot-prefixed temp name, the index's previous part files are
     * deleted, and then the temp file is renamed into place, so a reader
@@ -178,19 +185,13 @@ object SkippingIndex {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.parquet.hadoop.util.HadoopOutputFile
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.Type.Repetition
-    val msg = new MessageType("spark_schema", schema.fields.toSeq.map[Type] { f =>
-      val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
-      f.dataType match {
-        case LongType => Types.primitive(PrimitiveTypeName.INT64, rep).named(f.name)
-        case StringType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case other => throw new IllegalArgumentException(
-          s"stats index column ${f.name} has unsupported type ${other.simpleString}")
-      }
-    }.asJava)
+    import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+    import org.apache.spark.sql.internal.SQLConf.ParquetOutputTimestampType
+    require(schema.forall(f => statsTypeOf(f.dataType).contains(f.dataType)),
+      s"stats index columns must have stats types: ${schema.simpleString}")
+    // the parquet schema Spark writes for it, timestamps as MICROS
+    val msg = new SparkToParquetSchemaConverter(
+      outputTimestampType = ParquetOutputTimestampType.TIMESTAMP_MICROS).convert(schema)
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
@@ -208,9 +209,10 @@ object SkippingIndex {
       try rows.sortBy(_.getString(0)).foreach { r =>
         val g = new SimpleGroup(msg)
         schema.fields.indices.foreach { i =>
-          if (!r.isNullAt(i)) schema.fields(i).dataType match {
-            case LongType => g.add(i, r.getLong(i))
-            case _ => g.add(i, r.getString(i))
+          if (!r.isNullAt(i)) CatalystTypeConverters.convertToCatalyst(r.get(i)) match {
+            case d: Int => g.add(i, d)
+            case l: Long => g.add(i, l)
+            case s => g.add(i, s.toString)
           }
         }
         writer.write(g)
@@ -225,21 +227,77 @@ object SkippingIndex {
     }
   }
 
-  /** The stats-table schema per kind token (long | string | micros —
-    * micros stats are longs). Shared with [[SnapshotTable]]'s
-    * manifest-carried stats so locally-reconstructed rows are
-    * shape-identical to a footer build's.
+  /** The stats type of a key column of type `dt`: the type its footer
+    * min/max are held in, compared through that type's Catalyst
+    * ordering. Integral keys widen to LongType; DATE, TIMESTAMP and
+    * STRING keep their own type (UTF8String orders by unsigned bytes, the
+    * order parquet computes BINARY stats in). None: no ordered footer
+    * stats (floats, decimals, collated strings, nested types).
     */
-  private[operators] def statsSchemaOf(cols: Seq[String], kind: String): StructType = {
-    val vt: DataType = if (kind == "string") StringType else LongType
+  private[operators] def statsTypeOf(dt: DataType): Option[DataType] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some(LongType)
+    case DateType | TimestampType | StringType => Some(dt)
+    case _ => None
+  }
+
+  /** The stats type of a parquet column ([[statsTypeOf]] of the type it
+    * reads as). INT96 timestamps have none (no ordered statistics): write
+    * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS` to prune. */
+  private def parquetStatsType(t: PrimitiveType): Option[DataType] =
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64, null) => Some(LongType)
+      case (PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64, i: IntLogicalTypeAnnotation)
+          if i.isSigned => Some(LongType)
+      case (PrimitiveTypeName.INT32, _: DateLogicalTypeAnnotation) => Some(DateType)
+      case (PrimitiveTypeName.INT64, ts: TimestampLogicalTypeAnnotation)
+          if ts.isAdjustedToUTC => Some(TimestampType)
+      case (PrimitiveTypeName.BINARY, _: StringLogicalTypeAnnotation) => Some(StringType)
+      case _ => None
+    }
+
+  /** A parquet statistic (or index value) of column type `t` as a
+    * Catalyst value of its stats type: Long, Int days, epoch micros from
+    * any annotated unit (NANOS floor-divided for a min, ceil-divided for
+    * a max, so an interval only widens) or UTF8String. */
+  private def catalystValue(t: PrimitiveType, v: Any, ceil: Boolean): Any =
+    (t.getLogicalTypeAnnotation, v) match {
+      case (_: DateLogicalTypeAnnotation, d: java.lang.Integer) => d.intValue
+      case (ts: TimestampLogicalTypeAnnotation, l: java.lang.Long) => ts.getUnit match {
+        case TimeUnit.MILLIS => Math.multiplyExact(l.longValue, 1000L)
+        case TimeUnit.MICROS => l.longValue
+        // addExact: a max within 999ns of Long.MaxValue must throw (the
+        // caller's all-files-affected degrade) rather than wrap negative
+        // and shrink the interval into a wrong prune
+        case TimeUnit.NANOS =>
+          if (ceil) Math.floorDiv(Math.addExact(l.longValue, 999L), 1000L)
+          else Math.floorDiv(l.longValue, 1000L)
+      }
+      case (_, n: java.lang.Number) => n.longValue
+      case (_, b: org.apache.parquet.io.api.Binary) => UTF8String.fromBytes(b.getBytes)
+    }
+
+  /** A Catalyst stats value as stats rows carry it: Long, LocalDate,
+    * Instant or String — external values `createDataFrame` accepts
+    * whatever the session's java8 datetime setting. */
+  private[operators] def external(v: Any, dt: DataType): Any = dt match {
+    case DateType => DateTimeUtils.daysToLocalDate(v.asInstanceOf[Int])
+    case TimestampType => DateTimeUtils.microsToInstant(v.asInstanceOf[Long])
+    case StringType => v.toString
+    case _ => v
+  }
+
+  /** The stats-table schema over (column, stats type) pairs. Shared with
+    * [[SnapshotTable]]'s manifest-carried stats so locally-reconstructed
+    * rows are shape-identical to a footer build's.
+    */
+  private[operators] def statsSchemaOf(cols: Seq[(String, DataType)]): StructType =
     StructType(
       StructField("file", StringType, nullable = false) +:
       StructField("n_rows", LongType, nullable = false) +:
-      cols.flatMap(c => Seq(
+      cols.flatMap { case (c, vt) => Seq(
         StructField(s"${c}_min", vt, nullable = true),
         StructField(s"${c}_max", vt, nullable = true),
-        StructField(s"${c}_nulls", LongType, nullable = true))))
-  }
+        StructField(s"${c}_nulls", LongType, nullable = true)) })
 
   /** Per-column null count folded across a file's row groups: parquet
     * min/max stats IGNORE nulls while n_rows counts them, so any bound
@@ -253,36 +311,31 @@ object SkippingIndex {
     if (stats.exists(s => s == null || !s.isNumNullsSet)) null
     else stats.map(_.getNumNulls).sum
 
-  /** Build the stats table for integer-typed `cols` over every
-    * `*.parquet` file under `dir`, and write it to `statsOut` (one small
-    * parquet file — the index itself, [[writeIndex]]). Footer-only I/O
-    * ([[statsRows]]).
-    *
-    * Min/max are the footer's column-chunk statistics folded across row
-    * groups. Columns must be INT32/INT64 (stored as long) — the gate
-    * surface; a chunk without statistics yields NULL min/max, which
-    * [[prune]] treats as "cannot skip" (conservative, never wrong).
+  /** Build the stats table for `cols` over every `*.parquet` file under
+    * `dir`, and write it to `statsOut` (one small parquet file — the
+    * index itself, [[writeIndex]]). Footer-only I/O ([[statsRows]]).
     */
   def buildStats(spark: SparkSession, dir: String, cols: Seq[String],
-      statsOut: String): Unit =
-    writeIndex(spark, statsOut, statsSchemaOf(cols, "long"),
-      footerRows(spark, listParquet(spark, dir), cols, "long"))
+      statsOut: String): Unit = {
+    val files = listParquet(spark, dir)
+    val typed = footerStatsTypes(spark, files, cols)
+    writeIndex(spark, statsOut, statsSchemaOf(typed), footerRows(spark, files, typed))
+  }
 
   /** One file's stats row in [[statsSchemaOf]]' shape — file, n_rows,
     * then min, max and null count per column — folded from its footer's
-    * column-chunk statistics across row groups. `kind` says how a chunk's
-    * min/max become index values: `long` (INT32/INT64), `string`
-    * (BINARY/UTF8 in unsigned byte order) or `micros` (INT64 timestamps
-    * normalized to epoch micros). A chunk without statistics, or with no
-    * non-null value, yields NULL min/max ("cannot skip").
+    * column-chunk statistics across row groups in the stats type's
+    * Catalyst ordering. A column whose parquet type has another stats
+    * type throws. A chunk without statistics, or with no non-null value,
+    * yields NULL min/max ("cannot skip").
     */
-  private def footerRow(conf: Configuration, p: String, cols: Seq[String],
-      kind: String): Row = {
+  private def footerRow(conf: Configuration, p: String,
+      cols: Seq[(String, DataType)]): Row = {
     val reader = MetadataInspector.openReader(conf, new Path(p))
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val nRows = blocks.map(_.getRowCount).sum
-      val perCol = cols.flatMap { c =>
+      val perCol = cols.flatMap { case (c, dt) =>
         val chunks = blocks.flatMap(_.getColumns.asScala)
           .filter(_.getPath.toDotString == c)
         // a ZERO-ROW file has no row groups at all: no stats to read,
@@ -291,14 +344,18 @@ object SkippingIndex {
         // layer already handles) instead of failing into the caller's
         // all-files-affected fallback
         require(chunks.nonEmpty || blocks.isEmpty, s"column $c not found in $p")
+        chunks.headOption.map(_.getPrimitiveType).foreach(t => require(
+          parquetStatsType(t).contains(dt),
+          s"$c: parquet type $t has no ${dt.simpleString} footer stats"))
         val stats = chunks.map(_.getStatistics)
         val (mn, mx) =
           if (stats.isEmpty || stats.exists(s => s == null || !s.hasNonNullValue))
             (null, null)
-          else kind match {
-            case "string" => stringMinMax(c, stats)
-            case "micros" => microsMinMax(c, chunks.head, stats)
-            case _ => longMinMax(c, stats)
+          else {
+            val t = chunks.head.getPrimitiveType
+            val ord = PhysicalDataType.ordering(dt)
+            (external(stats.map(s => catalystValue(t, s.genericGetMin, ceil = false)).min(ord), dt),
+              external(stats.map(s => catalystValue(t, s.genericGetMax, ceil = true)).max(ord), dt))
           }
         Seq(mn, mx, nullCount(stats))
       }
@@ -306,129 +363,47 @@ object SkippingIndex {
     } finally reader.close()
   }
 
-  private type Stats = Seq[org.apache.parquet.column.statistics.Statistics[_]]
+  /** Each of `cols` with the stats type of its type in `schema`; a type
+    * without ordered footer stats throws. */
+  private[operators] def statsTypesOf(schema: StructType,
+      cols: Seq[String]): Seq[(String, DataType)] =
+    cols.map { c =>
+      val dt = schema(c).dataType
+      c -> statsTypeOf(dt).getOrElse(throw new IllegalArgumentException(
+        s"$c: ${dt.simpleString} columns have no ordered footer stats"))
+    }
 
-  private def longMinMax(c: String, stats: Stats): (Any, Any) = {
-    def asLong(v: Any): Long = v match {
-      case i: java.lang.Integer => i.longValue
-      case l: java.lang.Long => l.longValue
-      case other => throw new IllegalArgumentException(
-        s"$c: unsupported stats type ${other.getClass.getName} " +
-          "(INT32/INT64 columns only)")
-    }
-    (stats.map(s => asLong(s.genericGetMin)).min,
-      stats.map(s => asLong(s.genericGetMax)).max)
-  }
-
-  private def stringMinMax(c: String, stats: Stats): (Any, Any) = {
-    def bin(v: Any): Array[Byte] = v match {
-      case b: org.apache.parquet.io.api.Binary => b.getBytes
-      case other => throw new IllegalArgumentException(
-        s"$c: unsupported stats type ${other.getClass.getName} " +
-          "(BINARY/UTF8 columns only)")
-    }
-    // fold across row groups in the SAME unsigned byte order the footer
-    // stats are computed in (java String compareTo is UTF-16 code-unit
-    // order and disagrees past the BMP)
-    val ord = new Ordering[Array[Byte]] {
-      def compare(a: Array[Byte], b: Array[Byte]): Int = {
-        var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) {
-          val d = (a(i) & 0xff) - (b(i) & 0xff)
-          if (d != 0) return d
-          i += 1
-        }
-        a.length - b.length
-      }
-    }
-    (new String(stats.map(s => bin(s.genericGetMin)).min(ord), "UTF-8"),
-      new String(stats.map(s => bin(s.genericGetMax)).max(ord), "UTF-8"))
-  }
-
-  private def microsMinMax(c: String,
-      chunk: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
-      stats: Stats): (Any, Any) = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
-    def asLong(v: Any): Long = v match {
-      case l: java.lang.Long => l.longValue
-      case other => throw new IllegalArgumentException(
-        s"$c: unsupported stats type ${other.getClass.getName} " +
-          "(INT64 timestamp columns only)")
-    }
-    val (mins, maxs) = (stats.map(s => asLong(s.genericGetMin)),
-      stats.map(s => asLong(s.genericGetMax)))
-    val unit = chunk.getPrimitiveType.getLogicalTypeAnnotation match {
-      case t: TimestampLogicalTypeAnnotation => t.getUnit
-      case other => throw new IllegalArgumentException(
-        s"$c: not a Timestamp-annotated column (annotation=$other; " +
-          "INT96 legacy timestamps have no usable ordered stats)")
-    }
-    def toMicros(v: Long, ceil: Boolean): Long = unit match {
-      case TimeUnit.MILLIS => Math.multiplyExact(v, 1000L)
-      case TimeUnit.MICROS => v
-      case TimeUnit.NANOS =>
-        // addExact: a max stat within 999ns of Long.MaxValue must throw
-        // (landing in the caller's all-files-affected degrade) rather
-        // than wrap negative and shrink the interval into a wrong prune
-        // — same contract as the MILLIS path's multiplyExact
-        if (ceil) Math.floorDiv(Math.addExact(v, 999L), 1000L)
-        else Math.floorDiv(v, 1000L)
-    }
-    (mins.map(toMicros(_, ceil = false)).min, maxs.map(toMicros(_, ceil = true)).max)
+  /** [[statsTypesOf]] the schema Spark reads from `files`' first footer. */
+  private def footerStatsTypes(spark: SparkSession, files: Seq[String],
+      cols: Seq[String]): Seq[(String, DataType)] = {
+    require(files.nonEmpty, "footer stats need at least one file")
+    statsTypesOf(graft.sources.Tables.parquetFooterSchema(spark, files.head).getOrElse(
+      throw new IllegalArgumentException(s"cannot read the footer of ${files.head}")), cols)
   }
 
   /** Footer-stats rows for `files` on the driver, in file order: one
-    * in-process fold, no Spark job. What index writes, the upsert prune
-    * and the keyset walks consume.
-    */
+    * in-process fold, no Spark job. */
   private[operators] def footerRows(spark: SparkSession, files: Seq[String],
-      cols: Seq[String], kind: String): Seq[Row] = {
+      cols: Seq[(String, DataType)]): Seq[Row] = {
     require(files.nonEmpty, "footer stats need at least one file")
     val conf = spark.sessionState.newHadoopConf()
-    files.map(footerRow(conf, _, cols, kind))
+    files.map(footerRow(conf, _, cols))
   }
 
   /** [[footerRows]] as a local relation: building, collecting or
     * broadcasting it runs no job. */
   private def footerFrame(spark: SparkSession, files: Seq[String],
-      cols: Seq[String], kind: String): DataFrame =
-    spark.createDataFrame(footerRows(spark, files, cols, kind).asJava,
-      statsSchemaOf(cols, kind))
+      cols: Seq[(String, DataType)]): DataFrame =
+    spark.createDataFrame(footerRows(spark, files, cols).asJava, statsSchemaOf(cols))
 
-  /** The stats table for an EXPLICIT file list (no directory listing) —
-    * the form a manifest-based table ([[SnapshotTable]]) consumes, since
-    * its live files span several commit directories. Footer-only reads,
-    * folded on the driver ([[footerRows]]).
+  /** The stats table for an EXPLICIT file list (no directory listing),
+    * as a local relation: footer-only reads folded on the driver
+    * ([[footerRows]]). Each column's stats type is its type's in the
+    * first file ([[statsTypeOf]]); any other type throws.
     */
   def statsRows(spark: SparkSession, files: Seq[String],
       cols: Seq[String]): DataFrame =
-    footerFrame(spark, files, cols, "long")
-
-  /** [[statsRows]] for STRING (parquet BINARY/UTF8) columns: min/max are
-    * the footer's unsigned-lexicographic byte-order statistics rendered
-    * as UTF-8 strings. Comparisons against them must happen in Spark
-    * plans (UTF8String compares unsigned byte-wise, matching the footer's
-    * stats order) — driver-side java.lang.String compareTo is UTF-16
-    * code-unit order and disagrees on supplementary characters.
-    */
-  def statsRowsString(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): DataFrame =
-    footerFrame(spark, files, cols, "string")
-
-  /** [[statsRows]] for TIMESTAMP (parquet INT64 with a Timestamp logical
-    * annotation) columns: min/max normalized to EPOCH MICROS whatever
-    * unit the writer annotated (MILLIS×1000; MICROS as-is; NANOS
-    * floor-divided for min and ceil-divided for max, so the interval can
-    * only widen — conservative). INT96 timestamps (Spark's legacy
-    * default output) carry no usable ordered statistics and THROW —
-    * [[SnapshotTable.upsert]] catches that and degrades to
-    * all-files-affected; writers who want timestamp-key pruning set
-    * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`.
-    */
-  def statsRowsMicros(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): DataFrame =
-    footerFrame(spark, files, cols, "micros")
+    footerFrame(spark, files, footerStatsTypes(spark, files, cols))
 
   /** Evaluate the interval test over the stats table: keep files whose
     * [min,max] on `column` intersects [lo, hi], plus files with NULL
@@ -473,40 +448,11 @@ object SkippingIndex {
     (df, p)
   }
 
-  /** One file's keyset-relevant stats: row count, [min, max] of the key
-    * column (None = unknown ⇒ the file can never be skipped), and the
-    * key column's null count (None = unknown ⇒ the file contributes no
-    * CERTAINTY to the stop bound, though it still serves rows).
-    */
-  final case class FileStat(file: String, nRows: Long,
-      min: Option[Long], max: Option[Long], nulls: Option[Long])
-
-  /** [[FileStat]] for any key type `K` — the typed walk's stats row. */
-  final case class FileStatOf[K](file: String, nRows: Long,
-      min: Option[K], max: Option[K], nulls: Option[Long])
-
-  /** The footer-stats order of STRING keys: unsigned UTF-8 byte
-    * comparison, which is also UTF8String's (Spark plan) order — NOT
-    * java.lang.String compareTo, whose UTF-16 code-unit order disagrees
-    * on supplementary characters (an emoji sorts BELOW U+FFFF in UTF-16
-    * but ABOVE it in UTF-8 bytes). The driver-side walk must rank files
-    * in the same order the plans and footers use, or a cursor between
-    * such keys includes/excludes the wrong files.
-    */
-  private[operators] val Utf8Ordering: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int = {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      val n = math.min(x.length, y.length)
-      while (i < n) {
-        val d = (x(i) & 0xff) - (y(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      x.length - y.length
-    }
-  }
+  /** One file's keyset-relevant stats: row count, key [min, max] as
+    * Catalyst values (None ⇒ the file can never be skipped) and null
+    * count (None ⇒ no CERTAINTY toward the stop bound). */
+  private[operators] final case class KeyStat(file: String, nRows: Long,
+      min: Option[Any], max: Option[Any], nulls: Option[Long])
 
   /** File-bounded keyset pagination over a KEY-CLUSTERED table — the
     * serving-side complement of [[graft.query.Paginator.pageWithCursor]]
@@ -521,85 +467,47 @@ object SkippingIndex {
     * rows strictly between the cursor and the next file's boundary —
     * every excluded file lies entirely beyond that boundary, so none can
     * hold any of the page's rows. Per-page cost is then
-    * O(page ÷ rows-per-file) FILES at ANY table size — measured: the
-    * `keyset_page` row of the committed BENCH_sf1_r13.json shows
-    * files_kept ≤ 8 per 1000-row page at BOTH sf0.1 and the 10× sf1
-    * corpus (rows-per-file held constant, file count 32→320), with
-    * median wall 69→107 ms/page — the residual growth is driver-side
-    * planning over the larger file list, not data scanned; a
-    * remainder-scanning top-k would have grown ~10×.
+    * O(page ÷ rows-per-file) FILES at ANY table size (the `keyset_page`
+    * row of BENCH_sf1_r13.json: files_kept ≤ 8 per 1000-row page at
+    * sf0.1 and at the 10× sf1 corpus).
     *
     * Contracts and caveats:
-    *  - the key column is INT32/INT64 (the long stats surface) and the
-    *    CURSOR is a strict bound: `page(after, size)` serves the `size`
-    *    smallest keys > `after` (ascending) or largest keys < `after`
-    *    (descending). A deep walk feeds each page's last served key back
-    *    as the next `after` — exact when the key is UNIQUE (the serving
-    *    layout clusters by a unique key); under duplicate keys the
-    *    strict cursor skips remaining copies of the boundary key, the
-    *    standard keyset contract. Each PAGE is exact for any data.
-    *  - NULL keys are never served (strict comparisons drop them), and
-    *    never corrupt the stop bound: a file's certain-row contribution
-    *    is n_rows MINUS the key's null count, because parquet min/max
-    *    stats ignore nulls while n_rows counts them — a null-bearing
-    *    file inside the walk interval would otherwise overcount, stop
-    *    the walk early, and DROP rows from a later file. Files with
-    *    unknown null counts contribute zero certainty (conservative).
+    *  - the key column is any type with ordered footer stats
+    *    ([[statsTypeOf]]). File bounds are ranked in the stats type's
+    *    Catalyst ordering, the order the footers were folded in and the
+    *    page plan sorts by (STRING: unsigned UTF-8 bytes).
+    *  - the CURSOR is the key's external value and a strict bound:
+    *    `page(Some(after), size)` serves the `size` smallest keys > `after`
+    *    (ascending) or largest keys < `after` (descending); `None` starts
+    *    an unbounded walk. A deep walk feeds each page's last row's
+    *    `Row.get(key)` back as the next cursor — exact when the key is
+    *    UNIQUE (the serving layout clusters by a unique key); under
+    *    duplicate keys the strict cursor skips remaining copies of the
+    *    boundary key, the standard keyset contract. Each PAGE is exact for
+    *    any data.
+    *  - NULL keys are never served, and never corrupt the stop bound: a
+    *    file's certain-row contribution is n_rows MINUS the key's null
+    *    count (min/max ignore nulls, n_rows counts them — overcounting
+    *    would stop the walk early and DROP a later file's rows). Unknown
+    *    null counts contribute zero certainty.
     *  - files without usable min/max stats always qualify (unknown ⇒
     *    cannot skip) and are read into every page.
     *  - the residual filter + `orderBy limit size` make every page
     *    exactly the full-sort page whatever the stats said; pruning is
     *    an I/O bound, never a semantics change.
     *
-    * The walk's stats come from an ATTACHED index, read whole on the
-    * driver ([[readIndex]]), or from a footer fold on the driver
-    * ([[footerRows]]): either way O(table files) rows are on the driver
-    * while the walk is built. Above `graft.keyset.eagerStatsMax` files
-    * the walk sorts them once into executor memory ([[StatsSource]]) and
-    * each page pulls only the few candidate rows it actually walks
-    * (`toLocalIterator` over the sorted cache). A cursor provably past
-    * the data returns the correctly-empty page from the stats alone —
-    * an empty relation, no table scan. Build via
-    * [[SkippingIndex.keysetWalk]] (attached-stats dirs) or
-    * [[SnapshotTable.keysetWalk]] (pinned snapshot versions); call
-    * `close()` when done with a walk to drop its sorted stats cache.
+    * The stats come from an ATTACHED index or a driver-side footer fold;
+    * above `graft.keyset.eagerStatsMax` files they are sorted once into
+    * executor memory ([[StatsSource]]) and each page pulls only the rows
+    * it walks. A cursor provably past the data gets the empty page from
+    * the stats alone. Build via [[SkippingIndex.keysetWalk]] (dirs) or
+    * [[SnapshotTable.keysetWalk]] (pinned versions); `close()` drops the
+    * sorted stats cache.
     */
-  final class KeysetWalk private[operators] (typed: TypedKeysetWalk[Long]) {
+  final class KeysetWalk private[operators] (spark: SparkSession,
+      statsDf: DataFrame, column: String) {
 
-    /** The `size` smallest keys strictly above `after` (ascending) or
-      * largest strictly below it (descending), with the pruning decision
-      * as evidence. Start a walk from `Long.MinValue` / `Long.MaxValue`.
-      */
-    def page(after: Long, size: Int, ascending: Boolean = true): (DataFrame, Prune) =
-      typed.page(Some(after), size, ascending)
-
-    /** Drop the walk's sorted stats cache (see [[TypedKeysetWalk.close]]). */
-    def close(): Unit = typed.close()
-
-    /** Stats rows materialized on the driver so far (see
-      * [[TypedKeysetWalk.statsPulled]]).
-      */
-    def statsPulled: Long = typed.statsPulled
-  }
-
-  /** The [[KeysetWalk]] machinery generalized over the key type: the
-    * walk logic is ORDER arithmetic (candidate filter, key-order file
-    * ranking, certain-row stop bound) plus one plan predicate, so a key
-    * type needs only (a) a driver-side `Ordering[K]` that MATCHES the
-    * footer-stats and Spark-plan order, and (b) the strict cursor
-    * predicate as a Column. Instances: long keys ([[keysetWalk]],
-    * `Ordering.Long`), string keys ([[keysetWalkString]],
-    * [[Utf8Ordering]] — unsigned UTF-8 bytes, the BINARY footer-stat and
-    * UTF8String order), timestamp keys ([[keysetWalkMicros]], epoch
-    * micros from the normalized INT64 footer stats).
-    *
-    * `page(None, ...)` starts a walk with no cursor bound (the form key
-    * types without a MinValue sentinel need); NULL keys are still never
-    * served (explicit IsNotNull residual).
-    */
-  final class TypedKeysetWalk[K] private[operators] (spark: SparkSession,
-      column: String, source: StatsSource[K], ord: Ordering[K],
-      cursorPred: (K, Boolean) => org.apache.spark.sql.Column) {
+    private val source = new StatsSource(spark, statsDf, column)
 
     // per-walk cached schema: a walk serves MANY pages over the same
     // immutable file set, and each page's spark.read.parquet(...) would
@@ -612,18 +520,20 @@ object SkippingIndex {
     /** The `size` smallest keys strictly above `after` (ascending) or
       * largest strictly below it (descending); `None` = unbounded start.
       */
-    def page(after: Option[K], size: Int, ascending: Boolean = true): (DataFrame, Prune) = {
+    def page(after: Option[Any], size: Int, ascending: Boolean = true): (DataFrame, Prune) = {
       require(size > 0, "page size must be positive")
+      val ord = source.ord
+      val cursor = after.map(source.key)
       // candidate files (could hold a key strictly beyond the cursor) in
       // key order, nearest-to-cursor first — pulled LAZILY from the
       // walk's sorted stats cache, so only the files this page actually
       // walks ever reach the driver
       val it = source.candidates(after, ascending)
-      val included = scala.collection.mutable.ArrayBuffer.empty[FileStatOf[K]]
-      var cur: FileStatOf[K] = if (it.hasNext) it.next() else null
+      val included = scala.collection.mutable.ArrayBuffer.empty[KeyStat]
+      var cur: KeyStat = if (it.hasNext) it.next() else null
       while (cur != null) {
         included += cur
-        val nxt: FileStatOf[K] = if (it.hasNext) it.next() else null
+        val nxt: KeyStat = if (it.hasNext) it.next() else null
         cur =
           if (nxt == null) null
           else {
@@ -634,7 +544,7 @@ object SkippingIndex {
             val bound = if (ascending) nxt.min.get else nxt.max.get
             val certain = included.iterator
               .filter { s =>
-                val pastCursor = after.forall(a =>
+                val pastCursor = cursor.forall(a =>
                   if (ascending) ord.gt(s.min.get, a) else ord.lt(s.max.get, a))
                 pastCursor && (if (ascending) ord.lt(s.max.get, bound)
                                else ord.gt(s.min.get, bound))
@@ -655,7 +565,8 @@ object SkippingIndex {
         else spark.read.schema(pageSchema).parquet(kept: _*)
       // NULL keys are never served: the strict cursor predicate drops
       // them; an unbounded start needs the explicit IsNotNull
-      val pred = after.map(cursorPred(_, ascending)).getOrElse(col(column).isNotNull)
+      val pred = after.map(a => if (ascending) col(column) > lit(a) else col(column) < lit(a))
+        .getOrElse(col(column).isNotNull)
       val ordCol = if (ascending) col(column).asc else col(column).desc
       (base.filter(pred).orderBy(ordCol).limit(size), p)
     }
@@ -673,11 +584,8 @@ object SkippingIndex {
     def statsPulled: Long = source.pulled.get()
   }
 
-  /** Backing store for a walk's per-file stats, HYBRID by file count —
-    * the fix for per-walk O(files) driver collects (the old
-    * [[TypedKeysetWalk]] always materialized the full stats array; at
-    * millions of files that is ~100 MB of driver heap PER WALK,
-    * re-pulled on every walk):
+  /** Backing store for a walk's per-file stats, HYBRID by file count so
+    * a walk never holds O(files) rows at millions of files:
     *
     *  - tables up to `graft.keyset.eagerStatsMax` files (default 4096 —
     *    a few hundred KB of driver heap, bounded) keep the eager array:
@@ -688,23 +596,27 @@ object SkippingIndex {
     *    `toLocalIterator` with the cursor filter applied executor-side,
     *    so the walk itself holds only the rows a page actually walks.
     *
-    * The walk's own residency is therefore bounded by
-    * min(files, eagerStatsMax) + files-walked at ANY table size. The
-    * stats it is built from are rows on the driver already (an attached
-    * index or a driver-side footer fold, see [[KeysetWalk]]).
-    *
-    * Ordering note (lazy path): the executor-side sort must match the
-    * walk's driver-side `Ordering[K]` — LongType sorts numerically
-    * (`Ordering.Long`) and StringType sorts in unsigned UTF-8 byte
-    * order (UTF8String.compareTo == [[Utf8Ordering]]), so the sorted
-    * stream IS the order the stop-bound arithmetic assumes. A filter on
-    * the sorted cache is a narrow op over range-partitioned sorted
-    * partitions and `toLocalIterator` drains partitions in index order,
-    * so the filtered stream stays globally sorted.
+    * One order on both paths: the eager array is ranked with the stats
+    * type's Catalyst ordering (`PhysicalDataType.ordering`), the ordering
+    * the lazy path's executor-side sort of the same column uses. A filter
+    * on that sorted cache is narrow and `toLocalIterator` drains
+    * partitions in order, so the stream stays globally sorted.
     */
-  private[operators] final class StatsSource[K](spark: SparkSession,
-      statsDf: DataFrame, column: String, get: (Row, Int) => K,
-      ord: Ordering[K]) {
+  private[operators] final class StatsSource(spark: SparkSession,
+      statsDf: DataFrame, column: String) {
+
+    private val statsType = statsDf.schema(s"${column}_min").dataType
+    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(statsType)
+
+    /** The walk's key order: the stats type's Catalyst ordering. */
+    val ord: Ordering[Any] = PhysicalDataType.ordering(statsType)
+
+    /** A cursor (the key's external value) as a stats value; an Int,
+      * Short or Byte key's cursor widens to its Long stats. */
+    def key(cursor: Any): Any = cursor match {
+      case n: java.lang.Number if statsType == LongType => n.longValue
+      case v => toCatalyst(v)
+    }
 
     private val normalized: DataFrame = {
       // a frame without the `_nulls` column (an index attached before
@@ -718,10 +630,10 @@ object SkippingIndex {
         col(s"${column}_nulls").as("nls"))
     }
 
-    private def toStat(r: Row): FileStatOf[K] = FileStatOf[K](
+    private def toStat(r: Row): KeyStat = KeyStat(
       r.getString(0), r.getLong(1),
-      if (r.isNullAt(2)) None else Some(get(r, 2)),
-      if (r.isNullAt(3)) None else Some(get(r, 3)),
+      if (r.isNullAt(2)) None else Some(toCatalyst(r.get(2))),
+      if (r.isNullAt(3)) None else Some(toCatalyst(r.get(3))),
       if (r.isNullAt(4)) None else Some(r.getLong(4)))
 
     private val eagerMax: Int =
@@ -730,12 +642,9 @@ object SkippingIndex {
     /** Stats rows materialized on the driver (residency evidence). */
     val pulled = new java.util.concurrent.atomic.AtomicLong(0L)
 
-    // eager path: ONE bounded job — collect limit(eagerMax+1) and decide
-    // from the array itself (probe and payload in the same job; the old
-    // shape ran a count THEN a full collect, evaluating the stats frame
-    // twice — expensive when it is a COMPUTED footer-scan frame, not a
-    // parquet read)
-    private val eagerRows: Option[Array[FileStatOf[K]]] =
+    // eager path: ONE bounded collect of limit(eagerMax+1) is both the
+    // size probe and the payload (the stats frame is evaluated once)
+    private val eagerRows: Option[Array[KeyStat]] =
       if (eagerMax <= 0) None
       else {
         val probe = normalized.limit(eagerMax + 1).collect()
@@ -747,10 +656,9 @@ object SkippingIndex {
         else Some(probe.map(toStat))
       }
 
-    // lazy path: persist the normalized frame ONCE, up front — the blind
-    // collect, the total count and the per-direction sorts all hit this
-    // cache instead of re-evaluating the (possibly computed) stats frame
-    // three times before any sorted cache exists. Unpersisted in close().
+    // lazy path: persist the normalized frame ONCE, up front, for the
+    // blind collect, the total count and the per-direction sorts.
+    // Unpersisted in close().
     private val lazyNormalized: Option[DataFrame] =
       if (eagerRows.isDefined) None
       else {
@@ -761,7 +669,7 @@ object SkippingIndex {
     /** Files with no usable bounds (all-NULL or stats-less): they join
       * every page unconditionally — the degenerate few, never the table.
       */
-    val blind: Array[FileStatOf[K]] = eagerRows match {
+    val blind: Array[KeyStat] = eagerRows match {
       case Some(arr) => arr.filter(s => s.min.isEmpty || s.max.isEmpty)
       case None =>
         val arr = lazyNormalized.get
@@ -784,7 +692,7 @@ object SkippingIndex {
       else eagerRows.map(_.head.file)
         .getOrElse(lazyNormalized.get.select("file").head().getString(0))
 
-    private lazy val eagerKnown: Array[FileStatOf[K]] =
+    private lazy val eagerKnown: Array[KeyStat] =
       eagerRows.get.filter(s => s.min.isDefined && s.max.isDefined)
 
     private lazy val known =
@@ -805,12 +713,14 @@ object SkippingIndex {
     private var builtAsc = false
     private var builtDesc = false
 
-    def candidates(after: Option[K], ascending: Boolean): Iterator[FileStatOf[K]] =
+    /** Files that could hold a key strictly beyond the cursor `after`
+      * (the key's external value), nearest first. */
+    def candidates(after: Option[Any], ascending: Boolean): Iterator[KeyStat] =
       eagerRows match {
         case Some(_) =>
           // pure driver memory: filter + sort exactly like the lazy
           // path's executor-side plan (same candidate set, same order)
-          val cand = after match {
+          val cand = after.map(key) match {
             case None => eagerKnown
             case Some(a) => eagerKnown.filter(s =>
               if (ascending) ord.gt(s.max.get, a) else ord.lt(s.min.get, a))
@@ -830,7 +740,6 @@ object SkippingIndex {
               if (ascending) base.where(col("mx") > lit(a))
               else base.where(col("mn") < lit(a))
           }
-          import scala.jdk.CollectionConverters._
           filtered.toLocalIterator().asScala.map { r =>
             pulled.incrementAndGet()
             toStat(r)
@@ -844,71 +753,20 @@ object SkippingIndex {
     }
   }
 
-  /** A [[KeysetWalk]] over `dir`: consults the attached stats index
-    * ([[attachStats]]) when it covers `column`, otherwise builds the
-    * stats in memory from the files' footers (a footer fold on the
-    * driver, nothing written).
+  /** A [[KeysetWalk]] over `dir` keyed by `column`: consults the attached
+    * stats index ([[attachStats]]) when it covers `column` with the
+    * stats type of the column's parquet type, otherwise builds the stats
+    * in memory from the files' footers (a footer fold on the driver,
+    * nothing written). An index of another stats type is never consulted.
     */
   def keysetWalk(spark: SparkSession, dir: String, column: String): KeysetWalk = {
-    // coverage includes the stats TYPE: a stats table attached for the
-    // same column via statsRowsString passes the name check but would
-    // ClassCastException inside the walk — a non-long index falls back
-    // to the footer build, which throws its own clear error when the
-    // column genuinely isn't INT32/INT64
-    val df = readIndex(spark, statsPathFor(dir)).filter(_.covered(column, LongType))
+    val files = listParquet(spark, dir)
+    val typed = footerStatsTypes(spark, files, Seq(column))
+    val df = readIndex(spark, statsPathFor(dir)).filter(_.covered(column, typed.head._2))
       .map(_.frame(spark))
-      .getOrElse(statsRows(spark, listParquet(spark, dir), Seq(column)))
-    keysetWalkFromStats(spark, df, column)
+      .getOrElse(footerFrame(spark, files, typed))
+    new KeysetWalk(spark, df, column)
   }
-
-  /** A [[TypedKeysetWalk]] for a STRING-keyed clustered table (string
-    * doc_ids, URL keys): per-file bounds from the parquet BINARY/UTF8
-    * footer stats ([[statsRowsString]]), file ranking and cursor
-    * candidacy in unsigned UTF-8 byte order ([[Utf8Ordering]]) — the
-    * same order the footers and Spark's UTF8String comparisons use, so
-    * the walk is exact across supplementary characters where UTF-16
-    * compareTo would mis-rank files. Start a walk with `page(None, …)`.
-    * Consults an attached stats index when it covers `column` with
-    * STRING min/max; otherwise builds footer stats in memory.
-    */
-  def keysetWalkString(spark: SparkSession, dir: String,
-      column: String): TypedKeysetWalk[String] = {
-    val df = readIndex(spark, statsPathFor(dir)).filter(_.covered(column, StringType))
-      .map(_.frame(spark))
-      .getOrElse(statsRowsString(spark, listParquet(spark, dir), Seq(column)))
-    keysetWalkStringFromStats(spark, df, column)
-  }
-
-  /** A [[TypedKeysetWalk]] for a TIMESTAMP-keyed clustered table (event
-    * time, ingestion time): cursors are EPOCH MICROS, per-file bounds
-    * come from the normalized INT64 timestamp footer stats
-    * ([[statsRowsMicros]] — MILLIS/MICROS/NANOS all normalize; NANOS
-    * bounds only widen, so pages stay exact while certainty is
-    * conservative). INT96 legacy output has no usable ordered stats and
-    * throws there. Always footer-built: an attached long-stats index is
-    * unit-ambiguous for timestamps. Start with `page(None, …)`; the
-    * plan predicate is `column > timestamp_micros(cursor)`, which pushes
-    * down to the scan like any timestamp comparison.
-    */
-  def keysetWalkMicros(spark: SparkSession, dir: String,
-      column: String): TypedKeysetWalk[Long] =
-    keysetWalkMicrosFromStats(spark,
-      statsRowsMicros(spark, listParquet(spark, dir), Seq(column)), column)
-
-  /** [[keysetWalkMicros]] from an already-built [[statsRowsMicros]]
-    * frame — [[SnapshotTable.keysetWalkMicros]]'s entry point for pinned
-    * snapshot versions (the file list comes from the manifest there).
-    */
-  private[operators] def keysetWalkMicrosFromStats(spark: SparkSession,
-      statsDf: DataFrame, column: String): TypedKeysetWalk[Long] =
-    new TypedKeysetWalk[Long](spark, column,
-      new StatsSource[Long](spark, statsDf, column, (r, i) => r.getLong(i),
-        Ordering.Long),
-      Ordering.Long,
-      (a, asc) => {
-        val c = timestamp_micros(lit(a))
-        if (asc) col(column) > c else col(column) < c
-      })
 
   private def listParquet(spark: SparkSession, dir: String): Seq[String] = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -918,48 +776,6 @@ object SkippingIndex {
     require(files.nonEmpty, s"no parquet files under $dir")
     files
   }
-
-  /** Build a long-key [[KeysetWalk]] from a stats frame in [[statsRows]]'
-    * shape. Rejects a stats frame whose min/max aren't LongType with a
-    * clear error (e.g. one built by [[statsRowsString]] for the same
-    * column name) instead of an opaque ClassCastException mid-walk.
-    */
-  private[operators] def keysetWalkFromStats(spark: SparkSession,
-      statsDf: DataFrame, column: String): KeysetWalk = {
-    val mt = statsDf.schema(s"${column}_min").dataType
-    require(mt == LongType,
-      s"long keyset walk needs LongType ${column}_min/_max stats, got " +
-        s"${mt.simpleString} — string-keyed stats walk via keysetWalkString")
-    new KeysetWalk(new TypedKeysetWalk[Long](spark, column,
-      new StatsSource[Long](spark, statsDf, column, (r, i) => r.getLong(i),
-        Ordering.Long),
-      Ordering.Long,
-      (a, asc) => if (asc) col(column) > a else col(column) < a))
-  }
-
-  /** [[keysetWalkFromStats]] for STRING-key stats frames
-    * ([[statsRowsString]]' shape) — [[SnapshotTable.keysetWalkString]]'s
-    * entry point for pinned snapshot versions.
-    */
-  private[operators] def keysetWalkStringFromStats(spark: SparkSession,
-      statsDf: DataFrame, column: String): TypedKeysetWalk[String] = {
-    val mt = statsDf.schema(s"${column}_min").dataType
-    require(mt == StringType,
-      s"string keyset walk needs StringType ${column}_min/_max stats, got " +
-        s"${mt.simpleString} — long-keyed stats walk via keysetWalk")
-    new TypedKeysetWalk[String](spark, column,
-      new StatsSource[String](spark, statsDf, column, (r, i) => r.getString(i),
-        Utf8Ordering),
-      Utf8Ordering,
-      (a, asc) => if (asc) col(column) > a else col(column) < a)
-  }
-
-  /** One-shot ascending keyset page (see [[KeysetWalk.page]]); a multi-
-    * page walk should hold a [[keysetWalk]] so the stats collect once.
-    */
-  def keysetPage(spark: SparkSession, dir: String, column: String,
-      after: Long, size: Int): (DataFrame, Prune) =
-    keysetWalk(spark, dir, column).page(after, size)
 
   /** Conventional in-table location of the stats index: an
     * underscore-prefixed subdirectory, which Spark's file listing (like
@@ -971,21 +787,12 @@ object SkippingIndex {
   def statsPathFor(dir: String): String = s"$dir/_graft_stats"
 
   /** Build the stats index AT the table — after this, [[scanBetween]]
-    * consults it automatically.
+    * (long columns) and [[keysetWalk]] consult it automatically. A table
+    * has ONE attached index; each consumer checks the stats type of the
+    * column it needs and falls back rather than miscompare.
     */
   def attachStats(spark: SparkSession, dir: String, cols: Seq[String]): Unit =
     buildStats(spark, dir, cols, statsPathFor(dir))
-
-  /** [[attachStats]] for STRING columns: BINARY/UTF8 footer stats at the
-    * conventional in-table location, consulted automatically by
-    * [[keysetWalkString]]. A table has ONE attached index (long or
-    * string — the stats column types decide which consumers engage;
-    * every consumer validates the type and falls back rather than
-    * miscompare).
-    */
-  def attachStatsString(spark: SparkSession, dir: String, cols: Seq[String]): Unit =
-    writeIndex(spark, statsPathFor(dir), statsSchemaOf(cols, "string"),
-      footerRows(spark, listParquet(spark, dir), cols, "string"))
 
   /** Scan `dir` for `column BETWEEN lo AND hi`, consulting an attached
     * stats index AUTOMATICALLY when one exists and covers `column`:
@@ -1000,8 +807,8 @@ object SkippingIndex {
   def scanBetween(spark: SparkSession, dir: String, column: String,
       lo: Long, hi: Long): (DataFrame, Option[Prune]) = {
     // covered includes the stats TYPE: long bounds against a string
-    // index (attachStatsString for the same column name) must fall back
-    // to the plain scan, not numerically compare strings
+    // index over the same column name must fall back to the plain scan,
+    // not numerically compare strings
     val p = readIndex(spark, statsPathFor(dir)).filter(_.covered(column, LongType))
       .map(prune(_, column, lo, hi))
     val files = p.filter(_.filesKept > 0).fold(Seq(dir))(_.kept)

@@ -5,7 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructField,
+  StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Versioned snapshot table: the manifest layer that unifies
   * [[Upsert]] (CDC merge), [[Layout]] (compaction) and [[SkippingIndex]]
@@ -193,28 +196,26 @@ object SnapshotTable {
   // ---- per-file key stats carried IN the manifest (#stats: headers) ----
   //
   // The Delta/Iceberg stats-in-manifest design, made LAZY so no commit
-  // ever adds a footer job just to record stats: the per-file key
-  // [min,max] an upsert computes for its prune (from parquet footers) is
-  // carried forward in the NEW manifest for every file the commit keeps,
-  // so the next upsert footer-scans only the files whose stats no commit
-  // has needed yet — in steady state the PREVIOUS commit's new files.
-  // Per-upsert prune cost becomes O(recent batch files), never O(table
-  // files) — at a million files that is the difference between a prune
-  // that reads 10^6 footers per commit and one that reads ~the batch.
+  // adds a footer read just to record stats: the per-file key stats an
+  // upsert folds for its prune are carried forward in the NEW manifest
+  // for every file the commit keeps, so the next upsert footer-scans only
+  // the files no commit has needed yet — in steady state the previous
+  // commit's new files: O(recent batch files) per upsert, not O(table).
   //
   // Format: one `#stats:<kind>:<urlencoded col>:` header per tracked
   // column, holding per-file `min,max,nulls,nrows` entries ALIGNED with
   // the manifest's file lines, `;`-separated; `?` = unknown field; string
   // values are URL-encoded (so `,;:` and newlines cannot corrupt the
-  // line). kind ∈ long|string|micros — the three footer-stats surfaces
-  // (DATE keys ride `long` day-encoded, like the prune itself).
+  // line). kind ∈ long|string|micros is derived from the column's stats
+  // type in one place ([[statsToken]]): integral keys and DATE day
+  // numbers are `long`, TIMESTAMP epoch micros `micros`. Entries are
+  // decoded as the stats type of the column the version's `#schema:`
+  // commits, and a header whose kind is not that type's is ignored.
   //
-  // Trust model: entries are verbatim copies of what SkippingIndex's
-  // footer folds returned for these IMMUTABLE files — re-reading the
-  // footer yields the same values, so carrying them is equivalence, not
-  // estimation. A malformed or misaligned header is IGNORED per column
-  // (falls back to footer scans): stats can only cost pruning, never
-  // correctness.
+  // Entries are verbatim footer folds of IMMUTABLE files, so carrying
+  // them is equivalence, not estimation. A malformed or misaligned header
+  // is ignored per column (footer scans instead): stats can only cost
+  // pruning, never correctness.
 
   private val StatsHeader = "#stats:"
 
@@ -228,63 +229,82 @@ object SnapshotTable {
     def known: Boolean = nRows.isDefined
   }
 
-  private def encField(kind: String, v: Option[Any]): String = v match {
-    case None => "?"
-    case Some(x) if kind == "string" =>
-      java.net.URLEncoder.encode(x.toString, "UTF-8")
-    case Some(x) => x.toString
+  /** Carried stats per (column, stats type): file → stat. */
+  private type CarriedStats = Map[(String, DataType), Map[String, ManifestStat]]
+
+  /** The `#stats:` kind token of a stats type. */
+  private def statsToken(st: DataType): String = st match {
+    case StringType => "string"
+    case TimestampType => "micros"
+    case _ => "long"
   }
 
-  private def decField(kind: String, s: String): Option[Any] =
+  /** One entry field: `?` when unknown, a string URL-encoded, any other
+    * value as its Catalyst value (a long, DATE days, TIMESTAMP micros). */
+  private def encField(v: Option[Any]): String =
+    v.map(CatalystTypeConverters.convertToCatalyst) match {
+      case None => "?"
+      case Some(s: UTF8String) => java.net.URLEncoder.encode(s.toString, "UTF-8")
+      case Some(x) => x.toString
+    }
+
+  private def decField(st: DataType, s: String): Option[Any] =
     if (s == "?") None
-    else if (kind == "string") Some(java.net.URLDecoder.decode(s, "UTF-8"))
-    else Some(s.toLong)
+    else Some(SkippingIndex.external(st match {
+      case StringType => java.net.URLDecoder.decode(s, "UTF-8")
+      case DateType => s.toInt
+      case _ => s.toLong
+    }, st))
 
   /** Render `#stats:` headers for `fileList`. Columns with no known entry
     * among the listed files contribute nothing (header omitted).
     */
-  private def statsHeaders(fileList: Seq[String],
-      stats: Map[(String, String), Map[String, ManifestStat]]): Seq[String] =
-    stats.toSeq.sortBy(_._1).flatMap { case ((colName, kind), byFile) =>
-      val entries = fileList.map(f => byFile.get(f).filter(_.known))
-      if (!entries.exists(_.isDefined)) None
-      else Some(StatsHeader + kind + ":" +
-        java.net.URLEncoder.encode(colName, "UTF-8") + ":" +
-        entries.map {
-          case Some(s) => Seq(encField(kind, s.min), encField(kind, s.max),
-            encField("long", s.nulls), encField("long", s.nRows)).mkString(",")
-          case None => "?,?,?,?"
-        }.mkString(";"))
+  private def statsHeaders(fileList: Seq[String], stats: CarriedStats): Seq[String] =
+    stats.toSeq.sortBy { case ((c, st), _) => (c, statsToken(st)) }.flatMap {
+      case ((colName, st), byFile) =>
+        val entries = fileList.map(f => byFile.get(f).filter(_.known))
+        if (!entries.exists(_.isDefined)) None
+        else Some(StatsHeader + statsToken(st) + ":" +
+          java.net.URLEncoder.encode(colName, "UTF-8") + ":" +
+          entries.map {
+            case Some(s) => Seq(s.min, s.max, s.nulls, s.nRows).map(encField).mkString(",")
+            case None => "?,?,?,?"
+          }.mkString(";"))
     }
 
-  /** The carried per-file stats of `version`: (column, kind) → file →
-    * stat, covering only files with KNOWN entries. Corrupt or misaligned
-    * headers drop their column (conservative — callers fall back to
+  /** The carried per-file stats of `version`: (column, stats type) →
+    * file → stat, covering only files with KNOWN entries. Corrupt or
+    * misaligned headers, and headers whose kind is not the committed
+    * column's, drop their column (conservative — callers fall back to
     * footer scans).
     */
   private[operators] def manifestStatsOf(spark: SparkSession, dir: String,
-      version: Option[Long] = None): Map[(String, String), Map[String, ManifestStat]] = {
+      version: Option[Long] = None): CarriedStats = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
     val lines = manifestLines(spark, dir, v)
     val fl = lines.filterNot(_.startsWith("#"))
+    val schema = schemaOf(spark, dir, Some(v))
     lines.filter(_.startsWith(StatsHeader)).flatMap { l =>
       try {
         val Array(kind, encCol, payload) = l.drop(StatsHeader.length).split(":", 3)
         val colName = java.net.URLDecoder.decode(encCol, "UTF-8")
+        val st = schema.flatMap(_.find(_.name == colName))
+          .flatMap(f => SkippingIndex.statsTypeOf(f.dataType))
+          .filter(statsToken(_) == kind)
         val entries = payload.split(";", -1)
-        if (entries.length != fl.length) None
+        if (st.isEmpty || entries.length != fl.length) None
         else {
           val byFile = fl.zip(entries).flatMap { case (f, e) =>
             val p = e.split(",", -1)
             require(p.length == 4, s"bad stats entry: $e")
-            val nr = decField("long", p(3)).map(_.asInstanceOf[Long])
+            val nr = decField(LongType, p(3)).map(_.asInstanceOf[Long])
             if (nr.isEmpty) None // unknown file — no entry
-            else Some(f -> ManifestStat(decField(kind, p(0)),
-              decField(kind, p(1)),
-              decField("long", p(2)).map(_.asInstanceOf[Long]), nr))
+            else Some(f -> ManifestStat(decField(st.get, p(0)),
+              decField(st.get, p(1)),
+              decField(LongType, p(2)).map(_.asInstanceOf[Long]), nr))
           }.toMap
-          Some((colName, kind) -> byFile)
+          Some((colName, st.get) -> byFile)
         }
       } catch { case scala.util.control.NonFatal(_) => None }
     }.toMap
@@ -293,9 +313,7 @@ object SnapshotTable {
   /** Restrict carried stats to `keep`'s files and drop emptied columns —
     * what every non-rewriting commit does to propagate stats forward.
     */
-  private def carryStats(
-      stats: Map[(String, String), Map[String, ManifestStat]],
-      keep: Set[String]): Map[(String, String), Map[String, ManifestStat]] =
+  private def carryStats(stats: CarriedStats, keep: Set[String]): CarriedStats =
     stats.map { case (ck, m) => ck -> m.filter(kv => keep.contains(kv._1)) }
       .filter(_._2.nonEmpty)
 
@@ -427,7 +445,7 @@ object SnapshotTable {
   private def commitManifest(spark: SparkSession, dir: String, v: Long,
       fileList: Seq[String], schema: Option[StructType],
       dropped: Seq[String] = Seq.empty,
-      stats: Map[(String, String), Map[String, ManifestStat]] = Map.empty): Unit = {
+      stats: CarriedStats = Map.empty): Unit = {
     val prevInstant = versions(spark, dir).filter(_ < v).lastOption
       .map(pv => commitInstantOf(spark, dir, pv)).getOrElse(0L)
     val stamp = math.max(System.currentTimeMillis(), prevInstant + 1L)
@@ -455,13 +473,10 @@ object SnapshotTable {
   /** File-pruned latest-wins MERGE of `changes` (tombstones honored via
     * `deleteCol`) into the current version, committed as version n+1:
     *
-    *  1. per-file [min,max] of `keyCol`: carried in the manifest's
-    *     `#stats:` headers, else taken from the version's attached stats
-    *     index (read on the driver, no job), else footer-scanned
-    *     ([[SkippingIndex.footerRows]]: folded on the driver, no job)
-    *     — a table whose index is
-    *     refreshed per commit ([[attachStatsIncremental]]) reads no
-    *     footer here;
+    *  1. per-file [min,max] of `keyCol` ([[statsRowsVia]], on the
+    *     driver, no job): manifest-carried, else the attached index, else
+    *     footer-folded — an index refreshed per commit
+    *     ([[attachStatsIncremental]]) leaves no footer to read;
     *  2. a file is AFFECTED iff some change key falls inside its range
     *     (stats × distinct-keys broadcast range join; files with no
     *     stats are conservatively affected);
@@ -472,12 +487,15 @@ object SnapshotTable {
     * Change rows whose keys land in NO existing file (pure inserts) are
     * in the merge input by construction.
     *
-    * Key types: INT32/INT64 keys prune via long footer stats, STRING
-    * keys via BINARY/UTF8 footer stats (unsigned-byte order on both
-    * sides — [[SkippingIndex.statsRowsString]]). Any OTHER key type, or
-    * a stats build that fails (missing chunks, exotic physical types),
-    * degrades gracefully to ALL files affected: correctness is
-    * preserved (the merge sees the whole table), only pruning is lost.
+    * Key types: every key type with ordered footer stats
+    * ([[SkippingIndex.statsTypeOf]]: integral, DATE, TIMESTAMP, STRING)
+    * prunes by joining the change keys, cast to the stats type, against
+    * per-file `kmin`/`kmax` of that type — Spark's own comparison, so
+    * strings compare as unsigned bytes on both sides. Any OTHER key type,
+    * or a stats build that fails (missing chunks, INT96 timestamps,
+    * exotic physical types), degrades gracefully to ALL files affected:
+    * correctness is preserved (the merge sees the whole table), only
+    * pruning is lost.
     *
     * Schema evolution (ADD COLUMN): changes may carry columns the table
     * lacks — they become part of version n+1's committed schema
@@ -551,90 +569,35 @@ object SnapshotTable {
             col("kmin").isNull || col("kmax").isNull ||
               (col("__k") >= col("kmin") && col("__k") <= col("kmax")))
           .select("file").distinct().collect().map(_.getString(0)).toSet
-      // the key type's footer-stats surface (manifest kind token) — None
-      // degrades to all-files-affected, exactly the old behavior
-      val statKind: Option[String] = keyType match {
-        case _: org.apache.spark.sql.types.IntegerType
-           | _: org.apache.spark.sql.types.LongType
-           | _: org.apache.spark.sql.types.ShortType
-           | _: org.apache.spark.sql.types.ByteType
-           // parquet stores DATE as INT32 days-since-epoch: the long
-           // footer-stats fold applies unchanged (keys day-encoded below)
-           | _: org.apache.spark.sql.types.DateType => Some("long")
-        case _: org.apache.spark.sql.types.StringType => Some("string")
-        // INT64 MILLIS/MICROS/NANOS annotations normalize to epoch
-        // micros; legacy INT96 output (Spark's default — set
-        // spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS to
-        // prune) throws inside statsRowsMicros and lands in the
-        // all-files-affected catch below
-        case _: org.apache.spark.sql.types.TimestampType => Some("micros")
-        case _ => None
-      }
-      def keysFrame: DataFrame = keyType match {
-        case _: org.apache.spark.sql.types.DateType =>
-          changes.select(datediff(col(keyCol).cast("date"),
-            to_date(lit("1970-01-01"))).cast("long").as("__k")).distinct()
-        case _: org.apache.spark.sql.types.TimestampType =>
-          changes.select(unix_micros(col(keyCol)).as("__k")).distinct()
-        case _: org.apache.spark.sql.types.StringType =>
-          changes.select(col(keyCol).cast("string").as("__k")).distinct()
-        case _ =>
-          changes.select(col(keyCol).cast("long").as("__k")).distinct()
-      }
+      // the key's stats type — None (no ordered footer stats for this
+      // key type) degrades to all-files-affected
+      val statsType = SkippingIndex.statsTypeOf(keyType)
       val priorStats = manifestStatsOf(spark, dir, Some(v))
-      // carried entries for THIS key column (kind must match — a column
-      // upserted as a long key cannot serve string-kind entries)
-      val carriedKey: Map[String, ManifestStat] = statKind
-        .flatMap(k => priorStats.get((keyCol, k))).getOrElse(Map.empty)
-      val (affected, keyStats) =
-        if (statKind.isEmpty) (live.toSet, Map.empty[String, ManifestStat])
-        else try {
-          // footer-scan ONLY the files neither an earlier commit nor the
-          // version's index covers — without an index the previous
-          // commit's new files, O(batch) not O(table); with one refreshed
-          // per commit, none. Carried entries and index rows are verbatim
-          // prior footer folds of these immutable files, so the prune
-          // decision is identical
-          val uncarried = live.filterNot(f => carriedKey.get(f).exists(_.known))
-          val indexed =
-            if (uncarried.isEmpty) Map.empty[String, ManifestStat]
-            else indexedKeyStats(spark, dir, v, keyCol, statKind.get, uncarried.toSet)
-          val unknown = uncarried.filterNot(indexed.contains)
-          pruneStatsScanned.addAndGet(unknown.length.toLong)
-          val scanned: Map[String, ManifestStat] =
-            if (unknown.isEmpty) Map.empty
-            else SkippingIndex.footerRows(spark, unknown, Seq(keyCol), statKind.get).map { r =>
-              // statsRows row shape: (file, n_rows, min, max, nulls)
-              r.getString(0) -> ManifestStat(
-                if (r.isNullAt(2)) None else Some(r.get(2)),
-                if (r.isNullAt(3)) None else Some(r.get(3)),
-                if (r.isNullAt(4)) None else Some(r.getLong(4)),
-                Some(r.getLong(1)))
-            }.toMap
-          val known = carriedKey ++ indexed ++ scanned
-          val vt: org.apache.spark.sql.types.DataType =
-            if (statKind.contains("string")) org.apache.spark.sql.types.StringType
-            else org.apache.spark.sql.types.LongType
+      val (affected, keyStats) = statsType match {
+        case None => (live.toSet, Map.empty[String, ManifestStat])
+        case Some(st) => try {
+          // footer-folds ONLY the files neither an earlier commit's carried
+          // entries nor the version's index covers — without an index the
+          // previous commit's new files, O(batch) not O(table); with one
+          // refreshed per commit, none
+          val (rows, folded) = statsRowsVia(spark, dir, v, live, Seq(keyCol -> st))
+          pruneStatsScanned.addAndGet(folded.toLong)
           // LocalRelation (not an RDD): the broadcast build collects it
           // driver-side without launching a job
-          val statsDf = spark.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(live.map { f =>
-              val s = known.get(f)
-              org.apache.spark.sql.Row(f,
-                s.flatMap(_.min).orNull, s.flatMap(_.max).orNull)
-            }).asJava,
-            StructType(Seq(
-              org.apache.spark.sql.types.StructField("file",
-                org.apache.spark.sql.types.StringType, nullable = false),
-              org.apache.spark.sql.types.StructField("kmin", vt, nullable = true),
-              org.apache.spark.sql.types.StructField("kmax", vt, nullable = true))))
-          (pruneWith(statsDf, keysFrame), known)
+          val statsDf = spark.createDataFrame(rows.map(r => Row(r(0), r(2), r(3))).asJava,
+            StructType(Seq(StructField("file", StringType, nullable = false),
+              StructField("kmin", st, nullable = true),
+              StructField("kmax", st, nullable = true))))
+          (pruneWith(statsDf, changes.select(col(keyCol).cast(st).as("__k")).distinct()),
+            rows.map(r => r.getString(0) -> ManifestStat(Option(r(2)), Option(r(3)),
+              Option(r(4)).map(_.asInstanceOf[Long]), Some(r.getLong(1)))).toMap)
         } catch {
           // degrade, stay correct (and carry nothing — the next upsert
           // rescans from scratch, the pre-stats behavior)
           case scala.util.control.NonFatal(_) =>
             (live.toSet, Map.empty[String, ManifestStat])
         }
+      }
       val untouched = live.filterNot(affected.contains)
       val baseRaw =
         if (affected.isEmpty)
@@ -658,12 +621,9 @@ object SnapshotTable {
       // exactly those (lazy, no extra job here). Columns no longer in
       // the schema drop out.
       val statsForward = carryStats(
-        (statKind match {
-          case Some(k) =>
-            val ck = (keyCol, k)
-            priorStats.updated(ck, priorStats.getOrElse(ck, Map.empty) ++ keyStats)
-          case None => priorStats
-        }).filter { case ((c, _), _) => merged.schema.fieldNames.contains(c) },
+        statsType.fold(priorStats)(st => priorStats.updated((keyCol, st),
+            priorStats.getOrElse((keyCol, st), Map.empty) ++ keyStats))
+          .filter { case ((c, _), _) => merged.schema.fieldNames.contains(c) },
         untouched.toSet)
       try {
         commitManifest(spark, dir, v + 1, all, Some(merged.schema), dropped,
@@ -958,38 +918,6 @@ object SnapshotTable {
   private def statsDir(dir: String, v: Long): String =
     s"$dir/stats/" + f"v$v%05d"
 
-  /** Key stats of the `wanted` files from version `v`'s attached index,
-    * when it covers `keyCol` with the type of the manifest stats `kind`
-    * (never `micros`: a long index holds the writer's raw timestamp
-    * unit). Index rows are footer folds of the same immutable files, so
-    * they equal what a footer scan returns; an unreadable index yields
-    * nothing (the caller footer-scans).
-    */
-  private def indexedKeyStats(spark: SparkSession, dir: String, v: Long,
-      keyCol: String, kind: String, wanted: Set[String]): Map[String, ManifestStat] = {
-    val dt = kind match {
-      case "long" => Some(LongType)
-      case "string" => Some(StringType)
-      case _ => None
-    }
-    val index =
-      try dt.flatMap(t => SkippingIndex.readIndex(spark, statsDir(dir, v))
-        .filter(_.covered(keyCol, t)))
-      catch { case scala.util.control.NonFatal(_) => None }
-    index.fold(Map.empty[String, ManifestStat]) { ix =>
-      val s = ix.schema
-      val (iRows, iMin, iMax) = (s.fieldIndex("n_rows"),
-        s.fieldIndex(s"${keyCol}_min"), s.fieldIndex(s"${keyCol}_max"))
-      val iNulls = Some(s"${keyCol}_nulls").filter(s.fieldNames.contains).map(s.fieldIndex)
-      ix.rows.filter(r => wanted.contains(r.getString(0)) && !r.isNullAt(iRows))
-        .map { r =>
-          def opt(i: Int): Option[Any] = if (r.isNullAt(i)) None else Some(r.get(i))
-          r.getString(0) -> ManifestStat(opt(iMin), opt(iMax),
-            iNulls.flatMap(opt).map(_.asInstanceOf[Long]), Some(r.getLong(iRows)))
-        }.toMap
-    }
-  }
-
   /** Version `v`'s row count from its attached index (sum of `n_rows`),
     * when the index lists exactly the version's live files. */
   private def indexedRowCount(spark: SparkSession, dir: String, v: Long): Option[Long] = {
@@ -1005,21 +933,29 @@ object SnapshotTable {
     }
   }
 
+  /** `cols` with the stats types of their committed column types
+    * ([[SkippingIndex.statsTypesOf]]). */
+  private def statsTypes(spark: SparkSession, dir: String, v: Long,
+      cols: Seq[String]): Seq[(String, DataType)] =
+    SkippingIndex.statsTypesOf(
+      schemaOf(spark, dir, Some(v)).getOrElse(read(spark, dir, Some(v)).schema), cols)
+
   /** Stats rows for `fl` over `cols` in [[SkippingIndex.statsRows]]'
-    * shape, on the driver: MANIFEST-CARRIED entries for every file all
-    * requested columns know (verbatim prior footer folds of immutable
-    * files — value-identical to a rescan), footer-folded
-    * ([[SkippingIndex.footerRows]]) for the rest. With full coverage:
-    * zero footer I/O.
+    * shape, on the driver, each file's from the first source that knows
+    * it for every column: the MANIFEST-CARRIED entries, version `v`'s
+    * attached index (when it holds every stats column with its type),
+    * else a footer fold ([[SkippingIndex.footerRows]]). Carried entries
+    * and index rows are earlier footer folds of the same immutable files,
+    * so every source yields the same row; with full coverage there is no
+    * footer I/O. Also returns how many files were footer-folded.
     */
   private def statsRowsVia(spark: SparkSession, dir: String, v: Long,
-      fl: Seq[String], cols: Seq[String], kind: String): Seq[Row] = {
+      fl: Seq[String], cols: Seq[(String, DataType)]): (Seq[Row], Int) = {
     val perCol = {
       val ms =
         try manifestStatsOf(spark, dir, Some(v))
-        catch { case scala.util.control.NonFatal(_) =>
-          Map.empty[(String, String), Map[String, ManifestStat]] }
-      cols.map(c => ms.getOrElse((c, kind), Map.empty[String, ManifestStat]))
+        catch { case scala.util.control.NonFatal(_) => Map.empty: CarriedStats }
+      cols.map(c => ms.getOrElse(c, Map.empty[String, ManifestStat]))
     }
     val covered =
       if (cols.isEmpty) Seq.empty
@@ -1031,36 +967,42 @@ object SnapshotTable {
       })
     }
     val coveredSet = covered.toSet
-    val rest = fl.filterNot(coveredSet.contains)
-    if (rest.isEmpty) carried
-    else carried ++ SkippingIndex.footerRows(spark, rest, cols, kind)
+    val uncarried = fl.filterNot(coveredSet.contains)
+    val schema = SkippingIndex.statsSchemaOf(cols)
+    val indexed =
+      if (uncarried.isEmpty) Seq.empty
+      else (try SkippingIndex.readIndex(spark, statsDir(dir, v))
+            catch { case scala.util.control.NonFatal(_) => None })
+        .filter(ix => schema.forall(f =>
+          ix.schema.exists(g => g.name == f.name && g.dataType == f.dataType)))
+        .fold(Seq.empty[Row]) { ix =>
+          val order = schema.fieldNames.toSeq.map(ix.schema.fieldIndex)
+          val wanted = uncarried.toSet
+          ix.rows.filter(r => wanted.contains(r.getString(0))).map(r => Row.fromSeq(order.map(r.get)))
+        }
+    val indexedSet = indexed.map(_.getString(0)).toSet
+    val rest = uncarried.filterNot(indexedSet.contains)
+    (carried ++ indexed ++ (if (rest.isEmpty) Nil else SkippingIndex.footerRows(spark, rest, cols)),
+      rest.length)
   }
-
-  /** [[statsRowsVia]] as a local relation, for the keyset walks. */
-  private def statsFrameVia(spark: SparkSession, dir: String, v: Long,
-      fl: Seq[String], cols: Seq[String], kind: String): DataFrame =
-    spark.createDataFrame(statsRowsVia(spark, dir, v, fl, cols, kind).asJava,
-      SkippingIndex.statsSchemaOf(cols, kind))
 
   /** Build the [[SkippingIndex]] stats table for a version's live files
     * at the version-scoped stats location — each snapshot gets its own
-    * index, because each snapshot is a different file set. Files whose
-    * stats the manifest already carries (earlier upsert prunes over the
-    * same immutable files) are served from it; only the rest pay a
-    * footer read, folded on the driver, and the rows are written from
-    * the driver ([[SkippingIndex.writeIndex]]): the build runs no Spark
-    * job.
+    * index, because each snapshot is a different file set. Each column's
+    * stats type is its committed type's ([[SkippingIndex.statsTypeOf]]).
+    * Rows the manifest already carries (earlier upsert prunes over the
+    * same immutable files) are reused ([[statsRowsVia]]); only the rest
+    * pay a footer read, folded on the driver, and the rows are written
+    * from the driver ([[SkippingIndex.writeIndex]]): the build runs no
+    * Spark job.
     */
   def attachStats(spark: SparkSession, dir: String, cols: Seq[String],
-      version: Option[Long] = None): Unit =
-    attachStatsOf(spark, dir, cols, version, "long")
-
-  private def attachStatsOf(spark: SparkSession, dir: String, cols: Seq[String],
-      version: Option[Long], kind: String): Unit = {
+      version: Option[Long] = None): Unit = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    SkippingIndex.writeIndex(spark, statsDir(dir, v), SkippingIndex.statsSchemaOf(cols, kind),
-      statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), cols, kind))
+    val typed = statsTypes(spark, dir, v, cols)
+    SkippingIndex.writeIndex(spark, statsDir(dir, v), SkippingIndex.statsSchemaOf(typed),
+      statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), typed)._1)
   }
 
   /** Metadata-only SHALLOW CLONE: commit a NEW table at `dstDir` whose
@@ -1284,28 +1226,22 @@ object SnapshotTable {
     }
 
   /** Incremental [[attachStats]]: build version `v`'s stats index by
-    * REUSING the most recent older version's index rows (same column
-    * set) for every file both manifests share, footer-scanning ONLY the
-    * files new in `v`. Files are immutable, so a stats row can never go
-    * stale. On the steady-state maintenance path — an upsert or
-    * [[delete]] touching a few files, a [[restore]] touching none — the
-    * per-commit footer cost is O(new files), never O(table files):
-    * what keeps index maintenance flat as the table grows toward
-    * millions of files, where re-reading every footer per commit would
-    * dominate the commit itself. Older indexes are read on the driver
-    * ([[SkippingIndex.readIndex]]), the new files' footers are folded on
-    * the driver and reused + fresh rows are written from the driver
-    * ([[SkippingIndex.writeIndex]]), so a refresh runs no Spark job. Falls back to the full build when no
-    * older version carries an index over the same columns. Returns
-    * (reused, scanned) file counts — the maintenance-cost evidence the
-    * spec asserts; the written index is row-identical to a full
-    * [[attachStats]] build (also spec-asserted).
+    * REUSING the most recent older version's index rows (same columns and
+    * stats types) for every file both manifests share, and stats rows
+    * ([[statsRowsVia]]) for the files new in `v` only. Files are
+    * immutable, so a row never goes stale, and an upsert or [[delete]]
+    * touching a few files costs O(new files) footer reads, not O(table).
+    * Reads, folds and the write all run on the driver: no Spark job.
+    * Falls back to the full build when no older version carries an index
+    * over the same columns. Returns (reused, scanned) file counts; the
+    * index is row-identical to a full [[attachStats]] build.
     */
   def attachStatsIncremental(spark: SparkSession, dir: String,
       cols: Seq[String], version: Option[Long] = None): (Long, Long) = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    val schema = SkippingIndex.statsSchemaOf(cols, "long")
+    val typed = statsTypes(spark, dir, v, cols)
+    val schema = SkippingIndex.statsSchemaOf(typed)
     def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
     // same column set AND types: a string index over the same names
     // must not seed a long one
@@ -1323,14 +1259,14 @@ object SnapshotTable {
         val prevFiles = prev.rows.map(_.getString(0)).toSet
         val newFiles = live.filterNot(prevFiles.contains)
         // prior rows in this index's column order
-        val order = schema.fieldNames.map(prev.schema.fieldIndex)
+        val order = schema.fieldNames.toSeq.map(prev.schema.fieldIndex)
         val reused = prev.rows.filter(r => liveSet.contains(r.getString(0)))
           .map(r => Row.fromSeq(order.map(r.get)))
         // manifest-carried entries (earlier upsert prunes) cover part or
         // all of the new files — footer-scan only the remainder
         val fresh =
           if (newFiles.isEmpty) Seq.empty
-          else statsRowsVia(spark, dir, v, newFiles, cols, "long")
+          else statsRowsVia(spark, dir, v, newFiles, typed)._1
         SkippingIndex.writeIndex(spark, statsDir(dir, v), schema, reused ++ fresh)
         ((live.length - newFiles.length).toLong, newFiles.length.toLong)
     }
@@ -1516,72 +1452,23 @@ object SnapshotTable {
     * serving path for deep keyset pagination of a key-clustered snapshot
     * table: per-page cost is file-bounded at any table size (see
     * [[SkippingIndex.KeysetWalk]] for the contract and the sf1 flat-page
-    * probe evidence). Uses the version's attached stats index when
-    * [[attachStats]] covered `column`; otherwise builds the stats in
-    * memory from the manifest's files (footer-only, nothing written).
-    * The walk pins the version's FILE LIST at construction, so later
-    * commits/compactions never disturb an in-flight walk — the same
-    * snapshot-isolation contract as [[read]].
+    * probe evidence). The key is any column with ordered footer stats
+    * (integral, DATE, TIMESTAMP, STRING); start with `page(None, …)` and
+    * pass each page's last `Row.get(key)` as the next cursor. The stats
+    * come from the manifest's carried entries, the version's attached
+    * index ([[attachStats]]) when it holds the column's stats type, else
+    * the footers (nothing written). The walk pins the version's FILE
+    * LIST at construction, so later commits/compactions never disturb an
+    * in-flight walk — the same snapshot-isolation contract as [[read]].
     */
   def keysetWalk(spark: SparkSession, dir: String, column: String,
       version: Option[Long] = None): SkippingIndex.KeysetWalk = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    // coverage includes the stats TYPE (LongType min/max): an index
-    // attached for the same column with string stats falls back to the
-    // footer build rather than ClassCastException inside the walk
-    val df = SkippingIndex.readIndex(spark, statsDir(dir, v))
-      .filter(_.covered(column, LongType)).map(_.frame(spark))
-      .getOrElse(statsFrameVia(spark, dir, v, files(spark, dir, Some(v)),
-        Seq(column), "long"))
-    SkippingIndex.keysetWalkFromStats(spark, df, column)
-  }
-
-  /** [[attachStats]] for STRING key columns: the version-scoped
-    * BINARY/UTF8 footer-stats index [[keysetWalkString]] consults
-    * automatically (a version has ONE attached index — long or string,
-    * the column types decide which consumers engage).
-    */
-  def attachStatsString(spark: SparkSession, dir: String, cols: Seq[String],
-      version: Option[Long] = None): Unit =
-    attachStatsOf(spark, dir, cols, version, "string")
-
-  /** [[keysetWalk]] for a STRING-keyed clustered snapshot (string
-    * doc_ids — the shape a real paging user hits first): per-file bounds
-    * from the BINARY/UTF8 footer stats of the PINNED version's files,
-    * walked in unsigned UTF-8 byte order (see
-    * [[SkippingIndex.keysetWalkString]]). Uses the version's attached
-    * index when [[attachStatsString]] covered `column`; otherwise builds
-    * the stats in memory (footer-only). Start with `page(None, …)`.
-    */
-  def keysetWalkString(spark: SparkSession, dir: String, column: String,
-      version: Option[Long] = None): SkippingIndex.TypedKeysetWalk[String] = {
-    val v = version.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no table under $dir"))
-    val df = SkippingIndex.readIndex(spark, statsDir(dir, v))
-      .filter(_.covered(column, StringType)).map(_.frame(spark))
-      .getOrElse(statsFrameVia(spark, dir, v, files(spark, dir, Some(v)),
-        Seq(column), "string"))
-    SkippingIndex.keysetWalkStringFromStats(spark, df, column)
-  }
-
-  /** [[keysetWalk]] for a TIMESTAMP-keyed clustered snapshot (event
-    * time, ingestion time): cursors are EPOCH MICROS, per-file bounds
-    * from the normalized INT64 timestamp footer stats of the PINNED
-    * version's files ([[SkippingIndex.statsRowsMicros]] — MILLIS/MICROS/
-    * NANOS all normalize; legacy INT96 output has no ordered stats and
-    * throws there, so write with
-    * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`). Always
-    * footer-built: an attached LONG stats index is unit-ambiguous for a
-    * timestamp column, so none is consulted. Start with `page(None, …)`.
-    */
-  def keysetWalkMicros(spark: SparkSession, dir: String, column: String,
-      version: Option[Long] = None): SkippingIndex.TypedKeysetWalk[Long] = {
-    val v = version.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no table under $dir"))
-    SkippingIndex.keysetWalkMicrosFromStats(spark,
-      statsFrameVia(spark, dir, v, files(spark, dir, Some(v)),
-        Seq(column), "micros"), column)
+    val typed = statsTypes(spark, dir, v, Seq(column))
+    new SkippingIndex.KeysetWalk(spark, spark.createDataFrame(
+      statsRowsVia(spark, dir, v, files(spark, dir, Some(v)), typed)._1.asJava,
+      SkippingIndex.statsSchemaOf(typed)), column)
   }
 
   /** Keep the table current from a CDC change stream: every micro-batch

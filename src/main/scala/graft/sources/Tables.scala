@@ -184,7 +184,7 @@ object Tables {
     * (`ParquetFileFormat.mergeSchemasInParallel`) and leaves the rest at
     * their defaults, as inference does.
     */
-  private def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
+  private[graft] def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
     if (path.exists("{}[]*?\\".contains(_))) None
     else try {

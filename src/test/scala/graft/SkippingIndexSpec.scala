@@ -244,7 +244,7 @@ class SkippingIndexSpec extends AnyFunSuite {
     var got = Seq.empty[Long]
     var maxKept = 0
     for (k <- 0 until 15) {
-      val (df, p) = walk.page(after, size)
+      val (df, p) = walk.page(Some(after), size)
       val keys = df.collect().map(_.getAs[Long]("o_orderkey")).toSeq
       assert(keys == full.drop(k * size).take(size),
         s"asc page $k diverged from the offset slice")
@@ -257,7 +257,7 @@ class SkippingIndexSpec extends AnyFunSuite {
     // ~125 rows/file: a 100-row page is provably inside 2-3 files
     assert(maxKept <= 4, s"pages must stay file-bounded, saw $maxKept/12 kept")
     // past-the-end cursor: the empty page from the stats alone
-    val (tail, pTail) = walk.page(full.last, size)
+    val (tail, pTail) = walk.page(Some(full.last), size)
     assert(tail.isEmpty && pTail.filesKept == 0,
       "a cursor past the data must serve the empty page without keeping files")
     // descending mirror
@@ -265,7 +265,7 @@ class SkippingIndexSpec extends AnyFunSuite {
     got = Seq.empty
     val fullDesc = full.reverse
     for (k <- 0 until 15) {
-      val (df, p) = walk.page(after, size, ascending = false)
+      val (df, p) = walk.page(Some(after), size, ascending = false)
       val keys = df.collect().map(_.getAs[Long]("o_orderkey")).toSeq
       assert(keys == fullDesc.drop(k * size).take(size),
         s"desc page $k diverged from the offset slice")
@@ -288,7 +288,7 @@ class SkippingIndexSpec extends AnyFunSuite {
     val walk = SkippingIndex.keysetWalk(spark, d, "k") // no attached index: footer build
     val all = spark.read.parquet(d)
     for (after <- Seq(Long.MinValue, 0L, 17L, 24L, 25L, 48L, 49L)) {
-      val (df, _) = walk.page(after, 60)
+      val (df, _) = walk.page(Some(after), 60)
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val want = all.filter(col("k") > after).orderBy("k").limit(60)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -316,12 +316,12 @@ class SkippingIndexSpec extends AnyFunSuite {
     Seq(fileA, fileB, fileC, fileD).foreach(
       _.coalesce(1).write.mode("append").parquet(d))
     val walk = SkippingIndex.keysetWalk(spark, d, "k")
-    val (df, p) = walk.page(0L, 120)
+    val (df, p) = walk.page(Some(0L), 120)
     val got = df.collect().map(_.getLong(0)).toSeq
     assert(got == (1L to 120L), s"null-aware walk must serve keys 1..120, got ${got.size} rows")
     assert(p.filesKept == 4, s"A,B,D needed for certainty plus blind C: kept ${p.filesKept}")
     // a page fully answered by A+B still carries the blind file
-    val (df2, p2) = walk.page(0L, 30)
+    val (df2, p2) = walk.page(Some(0L), 30)
     assert(df2.collect().map(_.getLong(0)).toSeq == (1L to 30L))
     assert(p2.kept.exists(f => spark.read.parquet(f).filter(col("k").isNull).count() == 20),
       "the blind all-null file must be kept in every page")
@@ -345,8 +345,8 @@ class SkippingIndexSpec extends AnyFunSuite {
       .map(_.getString(0)).toSeq
     // sanity: Spark's own sort puts the emoji file LAST (UTF-8 order)
     assert(full.last.startsWith("z😀") && full(20).startsWith("z�"))
-    val walk = SkippingIndex.keysetWalkString(spark, d, "k")
-    var after: Option[String] = None
+    val walk = SkippingIndex.keysetWalk(spark, d, "k")
+    var after: Option[Any] = None
     var got = Seq.empty[String]
     for (p <- 0 until 4) {
       val (df, pr) = walk.page(after, 20)
@@ -372,32 +372,44 @@ class SkippingIndexSpec extends AnyFunSuite {
     assert(got == fullDesc, "desc walk must cover the table exactly")
   }
 
-  test("long walk over string-typed attached stats falls back and fails clearly, not with a CCE") {
+  test("an attached index whose stats type differs from the column's is never consulted") {
     import spark.implicits._
     val d = TestSpark.scratch("keyset_str_stats")
     val p0 = new org.apache.hadoop.fs.Path(d)
     p0.getFileSystem(spark.sessionState.newHadoopConf()).delete(p0, true)
     (0 until 100).map(i => (f"K$i%03d", i.toLong)).toDF("k", "v")
       .repartitionByRange(4, col("k")).write.mode("overwrite").parquet(d)
-    // attach a STRING stats index for k at the conventional location
-    SkippingIndex.attachStatsString(spark, d, Seq("k"))
-    // the string walk consumes the attached index and pages exactly
-    val walk = SkippingIndex.keysetWalkString(spark, d, "k")
+    // the attached index takes each column's stats type from its footer
+    // type: STRING min/max for k, LONG for v
+    SkippingIndex.attachStats(spark, d, Seq("k", "v"))
+    val index = SkippingIndex.readIndex(spark, SkippingIndex.statsPathFor(d)).get
+    assert(index.covered("k", org.apache.spark.sql.types.StringType) &&
+      index.covered("v", org.apache.spark.sql.types.LongType), index.schema)
+    // the walk consumes the attached index and pages exactly
     val full = spark.read.parquet(d).orderBy("k").collect().map(_.getString(0)).toSeq
+    val walk = SkippingIndex.keysetWalk(spark, d, "k")
     assert(walk.page(None, 30)._1.collect().map(_.getString(0)).toSeq == full.take(30))
     // a LONG range scan must not numerically compare the string index:
     // type-validated coverage falls back to the plain scan (no Prune)
     assert(SkippingIndex.scanBetween(spark, d, "k", 0L, 10L)._2.isEmpty,
       "long scanBetween over a string index must fall back, not consult it")
-    // the LONG walk must not ClassCastException on the string stats: the
-    // covered check rejects the type, the footer fallback names the
-    // unsupported column type clearly
-    val e = intercept[Exception](
-      SkippingIndex.keysetWalk(spark, d, "k").page(Long.MinValue, 10)._1.collect())
-    val messages = Iterator.iterate(e: Throwable)(_.getCause)
-      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).toSeq
-    assert(messages.exists(_.contains("INT32/INT64")),
-      s"expected the statsRows type error, got: $messages")
+    // an index holding LONG min/max for the string column is not
+    // consulted (its bounds could not be compared with a string cursor):
+    // the walk folds the footers, pages exactly and still prunes
+    val files = index.rows.map(_.getString(0)).sorted
+    SkippingIndex.writeIndex(spark, SkippingIndex.statsPathFor(d),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "file STRING NOT NULL, n_rows BIGINT NOT NULL, k_min BIGINT, k_max BIGINT, k_nulls BIGINT"),
+      files.map(f => org.apache.spark.sql.Row(f, 25L, 0L, 0L, 0L)))
+    val relong = SkippingIndex.keysetWalk(spark, d, "k")
+    var after: Option[Any] = None
+    (0 until 4).foreach { p =>
+      val (df, pr) = relong.page(after, 25)
+      val keys = df.collect().map(_.getString(0)).toSeq
+      assert(keys == full.slice(p * 25, p * 25 + 25), s"page $p diverged")
+      assert(pr.filesKept < pr.filesTotal, s"footer stats must still prune: $pr")
+      after = Some(keys.last)
+    }
   }
 
   test("timestamp keyset walk (micros cursors): pages equal the offset slices, file-bounded") {
@@ -415,17 +427,19 @@ class SkippingIndexSpec extends AnyFunSuite {
         .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
         .write.mode("overwrite").parquet(d)
     } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    val walk = SkippingIndex.keysetWalkMicros(spark, d, "ts")
+    val walk = SkippingIndex.keysetWalk(spark, d, "ts")
     val full = spark.read.parquet(d).select(unix_micros(col("ts")).as("us"))
       .orderBy("us").collect().map(_.getLong(0)).toSeq
-    var after: Option[Long] = None
+    var after: Option[Any] = None
     var got = Seq.empty[Long]
     var maxKept = 0
     for (p <- 0 until 13) {
       val (df, pr) = walk.page(after, 100)
-      val keys = df.select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
+      val rows = df.select(col("ts"), unix_micros(col("ts"))).collect()
+      val keys = rows.map(_.getLong(1)).toSeq
       assert(keys == full.drop(p * 100).take(100), s"asc page $p diverged")
-      if (keys.nonEmpty) { after = Some(keys.last); maxKept = math.max(maxKept, pr.filesKept) }
+      // the next cursor is the last row's timestamp value itself
+      if (keys.nonEmpty) { after = Some(rows.last.get(0)); maxKept = math.max(maxKept, pr.filesKept) }
       got ++= keys
     }
     assert(got == full, "asc walk must cover the table exactly")
@@ -438,7 +452,7 @@ class SkippingIndexSpec extends AnyFunSuite {
       full.reverse.take(100), "desc first page diverged")
   }
 
-  test("SnapshotTable.keysetWalkString pages a string-keyed pinned snapshot") {
+  test("SnapshotTable.keysetWalk pages a string-keyed pinned snapshot") {
     import graft.operators.SnapshotTable
     import spark.implicits._
     val d = TestSpark.scratch("keyset_snap_str")
@@ -449,8 +463,8 @@ class SkippingIndexSpec extends AnyFunSuite {
     SnapshotTable.create(spark, base.repartitionByRange(10, col("k")), d)
     // version-scoped string index: the walk consults it instead of
     // re-reading footers (same pages either way — spec'd by paging)
-    SnapshotTable.attachStatsString(spark, d, Seq("k"))
-    val walk = SnapshotTable.keysetWalkString(spark, d, "k")
+    SnapshotTable.attachStats(spark, d, Seq("k"))
+    val walk = SnapshotTable.keysetWalk(spark, d, "k")
     val full = SnapshotTable.read(spark, d).orderBy("k").collect()
       .map(_.getString(0)).toSeq
     val (pg1, pr1) = walk.page(None, 200)
@@ -472,13 +486,13 @@ class SkippingIndexSpec extends AnyFunSuite {
     val walk = SnapshotTable.keysetWalk(spark, d, "o_orderkey")
     val full = SnapshotTable.read(spark, d, Some(1L))
       .orderBy("o_orderkey").collect().map(_.getLong(0)).toSeq
-    val (pg1, pr1) = walk.page(Long.MinValue, 200)
+    val (pg1, pr1) = walk.page(None, 200)
     assert(pg1.collect().map(_.getLong(0)).toSeq == full.take(200))
     assert(pr1.filesKept <= 4, s"snapshot page must be file-bounded, kept ${pr1.filesKept}/10")
     // rewrite the table; the in-flight walk still serves version-1 pages
     // (its file list was pinned at construction, files live until vacuum)
     SnapshotTable.compact(spark, d, targetRecords = 100000L)
-    val (pg5, _) = walk.page(full(799), 200)
+    val (pg5, _) = walk.page(Some(full(799)), 200)
     assert(pg5.collect().map(_.getLong(0)).toSeq == full.slice(800, 1000),
       "a walk pinned before the compaction must still serve the old version")
   }
@@ -498,7 +512,7 @@ class SkippingIndexSpec extends AnyFunSuite {
     spark.conf.set("graft.keyset.eagerStatsMax", "0")
     val walk = try SkippingIndex.keysetWalk(spark, d, "k")
     finally spark.conf.set("graft.keyset.eagerStatsMax", "4096")
-    val (pg, pr) = walk.page(Long.MinValue, 50)
+    val (pg, pr) = walk.page(Some(Long.MinValue), 50)
     assert(pg.collect().map(_.getLong(0)).toSeq == (0L until 50L))
     assert(pr.filesTotal == 64)
     // one ~100-row file certainly covers the 50-row page: the walk
@@ -508,21 +522,21 @@ class SkippingIndexSpec extends AnyFunSuite {
     // a mid-table cursor stays O(files-walked): candidates are filtered
     // executor-side before they ever reach the driver
     val before = walk.statsPulled
-    val (pg2, _) = walk.page(3199L, 50)
+    val (pg2, _) = walk.page(Some(3199L), 50)
     assert(pg2.collect().map(_.getLong(0)).toSeq == (3200L until 3250L))
     assert(walk.statsPulled - before <= 6,
       s"cursor page pulled ${walk.statsPulled - before} stats rows")
     // close() drops the sorted cache; pages still serve (re-sort lazily)
     walk.close()
-    val (pg3, _) = walk.page(6300L, 50)
+    val (pg3, _) = walk.page(Some(6300L), 50)
     assert(pg3.collect().map(_.getLong(0)).toSeq == (6301L until 6351L))
   }
 
   // ---- driver-side footer folds and index writes ----------------------
 
-  /** Files with a long `k`, a string `s` and a MICROS timestamp `t`: four
-    * key-ranged files, one ZERO-ROW file and one whose keys are all NULL
-    * (its chunks record no non-null value).
+  /** Files with a long `k`, a string `s`, a MICROS timestamp `t` and a
+    * date `d`: four key-ranged files, one ZERO-ROW file and one whose keys
+    * are all NULL (its chunks record no non-null value).
     */
   private lazy val foldFiles: Seq[String] = {
     import spark.implicits._
@@ -535,11 +549,13 @@ class SkippingIndexSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       val rows = spark.range(400).select(col("id").as("k"),
         format_string("s%04d", col("id")).as("s"),
-        timestamp_seconds(lit(1600000000L) + col("id") * 60L).as("t"))
+        timestamp_seconds(lit(1600000000L) + col("id") * 60L).as("t"),
+        date_add(to_date(lit("1969-12-01")), col("id").cast("int")).as("d"))
       rows.repartitionByRange(4, col("k")).write.parquet(s"$d/ranged")
       rows.limit(0).coalesce(1).write.parquet(s"$d/empty")
-      Seq((None: Option[Long], None: Option[String], None: Option[java.sql.Timestamp]))
-        .toDF("k", "s", "t").coalesce(1).write.parquet(s"$d/nulls")
+      Seq((None: Option[Long], None: Option[String], None: Option[java.sql.Timestamp],
+          None: Option[java.sql.Date]))
+        .toDF("k", "s", "t", "d").coalesce(1).write.parquet(s"$d/nulls")
     } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
     Seq("ranged", "empty", "nulls").flatMap(sub =>
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$d/$sub")).map(_.getPath.toString)
@@ -562,13 +578,11 @@ class SkippingIndexSpec extends AnyFunSuite {
         .agg(count(lit(1)), min("x"), max("x"), count(when(col("x").isNull, 1))).head()
       org.apache.spark.sql.Row(f, r.get(0), r.get(1), r.get(2), r.get(3))
     }
-    val folds = Seq[(String, Seq[String] => org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.Column)](
-      ("long", fl => SkippingIndex.statsRows(spark, fl, Seq("k")), col("k")),
-      ("string", fl => SkippingIndex.statsRowsString(spark, fl, Seq("s")), col("s")),
-      ("micros", fl => SkippingIndex.statsRowsMicros(spark, fl, Seq("t")), unix_micros(col("t"))))
-    folds.foreach { case (kind, fold, key) =>
-      val stats = fold(files)
+    // each column's stats type is its own: long, string, timestamp, date
+    Seq("k", "s", "t", "d").foreach { kind =>
+      val (stats, key) = (SkippingIndex.statsRows(spark, files, Seq(kind)), col(kind))
+      assert(stats.schema(s"${kind}_min").dataType == spark.read.parquet(files.head)
+        .schema(kind).dataType, s"$kind: ${stats.schema}")
       assert(isLocal(stats), s"$kind: the fold must be a local relation")
       val (got, want) = (stats.collect().toSeq, files.map(fromData(_, key)))
       assert(got == want, s"$kind: footer fold $got != data aggregate $want")
@@ -578,14 +592,14 @@ class SkippingIndexSpec extends AnyFunSuite {
         Seq((0L, true, true, 0L), (1L, true, true, 1L)), s"$kind: $got")
       assert(got.take(4).forall(r => !r.isNullAt(2) && !r.isNullAt(3)), s"$kind: $got")
     }
-    val micros = SkippingIndex.statsRowsMicros(spark, files.take(1), Seq("t")).head()
-    assert(micros.getLong(2) == 1600000000L * 1000000L, s"epoch micros expected: $micros")
+    val micros = SkippingIndex.statsRows(spark, files.take(1), Seq("t"))
+      .select(unix_micros(col("t_min"))).head()
+    assert(micros.getLong(0) == 1600000000L * 1000000L, s"epoch micros expected: $micros")
   }
 
   test("a driver-written index reads back like a Spark-written one, through Spark and readIndex") {
     val files = foldFiles
-    Seq(SkippingIndex.statsRows(spark, files, Seq("k")),
-        SkippingIndex.statsRowsString(spark, files, Seq("s"))).zipWithIndex.foreach {
+    Seq("k", "s", "d").map(c => SkippingIndex.statsRows(spark, files, Seq(c))).zipWithIndex.foreach {
       case (stats, i) =>
         val rows = stats.collect().toSeq
         val (byDriver, bySpark) =

@@ -532,7 +532,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, dir).count() == 102)
   }
 
-  test("keysetWalkMicros pages a pinned TIMESTAMP-keyed snapshot in file-bounded steps") {
+  test("keysetWalk pages a pinned TIMESTAMP-keyed snapshot in file-bounded steps") {
     val dir = freshDir("snap-keyset-micros")
     val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
     try {
@@ -549,19 +549,18 @@ class SnapshotTableSpec extends AnyFunSuite {
           lit(false).as("_deleted"))
       SnapshotTable.upsert(spark, dir, ch, "ts", "commit_v", "payload")
     } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    val walk = SnapshotTable.keysetWalkMicros(spark, dir, "ts", version = Some(1L))
-    var after: Option[Long] = None
+    val walk = SnapshotTable.keysetWalk(spark, dir, "ts", version = Some(1L))
+    var after: Option[Any] = None
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     (0 until 3).foreach { _ =>
       val (df, prune) = walk.page(after, 50, ascending = true)
       // 8 clustered files, 50-row pages: each page provably needs few files
       assert(prune.filesKept <= 2,
         s"file-bounded page read ${prune.filesKept} of ${prune.filesTotal}")
-      val rows = df.select(unix_micros(col("ts")), col("payload"))
-        .as[(Long, Long)].collect()
+      val rows = df.select("ts", "payload").collect()
       assert(rows.length == 50)
-      seen ++= rows.map(_._2)
-      after = Some(rows.last._1)
+      seen ++= rows.map(_.getLong(1))
+      after = Some(rows.last.get(0))
     }
     // the v1-pinned walk serves ORIGINAL payloads straight through the
     // band v2 rewrote (rows 100..109)
@@ -909,5 +908,176 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(parts.length == 1, s"rewrites must leave one part file: ${parts.toSeq}")
     assert(graft.operators.SkippingIndex.readIndex(spark, stats.getPath).contains(index))
   }
-}
 
+  /** Every page of an ascending or descending keyset walk of version `v`
+    * over `key` (`size` rows each, each cursor the previous page's last
+    * `Row.get(key)`) equals the offset slice of the sorted version, and
+    * keeps fewer files than the version has. */
+  private def assertWalkPages(dir: String, key: String, v: Long, size: Int,
+      ascending: Boolean): Unit = {
+    val sorted = SnapshotTable.read(spark, dir, Some(v))
+      .orderBy(if (ascending) col(key).asc else col(key).desc)
+      .select(key).collect().map(_.get(0)).toSeq
+    val walk = SnapshotTable.keysetWalk(spark, dir, key, Some(v))
+    var after: Option[Any] = None
+    sorted.grouped(size).zipWithIndex.foreach { case (want, p) =>
+      val (df, pr) = walk.page(after, size, ascending)
+      val got = df.select(key).collect().map(_.get(0)).toSeq
+      assert(got == want, s"$key ${if (ascending) "asc" else "desc"} page $p diverged")
+      assert(pr.filesKept < pr.filesTotal, s"page $p must be file-bounded: $pr")
+      after = Some(got.last)
+    }
+  }
+
+  test("a STRING key's index is maintained incrementally and by maintainStream(statsCols)") {
+    import graft.operators.SkippingIndex
+    val dir = freshDir("snap-str-index")
+    val chDir = freshDir("snap-str-index-ch")
+    val ck = freshDir("snap-str-index-ck")
+    def key(i: Int) = f"K$i%06d"
+    SnapshotTable.create(spark, (0 until 8000).map(i => (key(i), s"val$i", 0L))
+      .toDF("k", "payload", "commit_v").repartitionByRange(8, col("k")), dir)
+    SnapshotTable.attachStats(spark, dir, Seq("k"))
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def assertIndexIsFullBuild(v: Long): Unit = {
+      val index = spark.read.parquet(f"$dir/stats/v$v%05d")
+      assert(index.schema("k_min").dataType == org.apache.spark.sql.types.StringType)
+      assert(canon(index) == canon(SkippingIndex.statsRows(spark,
+        SnapshotTable.files(spark, dir, Some(v)), Seq("k"))),
+        s"v$v's string index must be row-identical to a full build")
+    }
+    // a narrow upsert, then the incremental refresh reuses the prior rows
+    val ch = (100 until 140).map(i => (key(i), s"u$i", 1L, false))
+      .toDF("k", "payload", "commit_v", "_deleted")
+    val c2 = SnapshotTable.upsert(spark, dir, ch, "k", "commit_v", "payload")
+    val (reused, scanned) = SnapshotTable.attachStatsIncremental(spark, dir, Seq("k"))
+    assert(reused == c2.filesReused.toLong && reused >= 6L, s"reused=$reused of $c2")
+    assert(scanned == (c2.files.length - c2.filesReused).toLong)
+    assertIndexIsFullBuild(c2.version)
+    // two streamed batches (an update band, then inserts past every
+    // band), each committed with its index refreshed
+    (2000 until 2020).map(i => (key(i), s"w$i", 2L, false))
+      .toDF("k", "payload", "commit_v", "_deleted")
+      .coalesce(1).write.mode("overwrite").parquet(chDir)
+    Thread.sleep(1100)
+    (9000 until 9020).map(i => (key(i), s"n$i", 2L, false))
+      .toDF("k", "payload", "commit_v", "_deleted")
+      .coalesce(1).write.mode("append").parquet(chDir)
+    val q = SnapshotTable.maintainStream(spark, chDir, spark.read.parquet(chDir).schema,
+      dir, "k", "commit_v", "payload", ck, statsCols = Seq("k"))
+    q.awaitTermination(180000)
+    val v = SnapshotTable.currentVersion(spark, dir).get
+    assert(v == c2.version + 2, s"expected one commit per batch, at v$v")
+    (c2.version + 1 to v).foreach(assertIndexIsFullBuild)
+    assert(SnapshotTable.read(spark, dir).count() == 8020L)
+    assertWalkPages(dir, "k", v, 1000, ascending = true)
+  }
+
+  /** Writes `dir`'s version 2 as version 1's files under a `#stats:`
+    * header in the exact text earlier versions wrote: kind `long` for
+    * integral keys and DATE day numbers, `string` (URL-encoded values) and
+    * `micros` (epoch micros) — one `min,max,nulls,nrows` entry per file,
+    * computed here from the data. */
+  private def writeStatsManifest(dir: String, kind: String,
+      bound: org.apache.spark.sql.Column): Unit = {
+    val lines = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/manifest/v00001.manifest")), "UTF-8")
+      .split("\n").toSeq
+    val files = lines.filterNot(_.startsWith("#"))
+    val entries = files.map { f =>
+      val r = spark.read.parquet(f).agg(min(bound), max(bound),
+        count(when(col("k").isNull, 1)), count(lit(1))).head()
+      def enc(v: Any) =
+        if (kind == "string") java.net.URLEncoder.encode(v.toString, "UTF-8") else v.toString
+      Seq(enc(r.get(0)), enc(r.get(1)), r.get(2), r.get(3)).mkString(",")
+    }
+    val stamp = lines.head.stripPrefix("#committed:").toLong + 1
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/manifest/v00002.manifest"),
+      ((s"#committed:$stamp" +: lines.tail.filter(_.startsWith("#"))) ++
+        Seq(s"#stats:$kind:k:" + entries.mkString(";")) ++ files)
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+  }
+
+  test("#stats: manifest headers in the existing long, string and micros text carry into the next upsert") {
+    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    val day0 = to_date(lit("1990-01-01"))
+    // (kind, key of row i, the header's value of a key)
+    val keys = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+        org.apache.spark.sql.Column)](
+      ("long", i => i, col("k")),
+      ("long", i => date_add(day0, i.cast("int")), unix_date(col("k"))),
+      ("string", i => format_string("K%06d", i), col("k")),
+      ("micros", i => timestamp_seconds(lit(1600000000L) + i * 60L), unix_micros(col("k"))))
+    keys.zipWithIndex.foreach { case ((kind, key, bound), n) =>
+      val dir = freshDir(s"snap-stats-format-$n")
+      try {
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        SnapshotTable.create(spark, spark.range(8000)
+          .select(key(col("id")).as("k"), col("id").as("payload"), lit(0L).as("commit_v"))
+          .repartitionByRange(8, col("k")), dir)
+        writeStatsManifest(dir, kind, bound)
+        val ch = spark.range(100, 120).select(key(col("id")).as("k"),
+          (col("id") + 100000L).as("payload"), lit(1L).as("commit_v"), lit(false).as("_deleted"))
+        val s0 = SnapshotTable.pruneStatsScanned.get()
+        val c = SnapshotTable.upsert(spark, dir, ch, "k", "commit_v", "payload")
+        assert(SnapshotTable.pruneStatsScanned.get() - s0 == 0L,
+          s"$kind key #$n: the carried #stats:$kind: entries must cover every file")
+        assert(c.version == 3L && c.filesReused >= 6, s"$kind key #$n must prune: $c")
+      } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+      val got = SnapshotTable.read(spark, dir).select("payload").as[Long].collect().toSet
+      assert(got == ((0L until 8000L).toSet -- (100L until 120L)) ++ (100100L until 100120L),
+        s"$kind key #$n merged wrong")
+    }
+  }
+
+  test("a LONG index over a timestamp key, in the writer's raw unit, is never consulted") {
+    import graft.operators.SkippingIndex
+    val dir = freshDir("snap-ts-long-index")
+    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    try {
+      // MILLIS: the raw footer unit an earlier long index recorded
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+      SnapshotTable.create(spark, spark.range(4000)
+        .select(timestamp_seconds(lit(1600000000L) + col("id") * 60L).as("ts"),
+          col("id").as("payload"), lit(0L).as("commit_v"))
+        .repartitionByRange(8, col("ts")), dir)
+    } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    // what `attachStats(dir, Seq("ts"))` wrote when every index held
+    // long min/max: the footer's raw MILLIS values
+    val rows = SnapshotTable.files(spark, dir).map { f =>
+      val r = spark.read.parquet(f).agg(count(lit(1)), unix_millis(min("ts")),
+        unix_millis(max("ts")), count(when(col("ts").isNull, 1))).head()
+      org.apache.spark.sql.Row(f, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
+    SkippingIndex.writeIndex(spark, s"$dir/stats/v00001",
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "file STRING NOT NULL, n_rows BIGINT NOT NULL, ts_min BIGINT, ts_max BIGINT, ts_nulls BIGINT"),
+      rows)
+    // read as TIMESTAMP bounds the millis would sit in 1970 and rank
+    // every file before the first cursor: the walk folds the footers
+    assertWalkPages(dir, "ts", 1L, 300, ascending = true)
+    assertWalkPages(dir, "ts", 1L, 300, ascending = false)
+    // and the upsert prune footer-scans every file instead of reading it
+    val ch = spark.range(100, 110)
+      .select(timestamp_seconds(lit(1600000000L) + col("id") * 60L).as("ts"),
+        (col("id") + 100000L).as("payload"), lit(1L).as("commit_v"), lit(false).as("_deleted"))
+    val s0 = SnapshotTable.pruneStatsScanned.get()
+    val c = SnapshotTable.upsert(spark, dir, ch, "ts", "commit_v", "payload")
+    assert(SnapshotTable.pruneStatsScanned.get() - s0 == 8L && c.filesReused >= 6, s"$c")
+    assert(SnapshotTable.read(spark, dir).filter(col("payload") >= 100000L).count() == 10L)
+  }
+
+  test("attachStats + keysetWalk page a DATE-keyed pinned snapshot, ascending and descending") {
+    val dir = freshDir("snap-date-walk")
+    SnapshotTable.create(spark, spark.range(4000)
+      .select(date_add(to_date(lit("1960-01-01")), col("id").cast("int")).as("k"),
+        col("id").as("payload"), lit(0L).as("commit_v"))
+      .repartitionByRange(8, col("k")), dir)
+    SnapshotTable.attachStats(spark, dir, Seq("k"))
+    val index = graft.operators.SkippingIndex.readIndex(spark, s"$dir/stats/v00001").get
+    assert(index.covered("k", org.apache.spark.sql.types.DateType), index.schema)
+    assertWalkPages(dir, "k", 1L, 300, ascending = true)
+    assertWalkPages(dir, "k", 1L, 300, ascending = false)
+  }
+}

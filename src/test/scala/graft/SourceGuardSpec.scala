@@ -135,6 +135,21 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("src/main has one stats and keyset path, not one per key type") {
+    // the key column's type decides the stats type
+    // (SkippingIndex.statsTypeOf); a per-type copy of the walk, the attach
+    // call or the footer fold drifts from the others
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val offenders = scalaFiles(root).flatMap { f =>
+      val code = source(f)
+      Seq("keysetWalkString", "keysetWalkMicros", "attachStatsString",
+        "statsRowsString", "statsRowsMicros")
+        .filter(code.contains).map(m => s"${f.getPath}: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   /** Files under `src` that contain `text`, with how often. */
   private def occurrences(text: String): Seq[(String, Int)] = {
     val root = new java.io.File("src")
