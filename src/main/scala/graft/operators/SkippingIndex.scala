@@ -10,6 +10,8 @@ import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryComparison,
+  Expression, In, InSet, Literal, Or}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
@@ -429,6 +431,55 @@ object SkippingIndex {
         (r.getLong(iMin) <= hi && r.getLong(iMax) >= lo))
       .map(_.getString(0)).sorted
     Prune(index.rows.length, kept.length, kept)
+  }
+
+  /** `v op c` as `c op' v`, by comparison symbol. */
+  private val Flipped = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+
+  /** Whether a file can hold a row satisfying `e`, where `bounds(column,
+    * statsType)` is the column's [min, max] in the file as Catalyst values
+    * of its stats type ([[statsTypeOf]]), None when unknown. Comparisons
+    * (`=`, `<=>`, `<`, `<=`, `>`, `>=`) of a stats-typed column with a
+    * non-null literal, `IN` lists of literals, and AND and OR of those are
+    * tested in the stats type's Catalyst ordering; anything else — a cast
+    * or UDF operand, NOT, IS NULL, a column without a stats type (a
+    * collated string), unknown bounds — can match. `bounds` is asked only
+    * about columns such a comparison names.
+    */
+  private[operators] def mayMatch(e: Expression,
+      bounds: (String, DataType) => Option[(Any, Any)]): Boolean = {
+    // `column op value` (op a comparison symbol), when the bounds are known
+    def test(column: Expression, op: String, value: Any, valueType: DataType): Boolean =
+      column match {
+        case a: AttributeReference if value != null =>
+          statsTypeOf(a.dataType).filter(st => statsTypeOf(valueType).contains(st))
+            .flatMap(st => bounds(a.name, st).map((st, _))).forall { case (st, (mn, mx)) =>
+              val o = PhysicalDataType.ordering(st)
+              val v = if (st == LongType) value.asInstanceOf[Number].longValue else value
+              op match {
+                case "=" | "<=>" => o.lteq(mn, v) && o.lteq(v, mx)
+                case "<" => o.lt(mn, v)
+                case "<=" => o.lteq(mn, v)
+                case ">" => o.gt(mx, v)
+                case ">=" => o.gteq(mx, v)
+                case _ => true
+              }
+            }
+        case _ => true
+      }
+    e match {
+      case And(l, r) => mayMatch(l, bounds) && mayMatch(r, bounds)
+      case Or(l, r) => mayMatch(l, bounds) || mayMatch(r, bounds)
+      case In(c, list) if list.forall(_.isInstanceOf[Literal]) =>
+        list.exists { case Literal(v, vt) => test(c, "=", v, vt); case _ => true }
+      case InSet(c, set) => set.exists(v => test(c, "=", v, c.dataType))
+      case b: BinaryComparison => (b.left, b.right) match {
+        case (c, Literal(v, vt)) => test(c, b.symbol, v, vt)
+        case (Literal(v, vt), c) => test(c, Flipped.getOrElse(b.symbol, b.symbol), v, vt)
+        case _ => true
+      }
+      case _ => true
+    }
   }
 
   /** Read only the files the stats table cannot rule out for

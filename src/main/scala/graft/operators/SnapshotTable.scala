@@ -216,6 +216,12 @@ object SnapshotTable {
   // them is equivalence, not estimation. A malformed or misaligned header
   // is ignored per column (footer scans instead): stats can only cost
   // pruning, never correctness.
+  //
+  // Carried stats serve every read, not just the next upsert: a version's
+  // reads ([[read]], and so [[lookupPoint]], [[scanBetween]], the
+  // graft_snapshot TVF and a QueryEngine over the table) go through a
+  // [[SnapshotFileIndex]] that skips the files whose carried (else
+  // attached-index) min/max cannot satisfy the scan's filters.
 
   private val StatsHeader = "#stats:"
 
@@ -329,21 +335,36 @@ object SnapshotTable {
     * version's committed schema applies, so files written before an ADD
     * COLUMN serve NULL for the columns they predate (by-name resolution
     * — no mergeSchema footer sweep needed at plan time).
+    *
+    * Data skipping: the relation's file index ([[SnapshotFileIndex]]) is
+    * built from the manifest, and each scan of it opens only the files
+    * whose min/max stats can satisfy the scan's filters — comparisons of
+    * a stats-typed column with a literal, IN, AND and OR
+    * ([[SkippingIndex.mayMatch]]). The stats are the version's carried
+    * manifest entries, else its attached index ([[attachStats]]), never
+    * footers: planning does no per-file I/O. A file, column or predicate
+    * without stats is always read. `inputFiles` lists every live file, and
+    * two reads of one version are the same relation (`sameResult`, cache
+    * hits, exchange reuse).
     */
-  def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame =
-    readFiles(spark, dir, version, files(spark, dir, version))
+  def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
+    val v = version.orElse(currentVersion(spark, dir)).getOrElse(
+      throw new IllegalArgumentException(s"no committed version under $dir"))
+    readFiles(spark, new SnapshotFileIndex(spark, dir, v, files(spark, dir, Some(v))))
+  }
 
-  /** `fl` (files of `version`) read under the version's committed schema:
-    * no footer inference, and a subset of the files sees exactly the
-    * columns a full [[read]] does — a dropped column stays dropped, an
-    * added one is NULL on files that predate it.
+  /** The files of `index` (files of one version) read under the version's
+    * committed schema: no footer inference, and a subset of the files
+    * sees exactly the columns a full [[read]] does — a dropped column
+    * stays dropped, an added one is NULL on files that predate it. A
+    * manifest from before schema headers is read under the schema Spark
+    * infers from the version's files.
     */
-  private def readFiles(spark: SparkSession, dir: String, version: Option[Long],
-      fl: Seq[String]): DataFrame =
-    schemaOf(spark, dir, version) match {
-      case Some(s) => spark.read.schema(s).parquet(fl: _*)
-      case None => spark.read.parquet(fl: _*)
-    }
+  private def readFiles(spark: SparkSession, index: SnapshotFileIndex): DataFrame = {
+    val (dir, v) = (index.dir, Some(index.version))
+    org.apache.spark.sql.graft.ColumnBridge.parquetRelation(spark, index,
+      schemaOf(spark, dir, v).getOrElse(spark.read.parquet(files(spark, dir, v): _*).schema))
+  }
 
   private def nonce(): String = java.util.UUID.randomUUID.toString.take(8)
 
@@ -752,8 +773,7 @@ object SnapshotTable {
       require(touched.length == affected.size,
         s"delete resolved ${affected.size} affected files but matched " +
           s"${touched.length} manifest entries — path normalization bug")
-      val survivors = spark.read.schema(tableSchema)
-        .parquet(touched.sorted: _*)
+      val survivors = readFiles(spark, new SnapshotFileIndex(spark, dir, v, touched.sorted))
         .filter(!coalesce(cond, lit(false)))
       val fl = writeData(spark, survivors, dir, v + 1)
       val all = (untouched ++ fl).sorted
@@ -877,18 +897,12 @@ object SnapshotTable {
     val cf = changedFiles(spark, dir, fromV, toV)
     val toSchema = schemaOf(spark, dir, Some(toV))
       .getOrElse(read(spark, dir, Some(toV)).schema)
-    val fromSchema = schemaOf(spark, dir, Some(fromV))
-      .getOrElse(read(spark, dir, Some(fromV)).schema)
     val outCols = toSchema.fieldNames.toSeq
       .filterNot(c => ignoreCols.contains(c) && c != keyCol)
     require(outCols.contains(keyCol), s"key column $keyCol not in table schema")
     val valueCols = outCols.filterNot(_ == keyCol)
-    def side(fl: Seq[String], schema: StructType): DataFrame = {
-      val raw =
-        if (fl.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            schema)
-        else spark.read.schema(schema).parquet(fl: _*)
+    def side(fl: Seq[String], v: Long): DataFrame = {
+      val raw = readFiles(spark, new SnapshotFileIndex(spark, dir, v, fl))
       // pre-images predate any ADD COLUMN: serve NULL for columns the
       // from-side schema lacks, exactly like a pinned old-version read
       outCols.foldLeft(raw)((df, c) =>
@@ -896,8 +910,8 @@ object SnapshotTable {
         else df.withColumn(c, lit(null).cast(toSchema(c).dataType)))
         .select(outCols.map(col): _*)
     }
-    val pre = side(cf.removed, fromSchema).alias("a")
-    val post = side(cf.added, toSchema).alias("b")
+    val pre = side(cf.removed, fromV).alias("a")
+    val post = side(cf.added, toV).alias("b")
     val joined = pre.join(post, col(s"a.$keyCol") === col(s"b.$keyCol"), "full_outer")
     def img(sideName: String, tpe: String) = struct(
       lit(tpe).as("_change_type") +:
@@ -922,10 +936,7 @@ object SnapshotTable {
     * when the index lists exactly the version's live files. */
   private def indexedRowCount(spark: SparkSession, dir: String, v: Long): Option[Long] = {
     val live = files(spark, dir, Some(v)).toSet
-    val index =
-      try SkippingIndex.readIndex(spark, statsDir(dir, v))
-      catch { case scala.util.control.NonFatal(_) => None }
-    index.flatMap { ix =>
+    attachedIndex(spark, dir, v).flatMap { ix =>
       val iRows = ix.schema.fieldIndex("n_rows")
       if (ix.rows.length == live.size && ix.rows.map(_.getString(0)).toSet == live &&
           !ix.rows.exists(_.isNullAt(iRows))) Some(ix.rows.map(_.getLong(iRows)).sum)
@@ -940,17 +951,25 @@ object SnapshotTable {
     SkippingIndex.statsTypesOf(
       schemaOf(spark, dir, Some(v)).getOrElse(read(spark, dir, Some(v)).schema), cols)
 
+  /** Version `v`'s attached stats index, None when it has none or it
+    * cannot be read. */
+  private[operators] def attachedIndex(spark: SparkSession, dir: String,
+      v: Long): Option[SkippingIndex.StatsIndex] =
+    try SkippingIndex.readIndex(spark, statsDir(dir, v))
+    catch { case scala.util.control.NonFatal(_) => None }
+
   /** Stats rows for `fl` over `cols` in [[SkippingIndex.statsRows]]'
     * shape, on the driver, each file's from the first source that knows
-    * it for every column: the MANIFEST-CARRIED entries, version `v`'s
-    * attached index (when it holds every stats column with its type),
-    * else a footer fold ([[SkippingIndex.footerRows]]). Carried entries
-    * and index rows are earlier footer folds of the same immutable files,
-    * so every source yields the same row; with full coverage there is no
-    * footer I/O. Also returns how many files were footer-folded.
+    * it for every column: the MANIFEST-CARRIED entries, else version `v`'s
+    * attached index `index` (when it holds every stats column with its
+    * type; read only when the manifest leaves a file unknown). Carried
+    * entries and index rows are earlier footer folds of the same immutable
+    * files, so both sources yield the same row. Also returns the files
+    * neither knows. No footer is read.
     */
-  private def statsRowsVia(spark: SparkSession, dir: String, v: Long,
-      fl: Seq[String], cols: Seq[(String, DataType)]): (Seq[Row], Int) = {
+  private[operators] def knownStatsRows(spark: SparkSession, dir: String, v: Long,
+      fl: Seq[String], cols: Seq[(String, DataType)],
+      index: => Option[SkippingIndex.StatsIndex]): (Seq[Row], Seq[String]) = {
     val perCol = {
       val ms =
         try manifestStatsOf(spark, dir, Some(v))
@@ -971,9 +990,7 @@ object SnapshotTable {
     val schema = SkippingIndex.statsSchemaOf(cols)
     val indexed =
       if (uncarried.isEmpty) Seq.empty
-      else (try SkippingIndex.readIndex(spark, statsDir(dir, v))
-            catch { case scala.util.control.NonFatal(_) => None })
-        .filter(ix => schema.forall(f =>
+      else index.filter(ix => schema.forall(f =>
           ix.schema.exists(g => g.name == f.name && g.dataType == f.dataType)))
         .fold(Seq.empty[Row]) { ix =>
           val order = schema.fieldNames.toSeq.map(ix.schema.fieldIndex)
@@ -981,8 +998,17 @@ object SnapshotTable {
           ix.rows.filter(r => wanted.contains(r.getString(0))).map(r => Row.fromSeq(order.map(r.get)))
         }
     val indexedSet = indexed.map(_.getString(0)).toSet
-    val rest = uncarried.filterNot(indexedSet.contains)
-    (carried ++ indexed ++ (if (rest.isEmpty) Nil else SkippingIndex.footerRows(spark, rest, cols)),
+    (carried ++ indexed, uncarried.filterNot(indexedSet.contains))
+  }
+
+  /** [[knownStatsRows]] with the files neither source knows footer-folded
+    * ([[SkippingIndex.footerRows]]): stats rows for every file of `fl`.
+    * Also returns how many files were footer-folded.
+    */
+  private def statsRowsVia(spark: SparkSession, dir: String, v: Long,
+      fl: Seq[String], cols: Seq[(String, DataType)]): (Seq[Row], Int) = {
+    val (known, rest) = knownStatsRows(spark, dir, v, fl, cols, attachedIndex(spark, dir, v))
+    (known ++ (if (rest.isEmpty) Nil else SkippingIndex.footerRows(spark, rest, cols)),
       rest.length)
   }
 
@@ -1245,10 +1271,9 @@ object SnapshotTable {
     def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
     // same column set AND types: a string index over the same names
     // must not seed a long one
-    val prior = versions(spark, dir).filter(_ < v).reverseIterator.map { pv =>
-      try SkippingIndex.readIndex(spark, statsDir(dir, pv))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.collectFirst { case Some(ix) if columns(ix.schema) == columns(schema) => ix }
+    val prior = versions(spark, dir).filter(_ < v).reverseIterator
+      .map(attachedIndex(spark, dir, _))
+      .collectFirst { case Some(ix) if columns(ix.schema) == columns(schema) => ix }
     val live = files(spark, dir, Some(v))
     prior match {
       case None =>
@@ -1386,18 +1411,22 @@ object SnapshotTable {
     }
   }
 
-  /** Point lookup `column = value` on a pinned snapshot, consulting the
-    * version's attached bloom index when present: only files whose bloom
-    * might contain the value are read (no false negatives — the result
-    * ALWAYS equals the full-snapshot equality filter; false positives
-    * are removed by the residual filter). The probe is DISTRIBUTED
+  /** Point lookup `column = value` on a pinned snapshot. With the
+    * version's attached bloom index, only files whose bloom might contain
+    * the value are read (no false negatives — the result ALWAYS equals
+    * the full-snapshot equality filter; false positives are removed by
+    * the residual filter). The probe is DISTRIBUTED
     * ([[SkippingIndex.pruneBloom]] collects kept file paths, never
     * bitmaps), and kept files are read under the version's COMMITTED
     * schema — on a schema-evolved table the kept set can mix pre/post
     * ADD COLUMN files, where inference could resolve against an old
-    * file and drop evolved columns. Without an index it is a plain
-    * filtered scan. `value` must be non-null and match the column's
-    * committed type (the bloom hashed the physical type at build).
+    * file and drop evolved columns. Without a bloom index it is
+    * `read(v).filter(column = value)`: the files whose carried or
+    * attached min/max cannot hold the value are skipped ([[read]]), so a
+    * lookup on the clustering key reads one file. `value` must be
+    * non-null and match the column's committed type (the bloom hashed the
+    * physical type at build). The returned prune is the bloom's, None
+    * without a bloom index.
     */
   def lookupPoint(spark: SparkSession, dir: String, column: String,
       value: Any,
@@ -1405,47 +1434,42 @@ object SnapshotTable {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
     val bp = new Path(bloomDir(dir, v, column))
-    val plain = read(spark, dir, Some(v)).filter(col(column) === lit(value))
-    if (!fs(spark, dir).exists(bp)) (plain, None)
+    val equal = col(column) === lit(value)
+    if (!fs(spark, dir).exists(bp)) (read(spark, dir, Some(v)).filter(equal), None)
     else {
-      val committed = schemaOf(spark, dir, Some(v))
-      val dt = committed
+      val dt = schemaOf(spark, dir, Some(v))
         .getOrElse(read(spark, dir, Some(v)).schema)(column).dataType
       val p = SkippingIndex.pruneBloom(spark, bp.toString, value, dt)
-      if (p.filesKept == 0) (plain.limit(0), Some(p))
-      else {
-        val reader = committed.fold(spark.read)(s => spark.read.schema(s))
-        (reader.parquet(p.kept: _*)
-          .filter(col(column) === lit(value)), Some(p))
-      }
+      // the probe's kept paths are input_file_name()-derived; read the
+      // manifest's own spelling of each
+      val kept = p.kept.map(canonPath).toSet
+      val fl = files(spark, dir, Some(v)).filter(f => kept.contains(canonPath(f)))
+      (readFiles(spark, new SnapshotFileIndex(spark, dir, v, fl)).filter(equal), Some(p))
     }
   }
 
-  /** Range scan of a pinned snapshot, consulting its attached stats
-    * index automatically when present (file prune + residual filter —
-    * [[SkippingIndex.scanBetween]]'s contract on a versioned file set).
-    * The prune is a driver-side filter over the index and the kept files
-    * are read under the version's committed schema, so building the plan
-    * runs no Spark job and the result always equals the full-snapshot
-    * filter, columns included (after a DROP or ADD COLUMN too).
+  /** Range scan of a pinned snapshot: `read(v).filter(column BETWEEN lo
+    * AND hi)`, whose scan skips the files whose carried or attached
+    * min/max cannot intersect the range ([[read]]). Building the plan runs
+    * no Spark job, and the result always equals the full-snapshot filter,
+    * columns included (after a DROP or ADD COLUMN too). The returned prune
+    * is that scan's (its kept files), reported when the version's attached
+    * index holds long stats for `column` — [[SkippingIndex.scanBetween]]'s
+    * contract; None otherwise.
     */
   def scanBetween(spark: SparkSession, dir: String, column: String,
       lo: Long, hi: Long,
       version: Option[Long] = None): (DataFrame, Option[SkippingIndex.Prune]) = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    // type-validated coverage, like SkippingIndex.scanBetween: long
-    // bounds never compare against a string-typed attached index
-    val p = SkippingIndex.readIndex(spark, statsDir(dir, v))
-      .filter(_.covered(column, LongType))
-      .map(SkippingIndex.prune(_, column, lo, hi))
-    val between = col(column).between(lo, hi)
-    p match {
-      case Some(pr) if pr.filesKept > 0 =>
-        (readFiles(spark, dir, Some(v), pr.kept).filter(between), p)
-      case Some(_) => (read(spark, dir, Some(v)).filter(between).limit(0), p)
-      case None => (read(spark, dir, Some(v)).filter(between), p)
-    }
+    val index = new SnapshotFileIndex(spark, dir, v, files(spark, dir, Some(v)))
+    val scan = readFiles(spark, index).filter(col(column).between(lo, hi))
+    // the filters the scan's file listing gets
+    val p = index.attached.filter(_.covered(column, LongType)).map(_ =>
+      index.prune(scan.queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }))
+    (scan, p)
   }
 
   /** A [[SkippingIndex.KeysetWalk]] over a PINNED snapshot version — the

@@ -173,12 +173,13 @@ final class QueryEngine(val spark: SparkSession, val path: String) {
   }
 
   /** Range scan of the opened data, version-pinned and STATS-PRUNED when
-    * the pinned snapshot carries an attached skipping index for `column`
+    * the pinned snapshot carries stats for `column` — manifest-carried or
+    * an attached skipping index
     * ([[graft.operators.SnapshotTable.scanBetween]]: files whose
     * [min,max] cannot intersect are never opened; results always equal
-    * `data.filter(column between lo and hi)`). Plain files fall back to
-    * the filtered view — parquet row-group pruning still applies via the
-    * pushed predicate.
+    * `data.filter(column between lo and hi)`, which a snapshot's `data`
+    * prunes the same way). Plain files fall back to the filtered view —
+    * parquet row-group pruning still applies via the pushed predicate.
     */
   def scanBetween(column: String, lo: Long, hi: Long): DataFrame =
     pinnedVersion match {

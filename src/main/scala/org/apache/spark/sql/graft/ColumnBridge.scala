@@ -20,6 +20,19 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The parquet files `index` lists, read under `dataSchema` and without
+    * partition columns: the relation `spark.read.schema(dataSchema)
+    * .parquet(...)` builds (a nullable data schema, no options), over a
+    * caller's file index.
+    */
+  def parquetRelation(spark: org.apache.spark.sql.SparkSession,
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      dataSchema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.baseRelationToDataFrame(org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      index, new org.apache.spark.sql.types.StructType(), dataSchema.asNullable, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(spark))
+
   /** Free the block-manager storage behind a `localCheckpoint()`'d frame.
     * `Dataset.unpersist` only talks to the CacheManager, which does not
     * track checkpoint RDDs — the blocks live on the `LogicalRDD` leaf the

@@ -649,6 +649,10 @@ class QueryEngineSnapshotSpec extends AnyFunSuite {
     val qe = new QueryEngine(spark, dir)
     assert(qe.pinnedVersion.contains(1L))
     assert(qe.query("SELECT k, payload FROM data WHERE k < 100").count() == 100)
+    // the engine's query scans only the file the pinned version's stats
+    // keep for k < 100 (of 8)
+    assert(TestSpark.filesScanned(qe.query("SELECT k, payload FROM data WHERE k < 100")) ==
+      Seq(1L))
     val pageReq = PageRequest(pageSize = Some(25),
       sort = Some(SortSpec("k", ascending = false)), pageNumber = 3)
     val pageBefore = qe.dataPaginator.page(pageReq).collect().map(_.toSeq).toSeq

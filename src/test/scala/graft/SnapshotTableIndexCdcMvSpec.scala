@@ -268,6 +268,16 @@ class SnapshotTableIndexCdcMvSpec extends AnyFunSuite {
     MaterializedView.create(spark, dir, mdir, "commit_v", "k")
     assert(rows(spark.sql(s"SELECT * FROM graft_mv('$mdir')"))
       == rows(MaterializedView.serve(spark, mdir)))
+    // a filtered pinned TVF read scans only the files the version's stats
+    // keep, as the Scala read does
+    val cdir = freshDir("snap-sqlface-skip")
+    SnapshotTable.create(spark, mkBase(800).repartitionByRange(8, col("k")), cdir)
+    SnapshotTable.attachStats(spark, cdir, Seq("k"))
+    val sql = spark.sql(s"SELECT * FROM graft_snapshot('$cdir', 1) WHERE k BETWEEN 250 AND 260")
+    val scala = SnapshotTable.read(spark, cdir, Some(1L)).filter(col("k").between(250L, 260L))
+    assert(rows(sql) == rows(scala) && rows(sql).size == 11)
+    assert(TestSpark.filesScanned(sql) == Seq(1L) && TestSpark.filesScanned(scala) == Seq(1L),
+      "the TVF scan must read the one file whose stats can match, of 8")
   }
 
   test("readAsOf distinguishes 'not created yet' from 'vacuumed away'") {

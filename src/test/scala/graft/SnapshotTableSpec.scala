@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +8,7 @@ import graft.operators.SnapshotTable
 import graft.TestSpark.jobsDuring
 
 class SnapshotTableSpec extends AnyFunSuite {
+  import SnapshotTableSpec.KeyKind
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -1080,4 +1082,186 @@ class SnapshotTableSpec extends AnyFunSuite {
     assertWalkPages(dir, "k", 1L, 300, ascending = true)
     assertWalkPages(dir, "k", 1L, 300, ascending = false)
   }
+
+  // ---- data skipping on every read ------------------------------------
+
+  private val keyKinds = Seq(
+    KeyKind("long", i => (i * 3).cast("long"), i => lit(i * 3L)),
+    KeyKind("int", i => (i * 3).cast("int"), i => lit(i * 3)),
+    KeyKind("date", i => date_add(to_date(lit("2020-01-01")), i.cast("int")),
+      i => lit(java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong))),
+    KeyKind("timestamp", i => timestamp_seconds(lit(1600000000L) + i * 60L),
+      i => lit(java.time.Instant.ofEpochSecond(1600000000L + i * 60L))),
+    KeyKind("string", i => format_string("k%05d", i), i => lit(f"k$i%05d")))
+
+  /** An 8-file table of rows 0..799 keyed by `kind` (the key NULL on every
+    * 97th row, `payload` = the row), range-clustered, with rows 300..319
+    * upserted: version 2's untouched files have manifest-carried stats,
+    * its rewritten file only the index attached after the upsert.
+    * Timestamps are written as MICROS, which carry ordered stats.
+    */
+  private def skippingTable(kind: KeyKind, dir: String): Long = {
+    def rows(from: Long, until: Long, v: Long) = spark.range(from, until).select(
+      when(col("id") % 97 === 5, lit(null)).otherwise(kind.key(col("id"))).as("k"),
+      col("id").as("payload"), lit(v).as("commit_v"))
+    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    try {
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      SnapshotTable.create(spark, rows(0, 800, 0L).repartitionByRange(8, col("k")), dir)
+      SnapshotTable.attachStats(spark, dir, Seq("k"))
+      val c = SnapshotTable.upsert(spark, dir,
+        rows(300, 320, 1L).withColumn("_deleted", lit(false)), "k", "commit_v", "payload")
+      assert(c.filesReused >= 6, s"a narrow upsert: $c")
+      SnapshotTable.attachStatsIncremental(spark, dir, Seq("k"))
+      c.version
+    } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+  }
+
+  /** Version `v`'s files read as plain parquet under its committed schema. */
+  private def rawRead(dir: String, v: Long): org.apache.spark.sql.DataFrame =
+    spark.read.schema(SnapshotTable.schemaOf(spark, dir, Some(v)).get)
+      .parquet(SnapshotTable.files(spark, dir, Some(v)): _*)
+
+  test("read(v).filter(p) equals the plain parquet filter and scans only the files whose stats can match") {
+    keyKinds.foreach { kind =>
+      val dir = freshDir(s"snap-skip-${kind.name}")
+      val v = skippingTable(kind, dir)
+      val raw = rawRead(dir, v)
+      // each file's row range over its non-NULL keys: keys ascend with the
+      // row, so a predicate on keys is the same predicate on rows
+      val ranges = raw.where(col("k").isNotNull).groupBy(input_file_name())
+        .agg(min("payload"), max("payload")).collect().map(r => (r.getLong(1), r.getLong(2)))
+      val nFiles = SnapshotTable.files(spark, dir, Some(v)).length
+      assert(ranges.length == nFiles)
+      val k = col("k")
+      def has(i: Long): ((Long, Long)) => Boolean = { case (lo, hi) => lo <= i && i <= hi }
+      val cases: Seq[(String, Column, Option[((Long, Long)) => Boolean])] = Seq(
+        ("=", k === kind.at(100), Some(has(100))),
+        ("<", k < kind.at(150), Some(_._1 < 150)),
+        ("<=", k <= kind.at(150), Some(_._1 <= 150)),
+        (">", k > kind.at(700), Some(_._2 > 700)),
+        (">=", k >= kind.at(700), Some(_._2 >= 700)),
+        ("between", k.between(kind.at(200), kind.at(260)), Some(r => r._1 <= 260 && r._2 >= 200)),
+        ("IN", k.isin(kind.at(10), kind.at(500)), Some(r => has(10)(r) || has(500)(r))),
+        ("AND", k >= kind.at(100) && k < kind.at(120), Some(r => r._2 >= 100 && r._1 < 120)),
+        ("OR", k === kind.at(30) || k === kind.at(770), Some(r => has(30)(r) || has(770)(r))),
+        ("<=>", k <=> kind.at(400), Some(has(400))),
+        ("IS NULL", k.isNull, None))
+      cases.foreach { case (name, p, canMatch) =>
+        val got = SnapshotTable.read(spark, dir, Some(v)).filter(p)
+        assert(rowsOf(got) == rowsOf(raw.filter(p)), s"${kind.name} $name")
+        val want = canMatch.fold(nFiles)(ranges.count)
+        assert(graft.TestSpark.filesScanned(got) == Seq(want.toLong),
+          s"${kind.name} $name: the scan must read the $want of $nFiles files whose stats can match")
+      }
+      assert(SnapshotTable.read(spark, dir, Some(v)).inputFiles.length == nFiles)
+    }
+  }
+
+  test("a cast, a UDF, NOT, a collated key, a compacted version, files older than an ADD COLUMN and a re-added dropped column keep every file") {
+    def keepsAll(dir: String, v: Long, p: Column, what: String): Unit = {
+      val got = SnapshotTable.read(spark, dir, Some(v)).filter(p)
+      assert(rowsOf(got) == rowsOf(rawRead(dir, v).filter(p)), what)
+      assert(graft.TestSpark.filesScanned(got) ==
+        Seq(SnapshotTable.files(spark, dir, Some(v)).length.toLong), s"$what must read every file")
+    }
+    val dir = freshDir("snap-skip-keep")
+    val v = skippingTable(keyKinds.head, dir)
+    keepsAll(dir, v, col("k").cast("string") === "900", "a cast operand")
+    keepsAll(dir, v, udf((x: Long) => x).apply(col("k")) === 900L, "a UDF operand")
+    keepsAll(dir, v, !(col("k") === 900L), "NOT")
+    // compact writes a version with neither carried stats nor an index
+    val compacted = SnapshotTable.compact(spark, dir, 100L, sortOn = Some("k"))
+    assert(!new java.io.File(f"$dir/stats/v${compacted.version}%05d").exists())
+    keepsAll(dir, compacted.version, col("k") === 900L, "a compacted version")
+    // ADD COLUMN: the files older than `extra` have no stats for it (their
+    // rows are NULL); the key still prunes beside it
+    val added = SnapshotTable.upsert(spark, dir, spark.range(600, 610).select(
+        (col("id") * 3).as("k"), col("id").as("payload"), lit(2L).as("commit_v"),
+        concat(lit("x"), col("id")).as("extra"), lit(false).as("_deleted")),
+      "k", "commit_v", "payload")
+    SnapshotTable.attachStatsIncremental(spark, dir, Seq("k"))
+    keepsAll(dir, added.version, col("extra") === "x605", "a column newer than the files")
+    keepsAll(dir, added.version, col("extra").isNull, "IS NULL on a column newer than the files")
+    val both = SnapshotTable.read(spark, dir, Some(added.version))
+      .filter(col("k") === 1815L && col("extra") === "x605")
+    assert(rowsOf(both).length == 1 && graft.TestSpark.filesScanned(both).forall(
+      _ < SnapshotTable.files(spark, dir, Some(added.version)).length))
+    // DROP COLUMN, a rewrite, and the name added back with another type:
+    // no file has stats for the new column
+    SnapshotTable.dropColumn(spark, dir, "extra")
+    SnapshotTable.compact(spark, dir, 100L, sortOn = Some("k"))
+    val readded = SnapshotTable.upsert(spark, dir, spark.range(10, 20).select(
+        (col("id") * 3).as("k"), col("id").as("payload"), lit(3L).as("commit_v"),
+        col("id").as("extra"), lit(false).as("_deleted")),
+      "k", "commit_v", "payload")
+    keepsAll(dir, readded.version, col("extra") === 15L, "a dropped and re-added column")
+    // a UTF8_LCASE key: an index of its binary min/max exists, and the
+    // read must not use it ('K00100' equals 'k00100' but sorts below
+    // every binary key)
+    val dirC = freshDir("snap-skip-collated")
+    SnapshotTable.create(spark, spark.range(800).select(
+        collate(format_string("k%05d", col("id")), "UTF8_LCASE").as("k"), col("id").as("payload"))
+      .repartitionByRange(8, col("k")), dirC)
+    val statsSchema = {
+      import org.apache.spark.sql.types._
+      StructType(Seq(StructField("file", StringType, nullable = false),
+        StructField("n_rows", LongType, nullable = false), StructField("k_min", StringType),
+        StructField("k_max", StringType), StructField("k_nulls", LongType)))
+    }
+    graft.operators.SkippingIndex.writeIndex(spark, s"$dirC/stats/v00001", statsSchema,
+      SnapshotTable.files(spark, dirC, Some(1L)).map { f =>
+        val r = spark.read.parquet(f).agg(count(lit(1)),
+          min(col("k").cast("string")), max(col("k").cast("string"))).head()
+        org.apache.spark.sql.Row(f, r.getLong(0), r.getString(1), r.getString(2), 0L)
+      })
+    keepsAll(dirC, 1L, col("k") === "K00100", "a UTF8_LCASE key")
+    assert(rowsOf(SnapshotTable.read(spark, dirC).filter(col("k") === "K00100")) == Seq("k00100|100"))
+  }
+
+  test("reads of one version are one relation: sameResult, cache hits and exchange reuse") {
+    val dir = freshDir("snap-identity")
+    SnapshotTable.create(spark, mkBase(2000).repartitionByRange(4, col("k")), dir)
+    val c = SnapshotTable.upsert(spark, dir,
+      Seq((5L, "u5", 1L, false)).toDF("k", "payload", "commit_v", "_deleted"),
+      "k", "commit_v", "payload")
+    def at(v: Long) = SnapshotTable.read(spark, dir, Some(v))
+    assert(at(1L).sameSemantics(at(1L)) && at(1L).semanticHash() == at(1L).semanticHash())
+    assert(!at(1L).sameSemantics(at(c.version)), "two versions must not be one relation")
+    def cached(df: org.apache.spark.sql.DataFrame) = df.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }
+    val persisted = at(1L).persist()
+    try {
+      persisted.count()
+      val other = at(1L).filter(col("k") < 10L)
+      assert(cached(other).nonEmpty, "a second read of v1 must read the persisted one")
+      assert(rowsOf(other).length == 10)
+      assert(cached(at(c.version)).isEmpty, "a read of v2 must not read v1's cache")
+    } finally persisted.unpersist(blocking = true)
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, value) => spark.conf.set(k, value) }
+      val joined = at(1L).join(at(1L), "k")
+      assert(joined.count() == 2000L)
+      joined.collect()
+      val plan = joined.queryExecution.executedPlan
+      val shuffles = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+      val reused = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => e }
+      assert(shuffles.length == 1 && reused.length == 1, s"one exchange, reused:\n$plan")
+    } finally prev.foreach {
+      case (k, Some(value)) => spark.conf.set(k, value)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+}
+
+object SnapshotTableSpec {
+  /** A key type of the data-skipping specs: row `i`'s key as a column and
+    * as a literal; keys ascend with `i`. */
+  final case class KeyKind(name: String, key: Column => Column, at: Int => Column)
 }

@@ -150,6 +150,21 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("SnapshotTable reads a version's data files only through readFiles") {
+    // readFiles builds the relation over the version's SnapshotFileIndex,
+    // whose stats skip files; a second `spark.read...parquet(files)` read
+    // path would scan every file it is given. Allowed parquet calls: the
+    // writes, the bloom index reads, the change stream, readFiles' schema
+    // inference for a manifest without a schema, and upsert's read of the
+    // affected files it rewrites.
+    val code = source(new java.io.File("src/main/scala/graft/operators/SnapshotTable.scala"))
+    val allowed = Set("out", "tmp", "bp.toString", "bloomDir(dir, pv, column)", "changesDir",
+      "files(spark, dir, v): _*", "affected.toSeq.sorted: _*")
+    val offenders = calls(code, "parquet(").filterNot(allowed.contains)
+    assert(offenders.isEmpty, offenders.map(a => s"parquet($a)").mkString("\n"))
+    assert(calls(code, "parquetRelation(").length == 1, "readFiles builds every snapshot relation")
+  }
+
   /** Files under `src` that contain `text`, with how often. */
   private def occurrences(text: String): Seq[(String, Int)] = {
     val root = new java.io.File("src")

@@ -29,6 +29,25 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The `numFiles` metric of every file scan of `df`, from a fresh
+    * execution of it (re-running an executed plan resets its metrics but
+    * does not list files again): scans inside a cached relation it read,
+    * and under adaptive execution, included. */
+  def filesScanned(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def scans(p: SparkPlan): Seq[Long] = p.collect {
+      case s: FileSourceScanExec => Seq(s.metrics("numFiles").value)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+    }.flatten
+    val run = df.select("*")
+    run.collect()
+    scans(run.queryExecution.executedPlan)
+  }
+
   def scratch(name: String): String = {
     val d = s"/root/repo/target/test-scratch/$name"
     new java.io.File(d).mkdirs()
