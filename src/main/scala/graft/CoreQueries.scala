@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gate.t
 import graft.sources.Tables
 import graft.query.Search
 
@@ -17,9 +18,6 @@ import graft.query.Search
   */
 object CoreQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Exact sum of a double column: per-row cast to decimal, exact decimal
     * sum, final cast back — deterministic under any partitioning/ordering,
     * unlike a raw double sum.
@@ -27,8 +25,17 @@ object CoreQueries {
   private def dsum(c: org.apache.spark.sql.Column, scale: Int = 2) =
     sum(c.cast(s"decimal(18,$scale)")).cast("double")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> ((s, dir) => {
+  /** This area's gates. Lazy, so a row's oracle SQL may read vals declared
+    * further down: an eager table would read them as null while the object
+    * initializes. */
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("q1_agg", """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+        |  count(*) AS cnt
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin, (s, dir) => {
       val l = t(s, dir, "lineitem")
       l.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -39,7 +46,9 @@ object CoreQueries {
         .orderBy("l_returnflag", "l_linestatus")
     }),
 
-    "q2_filter_project" -> ((s, dir) => {
+    Gate("q2_filter_project", """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice
+        |FROM lineitem WHERE l_quantity > 45 AND l_returnflag = 'R'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin, (s, dir) => {
       // Predicate + projection pushdown: .explain shows PushedFilters +
       // a 5-column ReadSchema on the parquet scan.
       t(s, dir, "lineitem")
@@ -48,7 +57,14 @@ object CoreQueries {
         .orderBy("l_orderkey", "l_linenumber")
     }),
 
-    "q3_join_agg" -> ((s, dir) => {
+    Gate("q3_join_agg", """SELECT o_orderkey,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       val o = t(s, dir, "orders")
       val l = t(s, dir, "lineitem")
@@ -62,7 +78,9 @@ object CoreQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q4_sort_page" -> ((s, dir) => {
+    Gate("q4_sort_page", """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey ASC
+        |LIMIT 50 OFFSET 100""".stripMargin, (s, dir) => {
       // The paginator's core plan: total order (unique tiebreaker) +
       // OFFSET/LIMIT — page 3 @ 50 rows (reference: duckdb-paginator.ts).
       t(s, dir, "orders")
@@ -71,18 +89,31 @@ object CoreQueries {
         .offset(100).limit(50)
     }),
 
-    "q5_search" -> ((s, dir) => {
+    Gate("q5_search", """SELECT * FROM customer
+        |WHERE CAST(c_custkey AS TEXT) LIKE '%12%'
+        |   OR c_name LIKE '%12%'
+        |   OR CAST(c_nationkey AS TEXT) LIKE '%12%'
+        |   OR CAST(c_acctbal AS TEXT) LIKE '%12%'
+        |   OR c_mktsegment LIKE '%12%'
+        |ORDER BY c_custkey""".stripMargin, (s, dir) => {
       // Free-text search semantics of the reference's search box: every
       // column cast to string, OR of LIKE '%12%' (worker.ts:294-310).
       val c = t(s, dir, "customer")
       Search.search(c, "12").orderBy("c_custkey")
     }),
 
-    "q6_distinct" -> ((s, dir) =>
+    Gate("q6_distinct", """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
+        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin, (s, dir) =>
       t(s, dir, "orders").select("o_orderstatus", "o_orderpriority")
         .distinct().orderBy("o_orderstatus", "o_orderpriority")),
 
-    "q7_window" -> ((s, dir) => {
+    Gate("q7_window", """SELECT o_orderkey, o_custkey,
+        |  row_number() OVER w AS rn,
+        |  rank() OVER w AS rnk,
+        |  lag(o_orderkey, 1) OVER w AS prev_orderkey
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
+        |ORDER BY o_custkey, rn""".stripMargin, (s, dir) => {
       val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
@@ -93,13 +124,22 @@ object CoreQueries {
         .orderBy("o_custkey", "rn")
     }),
 
-    "q8_having" -> ((s, dir) =>
+    Gate("q8_having", """SELECT o_custkey, count(*) AS cnt,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders GROUP BY o_custkey HAVING count(*) >= 10
+        |ORDER BY o_custkey""".stripMargin, (s, dir) =>
       t(s, dir, "orders").groupBy("o_custkey")
         .agg(count(lit(1)).as("cnt"), dsum(col("o_totalprice")).as("total"))
         .filter(col("cnt") >= 10)
         .orderBy("o_custkey")),
 
-    "q9_cte" -> ((s, dir) => {
+    Gate("q9_cte", """WITH co AS (
+        |  SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |  FROM orders GROUP BY o_custkey)
+        |SELECT c_custkey, c_name, total
+        |FROM customer JOIN co ON c_custkey = o_custkey
+        |WHERE total > (SELECT avg(total) FROM co)
+        |ORDER BY c_custkey""".stripMargin, (s, dir) => {
       val co = t(s, dir, "orders").groupBy("o_custkey")
         .agg(dsum(col("o_totalprice")).as("total"))
       // Scalar subquery as a broadcast cross-join: no driver-side collect,
@@ -113,7 +153,10 @@ object CoreQueries {
         .orderBy("c_custkey")
     }),
 
-    "q10_union" -> ((s, dir) => {
+    Gate("q10_union", """SELECT c_custkey AS id, c_name AS name, 'customer' AS kind FROM customer
+        |UNION ALL
+        |SELECT s_suppkey AS id, s_name AS name, 'supplier' AS kind FROM supplier
+        |ORDER BY kind, id""".stripMargin, (s, dir) => {
       val c = t(s, dir, "customer")
         .select(col("c_custkey").as("id"), col("c_name").as("name"), lit("customer").as("kind"))
       val su = t(s, dir, "supplier")
@@ -121,7 +164,15 @@ object CoreQueries {
       c.unionAll(su).orderBy("kind", "id")
     }),
 
-    "q11_expr" -> ((s, dir) =>
+    Gate("q11_expr", """SELECT o_orderkey,
+        |  CASE WHEN o_totalprice > 200000 THEN 'big'
+        |       WHEN o_totalprice > 100000 THEN 'mid'
+        |       ELSE 'small' END AS bucket,
+        |  upper(substr(o_orderpriority, 1, 1)) AS pri_code,
+        |  concat(o_orderstatus, '-', o_orderpriority) AS status_pri,
+        |  CAST(year(o_orderdate) AS BIGINT) AS order_year,
+        |  strftime(o_orderdate, '%Y-%m') AS order_month
+        |FROM orders ORDER BY o_orderkey""".stripMargin, (s, dir) =>
       t(s, dir, "orders").select(
         col("o_orderkey"),
         when(col("o_totalprice") > 200000, "big")
@@ -133,7 +184,11 @@ object CoreQueries {
         date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
         .orderBy("o_orderkey")),
 
-    "q12_struct" -> ((s, dir) =>
+    Gate("q12_struct", """SELECT o_orderkey,
+        |  CAST(to_json(struct_pack(status := o_orderstatus,
+        |                           priority := o_orderpriority,
+        |                           cust := o_custkey)) AS VARCHAR) AS payload
+        |FROM orders ORDER BY o_orderkey""".stripMargin, (s, dir) =>
       // Complex-value inspection: build a struct, render it as the JSON
       // string a reference user sees in the cell popup (backend.ts
       // convertObjectsToJSONStrings).
@@ -144,7 +199,12 @@ object CoreQueries {
           col("o_custkey").as("cust"))).as("payload"))
         .orderBy("o_orderkey")),
 
-    "q13_broadcast_join" -> ((s, dir) => {
+    Gate("q13_broadcast_join", """SELECT r_name, n_name, count(*) AS n_suppliers,
+        |  CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+        |FROM supplier
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin, (s, dir) => {
       val su = t(s, dir, "supplier")
       val n = t(s, dir, "nation")
       val r = t(s, dir, "region")
@@ -155,7 +215,12 @@ object CoreQueries {
         .orderBy("r_name", "n_name")
     }),
 
-    "q14_semi_anti" -> ((s, dir) => {
+    Gate("q14_semi_anti", """SELECT c_custkey, 'has_orders' AS tag FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |UNION ALL
+        |SELECT c_custkey, 'no_orders' AS tag FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY tag, c_custkey""".stripMargin, (s, dir) => {
       val c = t(s, dir, "customer")
       val o = t(s, dir, "orders")
       val semi = c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
@@ -165,7 +230,12 @@ object CoreQueries {
       semi.unionAll(anti).orderBy("tag", "c_custkey")
     }),
 
-    "q15_topk_group" -> ((s, dir) => {
+    Gate("q15_topk_group", """SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (
+        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
+        |    row_number() OVER (PARTITION BY o_orderpriority
+        |                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
+        |  FROM orders) t
+        |WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin, (s, dir) => {
       val w = Window.partitionBy("o_orderpriority")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       t(s, dir, "orders")
@@ -175,7 +245,13 @@ object CoreQueries {
         .orderBy("o_orderpriority", "rn")
     }),
 
-    "q16_pivot" -> ((s, dir) =>
+    Gate("q16_pivot", """SELECT o_orderstatus,
+        |  count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS urgent,
+        |  count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS high,
+        |  count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS medium,
+        |  count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS unspecified,
+        |  count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS low
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin, (s, dir) =>
       t(s, dir, "orders")
         .groupBy("o_orderstatus")
         .pivot("o_orderpriority",
@@ -187,7 +263,23 @@ object CoreQueries {
           "4-NOT SPECIFIED" -> "unspecified", "5-LOW" -> "low"))
         .orderBy("o_orderstatus")),
 
-    "q17_stats" -> ((s, dir) => {
+    Gate("q17_stats", """SELECT col_name, cnt, min_val, max_val, sum_val FROM (
+        |  SELECT 'l_quantity' AS col_name, count(*) AS cnt,
+        |    CAST(min(l_quantity) AS DOUBLE) AS min_val, CAST(max(l_quantity) AS DOUBLE) AS max_val,
+        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_val FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_extendedprice', count(*),
+        |    CAST(min(l_extendedprice) AS DOUBLE), CAST(max(l_extendedprice) AS DOUBLE),
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_discount', count(*),
+        |    CAST(min(l_discount) AS DOUBLE), CAST(max(l_discount) AS DOUBLE),
+        |    CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_tax', count(*),
+        |    CAST(min(l_tax) AS DOUBLE), CAST(max(l_tax) AS DOUBLE),
+        |    CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE) FROM lineitem
+        |) ORDER BY col_name""".stripMargin, (s, dir) => {
       // Column-statistics panel: one row per numeric column.
       val l = t(s, dir, "lineitem")
       def statsOf(cname: String): DataFrame =
@@ -200,7 +292,22 @@ object CoreQueries {
         .map(statsOf).reduce(_ unionAll _).orderBy("col_name")
     }),
 
-    "q18_approx" -> ((s, dir) =>
+    // tolerance booleans: each engine checks its OWN sketch against the
+    // exact values (computation-mirroring, not result-hardcoding — the
+    // exact counts hash across engines, and a sketch drifting past 5%
+    // on either side fails the row)
+    Gate("q18_approx", """SELECT
+        |  count(DISTINCT l_orderkey) AS n_orders_exact,
+        |  count(DISTINCT l_partkey) AS n_parts_exact,
+        |  abs(approx_count_distinct(l_orderkey) - count(DISTINCT l_orderkey))
+        |    / count(DISTINCT l_orderkey) <= 0.05 AS orders_ok,
+        |  abs(approx_count_distinct(l_partkey) - count(DISTINCT l_partkey))
+        |    / count(DISTINCT l_partkey) <= 0.05 AS parts_ok,
+        |  abs(approx_quantile(l_extendedprice, 0.5) - quantile_cont(l_extendedprice, 0.5))
+        |    / quantile_cont(l_extendedprice, 0.5) <= 0.05 AS median_ok,
+        |  abs(approx_quantile(l_extendedprice, 0.95) - quantile_cont(l_extendedprice, 0.95))
+        |    / quantile_cont(l_extendedprice, 0.95) <= 0.05 AS p95_ok
+        |FROM lineitem""".stripMargin, (s, dir) =>
       // HLL + approximate quantiles as a DRIVER-HASHED gate: sketch
       // values are engine-specific, so the row emits tolerance BOOLEANS —
       // each engine checks its OWN sketch against the exact value it
@@ -224,7 +331,11 @@ object CoreQueries {
           (abs(col("m_approx") - col("m_exact")) / col("m_exact") <= 0.05).as("median_ok"),
           (abs(col("p95_approx") - col("p95_exact")) / col("p95_exact") <= 0.05).as("p95_ok"))),
 
-    "q19_rollup" -> ((s, dir) =>
+    Gate("q19_rollup", """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  count(*) AS cnt
+        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+        |ORDER BY status, priority""".stripMargin, (s, dir) =>
       t(s, dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("cnt"))
@@ -233,7 +344,7 @@ object CoreQueries {
           col("cnt"))
         .orderBy("status", "priority")),
 
-    "q20_csv_source" -> ((s, dir) => {
+    Gate("q20_csv_source", "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey", (s, dir) => {
       // CSV source round-trip: parquet truth → distributed CSV write →
       // header+inferSchema read (the reference's read_csv path).
       val out = s"${Scratch.dir}/q20_csv_region"
@@ -245,7 +356,8 @@ object CoreQueries {
         .orderBy("r_regionkey")
     }),
 
-    "q21_json_source" -> ((s, dir) => {
+    Gate("q21_json_source", """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
+        |FROM orders ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // ndJSON source round-trip (the reference's ndjson export / JSON read).
       val out = s"${Scratch.dir}/q21_json_orders"
       t(s, dir, "orders")
@@ -256,7 +368,7 @@ object CoreQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q35_avro_source" -> ((s, dir) => {
+    Gate("q35_avro_source", "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey", (s, dir) => {
       // Avro source round-trip (the reference's read_avro path,
       // duckdb-backend.ts:155-156); Spark 4 bundles the avro source.
       val out = s"${Scratch.dir}/q35_avro_nation"
@@ -267,7 +379,7 @@ object CoreQueries {
         .orderBy("n_nationkey")
     }),
 
-    "q36_orc_source" -> ((s, dir) => {
+    Gate("q36_orc_source", "SELECT s_suppkey, s_name, s_nationkey FROM supplier ORDER BY s_suppkey", (s, dir) => {
       // ORC source round-trip (columnar alternative a lakehouse ingests
       // alongside parquet; Spark's reader is built in).
       val out = s"${Scratch.dir}/q36_orc_supplier"
@@ -277,7 +389,20 @@ object CoreQueries {
         .orderBy("s_suppkey")
     }),
 
-    "q58_codecs" -> ((s, dir) => {
+    // the oracle reads the gate's ACTUAL written files: read_parquet
+    // proves DuckDB decodes each codec to the same content, and
+    // parquet_metadata proves the footer records what was requested
+    // (literal scratch paths — table functions take paths, and Verify
+    // runs before the oracle, same contract as meta_footer)
+    Gate("q58_codecs", Seq("gzip", "snappy", "zstd").map { codec =>
+      val g = s"${Scratch.dir}/q58_$codec/*.parquet"
+      s"""SELECT '$codec' AS codec,
+         |  (SELECT array_to_string(list_sort(list(DISTINCT compression)), ',')
+         |   FROM parquet_metadata('$g')) AS footer_codecs,
+         |  (SELECT count(*) FROM read_parquet('$g')) AS n,
+         |  (SELECT CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+         |   FROM read_parquet('$g')) AS sum_qty""".stripMargin
+    }.mkString("", "\nUNION ALL\n", "\nORDER BY codec"), (s, dir) => {
       // compression-codec control on the WRITE side, verified at the
       // footer: the same lineitem slice written gzip/snappy/zstd must
       // (a) record the requested codec in every column chunk's footer
@@ -308,24 +433,53 @@ object CoreQueries {
       }.reduce(_ unionByName _).orderBy("codec")
     }),
 
-    "meta_rowcount" -> ((s, dir) =>
+    Gate("meta_rowcount", "SELECT count(*) AS num_rows FROM lineitem", (s, dir) =>
       // Metadata tab num_rows (reference: backend.ts getMetaData).
       t(s, dir, "lineitem").agg(count(lit(1)).as("num_rows"))),
 
-    "schema_inspect" -> ((s, dir) =>
+    // DESCRIBE over the registered view renders exactly the type strings
+    // SchemaInspector.describeParquet derives from the parquet footer.
+    Gate("schema_inspect", """SELECT column_name, column_type, "null"
+        |FROM (DESCRIBE SELECT * FROM lineitem)""".stripMargin, (s, dir) =>
       // Schema tab: DESCRIBE-shaped table. Footer-based so the rendered
       // type is the FILE's logical type (what DuckDB's DESCRIBE shows),
       // not whatever a session reader flag maps a timestamp to.
       graft.query.SchemaInspector.describeParquet(s, s"$dir/lineitem.parquet")),
 
-    "meta_footer" -> ((s, dir) =>
-      // Parquet footer metadata (rows-only: DuckDB sees the same footer
-      // but key set is engine-specific).
+    // The footer fields the reference's metadata tab shows come straight
+    // from DuckDB's parquet_file_metadata() (duckdb-backend.ts
+    // getMetaDataImpl), so the oracle IS that function, unpivoted to the
+    // gate's key/value shape. parquet_file_metadata takes a file path, not
+    // a registered view, so the driver's verify path (always sf0.01 per
+    // the harness contract) is named literally — the same file the Spark
+    // gate reads through `dir`.
+    Gate("meta_footer", """WITH m AS (SELECT * FROM parquet_file_metadata('/root/testdata/sf0.01/lineitem.parquet'))
+        |SELECT key, value FROM (
+        |  SELECT 'created_by' AS key, created_by::VARCHAR AS value FROM m
+        |  UNION ALL SELECT 'encryption_algorithm', encryption_algorithm::VARCHAR FROM m
+        |  UNION ALL SELECT 'footer_signing_key_metadata', footer_signing_key_metadata::VARCHAR FROM m
+        |  UNION ALL SELECT 'format_version', format_version::VARCHAR FROM m
+        |  UNION ALL SELECT 'num_row_groups', num_row_groups::VARCHAR FROM m
+        |  UNION ALL SELECT 'num_rows', num_rows::VARCHAR FROM m
+        |) ORDER BY key""".stripMargin, (s, dir) =>
+      // Parquet footer metadata: the fields the reference's metadata tab
+      // shows.
       graft.query.MetadataInspector.fileMetadata(s, s"$dir/lineitem.parquet")
         .filter(col("key") =!= "file_name") // path differs by environment
         .orderBy("key")),
 
-    "meta_column_stats" -> ((s, dir) =>
+    // drill-down parity: both engines read the SAME column-chunk
+    // statistics out of the footer; parquet_metadata takes a file path,
+    // so the driver's verify path (sf0.01 per the harness contract) is
+    // named literally — the same file the Spark gate reads through `dir`
+    Gate("meta_column_stats", """SELECT CAST(row_group_id AS BIGINT) AS row_group,
+        |  path_in_schema AS col_name,
+        |  CAST(num_values AS BIGINT) AS num_values,
+        |  stats_min_value AS min_s, stats_max_value AS max_s,
+        |  CAST(stats_null_count AS BIGINT) AS null_count
+        |FROM parquet_metadata('/root/testdata/sf0.01/orders.parquet')
+        |WHERE path_in_schema IN ('o_orderkey', 'o_custkey')
+        |ORDER BY row_group, col_name""".stripMargin, (s, dir) =>
       // per-row-group column-chunk statistics (the drill-down level of
       // DuckDB's parquet_metadata(), and the raw material of q51's
       // data-skipping index). Gated on the INT64 columns, whose min/max
@@ -340,243 +494,6 @@ object CoreQueries {
         .orderBy("row_group", "col_name")),
   )
 
-  val oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        |  count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q2_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice
-        |FROM lineitem WHERE l_quantity > 45 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q3_join_agg" ->
-      """SELECT o_orderkey,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
-
-    "q4_sort_page" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC
-        |LIMIT 50 OFFSET 100""".stripMargin,
-
-    "q5_search" ->
-      """SELECT * FROM customer
-        |WHERE CAST(c_custkey AS TEXT) LIKE '%12%'
-        |   OR c_name LIKE '%12%'
-        |   OR CAST(c_nationkey AS TEXT) LIKE '%12%'
-        |   OR CAST(c_acctbal AS TEXT) LIKE '%12%'
-        |   OR c_mktsegment LIKE '%12%'
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q6_distinct" ->
-      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q7_window" ->
-      """SELECT o_orderkey, o_custkey,
-        |  row_number() OVER w AS rn,
-        |  rank() OVER w AS rnk,
-        |  lag(o_orderkey, 1) OVER w AS prev_orderkey
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
-        |ORDER BY o_custkey, rn""".stripMargin,
-
-    "q8_having" ->
-      """SELECT o_custkey, count(*) AS cnt,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY o_custkey HAVING count(*) >= 10
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q9_cte" ->
-      """WITH co AS (
-        |  SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM orders GROUP BY o_custkey)
-        |SELECT c_custkey, c_name, total
-        |FROM customer JOIN co ON c_custkey = o_custkey
-        |WHERE total > (SELECT avg(total) FROM co)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q10_union" ->
-      """SELECT c_custkey AS id, c_name AS name, 'customer' AS kind FROM customer
-        |UNION ALL
-        |SELECT s_suppkey AS id, s_name AS name, 'supplier' AS kind FROM supplier
-        |ORDER BY kind, id""".stripMargin,
-
-    "q11_expr" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_totalprice > 200000 THEN 'big'
-        |       WHEN o_totalprice > 100000 THEN 'mid'
-        |       ELSE 'small' END AS bucket,
-        |  upper(substr(o_orderpriority, 1, 1)) AS pri_code,
-        |  concat(o_orderstatus, '-', o_orderpriority) AS status_pri,
-        |  CAST(year(o_orderdate) AS BIGINT) AS order_year,
-        |  strftime(o_orderdate, '%Y-%m') AS order_month
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q12_struct" ->
-      """SELECT o_orderkey,
-        |  CAST(to_json(struct_pack(status := o_orderstatus,
-        |                           priority := o_orderpriority,
-        |                           cust := o_custkey)) AS VARCHAR) AS payload
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q13_broadcast_join" ->
-      """SELECT r_name, n_name, count(*) AS n_suppliers,
-        |  CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-
-    "q14_semi_anti" ->
-      """SELECT c_custkey, 'has_orders' AS tag FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |UNION ALL
-        |SELECT c_custkey, 'no_orders' AS tag FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY tag, c_custkey""".stripMargin,
-
-    "q15_topk_group" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin,
-
-    "q16_pivot" ->
-      """SELECT o_orderstatus,
-        |  count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS urgent,
-        |  count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS high,
-        |  count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS medium,
-        |  count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS unspecified,
-        |  count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS low
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q17_stats" ->
-      """SELECT col_name, cnt, min_val, max_val, sum_val FROM (
-        |  SELECT 'l_quantity' AS col_name, count(*) AS cnt,
-        |    CAST(min(l_quantity) AS DOUBLE) AS min_val, CAST(max(l_quantity) AS DOUBLE) AS max_val,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_val FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', count(*),
-        |    CAST(min(l_extendedprice) AS DOUBLE), CAST(max(l_extendedprice) AS DOUBLE),
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_discount', count(*),
-        |    CAST(min(l_discount) AS DOUBLE), CAST(max(l_discount) AS DOUBLE),
-        |    CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_tax', count(*),
-        |    CAST(min(l_tax) AS DOUBLE), CAST(max(l_tax) AS DOUBLE),
-        |    CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE) FROM lineitem
-        |) ORDER BY col_name""".stripMargin,
-
-    // tolerance booleans: each engine checks its OWN sketch against the
-    // exact values (computation-mirroring, not result-hardcoding — the
-    // exact counts hash across engines, and a sketch drifting past 5%
-    // on either side fails the row)
-    "q18_approx" ->
-      """SELECT
-        |  count(DISTINCT l_orderkey) AS n_orders_exact,
-        |  count(DISTINCT l_partkey) AS n_parts_exact,
-        |  abs(approx_count_distinct(l_orderkey) - count(DISTINCT l_orderkey))
-        |    / count(DISTINCT l_orderkey) <= 0.05 AS orders_ok,
-        |  abs(approx_count_distinct(l_partkey) - count(DISTINCT l_partkey))
-        |    / count(DISTINCT l_partkey) <= 0.05 AS parts_ok,
-        |  abs(approx_quantile(l_extendedprice, 0.5) - quantile_cont(l_extendedprice, 0.5))
-        |    / quantile_cont(l_extendedprice, 0.5) <= 0.05 AS median_ok,
-        |  abs(approx_quantile(l_extendedprice, 0.95) - quantile_cont(l_extendedprice, 0.95))
-        |    / quantile_cont(l_extendedprice, 0.95) <= 0.05 AS p95_ok
-        |FROM lineitem""".stripMargin,
-
-    "q19_rollup" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  count(*) AS cnt
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-
-    "q20_csv_source" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-
-    "q21_json_source" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q35_avro_source" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q36_orc_source" ->
-      "SELECT s_suppkey, s_name, s_nationkey FROM supplier ORDER BY s_suppkey",
-
-    "meta_rowcount" ->
-      "SELECT count(*) AS num_rows FROM lineitem",
-
-    // DESCRIBE over the registered view renders exactly the type strings
-    // SchemaInspector.describeParquet derives from the parquet footer.
-    "schema_inspect" ->
-      """SELECT column_name, column_type, "null"
-        |FROM (DESCRIBE SELECT * FROM lineitem)""".stripMargin,
-
-    // The footer fields the reference's metadata tab shows come straight
-    // from DuckDB's parquet_file_metadata() (duckdb-backend.ts
-    // getMetaDataImpl), so the oracle IS that function, unpivoted to the
-    // gate's key/value shape. parquet_file_metadata takes a file path, not
-    // a registered view, so the driver's verify path (always sf0.01 per
-    // the harness contract) is named literally — the same file the Spark
-    // gate reads through `dir`.
-    // the oracle reads the gate's ACTUAL written files: read_parquet
-    // proves DuckDB decodes each codec to the same content, and
-    // parquet_metadata proves the footer records what was requested
-    // (literal scratch paths — table functions take paths, and Verify
-    // runs before the oracle, same contract as meta_footer)
-    "q58_codecs" -> Seq("gzip", "snappy", "zstd").map { codec =>
-      val g = s"${Scratch.dir}/q58_$codec/*.parquet"
-      s"""SELECT '$codec' AS codec,
-         |  (SELECT array_to_string(list_sort(list(DISTINCT compression)), ',')
-         |   FROM parquet_metadata('$g')) AS footer_codecs,
-         |  (SELECT count(*) FROM read_parquet('$g')) AS n,
-         |  (SELECT CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-         |   FROM read_parquet('$g')) AS sum_qty""".stripMargin
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY codec"),
-
-    "meta_footer" ->
-      """WITH m AS (SELECT * FROM parquet_file_metadata('/root/testdata/sf0.01/lineitem.parquet'))
-        |SELECT key, value FROM (
-        |  SELECT 'created_by' AS key, created_by::VARCHAR AS value FROM m
-        |  UNION ALL SELECT 'encryption_algorithm', encryption_algorithm::VARCHAR FROM m
-        |  UNION ALL SELECT 'footer_signing_key_metadata', footer_signing_key_metadata::VARCHAR FROM m
-        |  UNION ALL SELECT 'format_version', format_version::VARCHAR FROM m
-        |  UNION ALL SELECT 'num_row_groups', num_row_groups::VARCHAR FROM m
-        |  UNION ALL SELECT 'num_rows', num_rows::VARCHAR FROM m
-        |) ORDER BY key""".stripMargin,
-
-    // drill-down parity: both engines read the SAME column-chunk
-    // statistics out of the footer; parquet_metadata takes a file path,
-    // so the driver's verify path (sf0.01 per the harness contract) is
-    // named literally — the same file the Spark gate reads through `dir`
-    "meta_column_stats" ->
-      """SELECT CAST(row_group_id AS BIGINT) AS row_group,
-        |  path_in_schema AS col_name,
-        |  CAST(num_values AS BIGINT) AS num_values,
-        |  stats_min_value AS min_s, stats_max_value AS max_s,
-        |  CAST(stats_null_count AS BIGINT) AS null_count
-        |FROM parquet_metadata('/root/testdata/sf0.01/orders.parquet')
-        |WHERE path_in_schema IN ('o_orderkey', 'o_custkey')
-        |ORDER BY row_group, col_name""".stripMargin,
-  )
 }
 
 /** Scratch space for round-trip sources/exports — kept inside the repo

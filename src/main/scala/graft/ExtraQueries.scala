@@ -1,21 +1,27 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gate.t
 import graft.operators.{AsOfJoin, MaterializedView, SnapshotTable}
-import graft.sources.Tables
 
 /** Additional §2 operators: as-of join (custom operator Spark lacks),
   * cube aggregates, histogram binning, deterministic hash sampling.
   */
 object ExtraQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "asof_join" -> ((s, dir) => {
+  /** This area's gates. Lazy, so a row's oracle SQL may read vals declared
+    * further down: an eager table would read them as null while the object
+    * initializes. */
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("asof_join", """SELECT p.event_id, p.user_id,
+        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
+        |  c.event_id AS click_id,
+        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |  ON p.user_id = c.user_id AND p.ts >= c.ts
+        |ORDER BY p.event_id""".stripMargin, (s, dir) => {
       val ev = t(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
       val clicks = ev.filter(col("event_type") === "click")
@@ -29,7 +35,18 @@ object ExtraQueries {
         .orderBy("event_id")
     }),
 
-    "asof_join_tolerance" -> ((s, dir) => {
+    // the ASOF match nulled when older than the window: exact because
+    // the as-of match is the newest candidate (nothing else can be
+    // inside a window it missed)
+    Gate("asof_join_tolerance", """SELECT p.event_id, p.user_id,
+        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
+        |  CASE WHEN c.ts >= p.ts - INTERVAL 1 HOUR THEN c.event_id END AS click_id,
+        |  CASE WHEN c.ts >= p.ts - INTERVAL 1 HOUR
+        |       THEN strftime(c.ts, '%Y-%m-%d %H:%M:%S') END AS click_ts
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |  ON p.user_id = c.user_id AND p.ts >= c.ts
+        |ORDER BY p.event_id""".stripMargin, (s, dir) => {
       // bounded-staleness as-of join (pandas merge_asof `tolerance`):
       // each purchase takes its latest preceding click ONLY if it landed
       // within the last hour — stale matches null out. Exact without a
@@ -51,7 +68,14 @@ object ExtraQueries {
         .orderBy("event_id")
     }),
 
-    "asof_join_native" -> ((s, dir) => {
+    Gate("asof_join_native", """SELECT p.event_id, p.user_id,
+        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
+        |  c.event_id AS click_id,
+        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |  ON p.user_id = c.user_id AND p.ts >= c.ts
+        |ORDER BY p.event_id""".stripMargin, (s, dir) => {
       // Same as-of semantics through the custom Catalyst path: a
       // first-class LogicalPlan + planner Strategy + streaming merge exec
       // (plans.AsOfJoinPlan) instead of the union+window plan — one
@@ -69,7 +93,11 @@ object ExtraQueries {
         .orderBy("event_id")
     }),
 
-    "q22_cube" -> ((s, dir) =>
+    Gate("q22_cube", """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  count(*) AS cnt
+        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        |ORDER BY status, priority""".stripMargin, (s, dir) =>
       t(s, dir, "orders")
         .cube("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("cnt"))
@@ -78,7 +106,16 @@ object ExtraQueries {
           col("cnt"))
         .orderBy("status", "priority")),
 
-    "q54_grouping_sets" -> ((s, dir) => {
+    // same explicit grouping() bit arithmetic on both engines — the gid
+    // column distinguishes a genuine NULL key from a rolled-up level
+    Gate("q54_grouping_sets", """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS BIGINT) AS gid,
+        |  count(1) AS cnt
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+        |                        (o_orderstatus), ())
+        |ORDER BY gid, status, priority""".stripMargin, (s, dir) => {
       // explicit GROUPING SETS (the general form cube/rollup are sugar
       // for): per-(status, priority), per-status, and grand total — but
       // NOT per-priority, which only an explicit set list can express.
@@ -99,7 +136,14 @@ object ExtraQueries {
           |ORDER BY gid, status, priority""".stripMargin)
     }),
 
-    "q55_set_ops" -> ((s, dir) => {
+    // DISTINCT set semantics on both engines (INTERSECT/EXCEPT without
+    // ALL); DataFrame intersect/except compile to the same
+    Gate("q55_set_ops", """SELECT o_custkey AS custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        |INTERSECT
+        |SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW'
+        |EXCEPT
+        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+        |ORDER BY custkey""".stripMargin, (s, dir) => {
       // INTERSECT / EXCEPT (the set operators q10_union leaves out):
       // customers who placed an urgent order AND a low-priority order,
       // minus those who ever had an F-status order — exercised as
@@ -116,7 +160,10 @@ object ExtraQueries {
         .orderBy("custkey")
     }),
 
-    "q23_histogram" -> ((s, dir) =>
+    Gate("q23_histogram", """SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bucket,
+        |  count(*) AS cnt, min(o_totalprice) AS min_price,
+        |  max(o_totalprice) AS max_price
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin, (s, dir) =>
       t(s, dir, "orders")
         .groupBy(floor(col("o_totalprice") / 50000).cast("long").as("bucket"))
         .agg(count(lit(1)).as("cnt"),
@@ -124,25 +171,36 @@ object ExtraQueries {
           max(col("o_totalprice")).as("max_price"))
         .orderBy("bucket")),
 
-    "q25_percentile" -> ((s, dir) =>
+    Gate("q25_percentile", """SELECT round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
+        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
+        |  round(quantile_cont(l_extendedprice, 0.75), 4) AS p75
+        |FROM lineitem""".stripMargin, (s, dir) =>
       t(s, dir, "lineitem").agg(
         round(expr("percentile(l_extendedprice, 0.25)"), 4).as("p25"),
         round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
         round(expr("percentile(l_extendedprice, 0.75)"), 4).as("p75"))),
 
-    "q26_corr" -> ((s, dir) =>
+    Gate("q26_corr", """SELECT round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
+        |  round(corr(l_discount, l_extendedprice), 6) AS corr_disc_price
+        |FROM lineitem""".stripMargin, (s, dir) =>
       t(s, dir, "lineitem").agg(
         round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qty_price"),
         round(corr(col("l_discount"), col("l_extendedprice")), 6).as("corr_disc_price"))),
 
-    "q27_salted_agg" -> ((s, dir) =>
+    Gate("q27_salted_agg", """SELECT o_orderstatus,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+        |  count(*) AS cnt
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin, (s, dir) =>
       // Skew-safe two-phase aggregation; result identical to q8-style
       // direct groupBy, so the plain-SQL oracle applies.
       graft.operators.Salting.saltedSumCount(
         t(s, dir, "orders"), "o_orderstatus", "o_totalprice", "o_orderkey", salts = 8)
         .orderBy("o_orderstatus")),
 
-    "q28_stringagg" -> ((s, dir) =>
+    Gate("q28_stringagg", """SELECT l_orderkey,
+        |  string_agg(l_linenumber, ',' ORDER BY l_linenumber) AS line_numbers,
+        |  count(*) AS n_lines
+        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin, (s, dir) =>
       // group-concat over sorted elements: deterministic list aggregation
       t(s, dir, "lineitem")
         .groupBy("l_orderkey")
@@ -152,7 +210,11 @@ object ExtraQueries {
           count(lit(1)).cast("long").as("n_lines"))
         .orderBy("l_orderkey")),
 
-    "q29_array_ops" -> ((s, dir) =>
+    Gate("q29_array_ops", """SELECT l_orderkey,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(min(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS min_qty,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin, (s, dir) =>
       // build list -> filter -> transform -> aggregate, all on nested data
       t(s, dir, "lineitem")
         .groupBy("l_orderkey")
@@ -164,7 +226,11 @@ object ExtraQueries {
             .as("sum_qty"))
         .orderBy("l_orderkey")),
 
-    "q30_nulls" -> ((s, dir) =>
+    Gate("q30_nulls", """SELECT o_orderkey,
+        |  nullif(o_orderstatus, 'O') AS status_or_null,
+        |  coalesce(nullif(o_orderstatus, 'O'), 'OPEN') AS status_filled,
+        |  o_orderstatus IS NOT DISTINCT FROM 'O' AS is_open
+        |FROM orders ORDER BY o_orderkey""".stripMargin, (s, dir) =>
       // null semantics: nullif/coalesce/null-safe equality
       t(s, dir, "orders").select(
         col("o_orderkey"),
@@ -173,7 +239,9 @@ object ExtraQueries {
         col("o_orderstatus") <=> lit("O").as("is_open"))
         .orderBy("o_orderkey")),
 
-    "q31_json_extract" -> ((s, dir) =>
+    Gate("q31_json_extract", """SELECT event_id, CAST(props->>'$.k' AS BIGINT) AS k
+        |FROM events WHERE CAST(props->>'$.k' AS BIGINT) >= 50
+        |ORDER BY event_id""".stripMargin, (s, dir) =>
       // semi-structured column: JSON field extraction + typed filter/agg
       // (the reference renders struct/JSON cells; this is the query path)
       t(s, dir, "events")
@@ -182,7 +250,11 @@ object ExtraQueries {
         .filter(col("k") >= 50)
         .orderBy("event_id")),
 
-    "q32_regex" -> ((s, dir) =>
+    Gate("q32_regex", """SELECT doc_id,
+        |  regexp_extract("text", '([a-z]+)', 1) AS first_word,
+        |  CAST(len(string_split("text", ' ')) AS BIGINT) AS n_space_parts,
+        |  substring(regexp_replace("text", '[aeiou]', '', 'g'), 1, 20) AS devoweled_prefix
+        |FROM documents ORDER BY doc_id""".stripMargin, (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         regexp_extract(col("text"), "([a-z]+)", 1).as("first_word"),
@@ -190,7 +262,12 @@ object ExtraQueries {
         regexp_replace(col("text"), "[aeiou]", "").substr(1, 20).as("devoweled_prefix"))
         .orderBy("doc_id")),
 
-    "q33_range_join" -> ((s, dir) => {
+    Gate("q33_range_join", """SELECT p.event_id, p.user_id,
+        |  (SELECT count(*) FROM events c
+        |   WHERE c.event_type = 'click' AND c.user_id = p.user_id
+        |     AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts) AS n_matches
+        |FROM events p WHERE p.event_type = 'purchase'
+        |ORDER BY p.event_id""".stripMargin, (s, dir) => {
       // banded interval join: clicks within 30 min before each purchase
       val ev = t(s, dir, "events")
       graft.operators.RangeJoin.countPreceding(
@@ -201,7 +278,10 @@ object ExtraQueries {
         .orderBy("event_id")
     }),
 
-    "q34_stratified_sample" -> ((s, dir) =>
+    Gate("q34_stratified_sample", """SELECT doc_id, lang FROM documents
+        |WHERE substring(sha256('strat' || CAST(doc_id AS VARCHAR)), 1, 2) <=
+        |  CASE WHEN lang = 'en' THEN '40' WHEN lang = 'de' THEN '20' ELSE '0a' END
+        |ORDER BY doc_id""".stripMargin, (s, dir) =>
       // per-stratum reproducible sampling: language-dependent hash cut —
       // the data-mixing primitive (different keep-rates per source/lang)
       t(s, dir, "documents")
@@ -210,7 +290,14 @@ object ExtraQueries {
         .select("doc_id", "lang")
         .orderBy("doc_id")),
 
-    "q37_range_window" -> ((s, dir) => {
+    Gate("q37_range_window", """SELECT o_orderkey, o_custkey,
+        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS order_ts,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS trailing_7d_total,
+        |  COUNT(*) OVER w AS trailing_7d_orders
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
+        |             RANGE BETWEEN INTERVAL 7 DAY PRECEDING AND CURRENT ROW)
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // value-based (RANGE) sliding window: per customer, the trailing
       // 7-day order total — microsecond frame bounds so the inclusive
       // interval arithmetic is bit-identical to the oracle's INTERVAL
@@ -227,7 +314,11 @@ object ExtraQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q38_upsert" -> ((s, dir) => {
+    Gate("q38_upsert", """SELECT o_orderkey, o_custkey,
+        |  CASE WHEN o_orderkey % 7 = 0 THEN 'U' ELSE o_orderstatus END AS o_orderstatus,
+        |  o_totalprice
+        |FROM orders WHERE o_orderkey % 13 <> 0
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // CDC merge: a deterministic change stream derived from the base —
       // every 7th key a status update (v2), every 13th a delete
       // tombstone (v3, so update+delete keys resolve delete-wins)
@@ -246,7 +337,11 @@ object ExtraQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q39_bloom_join" -> ((s, dir) => {
+    Gate("q39_bloom_join", """SELECT o_orderstatus, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin, (s, dir) => {
       // runtime-filter join: bloom of the selective dim side prunes the
       // fact scan BEFORE the shuffle; exact join removes false positives,
       // so the plain-join oracle applies
@@ -260,7 +355,16 @@ object ExtraQueries {
         .orderBy("o_orderstatus")
     }),
 
-    "q40_window_funcs" -> ((s, dir) => {
+    Gate("q40_window_funcs", """SELECT o_orderkey, o_custkey,
+        |  ntile(4) OVER w AS quartile,
+        |  round(percent_rank() OVER w, 6) AS pct_rank,
+        |  round(cume_dist() OVER w, 6) AS cume,
+        |  first_value(o_orderkey) OVER w AS first_key,
+        |  nth_value(o_orderkey, 2) OVER w AS second_key,
+        |  lead(o_orderkey, 1) OVER w AS next_key
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // ranking/distribution/navigation window breadth beyond q7:
       // ntile, percent_rank, cume_dist, first/nth value, lead
       import org.apache.spark.sql.expressions.Window
@@ -277,7 +381,11 @@ object ExtraQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q41_grouped_percentile" -> ((s, dir) =>
+    Gate("q41_grouped_percentile", """SELECT l_returnflag,
+        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
+        |  round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
+        |  count(*) AS cnt
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin, (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
@@ -285,7 +393,12 @@ object ExtraQueries {
           count(lit(1)).as("cnt"))
         .orderBy("l_returnflag")),
 
-    "q42_minmax_by" -> ((s, dir) =>
+    Gate("q42_minmax_by", """SELECT o_orderstatus,
+        |  arg_max(o_totalprice, o_orderkey) AS latest_price,
+        |  arg_min(o_totalprice, o_orderkey) AS first_price,
+        |  max(o_totalprice) AS max_price,
+        |  count(*) AS cnt
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin, (s, dir) =>
       // argmin/argmax aggregates over a UNIQUE ordering key (o_orderkey),
       // so both engines pick the same row deterministically
       t(s, dir, "orders")
@@ -296,7 +409,10 @@ object ExtraQueries {
           count(lit(1)).as("cnt"))
         .orderBy("o_orderstatus")),
 
-    "q43_partitioned_source" -> ((s, dir) => {
+    Gate("q43_partitioned_source", """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS dt,
+        |  count(*) AS n_events,
+        |  CAST(sum(CAST("value" AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin, (s, dir) => {
       // date-partitioned layout round-trip: write events partitioned by
       // day (Tables.writeDatePartitioned), read the directory tree back,
       // aggregate per partition value. Partition PRUNING on this layout
@@ -313,7 +429,10 @@ object ExtraQueries {
         .orderBy("dt")
     }),
 
-    "q44_bucketed_join" -> ((s, dir) => {
+    Gate("q44_bucketed_join", """SELECT c_mktsegment, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin, (s, dir) => {
       // bucketed-layout join: both sides pre-bucketed on the join key
       // (Tables.writeBucketed), so the join needs no exchange — the
       // co-located fact-fact join shape at 100 TB (shuffle-freeness is
@@ -333,7 +452,10 @@ object ExtraQueries {
         .orderBy("c_mktsegment")
     }),
 
-    "q45_salted_join" -> ((s, dir) =>
+    Gate("q45_salted_join", """SELECT c_mktsegment, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin, (s, dir) =>
       // skew-safe replicated join: the big side salts, the small side
       // replicates per salt — result identical to the plain join, so the
       // plain-SQL oracle applies (equivalence also spec'd in SaltingSpec)
@@ -345,7 +467,9 @@ object ExtraQueries {
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total"))
         .orderBy("c_mktsegment")),
 
-    "q24_sample_hash" -> ((s, dir) =>
+    Gate("q24_sample_hash", """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE substring(sha256(CAST(o_orderkey AS VARCHAR)), 1, 2) <= '14'
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) =>
       // Deterministic, engine-portable sampling: sha2 of the key is
       // identical everywhere, so the ~8% sample is reproducible across
       // engines, runs and cluster sizes — the property a training-data
@@ -355,7 +479,9 @@ object ExtraQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")),
 
-    "q46_schema_evolution" -> ((s, dir) => {
+    Gate("q46_schema_evolution", """SELECT o_orderkey, o_totalprice,
+        |  CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus ELSE 'N/A' END AS status
+        |FROM orders ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // schema-evolution round-trip: later files of a dataset carry an
       // ADDED column (the standard lakehouse evolution path — at 100 TB
       // nobody rewrites old files when a column appears). mergeSchema
@@ -375,7 +501,11 @@ object ExtraQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q47_page_last" -> ((s, dir) => {
+    Gate("q47_page_last", """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_orderkey
+        |LIMIT 37
+        |OFFSET (SELECT 37 * (CAST(ceil(count(*) / 37.0) AS BIGINT) - 1)
+        |        FROM orders)""".stripMargin, (s, dir) => {
       // the paginator's jump-to-last flow under a driver hash: totalPages
       // derives from a count with the page-size ceiling, lastPage re-sorts
       // and offsets to (totalPages-1)*size — reference first/last/goto
@@ -391,7 +521,11 @@ object ExtraQueries {
         sort = Some(SortSpec("o_orderkey", ascending = true))))
     }),
 
-    "q56_page_keyset" -> ((s, dir) => {
+    // the keyset walk's page 11 must equal the offset page exactly —
+    // seek is a pure execution-strategy change, never a semantic one
+    Gate("q56_page_keyset", """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_orderkey
+        |LIMIT 100 OFFSET 1000""".stripMargin, (s, dir) => {
       // keyset (seek) pagination, gated as a DEEP WALK: ten pages of 100
       // are traversed purely by cursor — each step filters on the
       // last-seen (sort value, tiebreaker) and takes a top-k, never
@@ -412,7 +546,11 @@ object ExtraQueries {
       p.pageAfter(req, cur.get) // page 11: rows 1000..1099 (in range at every SF)
     }),
 
-    "q59_page_keyset_multi" -> ((s, dir) => {
+    // two-column lexicographic order, unique on (priority, orderkey):
+    // the multi-column cursor walk is a pure execution-strategy change
+    Gate("q59_page_keyset_multi", """SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders
+        |ORDER BY o_orderpriority DESC, o_orderkey
+        |LIMIT 100 OFFSET 700""".stripMargin, (s, dir) => {
       // MULTI-COLUMN keyset pagination: real grids sort by (colA, colB) —
       // the cursor is a sort-VALUE VECTOR, the seek filter the
       // lexicographic "after" disjunction, and the redundant pushed range
@@ -435,7 +573,18 @@ object ExtraQueries {
       p.pageAfter(req, cur.get) // page 8: rows 700..799 of the 2-col order
     }),
 
-    "q63_page_keyset_stats" -> ((s, dir) => {
+    // the stats-bounded walk serves the same pages as plain offsets on
+    // the unique key — file pruning is an I/O bound, not a semantics one
+    Gate("q63_page_keyset_stats", """WITH a AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |  ORDER BY o_orderkey LIMIT 100 OFFSET 1000),
+        |d AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |  ORDER BY o_orderkey DESC LIMIT 100 OFFSET 200)
+        |SELECT 'asc' AS dirn, * FROM a
+        |UNION ALL
+        |SELECT 'desc' AS dirn, * FROM d
+        |ORDER BY dirn, o_orderkey""".stripMargin, (s, dir) => {
       // FILE-BOUNDED keyset pagination: q56/q59's cursor walk still top-ks
       // the whole remainder past the cursor every page; on a key-clustered
       // snapshot table with per-file [min,max,n_rows,nulls] stats the page
@@ -457,7 +606,18 @@ object ExtraQueries {
         .orderBy("dirn", "o_orderkey")
     }),
 
-    "q64_page_keyset_str" -> ((s, dir) => {
+    // the string-key stats-bounded walk serves the same pages as plain
+    // offsets on the zero-padded unique key
+    Gate("q64_page_keyset_str", """WITH b AS (
+        |  SELECT 'K' || lpad(CAST(o_orderkey AS VARCHAR), 9, '0') AS okey,
+        |    o_custkey, o_totalprice
+        |  FROM orders),
+        |a AS (SELECT * FROM b ORDER BY okey LIMIT 100 OFFSET 1000),
+        |d AS (SELECT * FROM b ORDER BY okey DESC LIMIT 100 OFFSET 200)
+        |SELECT 'asc' AS dirn, * FROM a
+        |UNION ALL
+        |SELECT 'desc' AS dirn, * FROM d
+        |ORDER BY dirn, okey""".stripMargin, (s, dir) => {
       // q63's FILE-BOUNDED keyset pagination under a STRING key — the
       // shape a real paging user (string doc_ids) hits first: per-file
       // STRING bounds attached from the BINARY/UTF8 footer stats of the
@@ -477,7 +637,15 @@ object ExtraQueries {
         .orderBy("dirn", "okey")
     }),
 
-    "q57_snapshot" -> ((s, dir) => {
+    // both snapshots replayed from orders alone: v1 is the base, v3 the
+    // merged truth (updates/deletes/inserts by key mod 10) — commit,
+    // file-pruned merge and compaction must all be content-invisible
+    Gate("q57_snapshot", s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
+         |SELECT CAST(1 AS BIGINT) AS snap, * FROM b
+         |UNION ALL
+         |SELECT CAST(3 AS BIGINT) AS snap, * FROM mixed
+         |ORDER BY snap, o_orderkey""".stripMargin, (s, dir) => {
       // versioned snapshot table, end-to-end: v1 = orders (key-clustered
       // files), v2 = file-pruned latest-wins upsert (updates for keys
       // ≡3 mod 10, tombstone deletes for ≡7, inserts at key+10M for ≡1),
@@ -502,7 +670,20 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q62_snapshot_evolve" -> ((s, dir) => {
+    // schema evolution: v1 (old schema, read through an explicit NULL
+    // column) and the evolved v2 replayed from orders — changed rows
+    // carry the new column's values (inserts sit at key + 10M), every
+    // surviving base row NULL
+    Gate("q62_snapshot_evolve", s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
+         |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
+         |  o_totalprice, CAST(NULL AS VARCHAR) AS o_flag FROM b
+         |UNION ALL
+         |SELECT CAST(2 AS BIGINT) AS snap, *,
+         |  CASE WHEN o_orderkey % 10 = 3 THEN 'upd'
+         |       WHEN o_orderkey >= 10000000 THEN 'ins' END AS o_flag
+         |FROM mixed
+         |ORDER BY snap, o_orderkey""".stripMargin, (s, dir) => {
       // SCHEMA EVOLUTION (ADD COLUMN) end-to-end: the upsert's change set
       // carries a column the table lacks (`o_flag`) — it joins version
       // 2's committed schema (manifest header), untouched files are
@@ -531,7 +712,13 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q67_snapshot_zorder" -> ((s, dir) => {
+    // the z-order-compacted snapshot scan must equal the plain filter —
+    // clustering is a pure layout change, never a semantic one
+    Gate("q67_snapshot_zorder", """SELECT l_partkey, count(*) AS n,
+        |  CAST(sum(l_suppkey) AS BIGINT) AS sum_suppkey,
+        |  CAST(sum(l_orderkey) AS BIGINT) AS sum_orderkey
+        |FROM lineitem WHERE l_partkey BETWEEN 100 AND 300
+        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin, (s, dir) => {
       // LAYOUT MAINTENANCE on the snapshot path, end to end: a lineitem
       // snapshot re-clustered by z-order compaction
       // (SnapshotTable.compact(zOrderOn) — the OPTIMIZE ZORDER BY face),
@@ -560,7 +747,30 @@ object ExtraQueries {
         .orderBy("l_partkey")
     }),
 
-    "q74_resample" -> ((s, dir) => {
+    // identical sorted-fold means, identical dense spine, identical ffill
+    Gate("q74_resample", """WITH e AS (SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
+        |             "value"::DOUBLE AS v FROM events),
+        |a AS (SELECT series, bucket,
+        |        CASE WHEN count(v) > 0 THEN
+        |          list_reduce(list_prepend(0.0,
+        |              list_sort(list(v) FILTER (WHERE v IS NOT NULL))),
+        |            (x, y) -> x + y) / count(v)
+        |        END AS avg_v,
+        |        count(*) AS n
+        |      FROM e GROUP BY series, bucket),
+        |b AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM a),
+        |sp AS (SELECT s.series, g.bucket
+        |       FROM (SELECT DISTINCT series FROM a) s
+        |       CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b),
+        |                     (SELECT hi FROM b), INTERVAL 1 HOUR)) AS bucket) g),
+        |j AS (SELECT sp.series, sp.bucket, coalesce(a.n, 0) AS n, a.avg_v
+        |      FROM sp LEFT JOIN a USING (series, bucket))
+        |SELECT series, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
+        |  CAST(n AS BIGINT) AS n, round(avg_v, 4) AS avg_v,
+        |  round(last_value(avg_v IGNORE NULLS) OVER (
+        |    PARTITION BY series ORDER BY bucket
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS avg_v_ff
+        |FROM j ORDER BY series, bucket""".stripMargin, (s, dir) => {
       // hourly resample with gap fill + forward fill over the 5
       // event_type series: dense regular grid (n=0 buckets explicit),
       // per-bucket mean via the SORTED fold (bit-identical across
@@ -573,7 +783,10 @@ object ExtraQueries {
         .withColumn("avg_v_ff", round(col("avg_v_ff"), 4))
     }),
 
-    "q73_point_bloom" -> ((s, dir) => {
+    // the bloom-pruned point lookup must equal the plain equality filter
+    Gate("q73_point_bloom", """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders WHERE o_custkey = 97
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // per-file BLOOM index point lookup — the skipping face min/max
       // stats can't serve: the table is clustered by o_orderkey, the
       // lookup is on o_custkey (every file's custkey [min,max] spans the
@@ -593,7 +806,15 @@ object ExtraQueries {
       scan.orderBy("o_orderkey")
     }),
 
-    "q77_point_bloom_inc" -> ((s, dir) => {
+    // both lookups served through the INCREMENTALLY-maintained bloom
+    // index must equal the plain equality filters over the merged truth
+    Gate("q77_point_bloom_inc", """WITH m AS (SELECT o_orderkey,
+        |  CASE WHEN o_orderkey BETWEEN 500 AND 700
+        |       THEN 9999999 ELSE o_custkey END AS o_custkey,
+        |  o_totalprice FROM orders)
+        |SELECT o_orderkey, o_custkey, o_totalprice FROM m
+        |WHERE o_custkey IN (9999999, 97)
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // INCREMENTAL bloom maintenance end to end (the attachStats
       // sibling for point indexes): v1 = orders key-clustered + bloom on
       // the non-clustered o_custkey, v2 = narrow upsert planting a rare
@@ -624,7 +845,30 @@ object ExtraQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q71_funnel" -> ((s, dir) => {
+    // identical state machine over the identically-sorted per-user list:
+    // strict-sequence funnel depth (bitmask step encoding — the same
+    // fold the Spark side runs), then exact depth histogram
+    Gate("q71_funnel", """WITH e AS (SELECT user_id AS u,
+        |             struct_pack(ts := ts, id := event_id, t := event_type) AS ev
+        |           FROM events
+        |           WHERE event_type IN ('view', 'click', 'purchase')),
+        |a AS (SELECT u, list_sort(list(ev)) AS evs FROM e GROUP BY u),
+        |d AS (SELECT u, list_reduce(
+        |        list_prepend({'st': CAST(0 AS BIGINT), 't0': CAST(NULL AS TIMESTAMP)},
+        |          list_transform(evs, x ->
+        |            {'st': CASE x.t WHEN 'view' THEN CAST(1 AS BIGINT)
+        |                            WHEN 'click' THEN CAST(2 AS BIGINT)
+        |                            WHEN 'purchase' THEN CAST(4 AS BIGINT)
+        |                            ELSE CAST(0 AS BIGINT) END,
+        |             't0': x.ts})),
+        |        (acc, x) -> CASE WHEN acc.st < 3
+        |            AND (x.st & (CAST(1 AS BIGINT) << CAST(acc.st AS INTEGER))) != 0
+        |          THEN {'st': CAST(acc.st + 1 AS BIGINT),
+        |                't0': CASE WHEN acc.st = 0 THEN x.t0 ELSE acc.t0 END}
+        |          ELSE acc END).st AS depth
+        |      FROM a)
+        |SELECT depth, count(*) AS n_users FROM d
+        |GROUP BY depth ORDER BY depth""".stripMargin, (s, dir) => {
       // ordered funnel (view -> click -> purchase): depth = how far each
       // user gets IN ORDER (step k counts only events after the event
       // completing step k-1). One shuffle + a codegen'd fold over the
@@ -636,7 +880,28 @@ object ExtraQueries {
         Seq("view", "click", "purchase"))
     }),
 
-    "q85_funnel_sql" -> ((s, dir) => {
+    // the SQL-face funnel is the same plan as q71 — same oracle replay
+    Gate("q85_funnel_sql", """WITH e AS (SELECT user_id AS u,
+        |             struct_pack(ts := ts, id := event_id, t := event_type) AS ev
+        |           FROM events
+        |           WHERE event_type IN ('view', 'click', 'purchase')),
+        |a AS (SELECT u, list_sort(list(ev)) AS evs FROM e GROUP BY u),
+        |d AS (SELECT u, list_reduce(
+        |        list_prepend({'st': CAST(0 AS BIGINT), 't0': CAST(NULL AS TIMESTAMP)},
+        |          list_transform(evs, x ->
+        |            {'st': CASE x.t WHEN 'view' THEN CAST(1 AS BIGINT)
+        |                            WHEN 'click' THEN CAST(2 AS BIGINT)
+        |                            WHEN 'purchase' THEN CAST(4 AS BIGINT)
+        |                            ELSE CAST(0 AS BIGINT) END,
+        |             't0': x.ts})),
+        |        (acc, x) -> CASE WHEN acc.st < 3
+        |            AND (x.st & (CAST(1 AS BIGINT) << CAST(acc.st AS INTEGER))) != 0
+        |          THEN {'st': CAST(acc.st + 1 AS BIGINT),
+        |                't0': CASE WHEN acc.st = 0 THEN x.t0 ELSE acc.t0 END}
+        |          ELSE acc END).st AS depth
+        |      FROM a)
+        |SELECT depth, count(*) AS n_users FROM d
+        |GROUP BY depth ORDER BY depth""".stripMargin, (s, dir) => {
       // the funnel through its SQL FACE: registered as a table-valued
       // function (GraftExtensions.tableFunctions) and invoked from a
       // plain FROM clause — the reference's own interface is SQL, so
@@ -650,7 +915,32 @@ object ExtraQueries {
           |'event_type', 'event_id', 'view,click,purchase')""".stripMargin)
     }),
 
-    "q75_funnel_repeat" -> ((s, dir) => {
+    // the REPEATED-STEP + conversion-window funnel replayed by the same
+    // greedy bitmask fold: view→click→view→purchase (view fills
+    // positions 1 AND 3 → mask 5), steps 2..4 bounded to 14 days after
+    // the event completing step 1
+    Gate("q75_funnel_repeat", """WITH e AS (SELECT user_id AS u,
+        |             struct_pack(ts := ts, id := event_id, t := event_type) AS ev
+        |           FROM events
+        |           WHERE event_type IN ('view', 'click', 'purchase')),
+        |a AS (SELECT u, list_sort(list(ev)) AS evs FROM e GROUP BY u),
+        |d AS (SELECT u, list_reduce(
+        |        list_prepend({'st': CAST(0 AS BIGINT), 't0': CAST(NULL AS TIMESTAMP)},
+        |          list_transform(evs, x ->
+        |            {'st': CASE x.t WHEN 'view' THEN CAST(5 AS BIGINT)
+        |                            WHEN 'click' THEN CAST(2 AS BIGINT)
+        |                            WHEN 'purchase' THEN CAST(8 AS BIGINT)
+        |                            ELSE CAST(0 AS BIGINT) END,
+        |             't0': x.ts})),
+        |        (acc, x) -> CASE WHEN acc.st < 4
+        |            AND (x.st & (CAST(1 AS BIGINT) << CAST(acc.st AS INTEGER))) != 0
+        |            AND (acc.st = 0 OR x.t0 <= acc.t0 + INTERVAL 14 DAY)
+        |          THEN {'st': CAST(acc.st + 1 AS BIGINT),
+        |                't0': CASE WHEN acc.st = 0 THEN x.t0 ELSE acc.t0 END}
+        |          ELSE acc END).st AS depth
+        |      FROM a)
+        |SELECT depth, count(*) AS n_users FROM d
+        |GROUP BY depth ORDER BY depth""".stripMargin, (s, dir) => {
       // REPEATED-step funnel with a conversion window: a step type may
       // recur (view→click→view→purchase — the bitmask encoding matches
       // an event against whatever position comes next, where the old
@@ -662,7 +952,24 @@ object ExtraQueries {
         Seq("view", "click", "view", "purchase"), withinDays = Some(14))
     }),
 
-    "q80_sessionize" -> ((s, dir) => {
+    // identical lag-gap flag + running session number + per-session
+    // rollup; epoch-micros integer arithmetic, no float division
+    Gate("q80_sessionize", """WITH g AS (
+        |  SELECT user_id, epoch_us(ts) AS u, event_id,
+        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+        |         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+        |      THEN 1 ELSE 0 END AS new_s
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |s AS (SELECT user_id, u,
+        |        sum(new_s) OVER (PARTITION BY user_id ORDER BY u, event_id
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+        |      FROM g)
+        |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
+        |  count(*) AS n_events, min(u) AS session_start_us,
+        |  max(u) - min(u) AS duration_us
+        |FROM s GROUP BY user_id, session_idx
+        |ORDER BY user_id, session_idx""".stripMargin, (s, dir) => {
       // gap-based sessionization (30-min inactivity window): one hash
       // shuffle on user feeds the lag-gap flag, the running session
       // number AND the per-session rollup (HashPartitioning(user)
@@ -673,7 +980,24 @@ object ExtraQueries {
         .orderBy("user_id", "session_idx")
     }),
 
-    "q81_attribution" -> ((s, dir) => {
+    // the same running struct-max fill-forward of the last touch (max
+    // ignores NULLs in both engines; struct order = (ts, type, id), so
+    // "latest" and same-instant ties resolve identically)
+    Gate("q81_attribution", """WITH e AS (SELECT user_id, epoch_us(ts) AS u, event_id, event_type
+        |           FROM events
+        |           WHERE event_type IN ('view', 'click', 'purchase')),
+        |t AS (SELECT *,
+        |        max(CASE WHEN event_type IN ('view', 'click')
+        |              THEN {'ts_us': u, 't': event_type, 'id': event_id} END)
+        |          OVER (PARTITION BY user_id ORDER BY u, event_id
+        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
+        |      FROM e)
+        |SELECT event_id AS conversion_id, user_id, touch.t AS touch_type,
+        |  touch.id AS touch_id, u - touch.ts_us AS gap_us
+        |FROM t
+        |WHERE event_type = 'purchase' AND touch IS NOT NULL
+        |  AND u - touch.ts_us <= 7 * 86400000000
+        |ORDER BY conversion_id""".stripMargin, (s, dir) => {
       // last-touch attribution: each purchase binds to the user's
       // latest preceding view/click within 7 days — the carried touch
       // is a running struct-max (portable ignore-NULLs fill-forward),
@@ -686,7 +1010,15 @@ object ExtraQueries {
         .orderBy("conversion_id")
     }),
 
-    "q82_path_transitions" -> ((s, dir) => {
+    // identical lead window over the identically-ordered timeline
+    Gate("q82_path_transitions", """WITH t AS (SELECT user_id, event_type AS from_type,
+        |    lead(event_type) OVER (
+        |      PARTITION BY user_id ORDER BY ts, event_id) AS to_type
+        |  FROM events)
+        |SELECT from_type, to_type, count(*) AS n FROM t
+        |WHERE to_type IS NOT NULL
+        |GROUP BY from_type, to_type
+        |ORDER BY from_type, to_type""".stripMargin, (s, dir) => {
       // Markov transition counts over each user's event timeline: one
       // shuffle + one lead window + a tiny-domain groupBy. The Sankey/
       // next-action primitive of product analytics.
@@ -695,7 +1027,14 @@ object ExtraQueries {
         .orderBy("from_type", "to_type")
     }),
 
-    "q72_cohort" -> ((s, dir) => {
+    // first-touch day per user, then distinct actives per (cohort, offset)
+    Gate("q72_cohort", """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
+        |           FROM events GROUP BY user_id)
+        |SELECT f.cohort_day,
+        |  date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
+        |  count(DISTINCT e.user_id) AS n_users
+        |FROM events e JOIN f USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, (s, dir) => {
       // cohort retention triangle: users bucketed by first-event day,
       // distinct actives per (cohort day, day offset). First-touch via a
       // partition-only window — the events table is scanned once and
@@ -705,7 +1044,19 @@ object ExtraQueries {
         .withColumn("day_offset", col("day_offset").cast("long"))
     }),
 
-    "q76_cohort_sketch" -> ((s, dir) => {
+    // the q72 exact triangle with the q50 tolerance scheme: exact
+    // distincts ride cross-engine; est_ok checks each engine's OWN
+    // sketch (DuckDB's approx_count_distinct vs the persisted merged
+    // DataSketches HLL) against the same exact counts
+    Gate("q76_cohort_sketch", """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
+        |           FROM events GROUP BY user_id)
+        |SELECT f.cohort_day,
+        |  date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
+        |  count(DISTINCT e.user_id) AS exact_users,
+        |  abs(approx_count_distinct(e.user_id) - count(DISTINCT e.user_id))
+        |    / count(DISTINCT e.user_id) <= 0.05 AS est_ok
+        |FROM events e JOIN f USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, (s, dir) => {
       // the 100 TB face of q72: the retention triangle served from
       // PERSISTED per-(cohort_day, day_offset) HLL sketches — cohort
       // assignment derives once (same single-scan window as q72), the
@@ -742,7 +1093,13 @@ object ExtraQueries {
         .orderBy("cohort_day", "day_offset")
     }),
 
-    "q70_snapshot_stats_inc" -> ((s, dir) => {
+    // a range scan served through the incrementally-maintained stats
+    // index must equal the plain filter over the merged truth
+    Gate("q70_snapshot_stats_inc", s"""SELECT o_orderkey,
+        |  ${Fixtures.narrowCustkeySql},
+        |  o_totalprice
+        |FROM orders WHERE o_orderkey BETWEEN 400 AND 900
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // INCREMENTAL stats maintenance on the snapshot path, end to end:
       // v1 = orders key-clustered + full stats build, v2 = narrow upsert
       // (a few files rewritten), then attachStatsIncremental REUSES the
@@ -765,7 +1122,18 @@ object ExtraQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q68_snapshot_delete" -> ((s, dir) => {
+    // pinned v1 = the pre-delete truth; v2 = DELETE FROM semantics
+    // (rows deleted only where the predicate is TRUE)
+    Gate("q68_snapshot_delete", """WITH v1 AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
+        |            FROM orders),
+        |v2 AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
+        |       FROM orders
+        |       WHERE NOT (o_orderkey BETWEEN 1000 AND 3000
+        |                  AND o_orderstatus = 'F'))
+        |SELECT CAST(1 AS BIGINT) AS snap, * FROM v1
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
+        |ORDER BY snap, o_orderkey""".stripMargin, (s, dir) => {
       // predicate DELETE on the snapshot path (DELETE FROM t WHERE ...),
       // end to end: v1 = orders key-clustered, v2 = copy-on-write delete
       // of a key band restricted by a non-key condition. The FIND scan
@@ -789,7 +1157,9 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q79_snapshot_asof" -> ((s, dir) => {
+    // the as-of read at v1's publish instant is the pre-upsert truth;
+    // the current read is the merged truth
+    Gate("q79_snapshot_asof", narrowAsOfSql, (s, dir) => {
       // AS OF TIMESTAMP time travel end-to-end: v1 = orders, v2 = a
       // narrow upsert; readAsOf at v1's COMMIT INSTANT (the #committed:
       // header stamped inside the manifest — the exact value
@@ -815,7 +1185,9 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q87_snapshot_sql" -> ((s, dir) => {
+    // the SQL-face time travel serves the same two truths as q79 —
+    // same replay
+    Gate("q87_snapshot_sql", narrowAsOfSql, (s, dir) => {
       // the lakehouse time-travel SQL FACE: graft_snapshot pins a
       // version from a plain FROM clause and graft_snapshot_asof
       // resolves an instant via the bisecting versionAsOf — one
@@ -840,7 +1212,9 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q84_snapshot_mv" -> ((s, dir) => {
+    // full recompute of the merged truth — the incrementally-refreshed
+    // view must equal it exactly (cent-integer sums, no float order)
+    Gate("q84_snapshot_mv", Fixtures.refreshedViewSql, (s, dir) => {
       // incrementally-maintained aggregate MATERIALIZED VIEW: create the
       // view at v1 (one full scan, paid once), upsert a mixed delta
       // (updates + inserts + deletes) into the table, refresh the view
@@ -861,7 +1235,29 @@ object ExtraQueries {
         .orderBy("o_custkey")
     }),
 
-    "q86_mv_multi" -> ((s, dir) => {
+    // full recompute of the multi-aggregate view: per-column cents sums
+    // and non-null-count-divided avgs, SQL NULL-sum semantics — the
+    // incrementally-refreshed view must equal it exactly
+    Gate("q86_mv_multi", """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice,
+        |    CASE WHEN o_orderkey % 7 = 0 THEN NULL
+        |         ELSE o_totalprice + 1.25 END AS o_fee
+        |  FROM orders),
+        |m AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice,
+        |    CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice + 2.50
+        |         ELSE o_fee END AS o_fee
+        |  FROM b WHERE o_orderkey % 10 != 9)
+        |SELECT o_custkey, count(*) AS n_rows,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 AS sum_o_totalprice,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 / count(o_totalprice) AS avg_o_totalprice,
+        |  CAST(sum(CAST(round(o_fee * 100) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 AS sum_o_fee,
+        |  CAST(sum(CAST(round(o_fee * 100) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 / count(o_fee) AS avg_o_fee
+        |FROM m GROUP BY o_custkey
+        |ORDER BY o_custkey""".stripMargin, (s, dir) => {
       // MULTI-AGGREGATE materialized view: one view maintains row count
       // plus per-column (non-null count, cents sum) for TWO value
       // columns, serving sum/avg each — the invertible-algebra family
@@ -895,7 +1291,22 @@ object ExtraQueries {
         .orderBy("o_custkey")
     }),
 
-    "q91_snapshot_drop" -> ((s, dir) => {
+    // v2 = merged truth WITH the status column; v4 = the post-drop,
+    // post-second-upsert truth, status gone (NULL through the union)
+    Gate("q91_snapshot_drop", s"""WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
+         |             o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")},
+         |v4 AS (
+         |  SELECT o_orderkey, o_custkey,
+         |    CASE WHEN o_orderkey % 10 = 5 THEN o_totalprice + 100.0
+         |         ELSE o_totalprice END AS o_totalprice
+         |  FROM mixed)
+         |SELECT CAST(2 AS BIGINT) AS snap, o_orderkey, o_custkey,
+         |  o_totalprice, o_orderstatus FROM mixed
+         |UNION ALL
+         |SELECT CAST(4 AS BIGINT) AS snap, o_orderkey, o_custkey,
+         |  o_totalprice, CAST(NULL AS VARCHAR) AS o_orderstatus FROM v4
+         |ORDER BY snap, o_orderkey""".stripMargin, (s, dir) => {
       // DROP COLUMN end-to-end (the pair of q62's ADD COLUMN): a
       // metadata-only commit removes o_orderstatus from the schema —
       // zero files rewritten, the pinned v2 read keeps the column WITH
@@ -930,7 +1341,8 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q93_mv_sql" -> ((s, dir) => {
+    // the SQL-served view equals q84's full recompute — same replay
+    Gate("q93_mv_sql", Fixtures.refreshedViewSql, (s, dir) => {
       // the materialized view's SQL FACE: build + refresh the q84 view
       // through the Scala API, then SERVE it from a plain FROM clause —
       // `SELECT ... FROM graft_mv('<dir>')` returns the SAME analyzed
@@ -950,7 +1362,8 @@ object ExtraQueries {
            |ORDER BY o_custkey""".stripMargin)
     }),
 
-    "q94_changes_sql" -> ((s, dir) => {
+    // the SQL-face CDC feed equals q65's true-changes replay
+    Gate("q94_changes_sql", changeFeedSql, (s, dir) => {
       // the CDC read's SQL FACE (`table_changes` from a FROM clause):
       // the q65 change mix committed as v2, then
       // graft_snapshot_changes('<dir>', key, 1, 2, 'commit_v') — the
@@ -973,7 +1386,20 @@ object ExtraQueries {
            |ORDER BY o_orderkey, _change_type""".stripMargin)
     }),
 
-    "q92_snapshot_rename" -> ((s, dir) => {
+    // v1 = original truth under the OLD name; v3 = post-rename,
+    // post-upsert truth — un-updated rows must carry their ORIGINAL
+    // values under the new name (a value-losing rename NULLs them)
+    Gate("q92_snapshot_rename", """WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
+        |             o_totalprice FROM orders)
+        |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
+        |  o_totalprice, o_orderstatus AS status_out FROM b
+        |UNION ALL
+        |SELECT CAST(3 AS BIGINT) AS snap, o_orderkey, o_custkey,
+        |  o_totalprice,
+        |  CASE WHEN o_orderkey % 10 = 3 THEN 'X'
+        |       ELSE o_orderstatus END AS status_out
+        |FROM b
+        |ORDER BY snap, o_orderkey""".stripMargin, (s, dir) => {
       // RENAME COLUMN — value-preserving (drop+add would NULL every old
       // row; a metadata-only rename is impossible under by-name file
       // resolution, so this is an honest full rewrite, the compact
@@ -1004,7 +1430,14 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q89_cohort_sql" -> ((s, dir) => {
+    // the SQL face serves q72's triangle — same replay
+    Gate("q89_cohort_sql", """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
+        |           FROM events GROUP BY user_id)
+        |SELECT f.cohort_day,
+        |  date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
+        |  count(DISTINCT e.user_id) AS n_users
+        |FROM events e JOIN f USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, (s, dir) => {
       // the cohort triangle through its SQL FACE (graft_cohort TVF —
       // the q85 pattern): the builder resolves the view and returns the
       // SAME analyzed plan the q72 Dataset path builds; one code path,
@@ -1019,7 +1452,30 @@ object ExtraQueries {
           |ORDER BY cohort_day, day_offset""".stripMargin)
     }),
 
-    "q90_resample_sql" -> ((s, dir) => {
+    // the SQL face serves q74's dense grid — same replay
+    Gate("q90_resample_sql", """WITH e AS (SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
+        |             "value"::DOUBLE AS v FROM events),
+        |a AS (SELECT series, bucket,
+        |        CASE WHEN count(v) > 0 THEN
+        |          list_reduce(list_prepend(0.0,
+        |              list_sort(list(v) FILTER (WHERE v IS NOT NULL))),
+        |            (x, y) -> x + y) / count(v)
+        |        END AS avg_v,
+        |        count(*) AS n
+        |      FROM e GROUP BY series, bucket),
+        |b AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM a),
+        |sp AS (SELECT s.series, g.bucket
+        |       FROM (SELECT DISTINCT series FROM a) s
+        |       CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b),
+        |                     (SELECT hi FROM b), INTERVAL 1 HOUR)) AS bucket) g),
+        |j AS (SELECT sp.series, sp.bucket, coalesce(a.n, 0) AS n, a.avg_v
+        |      FROM sp LEFT JOIN a USING (series, bucket))
+        |SELECT series, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
+        |  CAST(n AS BIGINT) AS n, round(avg_v, 4) AS avg_v,
+        |  round(last_value(avg_v IGNORE NULLS) OVER (
+        |    PARTITION BY series ORDER BY bucket
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS avg_v_ff
+        |FROM j ORDER BY series, bucket""".stripMargin, (s, dir) => {
       // the resample/forward-fill through its SQL FACE (graft_resample
       // TVF): identical plan to q74's Dataset path; the outer SELECT
       // applies the q74 gate's formatting (string bucket, rounded
@@ -1033,7 +1489,27 @@ object ExtraQueries {
           |ORDER BY series, bucket""".stripMargin)
     }),
 
-    "q88_mv_multikey" -> ((s, dir) => {
+    // full recompute of the multi-key view: group by the (cust bucket,
+    // priority class) tuple after replaying the group-moving update and
+    // the deletes — the incrementally-refreshed view must equal it
+    // exactly (a missed pre-image subtraction on the old group or a
+    // lost post-image on the new one mismatches)
+    Gate("q88_mv_multikey", """WITH b AS (SELECT o_orderkey, o_custkey % 100 AS cust_b,
+        |    substring(o_orderpriority, 1, 1) AS prio, o_totalprice
+        |  FROM orders),
+        |m AS (
+        |  SELECT o_orderkey, cust_b,
+        |    CASE WHEN o_orderkey % 10 = 3 THEN '9' ELSE prio END AS prio,
+        |    CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice + 250.0
+        |         ELSE o_totalprice END AS o_totalprice
+        |  FROM b WHERE o_orderkey % 10 != 8)
+        |SELECT cust_b, prio, count(*) AS n_rows,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 AS sum_o_totalprice,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 / count(o_totalprice) AS avg_o_totalprice
+        |FROM m GROUP BY cust_b, prio
+        |ORDER BY cust_b, prio""".stripMargin, (s, dir) => {
       // MULTI-COLUMN group key: the view groups by the (cust bucket,
       // priority class) TUPLE, each key stored under its own name. The
       // update MOVES rows between groups (prio rewritten to '9'), so the
@@ -1069,7 +1545,16 @@ object ExtraQueries {
         .orderBy("cust_b", "prio")
     }),
 
-    "q83_snapshot_clone" -> ((s, dir) => {
+    // source = pre-upsert truth (write independence), clone = merged
+    Gate("q83_snapshot_clone", """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
+        |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
+        |  o_totalprice FROM b
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT) AS snap, o_orderkey, o_custkey,
+        |  CASE WHEN o_orderkey % 10 = 4 THEN o_totalprice + 100000.0
+        |       ELSE o_totalprice END AS o_totalprice
+        |FROM b
+        |ORDER BY snap, o_orderkey""".stripMargin, (s, dir) => {
       // metadata-only SHALLOW CLONE end-to-end: clone = src's v1 file
       // list verbatim (zero data copied), then an upsert on the CLONE —
       // the source must keep serving the pre-upsert truth (write
@@ -1095,7 +1580,14 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q78_snapshot_vacuum" -> ((s, dir) => {
+    // the post-vacuum current version must be the merged truth — a
+    // vacuum that deleted a live (reused) file loses rows or fails the
+    // read outright
+    Gate("q78_snapshot_vacuum", s"""SELECT o_orderkey,
+        |  ${Fixtures.narrowCustkeySql},
+        |  o_totalprice
+        |FROM orders
+        |ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // VACUUM end-to-end: v1 = orders key-clustered, v2 = narrow upsert
       // (a few files rewritten, most REUSED by both manifests), then
       // vacuum(keepLast = 1, grace = 0 — single writer, provably none in
@@ -1117,7 +1609,15 @@ object ExtraQueries {
         .orderBy("o_orderkey")
     }),
 
-    "q69_snapshot_restore" -> ((s, dir) => {
+    // v2 stays the post-delete truth after the restore (history is
+    // preserved); v3 = v1 verbatim (the undo is a manifest-only commit)
+    Gate("q69_snapshot_restore", """WITH v2 AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |            WHERE o_orderkey NOT BETWEEN 1000 AND 3000),
+        |v3 AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
+        |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
+        |UNION ALL
+        |SELECT CAST(3 AS BIGINT) AS snap, * FROM v3
+        |ORDER BY snap, o_orderkey""".stripMargin, (s, dir) => {
       // RESTORE VERSION on the snapshot path: v1 = orders, v2 = delete of
       // a key band, v3 = restore(v1) — a manifest-only commit that
       // re-pins v1's immutable files as the new current version (no data
@@ -1141,7 +1641,15 @@ object ExtraQueries {
         .orderBy("snap", "o_orderkey")
     }),
 
-    "q66_page_keyset_micros" -> ((s, dir) => {
+    // the timestamp keyset walk's final pages must equal the offset
+    // pages exactly — seek is a pure execution-strategy change
+    Gate("q66_page_keyset_micros", """WITH b AS (SELECT ts, event_id, "value" FROM events),
+        |a AS (SELECT * FROM b ORDER BY ts LIMIT 100 OFFSET 1000),
+        |d AS (SELECT * FROM b ORDER BY ts DESC LIMIT 100 OFFSET 200)
+        |SELECT 'asc' AS dirn, * FROM a
+        |UNION ALL
+        |SELECT 'desc' AS dirn, * FROM d
+        |ORDER BY dirn, ts""".stripMargin, (s, dir) => {
       // q63/q64's FILE-BOUNDED keyset pagination under a TIMESTAMP key —
       // the event-time paging shape (live dashboards walking an
       // ingestion-time-clustered table): cursors are the key's timestamp
@@ -1164,7 +1672,10 @@ object ExtraQueries {
         .orderBy("dirn", "ts")
     }),
 
-    "q65_snapshot_changes" -> ((s, dir) => {
+    // the CDC feed replayed directly from orders: the oracle contains
+    // ONLY the true changes, so every carry-over row the copy-on-write
+    // rewrite moved into new files must be absent from the Spark side
+    Gate("q65_snapshot_changes", changeFeedSql, (s, dir) => {
       // CDC READ end-to-end: the q57 change mix (updates ≡3 mod 10,
       // tombstones ≡7, inserts at key+10M for ≡1) committed as v2, then
       // SnapshotTable.changes(v1→v2) — the Delta-CDF-style feed derived
@@ -1188,7 +1699,26 @@ object ExtraQueries {
         .orderBy("o_orderkey", "_change_type")
     }),
 
-    "q60_snapshot_strkey" -> ((s, dir) => {
+    // the string-key snapshot: v1 and the post-upsert v2 replayed from
+    // orders with the same zero-padded key derivation
+    Gate("q60_snapshot_strkey", """WITH b AS (
+        |  SELECT 'K' || lpad(CAST(o_orderkey AS VARCHAR), 9, '0') AS okey,
+        |    o_custkey, o_totalprice, o_orderkey
+        |  FROM orders),
+        |v2 AS (
+        |  SELECT okey,
+        |    CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
+        |         ELSE o_custkey END AS o_custkey,
+        |    o_totalprice
+        |  FROM b WHERE o_orderkey % 10 != 7
+        |  UNION ALL
+        |  SELECT 'Z' || lpad(CAST(o_orderkey AS VARCHAR), 9, '0') AS okey,
+        |    o_custkey, o_totalprice
+        |  FROM b WHERE o_orderkey % 10 = 1)
+        |SELECT CAST(1 AS BIGINT) AS snap, okey, o_custkey, o_totalprice FROM b
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT) AS snap, okey, o_custkey, o_totalprice FROM v2
+        |ORDER BY snap, okey""".stripMargin, (s, dir) => {
       // q57's machinery under a STRING merge key: file pruning rides the
       // parquet BINARY/UTF8 footer stats, folded as STRING bounds
       // (unsigned-byte order on both sides) instead of the INT64 ones.
@@ -1223,7 +1753,24 @@ object ExtraQueries {
         .orderBy("snap", "okey")
     }),
 
-    "q61_snapshot_datekey" -> ((s, dir) => {
+    Gate("q61_snapshot_datekey", """WITH b AS (
+        |  SELECT DATE '1990-01-01' + CAST(o_orderkey AS INT) AS dkey,
+        |    o_custkey, o_totalprice, o_orderkey
+        |  FROM orders),
+        |v2 AS (
+        |  SELECT dkey,
+        |    CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
+        |         ELSE o_custkey END AS o_custkey,
+        |    o_totalprice
+        |  FROM b WHERE o_orderkey % 10 != 7
+        |  UNION ALL
+        |  SELECT DATE '1990-01-01' + CAST(o_orderkey + 1000000 AS INT) AS dkey,
+        |    o_custkey, o_totalprice
+        |  FROM b WHERE o_orderkey % 10 = 1)
+        |SELECT CAST(1 AS BIGINT) AS snap, dkey, o_custkey, o_totalprice FROM b
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT) AS snap, dkey, o_custkey, o_totalprice FROM v2
+        |ORDER BY snap, dkey""".stripMargin, (s, dir) => {
       // q57's machinery under a DATE merge key: parquet stores DATE as
       // INT32 days-since-epoch, so file pruning rides the SAME long
       // footer-stats fold as integer keys — only the change keys get
@@ -1258,7 +1805,32 @@ object ExtraQueries {
         .orderBy("snap", "dkey")
     }),
 
-    "q48_zorder" -> ((s, dir) => {
+    // full replay of the z-order math: equal-width bucket + Morton
+    // interleave (rendered by the same Layout helpers the Spark side
+    // mirrors), then the per-z-block aggregate over the round-tripped
+    // files' content
+    Gate("q48_zorder", {
+      import graft.operators.Layout.{zBucketSql, zInterleaveSql}
+      s"""WITH b AS (
+         |  SELECT min(l_partkey) AS pmin, max(l_partkey) - min(l_partkey) + 1 AS pspan,
+         |         min(l_suppkey) AS smin, max(l_suppkey) - min(l_suppkey) + 1 AS sspan
+         |  FROM lineitem
+         |), bk AS (
+         |  SELECT l_partkey, l_suppkey,
+         |    ${zBucketSql("l_partkey", "pmin", "pspan", 8)} AS bx,
+         |    ${zBucketSql("l_suppkey", "smin", "sspan", 8)} AS byy
+         |  FROM lineitem, b
+         |), z AS (
+         |  SELECT l_partkey, l_suppkey,
+         |    ${zInterleaveSql("bx", "byy", 8)} AS z
+         |  FROM bk
+         |)
+         |SELECT CAST(floor(z / 256) AS BIGINT) AS z_block, count(*) AS n,
+         |  CAST(sum(l_partkey) AS BIGINT) AS sum_partkey,
+         |  CAST(sum(l_suppkey) AS BIGINT) AS sum_suppkey,
+         |  min(z) AS z_min, max(z) AS z_max
+         |FROM z GROUP BY z_block ORDER BY z_block""".stripMargin
+    }, (s, dir) => {
       // z-order (Morton) clustered write on (l_partkey, l_suppkey) —
       // the multi-column data-skipping layout (per-file bounding boxes
       // tight in BOTH columns; skipping effectiveness is spec-asserted
@@ -1279,7 +1851,24 @@ object ExtraQueries {
         .orderBy("z_block")
     }),
 
-    "q50_sketch_rollup" -> ((s, dir) => {
+    // exact counts are cross-engine; the _ok booleans follow the
+    // q18_approx scheme (each engine validates its own sketch — Spark's
+    // persisted+merged DataSketches HLL vs DuckDB's approx_count_distinct,
+    // both comfortably inside the 5% band)
+    Gate("q50_sketch_rollup", """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, user_id FROM events),
+        |d AS (
+        |  SELECT day, count(*) AS n_events,
+        |    count(DISTINCT user_id) AS exact_users,
+        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
+        |      / count(DISTINCT user_id) <= 0.05 AS day_ok
+        |  FROM ev GROUP BY day),
+        |a AS (
+        |  SELECT 'ALL' AS day, count(*) AS n_events,
+        |    count(DISTINCT user_id) AS exact_users,
+        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
+        |      / count(DISTINCT user_id) <= 0.05 AS day_ok
+        |  FROM ev)
+        |SELECT * FROM d UNION ALL SELECT * FROM a ORDER BY day""".stripMargin, (s, dir) => {
       // incremental distinct-count maintenance — the 100 TB pattern where
       // a pipeline keeps a tiny per-partition SKETCH table and answers
       // "distinct users over any day range" by merging persisted sketches
@@ -1314,7 +1903,10 @@ object ExtraQueries {
       perDay.unionByName(allRow).orderBy("day")
     }),
 
-    "q49_compaction" -> ((s, dir) => {
+    Gate("q49_compaction", """SELECT source, count(*) AS n_docs,
+        |  CAST(sum(CAST(concat('0x', substring(md5(text), 1, 8)) AS BIGINT)) AS BIGINT) AS text_checksum,
+        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin, (s, dir) => {
       // small-file compaction: 64 fragment files rewritten to
       // ceil(n/target) bounded files (file count + per-file row cap are
       // spec-asserted in LayoutSpec). The gate hashes the compacted
@@ -1335,7 +1927,17 @@ object ExtraQueries {
         .orderBy("source")
     }),
 
-    "q53_topk_rollup" -> ((s, dir) => {
+    // the exact top-10 is cross-engine; bracket_ok/n_ok are TRUE by the
+    // frequency sketch's deterministic guarantee (lb <= true <= ub
+    // always) — DuckDB asserts the same literals the Spark side must
+    // reproduce by actually satisfying the bracket
+    Gate("q53_topk_rollup", """WITH c AS (SELECT user_id, count(*) AS exact_cnt FROM events GROUP BY user_id),
+        |r AS (SELECT user_id, exact_cnt,
+        |        row_number() OVER (ORDER BY exact_cnt DESC, user_id) AS rank
+        |      FROM c)
+        |SELECT CAST(rank AS BIGINT) AS rank, user_id, exact_cnt,
+        |  TRUE AS bracket_ok, TRUE AS n_ok
+        |FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin, (s, dir) => {
       // heavy-hitters rollup — the FREQUENCY member of the
       // mergeable-summaries trio (q50 distinct counts, q52 quantiles):
       // per-day frequent-items sketches of user_id (custom
@@ -1372,7 +1974,40 @@ object ExtraQueries {
         .orderBy("rank")
     }),
 
-    "q52_quantile_rollup" -> ((s, dir) => {
+    // exact medians are cross-engine (q25 parity); the _ok booleans follow
+    // the q18/q50 scheme — each engine validates its own sketch (Spark's
+    // persisted+merged KLL vs DuckDB's t-digest approx_quantile), both
+    // checked as the TRUE rank of their estimate vs the bound
+    Gate("q52_quantile_rollup", """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, "value" AS v FROM events),
+        |d AS (
+        |  SELECT day, count(*) AS n_events,
+        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
+        |    approx_quantile(v, 0.5) AS est
+        |  FROM ev GROUP BY day),
+        |dr AS (
+        |  SELECT d.day, d.n_events, d.exact_p50,
+        |    count(*) FILTER (WHERE ev.v <= d.est)::DOUBLE / count(*)::DOUBLE AS est_rank
+        |  FROM ev JOIN d USING (day)
+        |  GROUP BY d.day, d.n_events, d.exact_p50),
+        |a AS (
+        |  SELECT count(*) AS n_events,
+        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
+        |    approx_quantile(v, 0.5) AS est
+        |  FROM ev),
+        |ar AS (
+        |  SELECT a.n_events, a.exact_p50,
+        |    count(*) FILTER (WHERE ev.v <= a.est)::DOUBLE / count(*)::DOUBLE AS est_rank
+        |  FROM ev CROSS JOIN a
+        |  GROUP BY a.n_events, a.exact_p50)
+        |SELECT day, n_events, exact_p50,
+        |  TRUE AS n_ok,
+        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
+        |FROM dr
+        |UNION ALL
+        |SELECT 'ALL' AS day, n_events, exact_p50, TRUE AS n_ok,
+        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
+        |FROM ar
+        |ORDER BY day""".stripMargin, (s, dir) => {
       // incremental QUANTILE maintenance — the percentile member of the
       // mergeable-summaries pattern (q50 covers distinct counts): per-day
       // KLL sketches of the event value (custom TypedImperativeAggregate
@@ -1427,7 +2062,13 @@ object ExtraQueries {
       perDay.unionByName(allRow).orderBy("day")
     }),
 
-    "q51_skipping_index" -> ((s, dir) => {
+    // the pruned read must equal the plain filter — the skipping itself
+    // is an I/O property (spec-asserted), never a semantic one
+    Gate("q51_skipping_index", """SELECT l_returnflag, count(*) AS n,
+        |  CAST(sum(l_partkey) AS BIGINT) AS sum_partkey,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem WHERE l_partkey BETWEEN 100 AND 300
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin, (s, dir) => {
       // file-level min/max data skipping, end-to-end: range-cluster
       // lineitem on l_partkey into 16 files, build the per-file footer
       // stats table (footer-only reads — no data scan), then answer a
@@ -1490,864 +2131,4 @@ object ExtraQueries {
       |  o_custkey + 1000000 AS o_custkey, o_totalprice
       |FROM b WHERE o_orderkey % 10 = 3
       |ORDER BY o_orderkey, _change_type""".stripMargin
-
-  val oracleSql: Map[String, String] = Map(
-    // full replay of the z-order math: equal-width bucket + Morton
-    // interleave (rendered by the same Layout helpers the Spark side
-    // mirrors), then the per-z-block aggregate over the round-tripped
-    // files' content
-    "q48_zorder" -> {
-      import graft.operators.Layout.{zBucketSql, zInterleaveSql}
-      s"""WITH b AS (
-         |  SELECT min(l_partkey) AS pmin, max(l_partkey) - min(l_partkey) + 1 AS pspan,
-         |         min(l_suppkey) AS smin, max(l_suppkey) - min(l_suppkey) + 1 AS sspan
-         |  FROM lineitem
-         |), bk AS (
-         |  SELECT l_partkey, l_suppkey,
-         |    ${zBucketSql("l_partkey", "pmin", "pspan", 8)} AS bx,
-         |    ${zBucketSql("l_suppkey", "smin", "sspan", 8)} AS byy
-         |  FROM lineitem, b
-         |), z AS (
-         |  SELECT l_partkey, l_suppkey,
-         |    ${zInterleaveSql("bx", "byy", 8)} AS z
-         |  FROM bk
-         |)
-         |SELECT CAST(floor(z / 256) AS BIGINT) AS z_block, count(*) AS n,
-         |  CAST(sum(l_partkey) AS BIGINT) AS sum_partkey,
-         |  CAST(sum(l_suppkey) AS BIGINT) AS sum_suppkey,
-         |  min(z) AS z_min, max(z) AS z_max
-         |FROM z GROUP BY z_block ORDER BY z_block""".stripMargin
-    },
-
-    // exact counts are cross-engine; the _ok booleans follow the
-    // q18_approx scheme (each engine validates its own sketch — Spark's
-    // persisted+merged DataSketches HLL vs DuckDB's approx_count_distinct,
-    // both comfortably inside the 5% band)
-    "q50_sketch_rollup" ->
-      """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, user_id FROM events),
-        |d AS (
-        |  SELECT day, count(*) AS n_events,
-        |    count(DISTINCT user_id) AS exact_users,
-        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
-        |      / count(DISTINCT user_id) <= 0.05 AS day_ok
-        |  FROM ev GROUP BY day),
-        |a AS (
-        |  SELECT 'ALL' AS day, count(*) AS n_events,
-        |    count(DISTINCT user_id) AS exact_users,
-        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
-        |      / count(DISTINCT user_id) <= 0.05 AS day_ok
-        |  FROM ev)
-        |SELECT * FROM d UNION ALL SELECT * FROM a ORDER BY day""".stripMargin,
-
-    // the exact top-10 is cross-engine; bracket_ok/n_ok are TRUE by the
-    // frequency sketch's deterministic guarantee (lb <= true <= ub
-    // always) — DuckDB asserts the same literals the Spark side must
-    // reproduce by actually satisfying the bracket
-    "q53_topk_rollup" ->
-      """WITH c AS (SELECT user_id, count(*) AS exact_cnt FROM events GROUP BY user_id),
-        |r AS (SELECT user_id, exact_cnt,
-        |        row_number() OVER (ORDER BY exact_cnt DESC, user_id) AS rank
-        |      FROM c)
-        |SELECT CAST(rank AS BIGINT) AS rank, user_id, exact_cnt,
-        |  TRUE AS bracket_ok, TRUE AS n_ok
-        |FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    // exact medians are cross-engine (q25 parity); the _ok booleans follow
-    // the q18/q50 scheme — each engine validates its own sketch (Spark's
-    // persisted+merged KLL vs DuckDB's t-digest approx_quantile), both
-    // checked as the TRUE rank of their estimate vs the bound
-    "q52_quantile_rollup" ->
-      """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, "value" AS v FROM events),
-        |d AS (
-        |  SELECT day, count(*) AS n_events,
-        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
-        |    approx_quantile(v, 0.5) AS est
-        |  FROM ev GROUP BY day),
-        |dr AS (
-        |  SELECT d.day, d.n_events, d.exact_p50,
-        |    count(*) FILTER (WHERE ev.v <= d.est)::DOUBLE / count(*)::DOUBLE AS est_rank
-        |  FROM ev JOIN d USING (day)
-        |  GROUP BY d.day, d.n_events, d.exact_p50),
-        |a AS (
-        |  SELECT count(*) AS n_events,
-        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
-        |    approx_quantile(v, 0.5) AS est
-        |  FROM ev),
-        |ar AS (
-        |  SELECT a.n_events, a.exact_p50,
-        |    count(*) FILTER (WHERE ev.v <= a.est)::DOUBLE / count(*)::DOUBLE AS est_rank
-        |  FROM ev CROSS JOIN a
-        |  GROUP BY a.n_events, a.exact_p50)
-        |SELECT day, n_events, exact_p50,
-        |  TRUE AS n_ok,
-        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
-        |FROM dr
-        |UNION ALL
-        |SELECT 'ALL' AS day, n_events, exact_p50, TRUE AS n_ok,
-        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
-        |FROM ar
-        |ORDER BY day""".stripMargin,
-
-    // the pruned read must equal the plain filter — the skipping itself
-    // is an I/O property (spec-asserted), never a semantic one
-    "q51_skipping_index" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  CAST(sum(l_partkey) AS BIGINT) AS sum_partkey,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem WHERE l_partkey BETWEEN 100 AND 300
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q49_compaction" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CAST(concat('0x', substring(md5(text), 1, 8)) AS BIGINT)) AS BIGINT) AS text_checksum,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    "q47_page_last" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey
-        |LIMIT 37
-        |OFFSET (SELECT 37 * (CAST(ceil(count(*) / 37.0) AS BIGINT) - 1)
-        |        FROM orders)""".stripMargin,
-
-    // both snapshots replayed from orders alone: v1 is the base, v3 the
-    // merged truth (updates/deletes/inserts by key mod 10) — commit,
-    // file-pruned merge and compaction must all be content-invisible
-    "q57_snapshot" ->
-      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
-         |SELECT CAST(1 AS BIGINT) AS snap, * FROM b
-         |UNION ALL
-         |SELECT CAST(3 AS BIGINT) AS snap, * FROM mixed
-         |ORDER BY snap, o_orderkey""".stripMargin,
-
-    // the keyset walk's page 11 must equal the offset page exactly —
-    // seek is a pure execution-strategy change, never a semantic one
-    "q56_page_keyset" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey
-        |LIMIT 100 OFFSET 1000""".stripMargin,
-
-    // schema evolution: v1 (old schema, read through an explicit NULL
-    // column) and the evolved v2 replayed from orders — changed rows
-    // carry the new column's values (inserts sit at key + 10M), every
-    // surviving base row NULL
-    "q62_snapshot_evolve" ->
-      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
-         |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
-         |  o_totalprice, CAST(NULL AS VARCHAR) AS o_flag FROM b
-         |UNION ALL
-         |SELECT CAST(2 AS BIGINT) AS snap, *,
-         |  CASE WHEN o_orderkey % 10 = 3 THEN 'upd'
-         |       WHEN o_orderkey >= 10000000 THEN 'ins' END AS o_flag
-         |FROM mixed
-         |ORDER BY snap, o_orderkey""".stripMargin,
-
-    // identical sorted-fold means, identical dense spine, identical ffill
-    "q74_resample" ->
-      """WITH e AS (SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
-        |             "value"::DOUBLE AS v FROM events),
-        |a AS (SELECT series, bucket,
-        |        CASE WHEN count(v) > 0 THEN
-        |          list_reduce(list_prepend(0.0,
-        |              list_sort(list(v) FILTER (WHERE v IS NOT NULL))),
-        |            (x, y) -> x + y) / count(v)
-        |        END AS avg_v,
-        |        count(*) AS n
-        |      FROM e GROUP BY series, bucket),
-        |b AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM a),
-        |sp AS (SELECT s.series, g.bucket
-        |       FROM (SELECT DISTINCT series FROM a) s
-        |       CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b),
-        |                     (SELECT hi FROM b), INTERVAL 1 HOUR)) AS bucket) g),
-        |j AS (SELECT sp.series, sp.bucket, coalesce(a.n, 0) AS n, a.avg_v
-        |      FROM sp LEFT JOIN a USING (series, bucket))
-        |SELECT series, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
-        |  CAST(n AS BIGINT) AS n, round(avg_v, 4) AS avg_v,
-        |  round(last_value(avg_v IGNORE NULLS) OVER (
-        |    PARTITION BY series ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS avg_v_ff
-        |FROM j ORDER BY series, bucket""".stripMargin,
-
-    // both lookups served through the INCREMENTALLY-maintained bloom
-    // index must equal the plain equality filters over the merged truth
-    "q77_point_bloom_inc" ->
-      """WITH m AS (SELECT o_orderkey,
-        |  CASE WHEN o_orderkey BETWEEN 500 AND 700
-        |       THEN 9999999 ELSE o_custkey END AS o_custkey,
-        |  o_totalprice FROM orders)
-        |SELECT o_orderkey, o_custkey, o_totalprice FROM m
-        |WHERE o_custkey IN (9999999, 97)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // full recompute of the merged truth — the incrementally-refreshed
-    // view must equal it exactly (cent-integer sums, no float order)
-    "q84_snapshot_mv" ->
-      Fixtures.refreshedViewSql,
-
-    // full recompute of the multi-aggregate view: per-column cents sums
-    // and non-null-count-divided avgs, SQL NULL-sum semantics — the
-    // incrementally-refreshed view must equal it exactly
-    "q86_mv_multi" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice,
-        |    CASE WHEN o_orderkey % 7 = 0 THEN NULL
-        |         ELSE o_totalprice + 1.25 END AS o_fee
-        |  FROM orders),
-        |m AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice + 2.50
-        |         ELSE o_fee END AS o_fee
-        |  FROM b WHERE o_orderkey % 10 != 9)
-        |SELECT o_custkey, count(*) AS n_rows,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_o_totalprice,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 / count(o_totalprice) AS avg_o_totalprice,
-        |  CAST(sum(CAST(round(o_fee * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_o_fee,
-        |  CAST(sum(CAST(round(o_fee * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 / count(o_fee) AS avg_o_fee
-        |FROM m GROUP BY o_custkey
-        |ORDER BY o_custkey""".stripMargin,
-
-    // full recompute of the multi-key view: group by the (cust bucket,
-    // priority class) tuple after replaying the group-moving update and
-    // the deletes — the incrementally-refreshed view must equal it
-    // exactly (a missed pre-image subtraction on the old group or a
-    // lost post-image on the new one mismatches)
-    "q88_mv_multikey" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey % 100 AS cust_b,
-        |    substring(o_orderpriority, 1, 1) AS prio, o_totalprice
-        |  FROM orders),
-        |m AS (
-        |  SELECT o_orderkey, cust_b,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN '9' ELSE prio END AS prio,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice + 250.0
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 8)
-        |SELECT cust_b, prio, count(*) AS n_rows,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_o_totalprice,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 / count(o_totalprice) AS avg_o_totalprice
-        |FROM m GROUP BY cust_b, prio
-        |ORDER BY cust_b, prio""".stripMargin,
-
-    // source = pre-upsert truth (write independence), clone = merged
-    "q83_snapshot_clone" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
-        |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
-        |  o_totalprice FROM b
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS snap, o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey % 10 = 4 THEN o_totalprice + 100000.0
-        |       ELSE o_totalprice END AS o_totalprice
-        |FROM b
-        |ORDER BY snap, o_orderkey""".stripMargin,
-
-    // the bloom-pruned point lookup must equal the plain equality filter
-    "q73_point_bloom" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders WHERE o_custkey = 97
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // identical state machine over the identically-sorted per-user list:
-    // strict-sequence funnel depth (bitmask step encoding — the same
-    // fold the Spark side runs), then exact depth histogram
-    "q71_funnel" ->
-      """WITH e AS (SELECT user_id AS u,
-        |             struct_pack(ts := ts, id := event_id, t := event_type) AS ev
-        |           FROM events
-        |           WHERE event_type IN ('view', 'click', 'purchase')),
-        |a AS (SELECT u, list_sort(list(ev)) AS evs FROM e GROUP BY u),
-        |d AS (SELECT u, list_reduce(
-        |        list_prepend({'st': CAST(0 AS BIGINT), 't0': CAST(NULL AS TIMESTAMP)},
-        |          list_transform(evs, x ->
-        |            {'st': CASE x.t WHEN 'view' THEN CAST(1 AS BIGINT)
-        |                            WHEN 'click' THEN CAST(2 AS BIGINT)
-        |                            WHEN 'purchase' THEN CAST(4 AS BIGINT)
-        |                            ELSE CAST(0 AS BIGINT) END,
-        |             't0': x.ts})),
-        |        (acc, x) -> CASE WHEN acc.st < 3
-        |            AND (x.st & (CAST(1 AS BIGINT) << CAST(acc.st AS INTEGER))) != 0
-        |          THEN {'st': CAST(acc.st + 1 AS BIGINT),
-        |                't0': CASE WHEN acc.st = 0 THEN x.t0 ELSE acc.t0 END}
-        |          ELSE acc END).st AS depth
-        |      FROM a)
-        |SELECT depth, count(*) AS n_users FROM d
-        |GROUP BY depth ORDER BY depth""".stripMargin,
-
-    // the SQL-face funnel is the same plan as q71 — same oracle replay
-    "q85_funnel_sql" ->
-      """WITH e AS (SELECT user_id AS u,
-        |             struct_pack(ts := ts, id := event_id, t := event_type) AS ev
-        |           FROM events
-        |           WHERE event_type IN ('view', 'click', 'purchase')),
-        |a AS (SELECT u, list_sort(list(ev)) AS evs FROM e GROUP BY u),
-        |d AS (SELECT u, list_reduce(
-        |        list_prepend({'st': CAST(0 AS BIGINT), 't0': CAST(NULL AS TIMESTAMP)},
-        |          list_transform(evs, x ->
-        |            {'st': CASE x.t WHEN 'view' THEN CAST(1 AS BIGINT)
-        |                            WHEN 'click' THEN CAST(2 AS BIGINT)
-        |                            WHEN 'purchase' THEN CAST(4 AS BIGINT)
-        |                            ELSE CAST(0 AS BIGINT) END,
-        |             't0': x.ts})),
-        |        (acc, x) -> CASE WHEN acc.st < 3
-        |            AND (x.st & (CAST(1 AS BIGINT) << CAST(acc.st AS INTEGER))) != 0
-        |          THEN {'st': CAST(acc.st + 1 AS BIGINT),
-        |                't0': CASE WHEN acc.st = 0 THEN x.t0 ELSE acc.t0 END}
-        |          ELSE acc END).st AS depth
-        |      FROM a)
-        |SELECT depth, count(*) AS n_users FROM d
-        |GROUP BY depth ORDER BY depth""".stripMargin,
-
-    // the REPEATED-STEP + conversion-window funnel replayed by the same
-    // greedy bitmask fold: view→click→view→purchase (view fills
-    // positions 1 AND 3 → mask 5), steps 2..4 bounded to 14 days after
-    // the event completing step 1
-    "q75_funnel_repeat" ->
-      """WITH e AS (SELECT user_id AS u,
-        |             struct_pack(ts := ts, id := event_id, t := event_type) AS ev
-        |           FROM events
-        |           WHERE event_type IN ('view', 'click', 'purchase')),
-        |a AS (SELECT u, list_sort(list(ev)) AS evs FROM e GROUP BY u),
-        |d AS (SELECT u, list_reduce(
-        |        list_prepend({'st': CAST(0 AS BIGINT), 't0': CAST(NULL AS TIMESTAMP)},
-        |          list_transform(evs, x ->
-        |            {'st': CASE x.t WHEN 'view' THEN CAST(5 AS BIGINT)
-        |                            WHEN 'click' THEN CAST(2 AS BIGINT)
-        |                            WHEN 'purchase' THEN CAST(8 AS BIGINT)
-        |                            ELSE CAST(0 AS BIGINT) END,
-        |             't0': x.ts})),
-        |        (acc, x) -> CASE WHEN acc.st < 4
-        |            AND (x.st & (CAST(1 AS BIGINT) << CAST(acc.st AS INTEGER))) != 0
-        |            AND (acc.st = 0 OR x.t0 <= acc.t0 + INTERVAL 14 DAY)
-        |          THEN {'st': CAST(acc.st + 1 AS BIGINT),
-        |                't0': CASE WHEN acc.st = 0 THEN x.t0 ELSE acc.t0 END}
-        |          ELSE acc END).st AS depth
-        |      FROM a)
-        |SELECT depth, count(*) AS n_users FROM d
-        |GROUP BY depth ORDER BY depth""".stripMargin,
-
-    // identical lag-gap flag + running session number + per-session
-    // rollup; epoch-micros integer arithmetic, no float division
-    "q80_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, epoch_us(ts) AS u, event_id,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |      THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, u,
-        |        sum(new_s) OVER (PARTITION BY user_id ORDER BY u, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |      FROM g)
-        |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-        |  count(*) AS n_events, min(u) AS session_start_us,
-        |  max(u) - min(u) AS duration_us
-        |FROM s GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-
-    // the same running struct-max fill-forward of the last touch (max
-    // ignores NULLs in both engines; struct order = (ts, type, id), so
-    // "latest" and same-instant ties resolve identically)
-    "q81_attribution" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS u, event_id, event_type
-        |           FROM events
-        |           WHERE event_type IN ('view', 'click', 'purchase')),
-        |t AS (SELECT *,
-        |        max(CASE WHEN event_type IN ('view', 'click')
-        |              THEN {'ts_us': u, 't': event_type, 'id': event_id} END)
-        |          OVER (PARTITION BY user_id ORDER BY u, event_id
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
-        |      FROM e)
-        |SELECT event_id AS conversion_id, user_id, touch.t AS touch_type,
-        |  touch.id AS touch_id, u - touch.ts_us AS gap_us
-        |FROM t
-        |WHERE event_type = 'purchase' AND touch IS NOT NULL
-        |  AND u - touch.ts_us <= 7 * 86400000000
-        |ORDER BY conversion_id""".stripMargin,
-
-    // identical lead window over the identically-ordered timeline
-    "q82_path_transitions" ->
-      """WITH t AS (SELECT user_id, event_type AS from_type,
-        |    lead(event_type) OVER (
-        |      PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-        |  FROM events)
-        |SELECT from_type, to_type, count(*) AS n FROM t
-        |WHERE to_type IS NOT NULL
-        |GROUP BY from_type, to_type
-        |ORDER BY from_type, to_type""".stripMargin,
-
-    // the q72 exact triangle with the q50 tolerance scheme: exact
-    // distincts ride cross-engine; est_ok checks each engine's OWN
-    // sketch (DuckDB's approx_count_distinct vs the persisted merged
-    // DataSketches HLL) against the same exact counts
-    "q76_cohort_sketch" ->
-      """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-        |           FROM events GROUP BY user_id)
-        |SELECT f.cohort_day,
-        |  date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
-        |  count(DISTINCT e.user_id) AS exact_users,
-        |  abs(approx_count_distinct(e.user_id) - count(DISTINCT e.user_id))
-        |    / count(DISTINCT e.user_id) <= 0.05 AS est_ok
-        |FROM events e JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the SQL-served view equals q84's full recompute — same replay
-    "q93_mv_sql" ->
-      Fixtures.refreshedViewSql,
-
-    // the SQL-face CDC feed equals q65's true-changes replay
-    "q94_changes_sql" -> changeFeedSql,
-
-    // v1 = original truth under the OLD name; v3 = post-rename,
-    // post-upsert truth — un-updated rows must carry their ORIGINAL
-    // values under the new name (a value-losing rename NULLs them)
-    "q92_snapshot_rename" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
-        |             o_totalprice FROM orders)
-        |SELECT CAST(1 AS BIGINT) AS snap, o_orderkey, o_custkey,
-        |  o_totalprice, o_orderstatus AS status_out FROM b
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT) AS snap, o_orderkey, o_custkey,
-        |  o_totalprice,
-        |  CASE WHEN o_orderkey % 10 = 3 THEN 'X'
-        |       ELSE o_orderstatus END AS status_out
-        |FROM b
-        |ORDER BY snap, o_orderkey""".stripMargin,
-
-    // v2 = merged truth WITH the status column; v4 = the post-drop,
-    // post-second-upsert truth, status gone (NULL through the union)
-    "q91_snapshot_drop" ->
-      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
-         |             o_totalprice FROM orders),
-         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")},
-         |v4 AS (
-         |  SELECT o_orderkey, o_custkey,
-         |    CASE WHEN o_orderkey % 10 = 5 THEN o_totalprice + 100.0
-         |         ELSE o_totalprice END AS o_totalprice
-         |  FROM mixed)
-         |SELECT CAST(2 AS BIGINT) AS snap, o_orderkey, o_custkey,
-         |  o_totalprice, o_orderstatus FROM mixed
-         |UNION ALL
-         |SELECT CAST(4 AS BIGINT) AS snap, o_orderkey, o_custkey,
-         |  o_totalprice, CAST(NULL AS VARCHAR) AS o_orderstatus FROM v4
-         |ORDER BY snap, o_orderkey""".stripMargin,
-
-    // the SQL face serves q72's triangle — same replay
-    "q89_cohort_sql" ->
-      """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-        |           FROM events GROUP BY user_id)
-        |SELECT f.cohort_day,
-        |  date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
-        |  count(DISTINCT e.user_id) AS n_users
-        |FROM events e JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the SQL face serves q74's dense grid — same replay
-    "q90_resample_sql" ->
-      """WITH e AS (SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
-        |             "value"::DOUBLE AS v FROM events),
-        |a AS (SELECT series, bucket,
-        |        CASE WHEN count(v) > 0 THEN
-        |          list_reduce(list_prepend(0.0,
-        |              list_sort(list(v) FILTER (WHERE v IS NOT NULL))),
-        |            (x, y) -> x + y) / count(v)
-        |        END AS avg_v,
-        |        count(*) AS n
-        |      FROM e GROUP BY series, bucket),
-        |b AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM a),
-        |sp AS (SELECT s.series, g.bucket
-        |       FROM (SELECT DISTINCT series FROM a) s
-        |       CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM b),
-        |                     (SELECT hi FROM b), INTERVAL 1 HOUR)) AS bucket) g),
-        |j AS (SELECT sp.series, sp.bucket, coalesce(a.n, 0) AS n, a.avg_v
-        |      FROM sp LEFT JOIN a USING (series, bucket))
-        |SELECT series, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
-        |  CAST(n AS BIGINT) AS n, round(avg_v, 4) AS avg_v,
-        |  round(last_value(avg_v IGNORE NULLS) OVER (
-        |    PARTITION BY series ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS avg_v_ff
-        |FROM j ORDER BY series, bucket""".stripMargin,
-
-    // first-touch day per user, then distinct actives per (cohort, offset)
-    "q72_cohort" ->
-      """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-        |           FROM events GROUP BY user_id)
-        |SELECT f.cohort_day,
-        |  date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
-        |  count(DISTINCT e.user_id) AS n_users
-        |FROM events e JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // a range scan served through the incrementally-maintained stats
-    // index must equal the plain filter over the merged truth
-    "q70_snapshot_stats_inc" ->
-      s"""SELECT o_orderkey,
-        |  ${Fixtures.narrowCustkeySql},
-        |  o_totalprice
-        |FROM orders WHERE o_orderkey BETWEEN 400 AND 900
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // pinned v1 = the pre-delete truth; v2 = DELETE FROM semantics
-    // (rows deleted only where the predicate is TRUE)
-    "q68_snapshot_delete" ->
-      """WITH v1 AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |            FROM orders),
-        |v2 AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |       FROM orders
-        |       WHERE NOT (o_orderkey BETWEEN 1000 AND 3000
-        |                  AND o_orderstatus = 'F'))
-        |SELECT CAST(1 AS BIGINT) AS snap, * FROM v1
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
-        |ORDER BY snap, o_orderkey""".stripMargin,
-
-    // the SQL-face time travel serves the same two truths as q79 —
-    // same replay
-    "q87_snapshot_sql" ->
-      narrowAsOfSql,
-
-    // the as-of read at v1's publish instant is the pre-upsert truth;
-    // the current read is the merged truth
-    "q79_snapshot_asof" ->
-      narrowAsOfSql,
-
-    // the post-vacuum current version must be the merged truth — a
-    // vacuum that deleted a live (reused) file loses rows or fails the
-    // read outright
-    "q78_snapshot_vacuum" ->
-      s"""SELECT o_orderkey,
-        |  ${Fixtures.narrowCustkeySql},
-        |  o_totalprice
-        |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // v2 stays the post-delete truth after the restore (history is
-    // preserved); v3 = v1 verbatim (the undo is a manifest-only commit)
-    "q69_snapshot_restore" ->
-      """WITH v2 AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |            WHERE o_orderkey NOT BETWEEN 1000 AND 3000),
-        |v3 AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders)
-        |SELECT CAST(2 AS BIGINT) AS snap, * FROM v2
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT) AS snap, * FROM v3
-        |ORDER BY snap, o_orderkey""".stripMargin,
-
-    // the z-order-compacted snapshot scan must equal the plain filter —
-    // clustering is a pure layout change, never a semantic one
-    "q67_snapshot_zorder" ->
-      """SELECT l_partkey, count(*) AS n,
-        |  CAST(sum(l_suppkey) AS BIGINT) AS sum_suppkey,
-        |  CAST(sum(l_orderkey) AS BIGINT) AS sum_orderkey
-        |FROM lineitem WHERE l_partkey BETWEEN 100 AND 300
-        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin,
-
-    // the timestamp keyset walk's final pages must equal the offset
-    // pages exactly — seek is a pure execution-strategy change
-    "q66_page_keyset_micros" ->
-      """WITH b AS (SELECT ts, event_id, "value" FROM events),
-        |a AS (SELECT * FROM b ORDER BY ts LIMIT 100 OFFSET 1000),
-        |d AS (SELECT * FROM b ORDER BY ts DESC LIMIT 100 OFFSET 200)
-        |SELECT 'asc' AS dirn, * FROM a
-        |UNION ALL
-        |SELECT 'desc' AS dirn, * FROM d
-        |ORDER BY dirn, ts""".stripMargin,
-
-    // the CDC feed replayed directly from orders: the oracle contains
-    // ONLY the true changes, so every carry-over row the copy-on-write
-    // rewrite moved into new files must be absent from the Spark side
-    "q65_snapshot_changes" -> changeFeedSql,
-
-    // the string-key snapshot: v1 and the post-upsert v2 replayed from
-    // orders with the same zero-padded key derivation
-    "q60_snapshot_strkey" ->
-      """WITH b AS (
-        |  SELECT 'K' || lpad(CAST(o_orderkey AS VARCHAR), 9, '0') AS okey,
-        |    o_custkey, o_totalprice, o_orderkey
-        |  FROM orders),
-        |v2 AS (
-        |  SELECT okey,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
-        |         ELSE o_custkey END AS o_custkey,
-        |    o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 7
-        |  UNION ALL
-        |  SELECT 'Z' || lpad(CAST(o_orderkey AS VARCHAR), 9, '0') AS okey,
-        |    o_custkey, o_totalprice
-        |  FROM b WHERE o_orderkey % 10 = 1)
-        |SELECT CAST(1 AS BIGINT) AS snap, okey, o_custkey, o_totalprice FROM b
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS snap, okey, o_custkey, o_totalprice FROM v2
-        |ORDER BY snap, okey""".stripMargin,
-
-    "q61_snapshot_datekey" ->
-      """WITH b AS (
-        |  SELECT DATE '1990-01-01' + CAST(o_orderkey AS INT) AS dkey,
-        |    o_custkey, o_totalprice, o_orderkey
-        |  FROM orders),
-        |v2 AS (
-        |  SELECT dkey,
-        |    CASE WHEN o_orderkey % 10 = 3 THEN o_custkey + 1000000
-        |         ELSE o_custkey END AS o_custkey,
-        |    o_totalprice
-        |  FROM b WHERE o_orderkey % 10 != 7
-        |  UNION ALL
-        |  SELECT DATE '1990-01-01' + CAST(o_orderkey + 1000000 AS INT) AS dkey,
-        |    o_custkey, o_totalprice
-        |  FROM b WHERE o_orderkey % 10 = 1)
-        |SELECT CAST(1 AS BIGINT) AS snap, dkey, o_custkey, o_totalprice FROM b
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS snap, dkey, o_custkey, o_totalprice FROM v2
-        |ORDER BY snap, dkey""".stripMargin,
-
-    // two-column lexicographic order, unique on (priority, orderkey):
-    // the multi-column cursor walk is a pure execution-strategy change
-    "q59_page_keyset_multi" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders
-        |ORDER BY o_orderpriority DESC, o_orderkey
-        |LIMIT 100 OFFSET 700""".stripMargin,
-
-    // the stats-bounded walk serves the same pages as plain offsets on
-    // the unique key — file pruning is an I/O bound, not a semantics one
-    "q63_page_keyset_stats" ->
-      """WITH a AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |  ORDER BY o_orderkey LIMIT 100 OFFSET 1000),
-        |d AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |  ORDER BY o_orderkey DESC LIMIT 100 OFFSET 200)
-        |SELECT 'asc' AS dirn, * FROM a
-        |UNION ALL
-        |SELECT 'desc' AS dirn, * FROM d
-        |ORDER BY dirn, o_orderkey""".stripMargin,
-
-    // the string-key stats-bounded walk serves the same pages as plain
-    // offsets on the zero-padded unique key
-    "q64_page_keyset_str" ->
-      """WITH b AS (
-        |  SELECT 'K' || lpad(CAST(o_orderkey AS VARCHAR), 9, '0') AS okey,
-        |    o_custkey, o_totalprice
-        |  FROM orders),
-        |a AS (SELECT * FROM b ORDER BY okey LIMIT 100 OFFSET 1000),
-        |d AS (SELECT * FROM b ORDER BY okey DESC LIMIT 100 OFFSET 200)
-        |SELECT 'asc' AS dirn, * FROM a
-        |UNION ALL
-        |SELECT 'desc' AS dirn, * FROM d
-        |ORDER BY dirn, okey""".stripMargin,
-
-    "asof_join" ->
-      """SELECT p.event_id, p.user_id,
-        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-        |  c.event_id AS click_id,
-        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    // the ASOF match nulled when older than the window: exact because
-    // the as-of match is the newest candidate (nothing else can be
-    // inside a window it missed)
-    "asof_join_tolerance" ->
-      """SELECT p.event_id, p.user_id,
-        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-        |  CASE WHEN c.ts >= p.ts - INTERVAL 1 HOUR THEN c.event_id END AS click_id,
-        |  CASE WHEN c.ts >= p.ts - INTERVAL 1 HOUR
-        |       THEN strftime(c.ts, '%Y-%m-%d %H:%M:%S') END AS click_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "asof_join_native" ->
-      """SELECT p.event_id, p.user_id,
-        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-        |  c.event_id AS click_id,
-        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    // same explicit grouping() bit arithmetic on both engines — the gid
-    // column distinguishes a genuine NULL key from a rolled-up level
-    "q54_grouping_sets" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS BIGINT) AS gid,
-        |  count(1) AS cnt
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-        |                        (o_orderstatus), ())
-        |ORDER BY gid, status, priority""".stripMargin,
-
-    // DISTINCT set semantics on both engines (INTERSECT/EXCEPT without
-    // ALL); DataFrame intersect/except compile to the same
-    "q55_set_ops" ->
-      """SELECT o_custkey AS custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW'
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY custkey""".stripMargin,
-
-    "q22_cube" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  count(*) AS cnt
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-
-    "q23_histogram" ->
-      """SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bucket,
-        |  count(*) AS cnt, min(o_totalprice) AS min_price,
-        |  max(o_totalprice) AS max_price
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q43_partitioned_source" ->
-      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS dt,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST("value" AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q44_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q46_schema_evolution" ->
-      """SELECT o_orderkey, o_totalprice,
-        |  CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus ELSE 'N/A' END AS status
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q45_salted_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q39_bloom_join" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q40_window_funcs" ->
-      """SELECT o_orderkey, o_custkey,
-        |  ntile(4) OVER w AS quartile,
-        |  round(percent_rank() OVER w, 6) AS pct_rank,
-        |  round(cume_dist() OVER w, 6) AS cume,
-        |  first_value(o_orderkey) OVER w AS first_key,
-        |  nth_value(o_orderkey, 2) OVER w AS second_key,
-        |  lead(o_orderkey, 1) OVER w AS next_key
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q41_grouped_percentile" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
-        |  count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q42_minmax_by" ->
-      """SELECT o_orderstatus,
-        |  arg_max(o_totalprice, o_orderkey) AS latest_price,
-        |  arg_min(o_totalprice, o_orderkey) AS first_price,
-        |  max(o_totalprice) AS max_price,
-        |  count(*) AS cnt
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q37_range_window" ->
-      """SELECT o_orderkey, o_custkey,
-        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS order_ts,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS trailing_7d_total,
-        |  COUNT(*) OVER w AS trailing_7d_orders
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
-        |             RANGE BETWEEN INTERVAL 7 DAY PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q38_upsert" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey % 7 = 0 THEN 'U' ELSE o_orderstatus END AS o_orderstatus,
-        |  o_totalprice
-        |FROM orders WHERE o_orderkey % 13 <> 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q24_sample_hash" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE substring(sha256(CAST(o_orderkey AS VARCHAR)), 1, 2) <= '14'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q25_percentile" ->
-      """SELECT round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        |  round(quantile_cont(l_extendedprice, 0.75), 4) AS p75
-        |FROM lineitem""".stripMargin,
-
-    "q26_corr" ->
-      """SELECT round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-        |  round(corr(l_discount, l_extendedprice), 6) AS corr_disc_price
-        |FROM lineitem""".stripMargin,
-
-    "q27_salted_agg" ->
-      """SELECT o_orderstatus,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-        |  count(*) AS cnt
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q28_stringagg" ->
-      """SELECT l_orderkey,
-        |  string_agg(l_linenumber, ',' ORDER BY l_linenumber) AS line_numbers,
-        |  count(*) AS n_lines
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-
-    "q29_array_ops" ->
-      """SELECT l_orderkey,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(min(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS min_qty,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-
-    "q33_range_join" ->
-      """SELECT p.event_id, p.user_id,
-        |  (SELECT count(*) FROM events c
-        |   WHERE c.event_type = 'click' AND c.user_id = p.user_id
-        |     AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts) AS n_matches
-        |FROM events p WHERE p.event_type = 'purchase'
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q34_stratified_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE substring(sha256('strat' || CAST(doc_id AS VARCHAR)), 1, 2) <=
-        |  CASE WHEN lang = 'en' THEN '40' WHEN lang = 'de' THEN '20' ELSE '0a' END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q31_json_extract" ->
-      """SELECT event_id, CAST(props->>'$.k' AS BIGINT) AS k
-        |FROM events WHERE CAST(props->>'$.k' AS BIGINT) >= 50
-        |ORDER BY event_id""".stripMargin,
-
-    "q32_regex" ->
-      """SELECT doc_id,
-        |  regexp_extract("text", '([a-z]+)', 1) AS first_word,
-        |  CAST(len(string_split("text", ' ')) AS BIGINT) AS n_space_parts,
-        |  substring(regexp_replace("text", '[aeiou]', '', 'g'), 1, 20) AS devoweled_prefix
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q30_nulls" ->
-      """SELECT o_orderkey,
-        |  nullif(o_orderstatus, 'O') AS status_or_null,
-        |  coalesce(nullif(o_orderstatus, 'O'), 'OPEN') AS status_filled,
-        |  o_orderstatus IS NOT DISTINCT FROM 'O' AS is_open
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-  )
 }

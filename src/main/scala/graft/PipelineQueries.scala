@@ -1,20 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gate.t
 import graft.operators.{Dedup, Multimodal, SimilaritySearch, TextAnalysis}
-import graft.sources.Tables
 
-/** §2-C training-data pipeline operators as `queries` entries over the
+/** §2-C training-data pipeline operators as gates over the
   * documents/embeddings tables. Engine-sensitive outputs (hash families,
-  * float similarity) are rows-only gates here and exact-oracle-tested in
-  * ScalaTest specs instead (SURVEY §2/§4).
+  * float similarity) are gated through engine-portable replays — the md5
+  * hash bridge, rounded fold-order sums — and exact-oracle-tested in
+  * ScalaTest specs as well (SURVEY §2/§4).
   */
 object PipelineQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   val EmbeddingDim = 64
 
@@ -26,25 +23,73 @@ object PipelineQueries {
   val MixTargets: Map[String, Double] =
     Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.15, "es" -> 0.1, "zh" -> 0.05)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> ((s, dir) =>
+  /** This area's gates. Lazy, so a row's oracle SQL may read vals declared
+    * further down: an eager table would read them as null while the object
+    * initializes. */
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("dedup_exact", """SELECT sha256("text") AS content_hash, min(doc_id) AS keep_id,
+        |  count(*) AS n_copies
+        |FROM documents GROUP BY sha256("text")
+        |ORDER BY content_hash""".stripMargin, (s, dir) =>
       Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("content_hash")),
 
-    "dedup_survivors" -> ((s, dir) =>
+    Gate("dedup_survivors", """SELECT doc_id, lang, source FROM documents
+        |WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY sha256("text"))
+        |ORDER BY doc_id""".stripMargin, (s, dir) =>
       Dedup.exactSurvivors(t(s, dir, "documents"), "doc_id", "text")
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")),
 
-    "dedup_exact_normalized" -> ((s, dir) =>
+    // \s and the 'g' flag mirror Java's \s+ replace-all exactly on this
+    // corpus (ASCII whitespace)
+    Gate("dedup_exact_normalized", """SELECT sha256(trim(regexp_replace(lower("text"), '\s+', ' ', 'g'))) AS content_hash,
+        |  min(doc_id) AS keep_id, count(*) AS n_copies
+        |FROM documents
+        |GROUP BY 1 ORDER BY content_hash""".stripMargin, (s, dir) =>
       Dedup.exactNormalized(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("content_hash")),
 
-    "dedup_minhash" -> ((s, dir) =>
+    // the MinHash gate entry equals the exact all-pairs result because
+    // banding recall at (16 bands x 4 rows) is 1-(1-j^4)^16 ≈ 0.9998 at
+    // j=0.8 and ≈1 at the j≈1.0 duplicates this corpus actually contains;
+    // banding completeness is additionally spec-proven (OperatorSpec)
+    Gate("dedup_minhash", bruteJaccardSql(3, 0.8), (s, dir) =>
       Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
         shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.8)),
 
-    "dedup_simhash" -> ((s, dir) =>
+    // full replay of the portable simhash scheme: per-token md5-derived
+    // 64-bit hashes (identical bit pattern to the kernel's md5Hash64),
+    // per-bit majority vote over the token multiset (strict >, matching
+    // counts(b) > 0), signed-long packing (bit 63 via the min-long
+    // literal), then the BRUTE-FORCE hamming <= 3 pair set — exactly what
+    // the banded operator returns, since 4 bands over <= 3 differing bits
+    // pigeonhole into one identical band. Empty-token docs get sig 0 on
+    // both engines.
+    Gate("dedup_simhash", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |tok AS (SELECT doc_id, unnest(ts) AS w FROM t),
+         |h AS (SELECT doc_id,
+         |        CAST(concat('0x', substring(md5(w), 1, 16)) AS UBIGINT) AS h
+         |      FROM tok),
+         |n AS (SELECT doc_id, count(*) AS n FROM h GROUP BY doc_id),
+         |bits AS (SELECT doc_id, bb.b AS b,
+         |           count(*) FILTER (WHERE ((h >> bb.b) & 1) = 1) AS c
+         |         FROM h CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
+         |         GROUP BY doc_id, bb.b),
+         |sig AS (SELECT bits.doc_id,
+         |          CAST(sum(CASE WHEN 2 * c > n THEN
+         |                 CASE WHEN b = 63 THEN -9223372036854775808
+         |                      ELSE (CAST(1 AS BIGINT) << CAST(b AS INT)) END
+         |               ELSE 0 END) AS BIGINT) AS sig
+         |        FROM bits JOIN n ON bits.doc_id = n.doc_id
+         |        GROUP BY bits.doc_id),
+         |d AS (SELECT t.doc_id, coalesce(sig.sig, 0) AS sig
+         |      FROM t LEFT JOIN sig ON t.doc_id = sig.doc_id),
+         |p AS (SELECT x.doc_id AS a, y.doc_id AS b,
+         |        bit_count(xor(x.sig, y.sig)) AS hamming
+         |      FROM d x JOIN d y ON x.doc_id < y.doc_id)
+         |SELECT a, b, CAST(hamming AS BIGINT) AS hamming
+         |FROM p WHERE hamming <= 3 ORDER BY a, b""".stripMargin, (s, dir) =>
       // portableHash: md5 token hashes make the signature — and so the
       // hamming-pair set — fully replayable in DuckDB (see oracle); the
       // banding is lossless here by pigeonhole (hamming <= 3 over 4
@@ -59,11 +104,26 @@ object PipelineQueries {
         portableHash = true)
         .select(col("a"), col("b"), col("hamming").cast("long").as("hamming"))),
 
-    "dedup_ngram_jaccard" -> ((s, dir) =>
+    // exact: PPJoin prefix filtering is lossless, so the LSH-free
+    // brute-force all-pairs Jaccard is the complete truth
+    Gate("dedup_ngram_jaccard", bruteJaccardSql(3, 0.5), (s, dir) =>
       Dedup.ngramJaccard(t(s, dir, "documents"), "doc_id", "text",
         shingleSize = 3, threshold = 0.5)),
 
-    "dedup_containment" -> ((s, dir) =>
+    // directed containment truth: every ordered pair, |A∩B|/|A| — the
+    // prefix-filtered operator must be lossless against it
+    Gate("dedup_containment", s"""WITH sh AS (
+         |  SELECT doc_id, ${ngramsSql(3)} AS sh
+         |  FROM (SELECT doc_id, $ToksSql AS ts FROM documents)
+         |), nz AS (SELECT doc_id, sh, len(sh) AS sz FROM sh WHERE len(sh) > 0),
+         |p AS (
+         |  SELECT x.doc_id AS a, y.doc_id AS b,
+         |    len(list_intersect(x.sh, y.sh))::DOUBLE AS inter,
+         |    x.sz::DOUBLE AS asz
+         |  FROM nz x JOIN nz y ON x.doc_id != y.doc_id
+         |)
+         |SELECT a, b, round(inter / asz, 4) AS containment
+         |FROM p WHERE inter / asz >= 0.8 ORDER BY a, b""".stripMargin, (s, dir) =>
       // the ASYMMETRIC near-dup face: directed |A∩B|/|A| >= 0.8 —
       // doc-in-doc containment symmetric Jaccard caps at |A|/|B|. The
       // corpus's planted containments sit >= 0.9 with nothing between
@@ -73,7 +133,46 @@ object PipelineQueries {
       Dedup.ngramContainment(t(s, dir, "documents"), "doc_id", "text",
         shingleSize = 3, threshold = 0.8)),
 
-    "dedup_substring_remove" -> ((s, dir) =>
+    // removal replay: same md5 windows, then first-occurrence ranking,
+    // gaps-and-islands span merge, covered-position anti-join and an
+    // ordered string_agg rebuild — the rebuilt documents' md5s must
+    // match the kernel's array-lambda rebuild exactly
+    Gate("dedup_substring_remove", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |b AS (SELECT doc_id, ts, len(ts) AS n FROM t),
+         |w AS (SELECT doc_id, ts, n, unnest(range(0, n - 20 + 1)) AS pos
+         |      FROM b WHERE n >= 20),
+         |h AS (SELECT doc_id, pos,
+         |        md5(array_to_string(list_slice(ts, pos + 1, pos + 20), ' ')) AS h
+         |      FROM w),
+         |r AS (SELECT doc_id, pos FROM (
+         |        SELECT doc_id, pos,
+         |          row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rk
+         |        FROM h) WHERE rk > 1),
+         |i AS (SELECT doc_id, pos,
+         |        CASE WHEN pos - lag(pos) OVER w2 > 20 THEN 1 ELSE 0 END AS brk
+         |      FROM r WINDOW w2 AS (PARTITION BY doc_id ORDER BY pos)),
+         |i2 AS (SELECT doc_id, pos,
+         |         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS isle
+         |       FROM i),
+         |sp AS (SELECT doc_id, isle, min(pos) AS s, max(pos) + 19 AS e
+         |       FROM i2 GROUP BY doc_id, isle),
+         |agg AS (SELECT doc_id, count(*) AS n_spans, sum(e - s + 1) AS n_removed
+         |        FROM sp GROUP BY doc_id),
+         |cov AS (SELECT DISTINCT doc_id, unnest(range(s, e + 1)) AS tp FROM sp),
+         |tok AS (SELECT doc_id, unnest(ts) AS tk,
+         |          unnest(range(0, len(ts))) AS ti FROM b),
+         |kept AS (SELECT tok.doc_id, tk, ti
+         |         FROM tok LEFT JOIN cov
+         |           ON tok.doc_id = cov.doc_id AND tok.ti = cov.tp
+         |         WHERE cov.tp IS NULL),
+         |txt AS (SELECT doc_id, md5(string_agg(tk, ' ' ORDER BY ti)) AS dedup_md5
+         |        FROM kept GROUP BY doc_id)
+         |SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
+         |  CAST(coalesce(agg.n_spans, 0) AS BIGINT) AS n_spans,
+         |  CAST(coalesce(agg.n_removed, 0) AS BIGINT) AS n_removed,
+         |  coalesce(txt.dedup_md5, md5('')) AS dedup_md5
+         |FROM b LEFT JOIN agg USING (doc_id) LEFT JOIN txt USING (doc_id)
+         |ORDER BY b.doc_id""".stripMargin, (s, dir) =>
       // the REMOVAL face of substring dedup (Lee et al. ACL'22: detect,
       // then CUT): first global occurrence of each 20-token span keeps —
       // (doc, pos)-ordered, within-doc repeats included — later
@@ -84,7 +183,26 @@ object PipelineQueries {
         window = 20, portableHash = true)
         .orderBy("doc_id")),
 
-    "dedup_substring" -> ((s, dir) =>
+    // same md5-over-window arithmetic as Dedup.substringDupSpans: the
+    // tokenizer parity is proven by text_tokens, md5 and the space-join
+    // are engine-identical, so window hashes match bit-for-bit
+    Gate("dedup_substring", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |b AS (SELECT doc_id, ts, len(ts) AS n FROM t),
+         |w AS (SELECT doc_id, ts, n, unnest(range(0, n - 20 + 1)) AS pos
+         |      FROM b WHERE n >= 20),
+         |h AS (SELECT doc_id, pos,
+         |        md5(array_to_string(list_slice(ts, pos + 1, pos + 20), ' ')) AS h
+         |      FROM w),
+         |d AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd
+         |                     FROM h GROUP BY h) WHERE nd >= 2),
+         |m AS (SELECT doc_id, count(*) AS n_dup, min(pos) AS first_pos
+         |      FROM h WHERE h IN (SELECT h FROM d) GROUP BY doc_id)
+         |SELECT b.doc_id,
+         |  CAST(CASE WHEN b.n >= 20 THEN b.n - 19 ELSE 0 END AS BIGINT) AS n_windows,
+         |  CAST(coalesce(m.n_dup, 0) AS BIGINT) AS n_dup_windows,
+         |  CAST(coalesce(m.first_pos, -1) AS BIGINT) AS first_dup_pos
+         |FROM b LEFT JOIN m ON b.doc_id = m.doc_id
+         |ORDER BY b.doc_id""".stripMargin, (s, dir) =>
       // corpus-level exact-substring duplicate spans (Lee et al. ACL'22,
       // fixed-window form): per doc, the count of 20-token windows that
       // repeat in >= 2 distinct documents. portableHash: the gate pays
@@ -99,18 +217,48 @@ object PipelineQueries {
     // per-pair miss probability at cosine 0.4 about 1e-4, so the LSH result
     // equals the exact all-pairs result on this data — verified against the
     // brute-force oracle below and in DedupSpec's recall test.
-    "dedup_embedding" -> ((s, dir) =>
+    // exact: both engines accumulate the dot/norms sequentially in double
+    // over the float vectors, and round(4) absorbs any last-ulp drift
+    Gate("dedup_embedding", """SELECT x.vec_id AS a, y.vec_id AS b,
+        |  round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) AS cosine
+        |FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
+        |WHERE list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]) >= 0.4
+        |ORDER BY a, b""".stripMargin, (s, dir) =>
       Dedup.embeddingNearDup(t(s, dir, "embeddings"), "vec_id", "embedding",
         EmbeddingDim, threshold = 0.4, nTables = 32, bitsPerTable = 3)),
 
-    "ann_bruteforce" -> ((s, dir) => {
+    // exact truth via DuckDB's own cosine — rank ties broken by id on both
+    // sides; round(4) absorbs last-ulp accumulation drift
+    Gate("ann_bruteforce", """WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
+        |           FROM embeddings WHERE vec_id < 5),
+        |s AS (
+        |  SELECT q.qid, e.vec_id AS id,
+        |    list_cosine_similarity(e.embedding::DOUBLE[], q.qv) AS c
+        |  FROM embeddings e, q
+        |),
+        |r AS (SELECT qid, id, c,
+        |        row_number() OVER (PARTITION BY qid ORDER BY c DESC, id) AS rk
+        |      FROM s)
+        |SELECT qid, id, round(c, 4) AS cosine, rk FROM r WHERE rk <= 10
+        |ORDER BY qid, rk""".stripMargin, (s, dir) => {
       val e = t(s, dir, "embeddings")
       SimilaritySearch.bruteForceTopK(
         e, "vec_id", "embedding",
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
     }),
 
-    "ann_range_search" -> ((s, dir) => {
+    // exact truth via DuckDB's own cosine over the same double vectors;
+    // both engines accumulate sequentially in double, and BOTH the score
+    // and the threshold compare use the 4-decimal-rounded value, so
+    // boundary membership is pinned the same way the top-k rankings are
+    // (an unrounded compare could flip a last-ulp row in/out at 0.3)
+    Gate("ann_range_search", """SELECT q.vec_id AS qid, e.vec_id AS id,
+        |  round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) AS cosine
+        |FROM embeddings e
+        |JOIN (SELECT * FROM embeddings WHERE vec_id < 5) q
+        |  ON e.vec_id != q.vec_id
+        |WHERE round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) >= 0.3
+        |ORDER BY qid, id""".stripMargin, (s, dir) => {
       // radius search: every corpus vector with cosine >= 0.3 of each
       // query — data-dependent result size (the "everything similar
       // enough" face); 0.3 sits where the synthetic corpus has real
@@ -122,7 +270,12 @@ object PipelineQueries {
         threshold = 0.3)
     }),
 
-    "ann_lsh" -> ((s, dir) => {
+    // full replay of the (L, k) hyperplane scheme in SQL (lshReplaySql):
+    // candidate generation, scoring and top-k are all recomputed from
+    // scratch by DuckDB — so the LSH result itself driver-hashes
+    Gate("ann_lsh", s"""$lshReplaySql
+         |SELECT qid, id, round(cs, 4) AS cosine, rk
+         |FROM lr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       val e = t(s, dir, "embeddings")
       SimilaritySearch.lshTopK(
         e, "vec_id", "embedding",
@@ -130,7 +283,19 @@ object PipelineQueries {
         EmbeddingDim, k = 10, nTables = 16, bitsPerTable = 4)
     }),
 
-    "ann_lsh_recall" -> ((s, dir) => {
+    Gate("ann_lsh_recall", s"""$lshReplaySql,
+         |lsh AS (SELECT qid, id FROM lr WHERE rk <= 10),
+         |bs AS (SELECT q.id AS qid, e.id, list_cosine_similarity(e.v, q.v) AS cs
+         |       FROM c e CROSS JOIN (SELECT * FROM c WHERE id < 5) q),
+         |br AS (SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY cs DESC, id) AS rk
+         |       FROM bs),
+         |bf AS (SELECT qid, id FROM br WHERE rk <= 10),
+         |ov AS (SELECT bf.qid, count(*) FILTER (WHERE lsh.id IS NOT NULL) AS n_overlap
+         |       FROM bf LEFT JOIN lsh ON bf.qid = lsh.qid AND bf.id = lsh.id
+         |       GROUP BY bf.qid)
+         |SELECT qid, CAST(n_overlap AS BIGINT) AS n_overlap,
+         |  round(n_overlap / 10.0, 4) AS recall
+         |FROM ov ORDER BY qid""".stripMargin, (s, dir) => {
       // recall@10 of the LSH top-k against the brute-force truth, per
       // query — the quality metric of the ann_lsh configuration as a
       // DRIVER-HASHED number: the signature scheme is deterministic given
@@ -153,7 +318,12 @@ object PipelineQueries {
         .orderBy("qid")
     }),
 
-    "ann_ivf" -> ((s, dir) => {
+    // full replay of IVF training + probing + search in SQL (ivfReplaySql)
+    // — the trained model is recomputed from scratch by DuckDB, so the
+    // approximate search result itself driver-hashes
+    Gate("ann_ivf", s"""$ivfReplaySql
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM r WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       val e = t(s, dir, "embeddings")
       // sampled training: the 100 TB path — Lloyd iterations scan half
       // the corpus; assignment covers all of it. The half is selected by
@@ -171,7 +341,35 @@ object PipelineQueries {
         centroids, k = 10, nProbe = 4)
     }),
 
-    "ann_sq8_rerank" -> ((s, dir) => {
+    // full SQ8 replay: per-dim calibration, identical fixed-order
+    // quantize/dequantize arithmetic (floor of the same IEEE
+    // expression), fold-order cosines — shortlist AND final page
+    // recompute from scratch and driver-hash
+    Gate("ann_sq8_rerank", s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
+         |d AS (SELECT id, i, v[i] AS x
+         |      FROM e, unnest(range(1, ${EmbeddingDim + 1})) AS r(i)),
+         |st AS (SELECT i, min(x) AS mn, max(x) AS mx FROM d GROUP BY i),
+         |cd AS (SELECT d.id, d.i,
+         |         CASE WHEN st.mx = st.mn THEN 0.0
+         |              ELSE floor(((d.x - st.mn) / (st.mx - st.mn)) * 255) END
+         |           * CASE WHEN st.mx = st.mn THEN 0.0
+         |                  ELSE (st.mx - st.mn) / 255 END
+         |           + st.mn AS xq
+         |       FROM d JOIN st USING (i)),
+         |dq AS (SELECT id, list(xq ORDER BY i) AS vq FROM cd GROUP BY id),
+         |q AS (SELECT id AS qid, v AS qv FROM e WHERE id < 5),
+         |ap AS (SELECT q.qid, dq.id, ${cosFoldSql("dq.vq", "q.qv")} AS ascore
+         |       FROM dq CROSS JOIN q),
+         |sh AS (SELECT qid, id FROM (
+         |         SELECT qid, id, row_number() OVER (
+         |           PARTITION BY qid ORDER BY ascore DESC, id) AS ark
+         |         FROM ap) WHERE ark <= 40),
+         |ex AS (SELECT sh.qid, sh.id, ${cosFoldSql("e.v", "q.qv")} AS cs
+         |       FROM sh JOIN e ON e.id = sh.id JOIN q ON q.qid = sh.qid),
+         |r AS (SELECT qid, id, cs, row_number() OVER (
+         |        PARTITION BY qid ORDER BY cs DESC, id) AS rk FROM ex)
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM r WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       // 8-bit scalar quantization (FAISS SQ8-flat): calibrate per-dim
       // [min,max] over the corpus, scan DEQUANTIZED codes at 1/4 the
       // memory bandwidth, shortlist refine·k per query, exact re-rank
@@ -186,7 +384,12 @@ object PipelineQueries {
         k = 10, refine = 4)
     }),
 
-    "ann_ivf_filtered" -> ((s, dir) => {
+    // the same full training replay with the metadata predicate on the
+    // candidate scan: pre-filtered search must equal "the filtered rows
+    // were never in the probed cells"
+    Gate("ann_ivf_filtered", s"""${ivfReplaySqlFor("a.id % 3 = 1")}
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM r WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       // FILTERED vector search — the metadata-predicate face every
       // production retrieval system needs (search only rows passing a
       // filter): the predicate applies to the INDEXED rows before
@@ -207,7 +410,27 @@ object PipelineQueries {
         centroids, k = 10, nProbe = 4)
     }),
 
-    "ann_knn_join" -> ((s, dir) => {
+    // the same training replay with EVERY row as a query (the knn-join
+    // shape): per-row cell probing, neighbor candidates from the probed
+    // cells, self excluded, top-5 by exact cosine — the shuffle-join
+    // plan must be execution-strategy-invisible vs this broadcast replay
+    Gate("ann_knn_join", s"""${ivfTrainSql(16, "id % 2 = 0")},
+         |q AS (SELECT id AS qid, v AS qv FROM av),
+         |cr AS (SELECT q.qid, p.cell, ${cosFoldSql("q.qv", "p.c")} AS score
+         |       FROM q CROSS JOIN c3 p),
+         |probed AS (SELECT qid, cell FROM (
+         |             SELECT qid, cell,
+         |               row_number() OVER (PARTITION BY qid ORDER BY score DESC, cell DESC) AS rk
+         |             FROM cr) WHERE rk <= 4),
+         |cand AS (SELECT p.qid, a.id, a.v FROM probed p JOIN asg a USING (cell)
+         |         WHERE a.id <> p.qid),
+         |csc AS (SELECT cand.qid, cand.id, ${cosFoldSql("cand.v", "q.qv")} AS cs
+         |        FROM cand JOIN q USING (qid)),
+         |r AS (SELECT qid, id, cs,
+         |        row_number() OVER (PARTITION BY qid ORDER BY cs DESC, id) AS rk
+         |      FROM csc)
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM r WHERE rk <= 5 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       // k-NN JOIN — the corpus-sized-query-side shape (kNN graph
       // building, SemDeDup neighbor lists): EVERY embedding gets its 5
       // nearest neighbors through the IVF cells, probed queries meeting
@@ -224,7 +447,13 @@ object PipelineQueries {
         centroids, k = 5, nProbe = 4, excludeSelf = true)
     }),
 
-    "ann_ivfpq" -> ((s, dir) => {
+    // full replay of IVF-PQ training (coarse k-means + residual
+    // codebooks) + encode + ADC search + exact re-rank in SQL
+    // (pqReplaySql) — DuckDB recomputes the entire trained model from
+    // scratch, so the compressed-index search result itself driver-hashes
+    Gate("ann_ivfpq", s"""$pqReplaySql
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       // IVF-PQ: sampled train (the 100 TB path), residual-coded index,
       // ADC scan over probed cells, exact re-rank of the shortlist.
       // The training half is selected by id PARITY (not Bernoulli):
@@ -242,7 +471,14 @@ object PipelineQueries {
         k = 10, nProbe = 4, refine = 4)
     }),
 
-    "ann_ivfpq_persisted" -> ((s, dir) => {
+    // identical replay: the persisted variant trains the same model,
+    // round-trips it (and the encoded index) through parquet
+    // byte-identically (spec-asserted: saveModel/loadModel and
+    // writeIndex/readIndex are exact), then serves the same search — so
+    // the SAME SQL gates the from-disk path end to end
+    Gate("ann_ivfpq_persisted", s"""$pqReplaySql
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       // the 100 TB serving shape, gated end-to-end: model AND encoded
       // index are WRITTEN once (model as a small parquet table, index
       // partitionBy(cell)), then the search runs entirely from disk —
@@ -269,7 +505,14 @@ object PipelineQueries {
         k = 10, nProbe = 4, refine = 4)
     }),
 
-    "ann_ivfpq_append" -> ((s, dir) => {
+    // same replay once more: build-on-half + append-the-rest produces the
+    // SAME encoded row set as encode-all-at-once (same fixed model), so
+    // the identical SQL gates the append path — arrival batching must be
+    // invisible, and a wrong append (dropped rows, double-encode, stale
+    // model) hash-mismatches
+    Gate("ann_ivfpq_append", s"""$pqReplaySql
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       // the daily-ingest path at scale, gated end-to-end: the persisted
       // index is BUILT from half the corpus (even ids), then the other
       // half arrives later and is appended under the SAME trained model
@@ -295,7 +538,11 @@ object PipelineQueries {
         k = 10, nProbe = 4, refine = 4)
     }),
 
-    "ann_ivfpq_delete" -> ((s, dir) => {
+    // the same full training replay with odd ids absent from the ADC
+    // scan: a tombstoned index must serve exactly the survivors' index
+    Gate("ann_ivfpq_delete", s"""${pqReplaySqlFor("fr.id % 2 = 0")}
+         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
+         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin, (s, dir) => {
       // the CRUD-closing path at scale: HALF the corpus (odd ids) is
       // DELETED from the persisted index via the tombstone sidecar
       // (PqIndex.deleteFromIndex — cell-partitioned (id, cell) masks, no
@@ -319,28 +566,107 @@ object PipelineQueries {
         k = 10, nProbe = 4, refine = 4)
     }),
 
-    "text_lm_score" -> ((s, dir) =>
+    // mean unigram surprisal; the fold over the word-sorted term list
+    // reproduces Spark's aggregate() addition order exactly
+    Gate("text_lm_score", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |p AS (SELECT doc_id, unnest(ts) AS w FROM t),
+         |m AS (SELECT doc_id, w, count(*) AS m FROM p GROUP BY 1, 2),
+         |tf AS (SELECT w, sum(m) AS cnt FROM m GROUP BY 1),
+         |tot AS (SELECT sum(cnt) AS total FROM tf),
+         |terms AS (
+         |  SELECT doc_id,
+         |    struct_pack(w := w, term := m.m::DOUBLE * -ln(cnt::DOUBLE / total::DOUBLE)) AS wt,
+         |    m.m AS m
+         |  FROM m JOIN tf USING (w) CROSS JOIN tot),
+         |d AS (SELECT doc_id, list_sort(list(wt)) AS l, CAST(sum(m) AS BIGINT) AS n
+         |      FROM terms GROUP BY doc_id)
+         |SELECT doc_id, n AS n_words,
+         |  round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
+         |        (a, x) -> a + x) / n, 4) AS avg_neg_logp
+         |FROM d ORDER BY doc_id""".stripMargin, (s, dir) =>
       TextAnalysis.lmScore(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")),
 
-    "text_repetition" -> ((s, dir) =>
+    // duplicate-n-gram fractions + top-word share; short docs (<= n words)
+    // are 0 by definition on both sides
+    Gate("text_repetition", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents)
+         |SELECT doc_id,
+         |  CAST(len(ts) AS BIGINT) AS n_words,
+         |  CASE WHEN len(ts) <= 2 THEN 0.0
+         |       ELSE round(1.0 - ${distinctNgramsSql(2)}::DOUBLE / (len(ts) - 1)::DOUBLE, 4)
+         |  END AS dup_2gram_frac,
+         |  CASE WHEN len(ts) <= 3 THEN 0.0
+         |       ELSE round(1.0 - ${distinctNgramsSql(3)}::DOUBLE / (len(ts) - 2)::DOUBLE, 4)
+         |  END AS dup_3gram_frac,
+         |  CASE WHEN len(ts) = 0 THEN 0.0
+         |       ELSE round($TopTokenSql::DOUBLE / len(ts)::DOUBLE, 4)
+         |  END AS top_word_frac
+         |FROM t ORDER BY doc_id""".stripMargin, (s, dir) =>
       TextAnalysis.repetition(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")),
 
-    "text_bigram_lm" -> ((s, dir) =>
+    // interpolated bigram surprisal: counts are exact integers on both
+    // engines, the interpolation literals (0.5) are binary-exact, each
+    // term's arithmetic mirrors the kernel expression shape, and the
+    // per-doc sum folds over the (w1, w2)-sorted term list — the
+    // text_lm_score determinism contract extended to bigrams
+    Gate("text_bigram_lm", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |big AS (SELECT doc_id, ts[i] AS w1, ts[i+1] AS w2
+         |        FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
+         |              FROM t WHERE len(ts) >= 2)),
+         |m AS (SELECT doc_id, w1, w2, count(*) AS m FROM big GROUP BY 1, 2, 3),
+         |uc AS (SELECT w, count(*) AS cnt
+         |       FROM (SELECT unnest(ts) AS w FROM t) GROUP BY w),
+         |tot AS (SELECT sum(cnt) AS total FROM uc),
+         |bc AS (SELECT w1, w2, sum(m) AS bcnt FROM m GROUP BY 1, 2),
+         |terms AS (SELECT m.doc_id, m.m,
+         |    struct_pack(w1 := m.w1, w2 := m.w2,
+         |      term := m.m::DOUBLE * -ln(
+         |        0.5 * (bc.bcnt::DOUBLE / u1.cnt::DOUBLE)
+         |        + 0.5 * (u2.cnt::DOUBLE / tot.total::DOUBLE))) AS wt
+         |  FROM m JOIN bc USING (w1, w2)
+         |  JOIN uc u1 ON u1.w = m.w1
+         |  JOIN uc u2 ON u2.w = m.w2
+         |  CROSS JOIN tot),
+         |d AS (SELECT doc_id, list_sort(list(wt)) AS l,
+         |        CAST(sum(m) AS BIGINT) AS n
+         |      FROM terms GROUP BY doc_id)
+         |SELECT doc_id, n AS n_bigrams,
+         |  round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
+         |        (a, x) -> a + x) / n, 4) AS avg_neg_logp
+         |FROM d ORDER BY doc_id""".stripMargin, (s, dir) =>
       // interpolated bigram LM surprisal (λ=0.5 — exactly representable,
       // so both engines interpolate with the same doubles); docs with
       // < 2 tokens have no bigram position and no row
       TextAnalysis.bigramLmScore(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")),
 
-    "text_keywords" -> ((s, dir) =>
+    // tf·idf replay with exact integer counts; both engines rank the
+    // 4-decimal-rounded score with a word tiebreak (rounding first pins
+    // one cross-engine order against ln()'s last-ulp freedom)
+    Gate("text_keywords", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |p AS (SELECT doc_id, w, count(*) AS m
+         |      FROM (SELECT doc_id, unnest(ts) AS w FROM t) GROUP BY 1, 2),
+         |dfq AS (SELECT w, count(*) AS df FROM p GROUP BY w),
+         |nd AS (SELECT count(DISTINCT doc_id) AS nd FROM p),
+         |sc AS (SELECT p.doc_id, p.w,
+         |         round(p.m::DOUBLE * ln(nd.nd::DOUBLE / dfq.df::DOUBLE), 4) AS tfidf
+         |       FROM p JOIN dfq USING (w) CROSS JOIN nd),
+         |r AS (SELECT doc_id, w, tfidf,
+         |        row_number() OVER (PARTITION BY doc_id
+         |          ORDER BY tfidf DESC, w ASC) AS rk
+         |      FROM sc)
+         |SELECT doc_id, CAST(rk AS BIGINT) AS rk, w AS word, tfidf
+         |FROM r WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin, (s, dir) =>
       // TF-IDF top-3 keywords per doc; the rank compares the ROUNDED
       // score (word tiebreak) so ln()'s last ulp cannot flip the order
       // across engines — see tfidfKeywords
       TextAnalysis.tfidfKeywords(t(s, dir, "documents"), "doc_id", "text", k = 3)),
 
-    "text_bm25" -> ((s, dir) =>
+    // BM25 replay: same Lucene idf, same saturation arithmetic, N and
+    // avgdl over ALL docs (zero-match docs count in the stats, score no
+    // row) — the rank compares the rounded score with id tiebreak
+    Gate("text_bm25", bm25ReplaySql, (s, dir) =>
       // BM25 ranked retrieval over the corpus (Lucene idf variant,
       // k1=1.2, b=0.75): query mixes the corpus's one rare term ('dup',
       // df≈25 of 500) with two common ones, so the idf weighting is
@@ -350,7 +676,12 @@ object PipelineQueries {
       TextAnalysis.bm25Search(t(s, dir, "documents"), "doc_id", "text",
         terms = Seq("dup", "vector", "batch"), k = 20)),
 
-    "text_bm25_indexed" -> ((s, dir) => {
+    // identical replay: the persisted postings round-trip writes the
+    // same (tf, dl) rows and recomputes the same df/nd/avgdl, so the
+    // from-disk serving path is gated by the SAME SQL as text_bm25 —
+    // a wrong bucket prune (dropped postings) or stale stats
+    // hash-mismatches
+    Gate("text_bm25_indexed", bm25ReplaySql, (s, dir) => {
       // the PERSISTED serving shape of text_bm25 (ann_ivfpq_persisted's
       // pattern for text): postings written once partitionBy(bucket =
       // xxhash64(w) mod 64), the query's buckets computed driver-side
@@ -365,7 +696,12 @@ object PipelineQueries {
         terms = Seq("dup", "vector", "batch"), k = 20)
     }),
 
-    "text_bm25_append" -> ((s, dir) => {
+    // build-half + append-half must serve the FULL-corpus replay: nd and
+    // Σdl are additive (exact — integer token counts in double), per-doc
+    // postings are batch-local (disjoint doc batches), df recomputes
+    // from the union — so the appended store is replay-identical to a
+    // one-shot build
+    Gate("text_bm25_append", bm25ReplaySql, (s, dir) => {
       // INCREMENTAL index maintenance: build on the corpus's first half,
       // append the second half as a new-batch commit (one batch scan +
       // one postings fileset + one ADDITIVE stats row, atomic manifest
@@ -383,7 +719,16 @@ object PipelineQueries {
         terms = Seq("dup", "vector", "batch"), k = 20)
     }),
 
-    "dedup_takedown" -> ((s, dir) => {
+    // the post-takedown store recomputed from scratch: surviving hashes
+    // are those NO banned doc carries (the hash's duplicates vanish with
+    // it), keepers/batches unchanged for everything untouched
+    Gate("dedup_takedown", """WITH h AS (SELECT doc_id, sha256("text") AS ch FROM documents),
+        |banned AS (SELECT DISTINCT ch FROM h WHERE doc_id % 10 = 3)
+        |SELECT ch AS content_hash, min(doc_id) AS keep_id,
+        |  CAST(CASE WHEN min(doc_id) < 2000 THEN 0 ELSE 1 END AS BIGINT)
+        |    AS arrival_batch
+        |FROM h WHERE ch NOT IN (SELECT ch FROM banned)
+        |GROUP BY ch ORDER BY content_hash""".stripMargin, (s, dir) => {
       // TAKEDOWN on the persisted dedup store (copyright/PII removal —
       // the forget face every long-lived training pipeline needs): the
       // corpus ingests in two batches, then every doc with id ≡3 mod 10
@@ -408,7 +753,9 @@ object PipelineQueries {
         .orderBy("content_hash")
     }),
 
-    "text_bm25_delete" -> ((s, dir) => {
+    // tombstone delete: the served search must equal the replay over
+    // the SURVIVING corpus — df, nd and avgdl all post-delete
+    Gate("text_bm25_delete", bm25ReplaySqlFor("doc_id % 2 = 0"), (s, dir) => {
       // tombstone DELETE on the persisted index (PqIndex's
       // ann_ivfpq_delete pattern for text): build over the full corpus,
       // delete the odd-id half — ONE doc-id tombstone fileset + ONE
@@ -428,7 +775,9 @@ object PipelineQueries {
         terms = Seq("dup", "vector", "batch"), k = 20)
     }),
 
-    "text_bm25_compact" -> ((s, dir) => {
+    // compaction is content-invisible: the collapsed-fileset store
+    // serves the identical full-corpus ranking
+    Gate("text_bm25_compact", bm25ReplaySql, (s, dir) => {
       // index COMPACTION (DedupStore.compactStore's contract for text):
       // two ingest batches' per-batch postings/ids/stats filesets
       // collapse to ONE each (bucket partitioning kept — queries still
@@ -448,7 +797,9 @@ object PipelineQueries {
         terms = Seq("dup", "vector", "batch"), k = 20)
     }),
 
-    "text_colloc_compact" -> ((s, dir) => {
+    // compaction is content-invisible BY the additive algebra: the
+    // merged-fileset store serves the same one-shot PMI
+    Gate("text_colloc_compact", collocReplaySql, (s, dir) => {
       // count-store COMPACTION: two arrival batches' uni/big/tot
       // filesets merge to ONE each (counts summed — the additive
       // algebra makes the rewrite content-invisible by construction),
@@ -468,12 +819,39 @@ object PipelineQueries {
       TextAnalysis.collocationsFromStore(s, store, minCount = 5L, k = 50)
     }),
 
-    "pipeline_quality_filter" -> ((s, dir) =>
+    // same rule thresholds and unrounded double comparisons as
+    // Curation.qualityFilter's defaults
+    Gate("pipeline_quality_filter", s"""WITH t AS (SELECT doc_id, lang, source, $ToksSql AS ts FROM documents),
+         |m AS (
+         |  SELECT doc_id, lang, source,
+         |    CAST(len(ts) AS BIGINT) AS nw,
+         |    CASE WHEN len(ts) = 0 THEN 0.0
+         |         ELSE list_sum(list_transform(ts, x -> len(x)))::DOUBLE / len(ts)::DOUBLE END AS awl,
+         |    CASE WHEN len(ts) <= 2 THEN 0.0
+         |         ELSE 1.0 - ${distinctNgramsSql(2)}::DOUBLE / (len(ts) - 1)::DOUBLE END AS dup2,
+         |    CASE WHEN len(ts) = 0 THEN 0.0
+         |         ELSE $TopTokenSql::DOUBLE / len(ts)::DOUBLE END AS topw
+         |  FROM t
+         |)
+         |SELECT doc_id, lang, source FROM m
+         |WHERE nw BETWEEN 30 AND 100000 AND awl BETWEEN 3.0 AND 10.0
+         |  AND dup2 <= 0.1 AND topw <= 0.2
+         |ORDER BY doc_id""".stripMargin, (s, dir) =>
       graft.operators.Curation.qualityFilter(t(s, dir, "documents"), "doc_id", "text")
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")),
 
-    "pipeline_shuffle_shard" -> ((s, dir) =>
+    // same md5 keys, same mod-8 shards, same within-shard ranks — the
+    // shuffle must be engine- and partitioning-invariant by construction
+    Gate("pipeline_shuffle_shard", """WITH k AS (SELECT doc_id,
+        |             md5('run42:' || CAST(doc_id AS VARCHAR)) AS _k
+        |           FROM documents),
+        |s AS (SELECT doc_id, _k,
+        |        CAST(concat('0x', substring(_k, 1, 8)) AS BIGINT) % 8 AS shard
+        |      FROM k)
+        |SELECT doc_id, shard,
+        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY _k, doc_id) AS BIGINT) AS pos
+        |FROM s ORDER BY shard, pos""".stripMargin, (s, dir) =>
       // deterministic global shuffle + sharding — the training-export
       // tail: seeded md5 order (identical on any partitioning), shard =
       // key mod 8, position = rank WITHIN the shard (no global
@@ -483,7 +861,33 @@ object PipelineQueries {
         t(s, dir, "documents").select("doc_id"), "doc_id", "run42", 8)
         .orderBy("shard", "pos")),
 
-    "pipeline_dsir" -> ((s, dir) =>
+    // DSIR replay: same md5 buckets (the text_hash_embed hash bridge),
+    // same add-one smoothing, per-doc fold over the bucket-sorted term
+    // list (the lm_score float-summing contract)
+    Gate("pipeline_dsir", s"""WITH t AS (SELECT doc_id, lang, $ToksSql AS ts FROM documents),
+         |f AS (SELECT doc_id, lang = 'en' AS is_t,
+         |        CAST(concat('0x', substring(md5(w), 1, 8)) AS BIGINT) % 256 AS b
+         |      FROM (SELECT doc_id, lang, unnest(ts) AS w FROM t)),
+         |rc AS (SELECT b, count(*) AS rc FROM f GROUP BY b),
+         |tc AS (SELECT b, count(*) AS tc FROM f WHERE is_t GROUP BY b),
+         |tot AS (SELECT count(*) AS rt,
+         |          count(*) FILTER (WHERE is_t) AS tt FROM f),
+         |r AS (SELECT rc.b,
+         |        ln(((coalesce(tc, 0) + 1)::DOUBLE / (tt + 256)::DOUBLE)
+         |          / ((rc + 1)::DOUBLE / (rt + 256)::DOUBLE)) AS lr
+         |      FROM rc LEFT JOIN tc USING (b) CROSS JOIN tot),
+         |m AS (SELECT doc_id, b, count(*) AS m FROM f GROUP BY doc_id, b),
+         |terms AS (SELECT doc_id,
+         |            struct_pack(b := m.b, term := m.m::DOUBLE * r.lr) AS wt,
+         |            m.m AS m
+         |          FROM m JOIN r USING (b)),
+         |d AS (SELECT doc_id, list_sort(list(wt)) AS l,
+         |        CAST(sum(m) AS BIGINT) AS n
+         |      FROM terms GROUP BY doc_id)
+         |SELECT doc_id, n AS n_tokens,
+         |  round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
+         |        (a, x) -> a + x), 4) AS log_weight
+         |FROM d ORDER BY doc_id""".stripMargin, (s, dir) =>
       // DSIR importance weights, target = the English subset (the
       // "select data that looks like the trusted set" face): every doc
       // scored by its hashed-unigram target/raw log likelihood ratio.
@@ -504,13 +908,43 @@ object PipelineQueries {
     // (replayable); the Bernoulli-sampled train path stays gated by
     // dedup_semantic_planted, and the nClusters=1 == brute-force
     // equivalence stays spec-proven in OperatorSpec.
-    "dedup_semantic" -> ((s, dir) =>
+    // full replay of the SemDeDup gate: recompute the 8-cell k-means in
+    // SQL (ivfTrainSql — bit-deterministic by md5 init + 6-decimal
+    // means), keep cells with 2..100000 members (the operator's
+    // degenerate-cell guard), drop every id with a lower-id SAME-CELL
+    // neighbor at kernel-order cosine >= 0.4 (cluster-bounded pairing IS
+    // the algorithm — cross-cell near-dups are intentionally kept), and
+    // return the survivors with their labels
+    Gate("dedup_semantic", s"""${ivfTrainSql(8, "TRUE")},
+         |okc AS (SELECT cell FROM (SELECT cell, count(*) AS csz FROM asg GROUP BY cell)
+         |        WHERE csz BETWEEN 2 AND 100000),
+         |pp AS (SELECT a.id, a.cell, a.v FROM asg a JOIN okc USING (cell)),
+         |drp AS (SELECT DISTINCT y.id
+         |        FROM pp x JOIN pp y ON x.cell = y.cell AND x.id < y.id
+         |        WHERE ${cosFoldSql("x.v", "y.v")} >= 0.4)
+         |SELECT e.vec_id, CAST(e.label AS BIGINT) AS label FROM embeddings e
+         |WHERE e.vec_id NOT IN (SELECT id FROM drp)
+         |ORDER BY vec_id""".stripMargin, (s, dir) =>
       Dedup.semanticDedup(t(s, dir, "embeddings"), "vec_id", "embedding",
         nClusters = 8, threshold = 0.4, sampleFraction = 1.0)
         .select(col("vec_id"), col("label").cast("long").as("label"))
         .orderBy("vec_id")),
 
-    "dedup_semantic_planted" -> ((s, dir) => {
+    // planted-family truth: survivors = ids with no lower-id neighbor at
+    // cosine >= 0.99999 over the replicated corpus (NaN guard mirrors
+    // graft_cosine's 0.0 on zero vectors — both engines keep the row)
+    Gate("dedup_semantic_planted", """WITH p AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 1000000, embedding::DOUBLE[] FROM embeddings
+        |  WHERE vec_id % 10 = 0),
+        |d AS (SELECT DISTINCT y.vec_id
+        |      FROM p x JOIN p y ON x.vec_id < y.vec_id
+        |      WHERE NOT isnan(list_cosine_similarity(x.v, y.v))
+        |        AND list_cosine_similarity(x.v, y.v) >= 0.99999)
+        |SELECT vec_id FROM p
+        |WHERE vec_id NOT IN (SELECT vec_id FROM d)
+        |ORDER BY vec_id""".stripMargin, (s, dir) => {
       // the CLUSTERED (nClusters>1) semantic-dedup path under a DRIVER
       // hash check: every 10th vector is replicated under a higher id, so
       // at threshold 0.99999 the only qualifying pairs are the planted
@@ -528,7 +962,26 @@ object PipelineQueries {
         .select(col("vec_id")).orderBy("vec_id")
     }),
 
-    "pipeline_pii" -> ((s, dir) => {
+    // identical pattern strings (interpolated from Curation) under Java
+    // regex and RE2; 'g' mirrors Spark's replace-all default
+    Gate("pipeline_pii", {
+      import graft.operators.Curation.{EmailRe, PhoneRe, Ipv4Re}
+      s"""WITH p AS (
+         |  SELECT doc_id,
+         |    substring("text", 1, 40) || ' contact user' || CAST(doc_id AS VARCHAR)
+         |      || '@example.com tel +1-555-'
+         |      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+         |      || ' host 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1' AS t
+         |  FROM documents)
+         |SELECT doc_id,
+         |  CAST(len(regexp_extract_all(t, '$EmailRe')) AS BIGINT) AS n_emails,
+         |  CAST(len(regexp_extract_all(t, '$PhoneRe')) AS BIGINT) AS n_phones,
+         |  CAST(len(regexp_extract_all(t, '$Ipv4Re')) AS BIGINT) AS n_ips,
+         |  regexp_replace(regexp_replace(regexp_replace(t,
+         |    '$EmailRe', '[EMAIL]', 'g'), '$PhoneRe', '[PHONE]', 'g'), '$Ipv4Re', '[IP]', 'g')
+         |    AS text_redacted
+         |FROM p ORDER BY doc_id""".stripMargin
+    }, (s, dir) => {
       // the synthetic corpus carries no PII, so the gate plants a
       // deterministic contact line per document and scrubs it back out —
       // the regex kernels, not the data, are what is under test
@@ -545,7 +998,23 @@ object PipelineQueries {
         .orderBy("doc_id")
     }),
 
-    "pipeline_url_filter" -> ((s, dir) => {
+    Gate("pipeline_url_filter", {
+      val blockedSql = BlockedDomains.map(d => s"'$d'").mkString("[", ", ", "]")
+      s"""WITH p AS (
+         |  SELECT doc_id, lang,
+         |    substring("text", 1, 30) || ' see https://site'
+         |      || CAST(doc_id % 20 AS VARCHAR) || '.example.org/p/'
+         |      || CAST(doc_id AS VARCHAR) || ' and http://ok.example.com/'
+         |      || CAST(doc_id AS VARCHAR) AS t
+         |  FROM documents),
+         |d AS (
+         |  SELECT doc_id, lang,
+         |    regexp_extract_all(coalesce(t, ''), '${graft.operators.Curation.UrlDomainRe}', 1) AS domains
+         |  FROM p)
+         |SELECT doc_id, lang, CAST(len(domains) AS BIGINT) AS n_urls
+         |FROM d WHERE NOT list_has_any(domains, $blockedSql)
+         |ORDER BY doc_id""".stripMargin
+    }, (s, dir) => {
       // like pipeline_pii, URLs are planted deterministically (the corpus
       // has none): each doc cites one of 20 rotating domains plus one
       // always-good domain; the 5 blocked domains remove ~25% of docs
@@ -561,7 +1030,10 @@ object PipelineQueries {
         .orderBy("doc_id")
     }),
 
-    "pipeline_bpe" -> ((s, dir) =>
+    // full training replay (bpeReplaySql): DuckDB relearns all 64 merge
+    // rules from scratch — argmax, tie-break and greedy apply all
+    // recomputed — so the rule table itself driver-hashes
+    Gate("pipeline_bpe", bpeReplaySql, (s, dir) =>
       // BPE tokenizer training (Sennrich ACL'16): 64 merge rules learned
       // from the corpus vocabulary. The corpus is scanned once (tokenize →
       // word count); training then runs the INCREMENTAL algorithm on the
@@ -577,7 +1049,8 @@ object PipelineQueries {
       graft.operators.Bpe.train(t(s, dir, "documents"), "text", merges = BpeMerges)
         .orderBy("round")),
 
-    "pipeline_bpe_bytes" -> ((s, dir) =>
+    // byte-level training replay over the multi-byte-seeded corpus
+    Gate("pipeline_bpe_bytes", bpeBytesReplaySql, (s, dir) =>
       // BYTE-LEVEL BPE training (the real-LLM-tokenizer symbol model:
       // GPT-2's bytes_to_unicode alphabet): words split into UTF-8 BYTES
       // mapped to printable symbols, merges learned over those — a
@@ -593,7 +1066,10 @@ object PipelineQueries {
         "text", merges = BpeBytesMerges, byteLevel = true)
         .orderBy("round")),
 
-    "pipeline_bpe_apply" -> ((s, dir) => {
+    // training replay up to the final vocab v64, then the per-doc encode
+    // as a tokens-to-vocab join (bpeApplySql) — the applied tokenizer's
+    // output driver-hashes end to end
+    Gate("pipeline_bpe_apply", bpeApplySql, (s, dir) => {
       // the inference side of BPE, gated end-to-end: train the 64 merge
       // rules (bit-deterministic, DuckDB-replayable), then ENCODE the
       // whole corpus under them — per-doc subword token counts, the
@@ -609,7 +1085,28 @@ object PipelineQueries {
         .orderBy("doc_id")
     }),
 
-    "text_hash_embed" -> ((s, dir) =>
+    // same md5-bucket arithmetic as TextAnalysis.hashedBow; the squared
+    // norm sums integer-valued doubles (exact), so division + round(4)
+    // bit-match across engines
+    Gate("text_hash_embed", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |b AS (SELECT doc_id, list_transform(ts,
+         |        x -> CAST(concat('0x', substring(md5(x), 1, 8)) AS BIGINT) % 64) AS bs
+         |      FROM t),
+         |c AS (SELECT doc_id, list_transform(range(0, 64),
+         |        k -> CAST(len(list_filter(bs, x -> x = k)) AS DOUBLE)) AS cs
+         |      FROM b),
+         |n AS (SELECT doc_id, cs,
+         |        sqrt(list_reduce(list_prepend(0.0,
+         |          list_transform(cs, x -> x * x)), (a, x) -> a + x)) AS nrm
+         |      FROM c),
+         |e AS (SELECT doc_id,
+         |        CASE WHEN nrm = 0 THEN cs
+         |             ELSE list_transform(cs, x -> round(x / nrm, 4)) END AS emb
+         |      FROM n)
+         |SELECT doc_id,
+         |  array_to_string(list_transform(emb,
+         |    x -> CAST(CAST(x AS DECIMAL(10,4)) AS VARCHAR)), ',') AS embedding
+         |FROM e ORDER BY doc_id""".stripMargin, (s, dir) =>
       // hashing-trick featurization: md5-bucketed token counts,
       // l2-normalized — the model-free bridge from text to the
       // embedding-space operators. The gate emits the vector as ONE
@@ -624,7 +1121,33 @@ object PipelineQueries {
             x => x.cast("decimal(10,4)").cast("string")), ",").as("embedding"))
         .orderBy("doc_id")),
 
-    "pipeline_embed_dedup" -> ((s, dir) =>
+    // the full text→features→dedup chain against one SQL truth: embeddings
+    // via the text_hash_embed CTEs, survivors = docs with no lower-id
+    // neighbor at cosine >= 0.95. NaN guard: zero vectors give NaN here
+    // but 0.0 from graft_cosine — both must keep the row.
+    Gate("pipeline_embed_dedup", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents
+         |          WHERE doc_id < 2000),
+         |b AS (SELECT doc_id, list_transform(ts,
+         |        x -> CAST(concat('0x', substring(md5(x), 1, 8)) AS BIGINT) % 64) AS bs
+         |      FROM t),
+         |c AS (SELECT doc_id, list_transform(range(0, 64),
+         |        k -> CAST(len(list_filter(bs, x -> x = k)) AS DOUBLE)) AS cs
+         |      FROM b),
+         |n AS (SELECT doc_id, cs,
+         |        sqrt(list_reduce(list_prepend(0.0,
+         |          list_transform(cs, x -> x * x)), (a, x) -> a + x)) AS nrm
+         |      FROM c),
+         |e AS (SELECT doc_id,
+         |        CASE WHEN nrm = 0 THEN cs
+         |             ELSE list_transform(cs, x -> round(x / nrm, 4)) END AS emb
+         |      FROM n),
+         |d AS (SELECT DISTINCT y.doc_id
+         |      FROM e x JOIN e y ON x.doc_id < y.doc_id
+         |      WHERE NOT isnan(list_cosine_similarity(x.emb, y.emb))
+         |        AND list_cosine_similarity(x.emb, y.emb) >= 0.95)
+         |SELECT doc_id FROM e
+         |WHERE doc_id NOT IN (SELECT doc_id FROM d)
+         |ORDER BY doc_id""".stripMargin, (s, dir) =>
       // the embedding-space composition chain, end-to-end: text →
       // hashed-BoW features → semantic dedup survivors. nClusters=1 makes
       // semanticDedup equal brute-force global survivors (spec-proven),
@@ -640,7 +1163,18 @@ object PipelineQueries {
         "doc_id", "embedding", nClusters = 1, threshold = 0.95)
         .select("doc_id").orderBy("doc_id")),
 
-    "pipeline_chunk" -> ((s, dir) =>
+    // same chunk arithmetic as Curation.chunkDocuments: stride 48 = 64-16,
+    // nChunks = max(1, ceil((n-16)/48)), window = tokens[start, start+64)
+    Gate("pipeline_chunk", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |n AS (SELECT doc_id, ts, len(ts) AS n FROM t WHERE len(ts) > 0),
+         |c AS (SELECT doc_id, ts, n,
+         |        unnest(range(0, greatest(1, (n - 16 + 47) // 48))) AS chunk_id
+         |      FROM n)
+         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
+         |  CAST(least(64, n - chunk_id * 48) AS BIGINT) AS chunk_tokens,
+         |  array_to_string(list_slice(ts, chunk_id * 48 + 1,
+         |    least(chunk_id * 48 + 64, n)), ' ') AS chunk_text
+         |FROM c ORDER BY doc_id, chunk_id""".stripMargin, (s, dir) =>
       // context-window chunking: 64-token windows, 16-token overlap —
       // the shuffle-free split ahead of packing/embedding
       graft.operators.Curation.chunkDocuments(
@@ -648,12 +1182,16 @@ object PipelineQueries {
         chunkTokens = 64, overlap = 16)
         .orderBy("doc_id", "chunk_id")),
 
-    "text_langid" -> ((s, dir) =>
+    Gate("text_langid", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |h AS (SELECT doc_id, $HitsCols FROM t)
+         |SELECT doc_id, $LangCaseSql AS lang_pred FROM h ORDER BY doc_id""".stripMargin, (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), graft.functions.TextFunctions.langId(col("text")).as("lang_pred"))
         .orderBy("doc_id")),
 
-    "text_collocations" -> ((s, dir) =>
+    // identical integer counts; the log argument is fixed-order double
+    // arithmetic, round(4) pins the cross-engine rank (bm25 contract)
+    Gate("text_collocations", collocReplaySql, (s, dir) =>
       // PMI collocation mining (Church & Hanks; word2vec's phrase pass):
       // adjacent pairs scored ln((c12/B)/((c1/T)(c2/T))), minCount
       // suppresses the hapax-PMI explosion, top-50 by rounded score.
@@ -662,7 +1200,9 @@ object PipelineQueries {
       TextAnalysis.collocations(t(s, dir, "documents"), "text",
         minCount = 5L, k = 50)),
 
-    "text_collocations_inc" -> ((s, dir) => {
+    // the incrementally-built count store serves the IDENTICAL PMI —
+    // counts are additive integers, so the one-shot scan replays it
+    Gate("text_collocations_inc", collocReplaySql, (s, dir) => {
       // the INCREMENTAL face of corpus statistics: unigram/bigram/total
       // counts committed per ingest batch (hash-bucketed filesets,
       // atomic manifest publish — the BM25/dedup store pattern), PMI
@@ -682,11 +1222,42 @@ object PipelineQueries {
       TextAnalysis.collocationsFromStore(s, store, minCount = 5L, k = 50)
     }),
 
-    "text_quality" -> ((s, dir) =>
+    // full quality-surface mirror: bpeish token count re-expressed without
+    // lookarounds (RE2) as letter-runs + digit-runs + non-alnum-non-space
+    // chars; composite score recomputed with the same double arithmetic
+    // and associativity as TextFunctions.qualityScore
+    Gate("text_quality", s"""WITH t AS (
+         |  SELECT doc_id, "text", $ToksSql AS ts FROM documents
+         |), m AS (
+         |  SELECT doc_id, "text", ts, $HitsCols,
+         |    CAST(len(ts) AS BIGINT) AS n_words,
+         |    CAST(len(regexp_extract_all("text", '\\p{L}+'))
+         |       + len(regexp_extract_all("text", '\\p{N}+'))
+         |       + len(regexp_extract_all("text", '[^\\p{L}\\p{N}\\s]')) AS BIGINT) AS n_tokens,
+         |    CAST(length("text") AS BIGINT) AS n_chars,
+         |    CASE WHEN length("text") = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all("text", '[[:punct:]]'))::DOUBLE / length("text")::DOUBLE END AS pr,
+         |    CASE WHEN len(ts) = 0 THEN 0.0
+         |         ELSE ${hitsSql("en")}::DOUBLE / len(ts)::DOUBLE END AS sw,
+         |    CASE WHEN len(ts) = 0 THEN 0.0
+         |         ELSE list_sum(list_transform(ts, x -> len(x)))::DOUBLE / len(ts)::DOUBLE END AS awl
+         |  FROM t
+         |)
+         |SELECT doc_id, $LangCaseSql AS lang_pred, n_words, n_tokens, n_chars,
+         |  round(pr, 4) AS punct_ratio, round(sw, 4) AS stopword_ratio, round(awl, 4) AS avg_word_len,
+         |  round(least(n_words::DOUBLE / 100.0, 1.0) * 0.3
+         |      + greatest(0.0, 1.0 - pr * 4.0) * 0.3
+         |      + least(sw * 3.0, 1.0) * 0.2
+         |      + (CASE WHEN awl BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
+         |FROM m ORDER BY doc_id""".stripMargin, (s, dir) =>
       TextAnalysis.analyze(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")),
 
-    "text_tokens" -> ((s, dir) =>
+    Gate("text_tokens", """SELECT doc_id,
+        |  len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
+        |      x -> len(x) > 0)) AS n_words,
+        |  length("text") AS n_chars
+        |FROM documents ORDER BY doc_id""".stripMargin, (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         // long-typed to match DuckDB's BIGINT len()/length()
@@ -694,7 +1265,10 @@ object PipelineQueries {
         length(col("text")).cast("long").as("n_chars"))
         .orderBy("doc_id")),
 
-    "text_vocab" -> ((s, dir) =>
+    Gate("text_vocab", s"""WITH w AS (SELECT unnest($ToksSql) AS word FROM documents),
+         |c AS (SELECT word, count(*) AS n FROM w GROUP BY word)
+         |SELECT word, CAST(n AS BIGINT) AS n FROM c
+         |ORDER BY n DESC, word LIMIT 100""".stripMargin, (s, dir) =>
       // corpus vocabulary builder (the tokenizer-training / vocab-pruning
       // input): global top-100 words by frequency. One (word) groupBy of
       // narrow rows; the global top-k compiles to TakeOrderedAndProject
@@ -706,7 +1280,34 @@ object PipelineQueries {
         .orderBy(col("n").desc, col("word").asc)
         .limit(100)),
 
-    "text_fingerprint" -> ((s, dir) =>
+    // full replay of the portable winnowing fingerprint (Schleimer et al.
+    // SIGMOD'03; gate params k=5, w=4): per-position 5-gram hashes via
+    // the md5 32-bit bridge (engine-identical values), per-window minima
+    // over 4-gram windows, distinct set. n_hashes counts the set and
+    // fp_xor is the order-insensitive xor fold, so both engines agree
+    // however their arrays are ordered. Short docs: < k chars -> empty
+    // fingerprint; <= w-1 windows -> the single global min.
+    Gate("text_fingerprint", """WITH s AS (SELECT doc_id, lower("text") AS s,
+        |             length(lower("text")) AS n FROM documents),
+        |h AS (SELECT doc_id,
+        |        CASE WHEN n < 5 THEN CAST([] AS BIGINT[])
+        |             ELSE list_transform(range(0, n - 5 + 1),
+        |               i -> CAST(concat('0x',
+        |                 substring(md5(substring(s, CAST(i + 1 AS INT), 5)), 1, 8))
+        |                 AS BIGINT))
+        |        END AS hs
+        |      FROM s),
+        |f AS (SELECT doc_id,
+        |        CASE WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
+        |             WHEN len(hs) - 3 <= 0 THEN [list_min(hs)]
+        |             ELSE list_distinct(list_transform(range(0, len(hs) - 4 + 1),
+        |               j -> list_min(hs[CAST(j + 1 AS INT):CAST(j + 4 AS INT)])))
+        |        END AS fp
+        |      FROM h)
+        |SELECT doc_id, CAST(len(fp) AS BIGINT) AS n_hashes,
+        |  abs(list_reduce(list_prepend(CAST(0 AS BIGINT), fp),
+        |    (a, x) -> xor(a, x))) AS fp_xor
+        |FROM f ORDER BY doc_id""".stripMargin, (s, dir) =>
       // portableHash: 32-bit md5-derived k-gram hashes so DuckDB can
       // recompute the SAME winnowing fingerprint (see oracle); the
       // xor-fold checksum is order-insensitive, so both engines agree on
@@ -717,7 +1318,10 @@ object PipelineQueries {
           abs(aggregate(col("fingerprint"), lit(0L), (a, x) => a.bitwiseXOR(x))).as("fp_xor"))
         .orderBy("doc_id")),
 
-    "dedup_incremental_minhash" -> ((s, dir) => {
+    // the incremental store's per-batch union must equal the SAME
+    // brute-force truth as the one-shot operator: arrival batching is
+    // provably invisible (deterministic banding + exactly-once emission)
+    Gate("dedup_incremental_minhash", bruteJaccardSql(3, 0.8), (s, dir) => {
       // incremental NEAR-dup maintenance (operators.NearDupStore): the
       // corpus arrives in three id-range batches, each banded and checked
       // against the persisted LSH bucket + signature store — O(batch +
@@ -739,7 +1343,15 @@ object PipelineQueries {
         .orderBy("a", "b")
     }),
 
-    "dedup_incremental" -> ((s, dir) => {
+    // one-shot truth for the incremental store: with id-range arrival
+    // batches the first-arrival keeper IS the global min id, and the
+    // arrival batch that first contributed a hash is the keeper's id
+    // range — the oracle re-derives what the store recorded at ingest
+    Gate("dedup_incremental", """SELECT sha256("text") AS content_hash, min(doc_id) AS keep_id,
+        |  CAST(CASE WHEN min(doc_id) < 1000 THEN 0
+        |            WHEN min(doc_id) < 3000 THEN 1 ELSE 2 END AS BIGINT) AS arrival_batch
+        |FROM documents GROUP BY sha256("text")
+        |ORDER BY content_hash""".stripMargin, (s, dir) => {
       // incremental exact-dedup maintenance, gated end-to-end: the corpus
       // arrives as three id-range batches, each deduped against the
       // persisted hash store (first-arrival-wins) and appended —
@@ -765,7 +1377,24 @@ object PipelineQueries {
         .orderBy("content_hash")
     }),
 
-    "dedup_cluster" -> ((s, dir) => {
+    // components == 30-min sessions on the chain graph, so the truth is
+    // gaps-and-islands; epoch_us on both sides (Spark floors ns->us the
+    // same way DuckDB's TIMESTAMP read does)
+    Gate("dedup_cluster", """WITH x AS (
+        |  SELECT event_id, user_id, ts,
+        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
+        |           OVER (PARTITION BY user_id ORDER BY ts, event_id) <= 1800000000
+        |         THEN 0 ELSE 1 END AS new_s
+        |  FROM events
+        |), y AS (
+        |  SELECT event_id, user_id,
+        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                     ROWS UNBOUNDED PRECEDING) AS sess
+        |  FROM x
+        |)
+        |SELECT event_id,
+        |  CAST(MIN(event_id) OVER (PARTITION BY user_id, sess) AS BIGINT) AS component
+        |FROM y ORDER BY event_id""".stripMargin, (s, dir) => {
       // Connected-components duplicate clustering, driven on a graph with
       // a SQL-checkable truth: consecutive same-user events within 30 min
       // form chain edges, so components == sessions and the component
@@ -790,7 +1419,10 @@ object PipelineQueries {
         .orderBy("event_id")
     }),
 
-    "dedup_cluster_survivors" -> ((s, dir) => {
+    // survivors of chain-edge components == one doc per sha256 group
+    Gate("dedup_cluster_survivors", """SELECT doc_id, lang, source FROM documents
+        |WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY sha256("text"))
+        |ORDER BY doc_id""".stripMargin, (s, dir) => {
       // the full dedup pipeline, end-to-end: PAIRS (exact-dup edges) →
       // connected components → one survivor per cluster. Edges are a
       // CHAIN per duplicate group (consecutive doc_ids), not a clique:
@@ -811,20 +1443,69 @@ object PipelineQueries {
         .orderBy("doc_id")
     }),
 
-    "pipeline_holdout" -> ((s, dir) =>
+    Gate("pipeline_holdout", """WITH r AS (
+        |  SELECT doc_id, lang,
+        |    row_number() OVER (PARTITION BY lang
+        |      ORDER BY sha256('holdout' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        |  FROM documents)
+        |SELECT doc_id, lang,
+        |  CASE WHEN rk <= 20 THEN 'val' ELSE 'train' END AS split
+        |FROM r ORDER BY doc_id""".stripMargin, (s, dir) =>
       // exact-size eval holdout: 20 val docs per language, hash-ordered
       graft.operators.Curation.holdoutSplit(
         t(s, dir, "documents"), "doc_id", "lang", valPerGroup = 20)
         .select("doc_id", "lang", "split")
         .orderBy("doc_id")),
 
-    "pipeline_mix" -> ((s, dir) =>
+    // same derived-rate arithmetic (double ops in the same order) and the
+    // same multiplicative-hash uniform as Curation.mixToTarget
+    Gate("pipeline_mix", """WITH tok AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
+        |         x -> len(x) > 0)) AS BIGINT) AS n_tokens
+        |  FROM documents
+        |), tgt AS (
+        |  SELECT * FROM (VALUES ('en', 0.5), ('de', 0.2), ('fr', 0.15),
+        |                        ('es', 0.1), ('zh', 0.05)) AS t(lang, target)
+        |), tot AS (
+        |  SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tokens_g
+        |  FROM tok GROUP BY lang
+        |), capd AS (
+        |  SELECT tot.lang, tokens_g, target, tokens_g / target AS cap
+        |  FROM tot JOIN tgt USING (lang)
+        |), c AS (SELECT min(cap) AS c FROM capd),
+        |rates AS (SELECT lang, c.c * target / tokens_g AS rate FROM capd, c)
+        |SELECT doc_id, lang, n_tokens
+        |FROM tok JOIN rates USING (lang)
+        |WHERE (((doc_id % 1048576) * 2654435761) % 1048576) / 1048576.0 < rate
+        |ORDER BY doc_id""".stripMargin, (s, dir) =>
       // data mixing: downsample so output token mass follows the target
       // language shares; rates are DERIVED from corpus token totals
       graft.operators.Curation.mixToTarget(t(s, dir, "documents"),
         "doc_id", "text", "lang", MixTargets)),
 
-    "pipeline_mix_temperature" -> ((s, dir) =>
+    // same token counts and hash gate as pipeline_mix, targets derived:
+    // w = pow(tokens, 0.5), rate = min_h(tokens_h/w_h) * w_g / tokens_g
+    // (normalization cancels algebraically), rounded to 12 decimals on
+    // both engines so pow's last-ulp license cannot flip the compare
+    Gate("pipeline_mix_temperature", """WITH tok AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
+        |         x -> len(x) > 0)) AS BIGINT) AS n_tokens
+        |  FROM documents
+        |), tot AS (
+        |  SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tokens_g
+        |  FROM tok GROUP BY lang
+        |), wt AS (
+        |  SELECT lang, tokens_g, pow(CAST(tokens_g AS DOUBLE), 0.5) AS w FROM tot
+        |), m AS (SELECT min(CAST(tokens_g AS DOUBLE) / w) AS m FROM wt),
+        |rates AS (SELECT lang,
+        |            round(m.m * w / CAST(tokens_g AS DOUBLE), 12) AS rate
+        |          FROM wt, m)
+        |SELECT doc_id, lang, n_tokens
+        |FROM tok JOIN rates USING (lang)
+        |WHERE (((doc_id % 1048576) * 2654435761) % 1048576) / 1048576.0 < rate
+        |ORDER BY doc_id""".stripMargin, (s, dir) =>
       // temperature-scaled mixing (mT5/XLM-R): targets DERIVED from the
       // corpus (w = tokens^0.5 — alpha 0.5 flattens toward uniform, so
       // low-resource languages up-weight), most-constrained group kept
@@ -834,7 +1515,37 @@ object PipelineQueries {
       graft.operators.Curation.temperatureMix(t(s, dir, "documents"),
         "doc_id", "text", "lang", alpha = 0.5)),
 
-    "pipeline_ccnet_buckets" -> ((s, dir) =>
+    // the text_lm_score replay joined with source; tercile cutoffs via
+    // quantile_cont at the same double literals Scala's 1.0/3 and 2.0/3
+    // render to, rounded 4dp like the scores; CASE assignment
+    Gate("pipeline_ccnet_buckets", s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
+         |p AS (SELECT doc_id, unnest(ts) AS w FROM t),
+         |m AS (SELECT doc_id, w, count(*) AS m FROM p GROUP BY 1, 2),
+         |tf AS (SELECT w, sum(m) AS cnt FROM m GROUP BY 1),
+         |tot AS (SELECT sum(cnt) AS total FROM tf),
+         |terms AS (
+         |  SELECT doc_id,
+         |    struct_pack(w := w, term := m.m::DOUBLE * -ln(cnt::DOUBLE / total::DOUBLE)) AS wt,
+         |    m.m AS m
+         |  FROM m JOIN tf USING (w) CROSS JOIN tot),
+         |d AS (SELECT doc_id, list_sort(list(wt)) AS l, CAST(sum(m) AS BIGINT) AS n
+         |      FROM terms GROUP BY doc_id),
+         |sc AS (SELECT doc_id,
+         |         round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
+         |               (a, x) -> a + x) / n, 4) AS avg_neg_logp
+         |       FROM d),
+         |j AS (SELECT sc.doc_id, dd.source, sc.avg_neg_logp
+         |      FROM sc JOIN documents dd USING (doc_id)),
+         |c AS (SELECT source,
+         |        round(quantile_cont(avg_neg_logp, 0.3333333333333333), 4) AS c1,
+         |        round(quantile_cont(avg_neg_logp, 0.6666666666666666), 4) AS c2
+         |      FROM j GROUP BY source)
+         |SELECT j.doc_id, j.source, j.avg_neg_logp,
+         |  CASE WHEN j.avg_neg_logp <= c.c1 THEN 'head'
+         |       WHEN j.avg_neg_logp <= c.c2 THEN 'middle'
+         |       ELSE 'tail' END AS bucket
+         |FROM j JOIN c USING (source)
+         |ORDER BY j.doc_id""".stripMargin, (s, dir) =>
       // CCNet head/middle/tail perplexity split per source: tercile
       // CUTOFFS from exact interpolated percentiles (rounded 4dp like
       // the scores — the calibration-then-threshold deployment shape;
@@ -843,12 +1554,28 @@ object PipelineQueries {
       graft.operators.Curation.ccnetBuckets(t(s, dir, "documents"),
         "doc_id", "text", "source")),
 
-    "pipeline_pack" -> ((s, dir) =>
+    Gate("pipeline_pack", """WITH tok AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
+        |         x -> len(x) > 0)) AS BIGINT) AS n_tokens
+        |  FROM documents
+        |)
+        |SELECT doc_id, lang, n_tokens,
+        |  CAST(floor((CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+        |         ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens) / 512) AS BIGINT) AS shard
+        |FROM tok ORDER BY doc_id""".stripMargin, (s, dir) =>
       // token-budget shard packing per language, 512 tokens per shard
       graft.operators.Curation.packShards(t(s, dir, "documents"),
         "doc_id", "text", "lang", budget = 512)),
 
-    "pipeline_decontaminate" -> ((s, dir) => {
+    Gate("pipeline_decontaminate", s"""WITH g AS (
+         |  SELECT doc_id, unnest(${ngramsSql(5)}) AS g
+         |  FROM (SELECT doc_id, $ToksSql AS ts FROM documents)
+         |), ev AS (SELECT DISTINCT g FROM g WHERE doc_id < 25),
+         |bad AS (SELECT DISTINCT g.doc_id FROM g JOIN ev USING (g) WHERE g.doc_id >= 25)
+         |SELECT doc_id, lang, source FROM documents
+         |WHERE doc_id >= 25 AND doc_id NOT IN (SELECT doc_id FROM bad)
+         |ORDER BY doc_id""".stripMargin, (s, dir) => {
       // n-gram decontamination: docs 0..24 stand in for the eval set;
       // surviving training docs share no word 5-gram with any of them
       val docs = t(s, dir, "documents")
@@ -859,7 +1586,24 @@ object PipelineQueries {
         .orderBy("doc_id")
     }),
 
-    "pipeline_decontaminate_fuzzy" -> ((s, dir) => {
+    // survivors = training docs sharing no word 5-gram with the eval set
+    // brute-force eval×train Jaccard >= 0.5 over 3-gram shingle sets —
+    // same inter/(a+b-inter) arithmetic as the fuzzy screen's verify
+    Gate("pipeline_decontaminate_fuzzy", s"""WITH sh AS (
+         |  SELECT doc_id, ${ngramsSql(3)} AS sh
+         |  FROM (SELECT doc_id, $ToksSql AS ts FROM documents)
+         |), nz AS (SELECT doc_id, sh, len(sh) AS sz FROM sh WHERE len(sh) > 0),
+         |p AS (
+         |  SELECT tr.doc_id,
+         |    len(list_intersect(tr.sh, ev.sh))::DOUBLE AS inter,
+         |    tr.sz::DOUBLE AS a, ev.sz::DOUBLE AS b
+         |  FROM nz tr, nz ev
+         |  WHERE tr.doc_id >= 25 AND ev.doc_id < 25),
+         |bad AS (SELECT DISTINCT doc_id FROM p
+         |        WHERE inter / (a + b - inter) >= 0.5)
+         |SELECT doc_id, lang, source FROM documents
+         |WHERE doc_id >= 25 AND doc_id NOT IN (SELECT doc_id FROM bad)
+         |ORDER BY doc_id""".stripMargin, (s, dir) => {
       // NEAR-duplicate decontamination: the exact-5-gram screen above
       // misses paraphrases; this drops any training doc whose 3-gram
       // Jaccard with an eval doc reaches 0.5 (the corpus's planted
@@ -874,7 +1618,29 @@ object PipelineQueries {
         .orderBy("doc_id")
     }),
 
-    "pipeline_e2e" -> ((s, dir) => {
+    // quality rules -> exact-dedup survivors -> greedy shard packing,
+    // with the same thresholds/arithmetic as the single-stage oracles
+    Gate("pipeline_e2e", s"""WITH t AS (SELECT doc_id, lang, "text", $ToksSql AS ts FROM documents),
+         |m AS (
+         |  SELECT doc_id, lang, "text", ts,
+         |    CAST(len(ts) AS BIGINT) AS nw,
+         |    CASE WHEN len(ts) = 0 THEN 0.0
+         |         ELSE list_sum(list_transform(ts, x -> len(x)))::DOUBLE / len(ts)::DOUBLE END AS awl,
+         |    CASE WHEN len(ts) <= 2 THEN 0.0
+         |         ELSE 1.0 - ${distinctNgramsSql(2)}::DOUBLE / (len(ts) - 1)::DOUBLE END AS dup2,
+         |    CASE WHEN len(ts) = 0 THEN 0.0
+         |         ELSE $TopTokenSql::DOUBLE / len(ts)::DOUBLE END AS topw
+         |  FROM t),
+         |q AS (
+         |  SELECT doc_id, lang, "text", CAST(len(ts) AS BIGINT) AS n_tokens FROM m
+         |  WHERE nw BETWEEN 30 AND 100000 AND awl BETWEEN 3.0 AND 10.0
+         |    AND dup2 <= 0.1 AND topw <= 0.2),
+         |k AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY sha256("text")),
+         |s AS (SELECT q.doc_id, q.lang, q.n_tokens FROM q JOIN k USING (doc_id))
+         |SELECT doc_id, lang, n_tokens,
+         |  CAST(floor((CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+         |         ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens) / 512) AS BIGINT) AS shard
+         |FROM s ORDER BY doc_id""".stripMargin, (s, dir) => {
       // the curation flagship, end-to-end: structural quality filter →
       // exact dedup survivors (among the filtered set) → token-budget
       // shard packing per language. Each stage is individually oracled
@@ -885,7 +1651,11 @@ object PipelineQueries {
       graft.operators.Curation.packShards(survivors, "doc_id", "text", "lang", budget = 512)
     }),
 
-    "mm_manifest" -> ((s, dir) => {
+    // full byte-level container replay (mmManifestOracleSql): DuckDB
+    // re-parses the files the gate wrote — PNG IHDR, recursive RIFF and
+    // ISO-BMFF walks, a JPEG marker walk for the decoded frame dims —
+    // and recomputes the byte stats with the kernel's exact fold order
+    Gate("mm_manifest", mmManifestOracleSql, (s, dir) => {
       // the REAL on-ramp at the gate: materialize media files from the
       // documents table, then ingest them through Spark's binaryFile
       // source (distributed file-split scan) — the synthetic
@@ -1624,956 +2394,4 @@ object PipelineQueries {
        |LEFT JOIN stsz z USING (media_id)
        |ORDER BY k.media_id""".stripMargin
   }
-
-  val oracleSql: Map[String, String] = Map(
-    // full byte-level container replay (mmManifestOracleSql): DuckDB
-    // re-parses the files the gate wrote — PNG IHDR, recursive RIFF and
-    // ISO-BMFF walks, a JPEG marker walk for the decoded frame dims —
-    // and recomputes the byte stats with the kernel's exact fold order
-    "mm_manifest" -> mmManifestOracleSql,
-
-    "pipeline_url_filter" -> {
-      val blockedSql = BlockedDomains.map(d => s"'$d'").mkString("[", ", ", "]")
-      s"""WITH p AS (
-         |  SELECT doc_id, lang,
-         |    substring("text", 1, 30) || ' see https://site'
-         |      || CAST(doc_id % 20 AS VARCHAR) || '.example.org/p/'
-         |      || CAST(doc_id AS VARCHAR) || ' and http://ok.example.com/'
-         |      || CAST(doc_id AS VARCHAR) AS t
-         |  FROM documents),
-         |d AS (
-         |  SELECT doc_id, lang,
-         |    regexp_extract_all(coalesce(t, ''), '${graft.operators.Curation.UrlDomainRe}', 1) AS domains
-         |  FROM p)
-         |SELECT doc_id, lang, CAST(len(domains) AS BIGINT) AS n_urls
-         |FROM d WHERE NOT list_has_any(domains, $blockedSql)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // full training replay (bpeReplaySql): DuckDB relearns all 64 merge
-    // rules from scratch — argmax, tie-break and greedy apply all
-    // recomputed — so the rule table itself driver-hashes
-    "pipeline_bpe" -> bpeReplaySql,
-
-    // byte-level training replay over the multi-byte-seeded corpus
-    "pipeline_bpe_bytes" -> bpeBytesReplaySql,
-
-    // training replay up to the final vocab v64, then the per-doc encode
-    // as a tokens-to-vocab join (bpeApplySql) — the applied tokenizer's
-    // output driver-hashes end to end
-    "pipeline_bpe_apply" -> bpeApplySql,
-
-    // same md5-bucket arithmetic as TextAnalysis.hashedBow; the squared
-    // norm sums integer-valued doubles (exact), so division + round(4)
-    // bit-match across engines
-    "text_hash_embed" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |b AS (SELECT doc_id, list_transform(ts,
-         |        x -> CAST(concat('0x', substring(md5(x), 1, 8)) AS BIGINT) % 64) AS bs
-         |      FROM t),
-         |c AS (SELECT doc_id, list_transform(range(0, 64),
-         |        k -> CAST(len(list_filter(bs, x -> x = k)) AS DOUBLE)) AS cs
-         |      FROM b),
-         |n AS (SELECT doc_id, cs,
-         |        sqrt(list_reduce(list_prepend(0.0,
-         |          list_transform(cs, x -> x * x)), (a, x) -> a + x)) AS nrm
-         |      FROM c),
-         |e AS (SELECT doc_id,
-         |        CASE WHEN nrm = 0 THEN cs
-         |             ELSE list_transform(cs, x -> round(x / nrm, 4)) END AS emb
-         |      FROM n)
-         |SELECT doc_id,
-         |  array_to_string(list_transform(emb,
-         |    x -> CAST(CAST(x AS DECIMAL(10,4)) AS VARCHAR)), ',') AS embedding
-         |FROM e ORDER BY doc_id""".stripMargin,
-
-    // the full text→features→dedup chain against one SQL truth: embeddings
-    // via the text_hash_embed CTEs, survivors = docs with no lower-id
-    // neighbor at cosine >= 0.95. NaN guard: zero vectors give NaN here
-    // but 0.0 from graft_cosine — both must keep the row.
-    "pipeline_embed_dedup" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents
-         |          WHERE doc_id < 2000),
-         |b AS (SELECT doc_id, list_transform(ts,
-         |        x -> CAST(concat('0x', substring(md5(x), 1, 8)) AS BIGINT) % 64) AS bs
-         |      FROM t),
-         |c AS (SELECT doc_id, list_transform(range(0, 64),
-         |        k -> CAST(len(list_filter(bs, x -> x = k)) AS DOUBLE)) AS cs
-         |      FROM b),
-         |n AS (SELECT doc_id, cs,
-         |        sqrt(list_reduce(list_prepend(0.0,
-         |          list_transform(cs, x -> x * x)), (a, x) -> a + x)) AS nrm
-         |      FROM c),
-         |e AS (SELECT doc_id,
-         |        CASE WHEN nrm = 0 THEN cs
-         |             ELSE list_transform(cs, x -> round(x / nrm, 4)) END AS emb
-         |      FROM n),
-         |d AS (SELECT DISTINCT y.doc_id
-         |      FROM e x JOIN e y ON x.doc_id < y.doc_id
-         |      WHERE NOT isnan(list_cosine_similarity(x.emb, y.emb))
-         |        AND list_cosine_similarity(x.emb, y.emb) >= 0.95)
-         |SELECT doc_id FROM e
-         |WHERE doc_id NOT IN (SELECT doc_id FROM d)
-         |ORDER BY doc_id""".stripMargin,
-
-    // same chunk arithmetic as Curation.chunkDocuments: stride 48 = 64-16,
-    // nChunks = max(1, ceil((n-16)/48)), window = tokens[start, start+64)
-    "pipeline_chunk" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |n AS (SELECT doc_id, ts, len(ts) AS n FROM t WHERE len(ts) > 0),
-         |c AS (SELECT doc_id, ts, n,
-         |        unnest(range(0, greatest(1, (n - 16 + 47) // 48))) AS chunk_id
-         |      FROM n)
-         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-         |  CAST(least(64, n - chunk_id * 48) AS BIGINT) AS chunk_tokens,
-         |  array_to_string(list_slice(ts, chunk_id * 48 + 1,
-         |    least(chunk_id * 48 + 64, n)), ' ') AS chunk_text
-         |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // quality rules -> exact-dedup survivors -> greedy shard packing,
-    // with the same thresholds/arithmetic as the single-stage oracles
-    "pipeline_e2e" ->
-      s"""WITH t AS (SELECT doc_id, lang, "text", $ToksSql AS ts FROM documents),
-         |m AS (
-         |  SELECT doc_id, lang, "text", ts,
-         |    CAST(len(ts) AS BIGINT) AS nw,
-         |    CASE WHEN len(ts) = 0 THEN 0.0
-         |         ELSE list_sum(list_transform(ts, x -> len(x)))::DOUBLE / len(ts)::DOUBLE END AS awl,
-         |    CASE WHEN len(ts) <= 2 THEN 0.0
-         |         ELSE 1.0 - ${distinctNgramsSql(2)}::DOUBLE / (len(ts) - 1)::DOUBLE END AS dup2,
-         |    CASE WHEN len(ts) = 0 THEN 0.0
-         |         ELSE $TopTokenSql::DOUBLE / len(ts)::DOUBLE END AS topw
-         |  FROM t),
-         |q AS (
-         |  SELECT doc_id, lang, "text", CAST(len(ts) AS BIGINT) AS n_tokens FROM m
-         |  WHERE nw BETWEEN 30 AND 100000 AND awl BETWEEN 3.0 AND 10.0
-         |    AND dup2 <= 0.1 AND topw <= 0.2),
-         |k AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY sha256("text")),
-         |s AS (SELECT q.doc_id, q.lang, q.n_tokens FROM q JOIN k USING (doc_id))
-         |SELECT doc_id, lang, n_tokens,
-         |  CAST(floor((CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |         ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens) / 512) AS BIGINT) AS shard
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // identical pattern strings (interpolated from Curation) under Java
-    // regex and RE2; 'g' mirrors Spark's replace-all default
-    "pipeline_pii" -> {
-      import graft.operators.Curation.{EmailRe, PhoneRe, Ipv4Re}
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    substring("text", 1, 40) || ' contact user' || CAST(doc_id AS VARCHAR)
-         |      || '@example.com tel +1-555-'
-         |      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-         |      || ' host 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1' AS t
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(t, '$EmailRe')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(t, '$PhoneRe')) AS BIGINT) AS n_phones,
-         |  CAST(len(regexp_extract_all(t, '$Ipv4Re')) AS BIGINT) AS n_ips,
-         |  regexp_replace(regexp_replace(regexp_replace(t,
-         |    '$EmailRe', '[EMAIL]', 'g'), '$PhoneRe', '[PHONE]', 'g'), '$Ipv4Re', '[IP]', 'g')
-         |    AS text_redacted
-         |FROM p ORDER BY doc_id""".stripMargin
-    },
-
-    // exact truth via DuckDB's own cosine — rank ties broken by id on both
-    // sides; round(4) absorbs last-ulp accumulation drift
-    "ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-        |           FROM embeddings WHERE vec_id < 5),
-        |s AS (
-        |  SELECT q.qid, e.vec_id AS id,
-        |    list_cosine_similarity(e.embedding::DOUBLE[], q.qv) AS c
-        |  FROM embeddings e, q
-        |),
-        |r AS (SELECT qid, id, c,
-        |        row_number() OVER (PARTITION BY qid ORDER BY c DESC, id) AS rk
-        |      FROM s)
-        |SELECT qid, id, round(c, 4) AS cosine, rk FROM r WHERE rk <= 10
-        |ORDER BY qid, rk""".stripMargin,
-
-    // exact truth via DuckDB's own cosine over the same double vectors;
-    // both engines accumulate sequentially in double, and BOTH the score
-    // and the threshold compare use the 4-decimal-rounded value, so
-    // boundary membership is pinned the same way the top-k rankings are
-    // (an unrounded compare could flip a last-ulp row in/out at 0.3)
-    "ann_range_search" ->
-      """SELECT q.vec_id AS qid, e.vec_id AS id,
-        |  round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) AS cosine
-        |FROM embeddings e
-        |JOIN (SELECT * FROM embeddings WHERE vec_id < 5) q
-        |  ON e.vec_id != q.vec_id
-        |WHERE round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) >= 0.3
-        |ORDER BY qid, id""".stripMargin,
-
-    // full replay of the (L, k) hyperplane scheme in SQL (lshReplaySql):
-    // candidate generation, scoring and top-k are all recomputed from
-    // scratch by DuckDB — so the LSH result itself driver-hashes
-    "ann_lsh" ->
-      s"""$lshReplaySql
-         |SELECT qid, id, round(cs, 4) AS cosine, rk
-         |FROM lr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    // full SQ8 replay: per-dim calibration, identical fixed-order
-    // quantize/dequantize arithmetic (floor of the same IEEE
-    // expression), fold-order cosines — shortlist AND final page
-    // recompute from scratch and driver-hash
-    "ann_sq8_rerank" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-         |d AS (SELECT id, i, v[i] AS x
-         |      FROM e, unnest(range(1, ${EmbeddingDim + 1})) AS r(i)),
-         |st AS (SELECT i, min(x) AS mn, max(x) AS mx FROM d GROUP BY i),
-         |cd AS (SELECT d.id, d.i,
-         |         CASE WHEN st.mx = st.mn THEN 0.0
-         |              ELSE floor(((d.x - st.mn) / (st.mx - st.mn)) * 255) END
-         |           * CASE WHEN st.mx = st.mn THEN 0.0
-         |                  ELSE (st.mx - st.mn) / 255 END
-         |           + st.mn AS xq
-         |       FROM d JOIN st USING (i)),
-         |dq AS (SELECT id, list(xq ORDER BY i) AS vq FROM cd GROUP BY id),
-         |q AS (SELECT id AS qid, v AS qv FROM e WHERE id < 5),
-         |ap AS (SELECT q.qid, dq.id, ${cosFoldSql("dq.vq", "q.qv")} AS ascore
-         |       FROM dq CROSS JOIN q),
-         |sh AS (SELECT qid, id FROM (
-         |         SELECT qid, id, row_number() OVER (
-         |           PARTITION BY qid ORDER BY ascore DESC, id) AS ark
-         |         FROM ap) WHERE ark <= 40),
-         |ex AS (SELECT sh.qid, sh.id, ${cosFoldSql("e.v", "q.qv")} AS cs
-         |       FROM sh JOIN e ON e.id = sh.id JOIN q ON q.qid = sh.qid),
-         |r AS (SELECT qid, id, cs, row_number() OVER (
-         |        PARTITION BY qid ORDER BY cs DESC, id) AS rk FROM ex)
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM r WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    // full replay of IVF training + probing + search in SQL (ivfReplaySql)
-    // — the trained model is recomputed from scratch by DuckDB, so the
-    // approximate search result itself driver-hashes
-    "ann_ivf" ->
-      s"""$ivfReplaySql
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM r WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    // the same full training replay with the metadata predicate on the
-    // candidate scan: pre-filtered search must equal "the filtered rows
-    // were never in the probed cells"
-    "ann_ivf_filtered" ->
-      s"""${ivfReplaySqlFor("a.id % 3 = 1")}
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM r WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    // the same training replay with EVERY row as a query (the knn-join
-    // shape): per-row cell probing, neighbor candidates from the probed
-    // cells, self excluded, top-5 by exact cosine — the shuffle-join
-    // plan must be execution-strategy-invisible vs this broadcast replay
-    "ann_knn_join" ->
-      s"""${ivfTrainSql(16, "id % 2 = 0")},
-         |q AS (SELECT id AS qid, v AS qv FROM av),
-         |cr AS (SELECT q.qid, p.cell, ${cosFoldSql("q.qv", "p.c")} AS score
-         |       FROM q CROSS JOIN c3 p),
-         |probed AS (SELECT qid, cell FROM (
-         |             SELECT qid, cell,
-         |               row_number() OVER (PARTITION BY qid ORDER BY score DESC, cell DESC) AS rk
-         |             FROM cr) WHERE rk <= 4),
-         |cand AS (SELECT p.qid, a.id, a.v FROM probed p JOIN asg a USING (cell)
-         |         WHERE a.id <> p.qid),
-         |csc AS (SELECT cand.qid, cand.id, ${cosFoldSql("cand.v", "q.qv")} AS cs
-         |        FROM cand JOIN q USING (qid)),
-         |r AS (SELECT qid, id, cs,
-         |        row_number() OVER (PARTITION BY qid ORDER BY cs DESC, id) AS rk
-         |      FROM csc)
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM r WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
-
-    // full replay of IVF-PQ training (coarse k-means + residual
-    // codebooks) + encode + ADC search + exact re-rank in SQL
-    // (pqReplaySql) — DuckDB recomputes the entire trained model from
-    // scratch, so the compressed-index search result itself driver-hashes
-    "ann_ivfpq" ->
-      s"""$pqReplaySql
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    // identical replay: the persisted variant trains the same model,
-    // round-trips it (and the encoded index) through parquet
-    // byte-identically (spec-asserted: saveModel/loadModel and
-    // writeIndex/readIndex are exact), then serves the same search — so
-    // the SAME SQL gates the from-disk path end to end
-    "ann_ivfpq_persisted" ->
-      s"""$pqReplaySql
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    // same replay once more: build-on-half + append-the-rest produces the
-    // SAME encoded row set as encode-all-at-once (same fixed model), so
-    // the identical SQL gates the append path — arrival batching must be
-    // invisible, and a wrong append (dropped rows, double-encode, stale
-    // model) hash-mismatches
-    "ann_ivfpq_append" ->
-      s"""$pqReplaySql
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    // the same full training replay with odd ids absent from the ADC
-    // scan: a tombstoned index must serve exactly the survivors' index
-    "ann_ivfpq_delete" ->
-      s"""${pqReplaySqlFor("fr.id % 2 = 0")}
-         |SELECT qid, id, round(cs, 4) AS cosine, CAST(rk AS BIGINT) AS rk
-         |FROM pr WHERE rk <= 10 ORDER BY qid, rk""".stripMargin,
-
-    "ann_lsh_recall" ->
-      s"""$lshReplaySql,
-         |lsh AS (SELECT qid, id FROM lr WHERE rk <= 10),
-         |bs AS (SELECT q.id AS qid, e.id, list_cosine_similarity(e.v, q.v) AS cs
-         |       FROM c e CROSS JOIN (SELECT * FROM c WHERE id < 5) q),
-         |br AS (SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY cs DESC, id) AS rk
-         |       FROM bs),
-         |bf AS (SELECT qid, id FROM br WHERE rk <= 10),
-         |ov AS (SELECT bf.qid, count(*) FILTER (WHERE lsh.id IS NOT NULL) AS n_overlap
-         |       FROM bf LEFT JOIN lsh ON bf.qid = lsh.qid AND bf.id = lsh.id
-         |       GROUP BY bf.qid)
-         |SELECT qid, CAST(n_overlap AS BIGINT) AS n_overlap,
-         |  round(n_overlap / 10.0, 4) AS recall
-         |FROM ov ORDER BY qid""".stripMargin,
-
-    "text_vocab" ->
-      s"""WITH w AS (SELECT unnest($ToksSql) AS word FROM documents),
-         |c AS (SELECT word, count(*) AS n FROM w GROUP BY word)
-         |SELECT word, CAST(n AS BIGINT) AS n FROM c
-         |ORDER BY n DESC, word LIMIT 100""".stripMargin,
-
-    // identical integer counts; the log argument is fixed-order double
-    // arithmetic, round(4) pins the cross-engine rank (bm25 contract)
-    "text_collocations" -> collocReplaySql,
-
-    // the incrementally-built count store serves the IDENTICAL PMI —
-    // counts are additive integers, so the one-shot scan replays it
-    "text_collocations_inc" -> collocReplaySql,
-
-    // compaction is content-invisible BY the additive algebra: the
-    // merged-fileset store serves the same one-shot PMI
-    "text_colloc_compact" -> collocReplaySql,
-
-    // same md5-over-window arithmetic as Dedup.substringDupSpans: the
-    // tokenizer parity is proven by text_tokens, md5 and the space-join
-    // are engine-identical, so window hashes match bit-for-bit
-    "dedup_substring" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |b AS (SELECT doc_id, ts, len(ts) AS n FROM t),
-         |w AS (SELECT doc_id, ts, n, unnest(range(0, n - 20 + 1)) AS pos
-         |      FROM b WHERE n >= 20),
-         |h AS (SELECT doc_id, pos,
-         |        md5(array_to_string(list_slice(ts, pos + 1, pos + 20), ' ')) AS h
-         |      FROM w),
-         |d AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd
-         |                     FROM h GROUP BY h) WHERE nd >= 2),
-         |m AS (SELECT doc_id, count(*) AS n_dup, min(pos) AS first_pos
-         |      FROM h WHERE h IN (SELECT h FROM d) GROUP BY doc_id)
-         |SELECT b.doc_id,
-         |  CAST(CASE WHEN b.n >= 20 THEN b.n - 19 ELSE 0 END AS BIGINT) AS n_windows,
-         |  CAST(coalesce(m.n_dup, 0) AS BIGINT) AS n_dup_windows,
-         |  CAST(coalesce(m.first_pos, -1) AS BIGINT) AS first_dup_pos
-         |FROM b LEFT JOIN m ON b.doc_id = m.doc_id
-         |ORDER BY b.doc_id""".stripMargin,
-
-    // removal replay: same md5 windows, then first-occurrence ranking,
-    // gaps-and-islands span merge, covered-position anti-join and an
-    // ordered string_agg rebuild — the rebuilt documents' md5s must
-    // match the kernel's array-lambda rebuild exactly
-    "dedup_substring_remove" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |b AS (SELECT doc_id, ts, len(ts) AS n FROM t),
-         |w AS (SELECT doc_id, ts, n, unnest(range(0, n - 20 + 1)) AS pos
-         |      FROM b WHERE n >= 20),
-         |h AS (SELECT doc_id, pos,
-         |        md5(array_to_string(list_slice(ts, pos + 1, pos + 20), ' ')) AS h
-         |      FROM w),
-         |r AS (SELECT doc_id, pos FROM (
-         |        SELECT doc_id, pos,
-         |          row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rk
-         |        FROM h) WHERE rk > 1),
-         |i AS (SELECT doc_id, pos,
-         |        CASE WHEN pos - lag(pos) OVER w2 > 20 THEN 1 ELSE 0 END AS brk
-         |      FROM r WINDOW w2 AS (PARTITION BY doc_id ORDER BY pos)),
-         |i2 AS (SELECT doc_id, pos,
-         |         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS isle
-         |       FROM i),
-         |sp AS (SELECT doc_id, isle, min(pos) AS s, max(pos) + 19 AS e
-         |       FROM i2 GROUP BY doc_id, isle),
-         |agg AS (SELECT doc_id, count(*) AS n_spans, sum(e - s + 1) AS n_removed
-         |        FROM sp GROUP BY doc_id),
-         |cov AS (SELECT DISTINCT doc_id, unnest(range(s, e + 1)) AS tp FROM sp),
-         |tok AS (SELECT doc_id, unnest(ts) AS tk,
-         |          unnest(range(0, len(ts))) AS ti FROM b),
-         |kept AS (SELECT tok.doc_id, tk, ti
-         |         FROM tok LEFT JOIN cov
-         |           ON tok.doc_id = cov.doc_id AND tok.ti = cov.tp
-         |         WHERE cov.tp IS NULL),
-         |txt AS (SELECT doc_id, md5(string_agg(tk, ' ' ORDER BY ti)) AS dedup_md5
-         |        FROM kept GROUP BY doc_id)
-         |SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(agg.n_spans, 0) AS BIGINT) AS n_spans,
-         |  CAST(coalesce(agg.n_removed, 0) AS BIGINT) AS n_removed,
-         |  coalesce(txt.dedup_md5, md5('')) AS dedup_md5
-         |FROM b LEFT JOIN agg USING (doc_id) LEFT JOIN txt USING (doc_id)
-         |ORDER BY b.doc_id""".stripMargin,
-
-    // full replay of the SemDeDup gate: recompute the 8-cell k-means in
-    // SQL (ivfTrainSql — bit-deterministic by md5 init + 6-decimal
-    // means), keep cells with 2..100000 members (the operator's
-    // degenerate-cell guard), drop every id with a lower-id SAME-CELL
-    // neighbor at kernel-order cosine >= 0.4 (cluster-bounded pairing IS
-    // the algorithm — cross-cell near-dups are intentionally kept), and
-    // return the survivors with their labels
-    "dedup_semantic" ->
-      s"""${ivfTrainSql(8, "TRUE")},
-         |okc AS (SELECT cell FROM (SELECT cell, count(*) AS csz FROM asg GROUP BY cell)
-         |        WHERE csz BETWEEN 2 AND 100000),
-         |pp AS (SELECT a.id, a.cell, a.v FROM asg a JOIN okc USING (cell)),
-         |drp AS (SELECT DISTINCT y.id
-         |        FROM pp x JOIN pp y ON x.cell = y.cell AND x.id < y.id
-         |        WHERE ${cosFoldSql("x.v", "y.v")} >= 0.4)
-         |SELECT e.vec_id, CAST(e.label AS BIGINT) AS label FROM embeddings e
-         |WHERE e.vec_id NOT IN (SELECT id FROM drp)
-         |ORDER BY vec_id""".stripMargin,
-
-    // planted-family truth: survivors = ids with no lower-id neighbor at
-    // cosine >= 0.99999 over the replicated corpus (NaN guard mirrors
-    // graft_cosine's 0.0 on zero vectors — both engines keep the row)
-    "dedup_semantic_planted" ->
-      """WITH p AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding::DOUBLE[] FROM embeddings
-        |  WHERE vec_id % 10 = 0),
-        |d AS (SELECT DISTINCT y.vec_id
-        |      FROM p x JOIN p y ON x.vec_id < y.vec_id
-        |      WHERE NOT isnan(list_cosine_similarity(x.v, y.v))
-        |        AND list_cosine_similarity(x.v, y.v) >= 0.99999)
-        |SELECT vec_id FROM p
-        |WHERE vec_id NOT IN (SELECT vec_id FROM d)
-        |ORDER BY vec_id""".stripMargin,
-
-    // exact: PPJoin prefix filtering is lossless, so the LSH-free
-    // brute-force all-pairs Jaccard is the complete truth
-    "dedup_ngram_jaccard" -> bruteJaccardSql(3, 0.5),
-
-    // directed containment truth: every ordered pair, |A∩B|/|A| — the
-    // prefix-filtered operator must be lossless against it
-    "dedup_containment" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${ngramsSql(3)} AS sh
-         |  FROM (SELECT doc_id, $ToksSql AS ts FROM documents)
-         |), nz AS (SELECT doc_id, sh, len(sh) AS sz FROM sh WHERE len(sh) > 0),
-         |p AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b,
-         |    len(list_intersect(x.sh, y.sh))::DOUBLE AS inter,
-         |    x.sz::DOUBLE AS asz
-         |  FROM nz x JOIN nz y ON x.doc_id != y.doc_id
-         |)
-         |SELECT a, b, round(inter / asz, 4) AS containment
-         |FROM p WHERE inter / asz >= 0.8 ORDER BY a, b""".stripMargin,
-
-    // the MinHash gate entry equals the exact all-pairs result because
-    // banding recall at (16 bands x 4 rows) is 1-(1-j^4)^16 ≈ 0.9998 at
-    // j=0.8 and ≈1 at the j≈1.0 duplicates this corpus actually contains;
-    // banding completeness is additionally spec-proven (OperatorSpec)
-    "dedup_minhash" -> bruteJaccardSql(3, 0.8),
-
-    // the incremental store's per-batch union must equal the SAME
-    // brute-force truth as the one-shot operator: arrival batching is
-    // provably invisible (deterministic banding + exactly-once emission)
-    "dedup_incremental_minhash" -> bruteJaccardSql(3, 0.8),
-
-    // full replay of the portable simhash scheme: per-token md5-derived
-    // 64-bit hashes (identical bit pattern to the kernel's md5Hash64),
-    // per-bit majority vote over the token multiset (strict >, matching
-    // counts(b) > 0), signed-long packing (bit 63 via the min-long
-    // literal), then the BRUTE-FORCE hamming <= 3 pair set — exactly what
-    // the banded operator returns, since 4 bands over <= 3 differing bits
-    // pigeonhole into one identical band. Empty-token docs get sig 0 on
-    // both engines.
-    "dedup_simhash" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |tok AS (SELECT doc_id, unnest(ts) AS w FROM t),
-         |h AS (SELECT doc_id,
-         |        CAST(concat('0x', substring(md5(w), 1, 16)) AS UBIGINT) AS h
-         |      FROM tok),
-         |n AS (SELECT doc_id, count(*) AS n FROM h GROUP BY doc_id),
-         |bits AS (SELECT doc_id, bb.b AS b,
-         |           count(*) FILTER (WHERE ((h >> bb.b) & 1) = 1) AS c
-         |         FROM h CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
-         |         GROUP BY doc_id, bb.b),
-         |sig AS (SELECT bits.doc_id,
-         |          CAST(sum(CASE WHEN 2 * c > n THEN
-         |                 CASE WHEN b = 63 THEN -9223372036854775808
-         |                      ELSE (CAST(1 AS BIGINT) << CAST(b AS INT)) END
-         |               ELSE 0 END) AS BIGINT) AS sig
-         |        FROM bits JOIN n ON bits.doc_id = n.doc_id
-         |        GROUP BY bits.doc_id),
-         |d AS (SELECT t.doc_id, coalesce(sig.sig, 0) AS sig
-         |      FROM t LEFT JOIN sig ON t.doc_id = sig.doc_id),
-         |p AS (SELECT x.doc_id AS a, y.doc_id AS b,
-         |        bit_count(xor(x.sig, y.sig)) AS hamming
-         |      FROM d x JOIN d y ON x.doc_id < y.doc_id)
-         |SELECT a, b, CAST(hamming AS BIGINT) AS hamming
-         |FROM p WHERE hamming <= 3 ORDER BY a, b""".stripMargin,
-
-    "text_langid" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |h AS (SELECT doc_id, $HitsCols FROM t)
-         |SELECT doc_id, $LangCaseSql AS lang_pred FROM h ORDER BY doc_id""".stripMargin,
-
-    // full replay of the portable winnowing fingerprint (Schleimer et al.
-    // SIGMOD'03; gate params k=5, w=4): per-position 5-gram hashes via
-    // the md5 32-bit bridge (engine-identical values), per-window minima
-    // over 4-gram windows, distinct set. n_hashes counts the set and
-    // fp_xor is the order-insensitive xor fold, so both engines agree
-    // however their arrays are ordered. Short docs: < k chars -> empty
-    // fingerprint; <= w-1 windows -> the single global min.
-    "text_fingerprint" ->
-      """WITH s AS (SELECT doc_id, lower("text") AS s,
-        |             length(lower("text")) AS n FROM documents),
-        |h AS (SELECT doc_id,
-        |        CASE WHEN n < 5 THEN CAST([] AS BIGINT[])
-        |             ELSE list_transform(range(0, n - 5 + 1),
-        |               i -> CAST(concat('0x',
-        |                 substring(md5(substring(s, CAST(i + 1 AS INT), 5)), 1, 8))
-        |                 AS BIGINT))
-        |        END AS hs
-        |      FROM s),
-        |f AS (SELECT doc_id,
-        |        CASE WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
-        |             WHEN len(hs) - 3 <= 0 THEN [list_min(hs)]
-        |             ELSE list_distinct(list_transform(range(0, len(hs) - 4 + 1),
-        |               j -> list_min(hs[CAST(j + 1 AS INT):CAST(j + 4 AS INT)])))
-        |        END AS fp
-        |      FROM h)
-        |SELECT doc_id, CAST(len(fp) AS BIGINT) AS n_hashes,
-        |  abs(list_reduce(list_prepend(CAST(0 AS BIGINT), fp),
-        |    (a, x) -> xor(a, x))) AS fp_xor
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // full quality-surface mirror: bpeish token count re-expressed without
-    // lookarounds (RE2) as letter-runs + digit-runs + non-alnum-non-space
-    // chars; composite score recomputed with the same double arithmetic
-    // and associativity as TextFunctions.qualityScore
-    "text_quality" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, "text", $ToksSql AS ts FROM documents
-         |), m AS (
-         |  SELECT doc_id, "text", ts, $HitsCols,
-         |    CAST(len(ts) AS BIGINT) AS n_words,
-         |    CAST(len(regexp_extract_all("text", '\\p{L}+'))
-         |       + len(regexp_extract_all("text", '\\p{N}+'))
-         |       + len(regexp_extract_all("text", '[^\\p{L}\\p{N}\\s]')) AS BIGINT) AS n_tokens,
-         |    CAST(length("text") AS BIGINT) AS n_chars,
-         |    CASE WHEN length("text") = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all("text", '[[:punct:]]'))::DOUBLE / length("text")::DOUBLE END AS pr,
-         |    CASE WHEN len(ts) = 0 THEN 0.0
-         |         ELSE ${hitsSql("en")}::DOUBLE / len(ts)::DOUBLE END AS sw,
-         |    CASE WHEN len(ts) = 0 THEN 0.0
-         |         ELSE list_sum(list_transform(ts, x -> len(x)))::DOUBLE / len(ts)::DOUBLE END AS awl
-         |  FROM t
-         |)
-         |SELECT doc_id, $LangCaseSql AS lang_pred, n_words, n_tokens, n_chars,
-         |  round(pr, 4) AS punct_ratio, round(sw, 4) AS stopword_ratio, round(awl, 4) AS avg_word_len,
-         |  round(least(n_words::DOUBLE / 100.0, 1.0) * 0.3
-         |      + greatest(0.0, 1.0 - pr * 4.0) * 0.3
-         |      + least(sw * 3.0, 1.0) * 0.2
-         |      + (CASE WHEN awl BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
-         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // mean unigram surprisal; the fold over the word-sorted term list
-    // reproduces Spark's aggregate() addition order exactly
-    // DSIR replay: same md5 buckets (the text_hash_embed hash bridge),
-    // same add-one smoothing, per-doc fold over the bucket-sorted term
-    // list (the lm_score float-summing contract)
-    // same md5 keys, same mod-8 shards, same within-shard ranks — the
-    // shuffle must be engine- and partitioning-invariant by construction
-    "pipeline_shuffle_shard" ->
-      """WITH k AS (SELECT doc_id,
-        |             md5('run42:' || CAST(doc_id AS VARCHAR)) AS _k
-        |           FROM documents),
-        |s AS (SELECT doc_id, _k,
-        |        CAST(concat('0x', substring(_k, 1, 8)) AS BIGINT) % 8 AS shard
-        |      FROM k)
-        |SELECT doc_id, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY _k, doc_id) AS BIGINT) AS pos
-        |FROM s ORDER BY shard, pos""".stripMargin,
-
-    "pipeline_dsir" ->
-      s"""WITH t AS (SELECT doc_id, lang, $ToksSql AS ts FROM documents),
-         |f AS (SELECT doc_id, lang = 'en' AS is_t,
-         |        CAST(concat('0x', substring(md5(w), 1, 8)) AS BIGINT) % 256 AS b
-         |      FROM (SELECT doc_id, lang, unnest(ts) AS w FROM t)),
-         |rc AS (SELECT b, count(*) AS rc FROM f GROUP BY b),
-         |tc AS (SELECT b, count(*) AS tc FROM f WHERE is_t GROUP BY b),
-         |tot AS (SELECT count(*) AS rt,
-         |          count(*) FILTER (WHERE is_t) AS tt FROM f),
-         |r AS (SELECT rc.b,
-         |        ln(((coalesce(tc, 0) + 1)::DOUBLE / (tt + 256)::DOUBLE)
-         |          / ((rc + 1)::DOUBLE / (rt + 256)::DOUBLE)) AS lr
-         |      FROM rc LEFT JOIN tc USING (b) CROSS JOIN tot),
-         |m AS (SELECT doc_id, b, count(*) AS m FROM f GROUP BY doc_id, b),
-         |terms AS (SELECT doc_id,
-         |            struct_pack(b := m.b, term := m.m::DOUBLE * r.lr) AS wt,
-         |            m.m AS m
-         |          FROM m JOIN r USING (b)),
-         |d AS (SELECT doc_id, list_sort(list(wt)) AS l,
-         |        CAST(sum(m) AS BIGINT) AS n
-         |      FROM terms GROUP BY doc_id)
-         |SELECT doc_id, n AS n_tokens,
-         |  round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
-         |        (a, x) -> a + x), 4) AS log_weight
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // the text_lm_score replay joined with source; tercile cutoffs via
-    // quantile_cont at the same double literals Scala's 1.0/3 and 2.0/3
-    // render to, rounded 4dp like the scores; CASE assignment
-    "pipeline_ccnet_buckets" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |p AS (SELECT doc_id, unnest(ts) AS w FROM t),
-         |m AS (SELECT doc_id, w, count(*) AS m FROM p GROUP BY 1, 2),
-         |tf AS (SELECT w, sum(m) AS cnt FROM m GROUP BY 1),
-         |tot AS (SELECT sum(cnt) AS total FROM tf),
-         |terms AS (
-         |  SELECT doc_id,
-         |    struct_pack(w := w, term := m.m::DOUBLE * -ln(cnt::DOUBLE / total::DOUBLE)) AS wt,
-         |    m.m AS m
-         |  FROM m JOIN tf USING (w) CROSS JOIN tot),
-         |d AS (SELECT doc_id, list_sort(list(wt)) AS l, CAST(sum(m) AS BIGINT) AS n
-         |      FROM terms GROUP BY doc_id),
-         |sc AS (SELECT doc_id,
-         |         round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
-         |               (a, x) -> a + x) / n, 4) AS avg_neg_logp
-         |       FROM d),
-         |j AS (SELECT sc.doc_id, dd.source, sc.avg_neg_logp
-         |      FROM sc JOIN documents dd USING (doc_id)),
-         |c AS (SELECT source,
-         |        round(quantile_cont(avg_neg_logp, 0.3333333333333333), 4) AS c1,
-         |        round(quantile_cont(avg_neg_logp, 0.6666666666666666), 4) AS c2
-         |      FROM j GROUP BY source)
-         |SELECT j.doc_id, j.source, j.avg_neg_logp,
-         |  CASE WHEN j.avg_neg_logp <= c.c1 THEN 'head'
-         |       WHEN j.avg_neg_logp <= c.c2 THEN 'middle'
-         |       ELSE 'tail' END AS bucket
-         |FROM j JOIN c USING (source)
-         |ORDER BY j.doc_id""".stripMargin,
-
-    "text_lm_score" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |p AS (SELECT doc_id, unnest(ts) AS w FROM t),
-         |m AS (SELECT doc_id, w, count(*) AS m FROM p GROUP BY 1, 2),
-         |tf AS (SELECT w, sum(m) AS cnt FROM m GROUP BY 1),
-         |tot AS (SELECT sum(cnt) AS total FROM tf),
-         |terms AS (
-         |  SELECT doc_id,
-         |    struct_pack(w := w, term := m.m::DOUBLE * -ln(cnt::DOUBLE / total::DOUBLE)) AS wt,
-         |    m.m AS m
-         |  FROM m JOIN tf USING (w) CROSS JOIN tot),
-         |d AS (SELECT doc_id, list_sort(list(wt)) AS l, CAST(sum(m) AS BIGINT) AS n
-         |      FROM terms GROUP BY doc_id)
-         |SELECT doc_id, n AS n_words,
-         |  round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
-         |        (a, x) -> a + x) / n, 4) AS avg_neg_logp
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // interpolated bigram surprisal: counts are exact integers on both
-    // engines, the interpolation literals (0.5) are binary-exact, each
-    // term's arithmetic mirrors the kernel expression shape, and the
-    // per-doc sum folds over the (w1, w2)-sorted term list — the
-    // text_lm_score determinism contract extended to bigrams
-    "text_bigram_lm" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |big AS (SELECT doc_id, ts[i] AS w1, ts[i+1] AS w2
-         |        FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
-         |              FROM t WHERE len(ts) >= 2)),
-         |m AS (SELECT doc_id, w1, w2, count(*) AS m FROM big GROUP BY 1, 2, 3),
-         |uc AS (SELECT w, count(*) AS cnt
-         |       FROM (SELECT unnest(ts) AS w FROM t) GROUP BY w),
-         |tot AS (SELECT sum(cnt) AS total FROM uc),
-         |bc AS (SELECT w1, w2, sum(m) AS bcnt FROM m GROUP BY 1, 2),
-         |terms AS (SELECT m.doc_id, m.m,
-         |    struct_pack(w1 := m.w1, w2 := m.w2,
-         |      term := m.m::DOUBLE * -ln(
-         |        0.5 * (bc.bcnt::DOUBLE / u1.cnt::DOUBLE)
-         |        + 0.5 * (u2.cnt::DOUBLE / tot.total::DOUBLE))) AS wt
-         |  FROM m JOIN bc USING (w1, w2)
-         |  JOIN uc u1 ON u1.w = m.w1
-         |  JOIN uc u2 ON u2.w = m.w2
-         |  CROSS JOIN tot),
-         |d AS (SELECT doc_id, list_sort(list(wt)) AS l,
-         |        CAST(sum(m) AS BIGINT) AS n
-         |      FROM terms GROUP BY doc_id)
-         |SELECT doc_id, n AS n_bigrams,
-         |  round(list_reduce(list_prepend(0.0, list_transform(l, x -> x.term)),
-         |        (a, x) -> a + x) / n, 4) AS avg_neg_logp
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // tf·idf replay with exact integer counts; both engines rank the
-    // 4-decimal-rounded score with a word tiebreak (rounding first pins
-    // one cross-engine order against ln()'s last-ulp freedom)
-    "text_keywords" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents),
-         |p AS (SELECT doc_id, w, count(*) AS m
-         |      FROM (SELECT doc_id, unnest(ts) AS w FROM t) GROUP BY 1, 2),
-         |dfq AS (SELECT w, count(*) AS df FROM p GROUP BY w),
-         |nd AS (SELECT count(DISTINCT doc_id) AS nd FROM p),
-         |sc AS (SELECT p.doc_id, p.w,
-         |         round(p.m::DOUBLE * ln(nd.nd::DOUBLE / dfq.df::DOUBLE), 4) AS tfidf
-         |       FROM p JOIN dfq USING (w) CROSS JOIN nd),
-         |r AS (SELECT doc_id, w, tfidf,
-         |        row_number() OVER (PARTITION BY doc_id
-         |          ORDER BY tfidf DESC, w ASC) AS rk
-         |      FROM sc)
-         |SELECT doc_id, CAST(rk AS BIGINT) AS rk, w AS word, tfidf
-         |FROM r WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-
-    // BM25 replay: same Lucene idf, same saturation arithmetic, N and
-    // avgdl over ALL docs (zero-match docs count in the stats, score no
-    // row) — the rank compares the rounded score with id tiebreak
-    // identical replay: the persisted postings round-trip writes the
-    // same (tf, dl) rows and recomputes the same df/nd/avgdl, so the
-    // from-disk serving path is gated by the SAME SQL as text_bm25 —
-    // a wrong bucket prune (dropped postings) or stale stats
-    // hash-mismatches
-    "text_bm25_indexed" -> bm25ReplaySql,
-
-    "text_bm25" -> bm25ReplaySql,
-
-    // build-half + append-half must serve the FULL-corpus replay: nd and
-    // Σdl are additive (exact — integer token counts in double), per-doc
-    // postings are batch-local (disjoint doc batches), df recomputes
-    // from the union — so the appended store is replay-identical to a
-    // one-shot build
-    "text_bm25_append" -> bm25ReplaySql,
-
-    // the post-takedown store recomputed from scratch: surviving hashes
-    // are those NO banned doc carries (the hash's duplicates vanish with
-    // it), keepers/batches unchanged for everything untouched
-    "dedup_takedown" ->
-      """WITH h AS (SELECT doc_id, sha256("text") AS ch FROM documents),
-        |banned AS (SELECT DISTINCT ch FROM h WHERE doc_id % 10 = 3)
-        |SELECT ch AS content_hash, min(doc_id) AS keep_id,
-        |  CAST(CASE WHEN min(doc_id) < 2000 THEN 0 ELSE 1 END AS BIGINT)
-        |    AS arrival_batch
-        |FROM h WHERE ch NOT IN (SELECT ch FROM banned)
-        |GROUP BY ch ORDER BY content_hash""".stripMargin,
-
-    // tombstone delete: the served search must equal the replay over
-    // the SURVIVING corpus — df, nd and avgdl all post-delete
-    "text_bm25_delete" -> bm25ReplaySqlFor("doc_id % 2 = 0"),
-
-    // compaction is content-invisible: the collapsed-fileset store
-    // serves the identical full-corpus ranking
-    "text_bm25_compact" -> bm25ReplaySql,
-
-    // duplicate-n-gram fractions + top-word share; short docs (<= n words)
-    // are 0 by definition on both sides
-    "text_repetition" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS ts FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(ts) AS BIGINT) AS n_words,
-         |  CASE WHEN len(ts) <= 2 THEN 0.0
-         |       ELSE round(1.0 - ${distinctNgramsSql(2)}::DOUBLE / (len(ts) - 1)::DOUBLE, 4)
-         |  END AS dup_2gram_frac,
-         |  CASE WHEN len(ts) <= 3 THEN 0.0
-         |       ELSE round(1.0 - ${distinctNgramsSql(3)}::DOUBLE / (len(ts) - 2)::DOUBLE, 4)
-         |  END AS dup_3gram_frac,
-         |  CASE WHEN len(ts) = 0 THEN 0.0
-         |       ELSE round($TopTokenSql::DOUBLE / len(ts)::DOUBLE, 4)
-         |  END AS top_word_frac
-         |FROM t ORDER BY doc_id""".stripMargin,
-
-    // same rule thresholds and unrounded double comparisons as
-    // Curation.qualityFilter's defaults
-    "pipeline_quality_filter" ->
-      s"""WITH t AS (SELECT doc_id, lang, source, $ToksSql AS ts FROM documents),
-         |m AS (
-         |  SELECT doc_id, lang, source,
-         |    CAST(len(ts) AS BIGINT) AS nw,
-         |    CASE WHEN len(ts) = 0 THEN 0.0
-         |         ELSE list_sum(list_transform(ts, x -> len(x)))::DOUBLE / len(ts)::DOUBLE END AS awl,
-         |    CASE WHEN len(ts) <= 2 THEN 0.0
-         |         ELSE 1.0 - ${distinctNgramsSql(2)}::DOUBLE / (len(ts) - 1)::DOUBLE END AS dup2,
-         |    CASE WHEN len(ts) = 0 THEN 0.0
-         |         ELSE $TopTokenSql::DOUBLE / len(ts)::DOUBLE END AS topw
-         |  FROM t
-         |)
-         |SELECT doc_id, lang, source FROM m
-         |WHERE nw BETWEEN 30 AND 100000 AND awl BETWEEN 3.0 AND 10.0
-         |  AND dup2 <= 0.1 AND topw <= 0.2
-         |ORDER BY doc_id""".stripMargin,
-
-    // survivors = training docs sharing no word 5-gram with the eval set
-    // brute-force eval×train Jaccard >= 0.5 over 3-gram shingle sets —
-    // same inter/(a+b-inter) arithmetic as the fuzzy screen's verify
-    "pipeline_decontaminate_fuzzy" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${ngramsSql(3)} AS sh
-         |  FROM (SELECT doc_id, $ToksSql AS ts FROM documents)
-         |), nz AS (SELECT doc_id, sh, len(sh) AS sz FROM sh WHERE len(sh) > 0),
-         |p AS (
-         |  SELECT tr.doc_id,
-         |    len(list_intersect(tr.sh, ev.sh))::DOUBLE AS inter,
-         |    tr.sz::DOUBLE AS a, ev.sz::DOUBLE AS b
-         |  FROM nz tr, nz ev
-         |  WHERE tr.doc_id >= 25 AND ev.doc_id < 25),
-         |bad AS (SELECT DISTINCT doc_id FROM p
-         |        WHERE inter / (a + b - inter) >= 0.5)
-         |SELECT doc_id, lang, source FROM documents
-         |WHERE doc_id >= 25 AND doc_id NOT IN (SELECT doc_id FROM bad)
-         |ORDER BY doc_id""".stripMargin,
-
-    "pipeline_decontaminate" ->
-      s"""WITH g AS (
-         |  SELECT doc_id, unnest(${ngramsSql(5)}) AS g
-         |  FROM (SELECT doc_id, $ToksSql AS ts FROM documents)
-         |), ev AS (SELECT DISTINCT g FROM g WHERE doc_id < 25),
-         |bad AS (SELECT DISTINCT g.doc_id FROM g JOIN ev USING (g) WHERE g.doc_id >= 25)
-         |SELECT doc_id, lang, source FROM documents
-         |WHERE doc_id >= 25 AND doc_id NOT IN (SELECT doc_id FROM bad)
-         |ORDER BY doc_id""".stripMargin,
-    // \s and the 'g' flag mirror Java's \s+ replace-all exactly on this
-    // corpus (ASCII whitespace)
-    "dedup_exact_normalized" ->
-      """SELECT sha256(trim(regexp_replace(lower("text"), '\s+', ' ', 'g'))) AS content_hash,
-        |  min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents
-        |GROUP BY 1 ORDER BY content_hash""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT sha256("text") AS content_hash, min(doc_id) AS keep_id,
-        |  count(*) AS n_copies
-        |FROM documents GROUP BY sha256("text")
-        |ORDER BY content_hash""".stripMargin,
-
-    "dedup_survivors" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY sha256("text"))
-        |ORDER BY doc_id""".stripMargin,
-
-    // one-shot truth for the incremental store: with id-range arrival
-    // batches the first-arrival keeper IS the global min id, and the
-    // arrival batch that first contributed a hash is the keeper's id
-    // range — the oracle re-derives what the store recorded at ingest
-    "dedup_incremental" ->
-      """SELECT sha256("text") AS content_hash, min(doc_id) AS keep_id,
-        |  CAST(CASE WHEN min(doc_id) < 1000 THEN 0
-        |            WHEN min(doc_id) < 3000 THEN 1 ELSE 2 END AS BIGINT) AS arrival_batch
-        |FROM documents GROUP BY sha256("text")
-        |ORDER BY content_hash""".stripMargin,
-
-    // exact: both engines accumulate the dot/norms sequentially in double
-    // over the float vectors, and round(4) absorbs any last-ulp drift
-    "dedup_embedding" ->
-      """SELECT x.vec_id AS a, y.vec_id AS b,
-        |  round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) AS cosine
-        |FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-        |WHERE list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]) >= 0.4
-        |ORDER BY a, b""".stripMargin,
-
-    // components == 30-min sessions on the chain graph, so the truth is
-    // gaps-and-islands; epoch_us on both sides (Spark floors ns->us the
-    // same way DuckDB's TIMESTAMP read does)
-    "dedup_cluster" ->
-      """WITH x AS (
-        |  SELECT event_id, user_id, ts,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |           OVER (PARTITION BY user_id ORDER BY ts, event_id) <= 1800000000
-        |         THEN 0 ELSE 1 END AS new_s
-        |  FROM events
-        |), y AS (
-        |  SELECT event_id, user_id,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM x
-        |)
-        |SELECT event_id,
-        |  CAST(MIN(event_id) OVER (PARTITION BY user_id, sess) AS BIGINT) AS component
-        |FROM y ORDER BY event_id""".stripMargin,
-
-    // survivors of chain-edge components == one doc per sha256 group
-    "dedup_cluster_survivors" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY sha256("text"))
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_tokens" ->
-      """SELECT doc_id,
-        |  len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
-        |      x -> len(x) > 0)) AS n_words,
-        |  length("text") AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "pipeline_holdout" ->
-      """WITH r AS (
-        |  SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY sha256('holdout' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
-        |SELECT doc_id, lang,
-        |  CASE WHEN rk <= 20 THEN 'val' ELSE 'train' END AS split
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // same derived-rate arithmetic (double ops in the same order) and the
-    // same multiplicative-hash uniform as Curation.mixToTarget
-    // same token counts and hash gate as pipeline_mix, targets derived:
-    // w = pow(tokens, 0.5), rate = min_h(tokens_h/w_h) * w_g / tokens_g
-    // (normalization cancels algebraically), rounded to 12 decimals on
-    // both engines so pow's last-ulp license cannot flip the compare
-    "pipeline_mix_temperature" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
-        |         x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |), tot AS (
-        |  SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tokens_g
-        |  FROM tok GROUP BY lang
-        |), wt AS (
-        |  SELECT lang, tokens_g, pow(CAST(tokens_g AS DOUBLE), 0.5) AS w FROM tot
-        |), m AS (SELECT min(CAST(tokens_g AS DOUBLE) / w) AS m FROM wt),
-        |rates AS (SELECT lang,
-        |            round(m.m * w / CAST(tokens_g AS DOUBLE), 12) AS rate
-        |          FROM wt, m)
-        |SELECT doc_id, lang, n_tokens
-        |FROM tok JOIN rates USING (lang)
-        |WHERE (((doc_id % 1048576) * 2654435761) % 1048576) / 1048576.0 < rate
-        |ORDER BY doc_id""".stripMargin,
-
-    "pipeline_mix" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
-        |         x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |), tgt AS (
-        |  SELECT * FROM (VALUES ('en', 0.5), ('de', 0.2), ('fr', 0.15),
-        |                        ('es', 0.1), ('zh', 0.05)) AS t(lang, target)
-        |), tot AS (
-        |  SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS tokens_g
-        |  FROM tok GROUP BY lang
-        |), capd AS (
-        |  SELECT tot.lang, tokens_g, target, tokens_g / target AS cap
-        |  FROM tot JOIN tgt USING (lang)
-        |), c AS (SELECT min(cap) AS c FROM capd),
-        |rates AS (SELECT lang, c.c * target / tokens_g AS rate FROM capd, c)
-        |SELECT doc_id, lang, n_tokens
-        |FROM tok JOIN rates USING (lang)
-        |WHERE (((doc_id % 1048576) * 2654435761) % 1048576) / 1048576.0 < rate
-        |ORDER BY doc_id""".stripMargin,
-
-    "pipeline_pack" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(regexp_split_to_array(lower("text"), '[^\p{L}\p{N}]+'),
-        |         x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |)
-        |SELECT doc_id, lang, n_tokens,
-        |  CAST(floor((CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |         ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens) / 512) AS BIGINT) AS shard
-        |FROM tok ORDER BY doc_id""".stripMargin,
-  )
 }

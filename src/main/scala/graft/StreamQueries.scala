@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{MaterializedView, SnapshotTable}
@@ -13,21 +12,118 @@ import graft.streaming.{EventStreams, SketchRollup}
   */
 object StreamQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_window_agg" -> ((s, dir) =>
+  /** This area's gates. Lazy, so a row's oracle SQL may read vals declared
+    * further down: an eager table would read them as null while the object
+    * initializes. */
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("stream_window_agg", """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
+        |  event_type, count(*) AS n_events,
+        |  CAST(sum(CAST("value" AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, (s, dir) =>
       EventStreams.windowAggBatch(Tables.load(s, dir, "events"))),
-    "stream_session" -> ((s, dir) =>
+
+    Gate("stream_session", """WITH flagged AS (
+        |  SELECT user_id, event_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL THEN 0
+        |         WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1
+        |         ELSE 0 END AS new_session
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+        |sessions AS (
+        |  SELECT user_id, ts,
+        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS BIGINT) AS session_id
+        |  FROM flagged)
+        |SELECT user_id, session_id, count(*) AS n_events,
+        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+        |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end
+        |FROM sessions GROUP BY user_id, session_id
+        |ORDER BY user_id, session_id""".stripMargin, (s, dir) =>
       EventStreams.sessionizeBatch(Tables.load(s, dir, "events"))),
-    "stream_dedup" -> ((s, dir) =>
+
+    Gate("stream_dedup", """WITH r AS (
+        |  SELECT user_id, event_type, event_id, ts,
+        |    row_number() OVER (PARTITION BY user_id, event_type
+        |                       ORDER BY ts, event_id) AS rn
+        |  FROM events)
+        |SELECT user_id, event_type, event_id AS first_event_id,
+        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS first_ts
+        |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin, (s, dir) =>
       EventStreams.dedupBatch(Tables.load(s, dir, "events"))),
-    "stream_static_join" -> ((s, dir) =>
+
+    Gate("stream_static_join", s"""WITH w AS (SELECT * FROM (VALUES $WeightValuesSql) AS t(event_type, weight))
+         |SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
+         |  count(*) AS n_events,
+         |  CAST(sum(CAST("value" AS DECIMAL(18,4)) * weight) AS DOUBLE) AS weighted_value
+         |FROM events JOIN w USING (event_type)
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, (s, dir) =>
       EventStreams.enrichBatch(Tables.load(s, dir, "events"))),
-    "stream_interval_join" -> ((s, dir) =>
+
+    Gate("stream_interval_join", """WITH p AS (
+        |  SELECT event_id AS p_id, user_id, ts AS p_ts
+        |  FROM events WHERE event_type = 'purchase'),
+        |c AS (
+        |  SELECT event_id AS c_id, user_id, ts AS c_ts
+        |  FROM events WHERE event_type = 'click')
+        |SELECT user_id, p_id, c_id
+        |FROM p JOIN c USING (user_id)
+        |WHERE c_ts >= p_ts - INTERVAL 30 MINUTE AND c_ts <= p_ts
+        |ORDER BY p_id, c_id""".stripMargin, (s, dir) =>
       EventStreams.intervalJoinBatch(Tables.load(s, dir, "events"))),
-    "stream_session_window" -> ((s, dir) =>
+
+    // native session_window face: identical sessions to stream_session's
+    // gaps-and-islands (merge when gap <= 30 min), different output shape
+    Gate("stream_session_window", """WITH flagged AS (
+        |  SELECT user_id, event_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL THEN 0
+        |         WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1
+        |         ELSE 0 END AS new_session
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+        |sessions AS (
+        |  SELECT user_id, ts,
+        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS BIGINT) AS session_id
+        |  FROM flagged)
+        |SELECT user_id,
+        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+        |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
+        |  count(*) AS n_events
+        |FROM sessions GROUP BY user_id, session_id
+        |ORDER BY user_id, session_start""".stripMargin, (s, dir) =>
       EventStreams.sessionWindowBatch(Tables.load(s, dir, "events"))),
 
-    "stream_quantile_rollup" -> ((s, dir) => {
+    // identical truth shape to q52 — the incremental store must serve the
+    // same answers as the one-shot rollup (mergeability), and each
+    // engine's own sketch stands in its guaranteed rank band
+    Gate("stream_quantile_rollup", """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, "value" AS v FROM events),
+        |d AS (
+        |  SELECT day, count(*) AS n_events,
+        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
+        |    approx_quantile(v, 0.5) AS est
+        |  FROM ev GROUP BY day),
+        |dr AS (
+        |  SELECT d.day, d.n_events, d.exact_p50,
+        |    count(*) FILTER (WHERE ev.v <= d.est)::DOUBLE / count(*)::DOUBLE AS est_rank
+        |  FROM ev JOIN d USING (day)
+        |  GROUP BY d.day, d.n_events, d.exact_p50),
+        |a AS (
+        |  SELECT count(*) AS n_events,
+        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
+        |    approx_quantile(v, 0.5) AS est
+        |  FROM ev),
+        |ar AS (
+        |  SELECT a.n_events, a.exact_p50,
+        |    count(*) FILTER (WHERE ev.v <= a.est)::DOUBLE / count(*)::DOUBLE AS est_rank
+        |  FROM ev CROSS JOIN a
+        |  GROUP BY a.n_events, a.exact_p50)
+        |SELECT day, n_events, exact_p50,
+        |  TRUE AS n_ok,
+        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
+        |FROM dr
+        |UNION ALL
+        |SELECT 'ALL' AS day, n_events, exact_p50, TRUE AS n_ok,
+        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
+        |FROM ar
+        |ORDER BY day""".stripMargin, (s, dir) => {
       // incremental QUANTILE-store maintenance: the q52 per-day KLL store
       // built from 3 arrival batches (event_id mod 3) via
       // mergeQuantilesInto — each update scans the NEW batch only and
@@ -76,7 +172,16 @@ object StreamQueries {
       perDay.unionByName(allRow).orderBy("day")
     }),
 
-    "stream_topk_rollup" -> ((s, dir) => {
+    // identical truth shape to q53: the exact top-10 rides cross-engine,
+    // the bracket and stream-length booleans are deterministic guarantees
+    // the merged incremental store must uphold
+    Gate("stream_topk_rollup", """WITH c AS (SELECT user_id, count(*) AS exact_cnt FROM events GROUP BY user_id),
+        |r AS (SELECT user_id, exact_cnt,
+        |        row_number() OVER (ORDER BY exact_cnt DESC, user_id) AS rank
+        |      FROM c)
+        |SELECT CAST(rank AS BIGINT) AS rank, user_id, exact_cnt,
+        |  TRUE AS bracket_ok, TRUE AS n_ok
+        |FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin, (s, dir) => {
       // incremental heavy-hitters store: the q53 per-day frequent-items
       // store built from 3 arrival batches via mergeTopkInto; the merged
       // store must still certify the exact top-10 (lb <= true <= ub is
@@ -111,7 +216,11 @@ object StreamQueries {
         .orderBy("rank")
     }),
 
-    "stream_snapshot_cdc" -> ((s, dir) => {
+    // the replicated table replayed directly from orders: whatever the
+    // feed's micro-batch slicing, the replica must land on exactly v2
+    Gate("stream_snapshot_cdc", s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
+         |SELECT * FROM mixed ORDER BY o_orderkey""".stripMargin, (s, dir) => {
       // END-TO-END CDC replication through REAL structured streaming:
       // source snapshot upserted (the q57 change mix), its
       // SnapshotTable.changes(v1→v2) feed written as files, a replica
@@ -151,7 +260,16 @@ object StreamQueries {
         .orderBy("o_orderkey")
     }),
 
-    "stream_mv" -> ((s, dir) => {
+    // the continuously-refreshed view replayed as one full recompute of
+    // the final truth: micro-batch slicing must be invisible (integer-
+    // cents algebra + latest-wins)
+    Gate("stream_mv", s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+         |${Fixtures.mixedSql("o_totalprice", "o_totalprice + 500.0")}
+         |SELECT o_custkey, count(*) AS n_rows,
+         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+         |    / 100.0 AS sum_value
+         |FROM mixed GROUP BY o_custkey
+         |ORDER BY o_custkey""".stripMargin, (s, dir) => {
       // CONTINUOUSLY-FRESH materialized view through real structured
       // streaming: a CDC feed tails into the replica table AND advances
       // the aggregate view in the same micro-batch (MaterializedView
@@ -194,7 +312,23 @@ object StreamQueries {
         .orderBy("o_custkey")
     }),
 
-    "stream_sketch_rollup" -> ((s, dir) => {
+    // exact counts cross-engine; `ok` follows the q50 scheme (each engine
+    // inside its own sketch's 5% band). The one-shot DuckDB truth is
+    // exactly what the 3-batch incremental store must reproduce.
+    Gate("stream_sketch_rollup", """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, user_id FROM events),
+        |d AS (
+        |  SELECT day, count(*) AS n_events,
+        |    count(DISTINCT user_id) AS exact_users,
+        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
+        |      / count(DISTINCT user_id) <= 0.05 AS ok
+        |  FROM ev GROUP BY day),
+        |a AS (
+        |  SELECT 'ALL' AS day, count(*) AS n_events,
+        |    count(DISTINCT user_id) AS exact_users,
+        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
+        |      / count(DISTINCT user_id) <= 0.05 AS ok
+        |  FROM ev)
+        |SELECT * FROM d UNION ALL SELECT * FROM a ORDER BY day""".stripMargin, (s, dir) => {
       // incremental sketch-store maintenance (streaming.SketchRollup):
       // the corpus ARRIVES in 3 batches (event_id mod 3 — deterministic),
       // each merged into the persisted per-day HLL store without
@@ -231,166 +365,4 @@ object StreamQueries {
   private val WeightValuesSql = EventStreams.TypeWeights
     .map { case (t, w) => s"('$t', CAST($w AS DECIMAL(4,2)))" }
     .mkString(", ")
-
-  val oracleSql: Map[String, String] = Map(
-    // the replicated table replayed directly from orders: whatever the
-    // feed's micro-batch slicing, the replica must land on exactly v2
-    "stream_snapshot_cdc" ->
-      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-         |${Fixtures.mixedSql("o_custkey", "o_custkey + 1000000")}
-         |SELECT * FROM mixed ORDER BY o_orderkey""".stripMargin,
-
-    // the continuously-refreshed view replayed as one full recompute of
-    // the final truth: micro-batch slicing must be invisible (integer-
-    // cents algebra + latest-wins)
-    "stream_mv" ->
-      s"""WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-         |${Fixtures.mixedSql("o_totalprice", "o_totalprice + 500.0")}
-         |SELECT o_custkey, count(*) AS n_rows,
-         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-         |    / 100.0 AS sum_value
-         |FROM mixed GROUP BY o_custkey
-         |ORDER BY o_custkey""".stripMargin,
-
-    // exact counts cross-engine; `ok` follows the q50 scheme (each engine
-    // inside its own sketch's 5% band). The one-shot DuckDB truth is
-    // exactly what the 3-batch incremental store must reproduce.
-    "stream_sketch_rollup" ->
-      """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, user_id FROM events),
-        |d AS (
-        |  SELECT day, count(*) AS n_events,
-        |    count(DISTINCT user_id) AS exact_users,
-        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
-        |      / count(DISTINCT user_id) <= 0.05 AS ok
-        |  FROM ev GROUP BY day),
-        |a AS (
-        |  SELECT 'ALL' AS day, count(*) AS n_events,
-        |    count(DISTINCT user_id) AS exact_users,
-        |    abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
-        |      / count(DISTINCT user_id) <= 0.05 AS ok
-        |  FROM ev)
-        |SELECT * FROM d UNION ALL SELECT * FROM a ORDER BY day""".stripMargin,
-
-    // identical truth shape to q52 — the incremental store must serve the
-    // same answers as the one-shot rollup (mergeability), and each
-    // engine's own sketch stands in its guaranteed rank band
-    "stream_quantile_rollup" ->
-      """WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, "value" AS v FROM events),
-        |d AS (
-        |  SELECT day, count(*) AS n_events,
-        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
-        |    approx_quantile(v, 0.5) AS est
-        |  FROM ev GROUP BY day),
-        |dr AS (
-        |  SELECT d.day, d.n_events, d.exact_p50,
-        |    count(*) FILTER (WHERE ev.v <= d.est)::DOUBLE / count(*)::DOUBLE AS est_rank
-        |  FROM ev JOIN d USING (day)
-        |  GROUP BY d.day, d.n_events, d.exact_p50),
-        |a AS (
-        |  SELECT count(*) AS n_events,
-        |    round(quantile_cont(v, 0.5), 4) AS exact_p50,
-        |    approx_quantile(v, 0.5) AS est
-        |  FROM ev),
-        |ar AS (
-        |  SELECT a.n_events, a.exact_p50,
-        |    count(*) FILTER (WHERE ev.v <= a.est)::DOUBLE / count(*)::DOUBLE AS est_rank
-        |  FROM ev CROSS JOIN a
-        |  GROUP BY a.n_events, a.exact_p50)
-        |SELECT day, n_events, exact_p50,
-        |  TRUE AS n_ok,
-        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
-        |FROM dr
-        |UNION ALL
-        |SELECT 'ALL' AS day, n_events, exact_p50, TRUE AS n_ok,
-        |  abs(est_rank - 0.5) <= 0.05 + 1.0 / n_events AS rank_ok
-        |FROM ar
-        |ORDER BY day""".stripMargin,
-
-    // identical truth shape to q53: the exact top-10 rides cross-engine,
-    // the bracket and stream-length booleans are deterministic guarantees
-    // the merged incremental store must uphold
-    "stream_topk_rollup" ->
-      """WITH c AS (SELECT user_id, count(*) AS exact_cnt FROM events GROUP BY user_id),
-        |r AS (SELECT user_id, exact_cnt,
-        |        row_number() OVER (ORDER BY exact_cnt DESC, user_id) AS rank
-        |      FROM c)
-        |SELECT CAST(rank AS BIGINT) AS rank, user_id, exact_cnt,
-        |  TRUE AS bracket_ok, TRUE AS n_ok
-        |FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    "stream_dedup" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type, event_id, ts,
-        |    row_number() OVER (PARTITION BY user_id, event_type
-        |                       ORDER BY ts, event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, event_type, event_id AS first_event_id,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS first_ts
-        |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-
-    "stream_static_join" ->
-      s"""WITH w AS (SELECT * FROM (VALUES $WeightValuesSql) AS t(event_type, weight))
-         |SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
-         |  count(*) AS n_events,
-         |  CAST(sum(CAST("value" AS DECIMAL(18,4)) * weight) AS DOUBLE) AS weighted_value
-         |FROM events JOIN w USING (event_type)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "stream_window_agg" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-        |  event_type, count(*) AS n_events,
-        |  CAST(sum(CAST("value" AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "stream_interval_join" ->
-      """WITH p AS (
-        |  SELECT event_id AS p_id, user_id, ts AS p_ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT event_id AS c_id, user_id, ts AS c_ts
-        |  FROM events WHERE event_type = 'click')
-        |SELECT user_id, p_id, c_id
-        |FROM p JOIN c USING (user_id)
-        |WHERE c_ts >= p_ts - INTERVAL 30 MINUTE AND c_ts <= p_ts
-        |ORDER BY p_id, c_id""".stripMargin,
-
-    // native session_window face: identical sessions to stream_session's
-    // gaps-and-islands (merge when gap <= 30 min), different output shape
-    "stream_session_window" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL THEN 0
-        |         WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1
-        |         ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS BIGINT) AS session_id
-        |  FROM flagged)
-        |SELECT user_id,
-        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
-        |  count(*) AS n_events
-        |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "stream_session" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL THEN 0
-        |         WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1
-        |         ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS BIGINT) AS session_id
-        |  FROM flagged)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end
-        |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-  )
 }

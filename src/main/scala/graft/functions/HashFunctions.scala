@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** MinHash / SimHash / shingling primitives for near-duplicate detection,
-  * composed from codegen'd builtins. Seeded hash family uses xxhash64 with
-  * the seed as an extra hashed column, which is how Spark's own hash
-  * expressions mix multiple inputs.
+/** Shingling and LSH banding primitives for near-duplicate detection.
+  * The MinHash and SimHash signatures themselves are native kernels
+  * (graft.functions.expr.GraftFunctions); band keys hash with xxhash64,
+  * the band index as an extra hashed column, which is how Spark's own
+  * hash expressions mix multiple inputs.
   */
 object HashFunctions {
 
@@ -19,21 +20,6 @@ object HashFunctions {
   def shingles(text: Column, n: Int): Column =
     graft.functions.expr.GraftFunctions.wordShingles(text, n)
 
-  /** One minhash value: min over shingles of hash_seed(s). */
-  private def minhashOne(sh: Column, seed: Int): Column =
-    array_min(transform(sh, s => xxhash64(lit(seed), s)))
-
-  /** MinHash signature of `numHashes` values over a shingle array.
-    * Empty shingle sets get a sentinel signature (all = seed hash) so they
-    * only collide with other empty docs.
-    */
-  def minhashSignature(sh: Column, numHashes: Int): Column = {
-    val sig = (0 until numHashes).map { i =>
-      when(size(sh) === 0, xxhash64(lit(i), lit("<empty>"))).otherwise(minhashOne(sh, i))
-    }
-    array(sig: _*)
-  }
-
   /** LSH band keys: signature sliced into `bands` bands of `rowsPerBand`,
     * each band hashed to one long; docs sharing ANY band key are candidate
     * near-duplicates. Returned as array<struct<band:int,key:bigint>> ready
@@ -45,30 +31,6 @@ object HashFunctions {
       struct(lit(b).as("band"),
         xxhash64(lit(b), concat_ws(",", transform(slice(sig, b * rowsPerBand + 1, rowsPerBand), _.cast("string")))).as("key"))
     }: _*)
-
-  /** 64-bit SimHash over tokens: bit i set iff sum over tokens of
-    * (bit i of xxhash64(token) ? +1 : -1) is positive. Pure builtins:
-    * per-token ±1 vectors aggregated with zip_with.
-    */
-  def simhash64(text: Column): Column = {
-    val toks = TextFunctions.tokens(text)
-    // shift amounts are lambda-bound columns, so the SQL shiftleft/right
-    // (column-arg capable) are resolved via call_function
-    def shr(x: Column, i: Column) = call_function("shiftright", x, i.cast("int"))
-    def shl(x: Column, i: Column) = call_function("shiftleft", x, i.cast("int"))
-    val counts = aggregate(
-      toks,
-      array_repeat(lit(0L), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (a, i) => a + when(shr(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      })
-    aggregate(
-      zip_with(counts, sequence(lit(0), lit(63)),
-        (c, i) => when(c > 0, shl(lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
 
   /** Hamming distance between two packed 64-bit signatures — a single
     * codegen'd expression (xor + popcount).

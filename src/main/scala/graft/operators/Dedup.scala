@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
+import graft.functions.{HashFunctions => H, TextFunctions => T}
 import graft.functions.expr.GraftFunctions
 
 /** Deduplication operators for training-data pipelines.

@@ -34,7 +34,7 @@ private[operators] object FilesetLog {
 
   private val ManifestRe = """v(\d+)\.manifest""".r
 
-  private def manifestPath(dir: String, v: Long) =
+  private[operators] def manifestPath(dir: String, v: Long): Path =
     new Path(s"$dir/manifest/" + f"v$v%05d.manifest")
 
   def fs(spark: SparkSession, dir: String): FileSystem =

@@ -446,8 +446,7 @@ object TextAnalysis {
         .filterNot(referenced.contains).sorted
     doomed.foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true))
     vs.dropRight(keepLast).foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(
-        s"$path/manifest/" + f"v$v%05d.manifest"), false)
+      f.delete(FilesetLog.manifestPath(path, v), false)
     }
     doomed
   }
@@ -934,7 +933,7 @@ object TextAnalysis {
       .filterNot(referenced.contains).sorted
     doomed.foreach(p => f.delete(new Path(p), true))
     vs.dropRight(keepLast).foreach { v =>
-      f.delete(new Path(s"$path/manifest/" + f"v$v%05d.manifest"), false)
+      f.delete(FilesetLog.manifestPath(path, v), false)
     }
     doomed
   }

@@ -16,7 +16,7 @@ import graft.sources.Tables
 class ApproxSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val li = Tables.load(spark, TestSpark.sf, "lineitem")
-  private lazy val gateRow = CoreQueries.queries("q18_approx")(spark, TestSpark.sf).first()
+  private lazy val gateRow = SparkEntry.queries("q18_approx")(spark, TestSpark.sf).first()
   private lazy val raw = li.agg(
     approx_count_distinct(col("l_orderkey"), 0.01).as("approx_orders"),
     approx_count_distinct(col("l_partkey"), 0.01).as("approx_parts"),
@@ -75,7 +75,7 @@ class ApproxSpec extends AnyFunSuite {
       s"merged=$merged vs exact=$exact")
     // and the gate's booleans land true end-to-end through the parquet
     // round-trip of the sketch table
-    val gate = ExtraQueries.queries("q50_sketch_rollup")(spark, TestSpark.sf)
+    val gate = SparkEntry.queries("q50_sketch_rollup")(spark, TestSpark.sf)
       .collect()
     assert(gate.nonEmpty && gate.forall(_.getAs[Boolean]("day_ok")))
     assert(gate.count(_.getAs[String]("day") == "ALL") == 1)

@@ -38,7 +38,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q2: predicate and projection are pushed to the parquet scan") {
-    val plan = formatted(CoreQueries.queries("q2_filter_project")(spark, TestSpark.sf))
+    val plan = formatted(SparkEntry.queries("q2_filter_project")(spark, TestSpark.sf))
     assert(plan.contains("PushedFilters:"), plan)
     assert(plan.contains("GreaterThan(l_quantity"), "quantity predicate must reach the scan")
     assert(plan.contains("EqualTo(l_returnflag,R)"), "flag predicate must reach the scan")
@@ -47,7 +47,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q13: dimension joins execute as broadcast hash joins") {
-    val plan = executedNoAqe(CoreQueries.queries("q13_broadcast_join")(spark, TestSpark.sf))
+    val plan = executedNoAqe(SparkEntry.queries("q13_broadcast_join")(spark, TestSpark.sf))
     val broadcasts = plan.collect { case b: BroadcastHashJoinExec => b }
     assert(broadcasts.size == 2, s"expected 2 broadcast joins, got:\n$plan")
   }
@@ -60,7 +60,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q1: aggregation runs partial (map-side) then final, codegen'd") {
-    val plan = executedNoAqe(CoreQueries.queries("q1_agg")(spark, TestSpark.sf))
+    val plan = executedNoAqe(SparkEntry.queries("q1_agg")(spark, TestSpark.sf))
     val s = plan.toString
     assert(s.contains("HashAggregate"), s)
     assert(s.contains("*("), "agg pipeline must be inside WholeStageCodegen")
@@ -537,7 +537,7 @@ class PlanSpec extends AnyFunSuite {
   }
   test("q80 sessionize: ONE shuffle feeds both windows and the rollup") {
     val plan = executedNoAqe(
-      ExtraQueries.queries("q80_sessionize")(spark, TestSpark.sf))
+      SparkEntry.queries("q80_sessionize")(spark, TestSpark.sf))
     // windows (lag flag + running session number) and the final
     // groupBy(user, session) all reuse the single hash exchange on
     // user; the only other exchange is the output orderBy's range
@@ -554,7 +554,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q81 attribution: the type filter reaches the events scan") {
     val plan = formatted(
-      ExtraQueries.queries("q81_attribution")(spark, TestSpark.sf))
+      SparkEntry.queries("q81_attribution")(spark, TestSpark.sf))
     assert(plan.contains("PushedFilters:"), plan)
     assert(plan.contains("In(event_type"),
       s"touch+conversion type filter must be pushed to the scan:\n$plan")

@@ -150,6 +150,21 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("src/main declares each gate once, in a gates table, not in queries and oracleSql maps") {
+    // a gate is one Gate(name, oracle SQL, plan) row; SparkEntry derives
+    // the queries and oracleSql maps from the joined table. A second map
+    // keyed by gate name drifts from the table, and a repeated key in a
+    // Map(...) silently drops a gate.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val offenders = scalaFiles(root).filterNot(_.getName == "SparkEntry.scala").flatMap { f =>
+      val code = source(f)
+      Seq("val oracleSql", "def oracleSql", "val queries", "def queries")
+        .filter(code.contains).map(m => s"${f.getPath}: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("SnapshotTable reads a version's data files only through readFiles") {
     // readFiles builds the relation over the version's SnapshotFileIndex,
     // whose stats skip files; a second `spark.read...parquet(files)` read

@@ -48,8 +48,10 @@ object TestSpark {
     scans(run.queryExecution.executedPlan)
   }
 
+  /** `target/test-scratch/name` of the checkout the specs run from (sbt
+    * forks them in the project's base directory), created. */
   def scratch(name: String): String = {
-    val d = s"/root/repo/target/test-scratch/$name"
+    val d = new java.io.File(s"target/test-scratch/$name").getAbsolutePath
     new java.io.File(d).mkdirs()
     d
   }
