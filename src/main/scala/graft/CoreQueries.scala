@@ -496,8 +496,9 @@ object CoreQueries {
 
 }
 
-/** Scratch space for round-trip sources/exports — kept inside the repo
-  * target dir (nothing outside /root/repo is written).
+/** Scratch space for round-trip sources/exports — by default
+  * `target/scratch` under the working directory, so each checkout writes
+  * its own.
   *
   * The root is overridable (`-Dgraft.scratch.dir=…` or
   * `$SPARK_GRAFT_SCRATCH`) so CONCURRENT processes that both run the
@@ -512,7 +513,7 @@ object Scratch {
   val dir: String = {
     val configured = sys.props.get("graft.scratch.dir")
       .orElse(sys.env.get("SPARK_GRAFT_SCRATCH"))
-      .getOrElse("/root/repo/target/scratch")
+      .getOrElse(s"${sys.props("user.dir")}/target/scratch")
     val d = configured.replace("@pid",
       ProcessHandle.current().pid().toString)
     new java.io.File(d).mkdirs()

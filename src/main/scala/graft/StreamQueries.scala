@@ -141,7 +141,7 @@ object StreamQueries {
         SketchRollup.mergeQuantilesInto(s,
           ev.filter(pmod(col("event_id"), lit(3)) === b), store)
       }
-      val sk = s.read.parquet(store)
+      val sk = SketchRollup.read(s, store)
       val estDay = sk.select(col("day"), col("n_events"),
         KllFunctions.kllQuantile(col("sk"), lit(0.5)).as("est"),
         KllFunctions.kllN(col("sk")).as("sk_n"))
@@ -197,7 +197,7 @@ object StreamQueries {
         SketchRollup.mergeTopkInto(s,
           ev.filter(pmod(col("event_id"), lit(3)) === b), store)
       }
-      val merged = s.read.parquet(store)
+      val merged = SketchRollup.read(s, store)
         .agg(FreqFunctions.freqMerge(col("sk")).as("msk"),
           sum("n_events").as("n_events"))
       val top = ev.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))

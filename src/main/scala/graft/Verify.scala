@@ -13,7 +13,7 @@ object Verify {
     if (!sys.props.contains("graft.scratch.dir") &&
         !sys.env.contains("SPARK_GRAFT_SCRATCH"))
       System.setProperty("graft.scratch.dir",
-        "/root/repo/target/scratch_verify")
+        s"${sys.props("user.dir")}/target/scratch_verify")
     val spark = GraftExtensions.localSession(
       sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4))
     spark.sparkContext.setLogLevel("WARN")

@@ -24,12 +24,15 @@ object HashFunctions {
     * each band hashed to one long; docs sharing ANY band key are candidate
     * near-duplicates. Returned as array<struct<band:int,key:bigint>> ready
     * to explode → groupBy(band,key) — the scalable O(n) candidate
-    * generation (vs. O(n²) all-pairs).
+    * generation (vs. O(n²) all-pairs). The band's values are cast as one
+    * array (`array<string>`), which generates code; a per-element
+    * `transform` lambda gives the same strings but runs interpreted.
     */
   def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
       struct(lit(b).as("band"),
-        xxhash64(lit(b), concat_ws(",", transform(slice(sig, b * rowsPerBand + 1, rowsPerBand), _.cast("string")))).as("key"))
+        xxhash64(lit(b), concat_ws(",",
+          slice(sig, b * rowsPerBand + 1, rowsPerBand).cast("array<string>"))).as("key"))
     }: _*)
 
   /** Hamming distance between two packed 64-bit signatures — a single

@@ -61,7 +61,7 @@ object DedupStore {
       .groupBy("content_hash").agg(min("keep_id").as("keep_id"))
     val cur = FilesetLog.current(spark, storePath)
     val all = cur.map(FilesetLog.entries(spark, storePath, _)).getOrElse(Seq.empty)
-    val hist = all.filterNot(_.tag == tag) // replay: own earlier commit superseded
+    val hist = all.filterNot(_.tag.contains(tag)) // replay: own earlier commit superseded
     val histData = hist.filter(_.kind == Kind)
     val histTomb = hist.filter(_.kind == TombKind)
     // history = recorded hashes MINUS takedowns ([[takedown]]): a
@@ -87,7 +87,7 @@ object DedupStore {
     val v = cur.getOrElse(0L)
     val files = FilesetLog.writeFileset(
       fresh.repartition(col("content_hash")),
-      s"$storePath/data/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(storePath, "data", v + 1))
     if (files.nonEmpty || hist.length != all.length)
       FilesetLog.commit(spark, storePath, v + 1,
         hist ++ files.map(FilesetLog.Entry(Kind, tag, _)))
@@ -135,7 +135,7 @@ object DedupStore {
       throw new IllegalArgumentException(
         s"no committed store under $storePath — ingest first"))
     val all = FilesetLog.entries(spark, storePath, cur)
-    val hist = all.filterNot(_.tag == tag) // replay: supersede own commit
+    val hist = all.filterNot(_.tag.contains(tag)) // replay: supersede own commit
     val dataFiles = hist.filter(_.kind == Kind).map(_.file)
     val tombFiles = hist.filter(_.kind == TombKind).map(_.file)
     val hashes = batch.select(sha2(col(textCol), 256).as("content_hash"))
@@ -160,7 +160,7 @@ object DedupStore {
     if (n == 0 && hist.length == all.length) return 0L
     val files = FilesetLog.writeFileset(
       present.repartition(col("content_hash")),
-      s"$storePath/tomb/" + f"v${cur + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(storePath, "tomb", cur + 1))
     FilesetLog.commit(spark, storePath, cur + 1,
       hist ++ files.map(FilesetLog.Entry(TombKind, tag, _)))
     n
@@ -195,7 +195,7 @@ object DedupStore {
     val nf = math.max(1L, (n + targetRecords - 1) / targetRecords).toInt
     val files = FilesetLog.writeFileset(
       df.repartition(nf, col("content_hash")),
-      s"$storePath/data/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(storePath, "data", v + 1))
     FilesetLog.commit(spark, storePath, v + 1,
       files.map(FilesetLog.Entry(Kind, FilesetLog.CompactedTag, _)))
     v + 1

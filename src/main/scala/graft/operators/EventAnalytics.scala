@@ -230,7 +230,7 @@ object EventAnalytics {
     */
   def cohortRetentionFromSketches(spark: org.apache.spark.sql.SparkSession,
       storePath: String): DataFrame =
-    spark.read.parquet(storePath)
+    graft.streaming.SketchRollup.read(spark, storePath)
       .select(col("cohort_day"), col("day_offset"),
         hll_sketch_estimate(col("sk")).as("est_users"), col("n_events"))
       .orderBy("cohort_day", "day_offset")

@@ -189,7 +189,7 @@ object MaterializedView {
       "version and refreshes fine)")
     if (v1 == v0) return (v0, v0)
     // a vacuum that dropped v0's manifest breaks the CDC base — fail
-    // with the remedy, not manifestLines' bare missing-version error
+    // with the remedy, not the manifest log's bare missing-version error
     require(SnapshotTable.versions(spark, tableDir).contains(v0),
       s"the view reflects v$v0 but that version was vacuumed from " +
         s"$tableDir — the CDC delta can no longer be computed; rebuild " +
@@ -294,11 +294,11 @@ object MaterializedView {
     val aggs = all.filter(_.kind == AggKind)
     all.find(_.kind == VersionKind) match {
       case Some(s) =>
-        (s.tag, aggs, org.apache.spark.sql.types.DataType.fromJson(s.file)
+        (s.tag.get, aggs, org.apache.spark.sql.types.DataType.fromJson(s.file)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
       case None =>
         // legacy manifest: version rides the agg tags; schema from the files
-        val v0 = aggs.map(_.tag).distinct match {
+        val v0 = aggs.flatMap(_.tag).distinct match {
           case Seq(t) => t
           case other => throw new IllegalStateException(
             s"view manifest must carry one snapshot version, got $other")
@@ -366,7 +366,7 @@ object MaterializedView {
       snapshotV: Long): Unit = {
     val m = FilesetLog.current(spark, mvDir).getOrElse(0L)
     val files = FilesetLog.writeFileset(agg,
-      s"$mvDir/agg/" + f"v${m + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(mvDir, "agg", m + 1))
     // the sentinel makes the commit self-describing even with ZERO agg
     // files (schema JSON is space-free; Entry parsing splits on at most
     // 3 fields anyway)

@@ -99,8 +99,8 @@ object NearDupStore {
     // case), which the new commit then supersedes
     val batchTag =
       if (tag >= 0L) tag
-      else all.map(_.tag).foldLeft(-1L)(math.max) + 1L
-    val hist = all.filterNot(_.tag == batchTag)
+      else all.flatMap(_.tag).foldLeft(-1L)(math.max) + 1L
+    val hist = all.filterNot(_.tag.contains(batchTag))
     val histSigFiles = hist.filter(_.kind == "S").map(_.file)
     val histBucketFiles = hist.filter(_.kind == "B").map(_.file)
 
@@ -165,10 +165,10 @@ object NearDupStore {
     val v = cur.getOrElse(0L)
     val bFiles = FilesetLog.writeFileset(
       newBuckets.repartition(col("band"), col("key")),
-      s"$storePath/buckets/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(storePath, "buckets", v + 1))
     val sFiles = FilesetLog.writeFileset(
       newDocs.select("id", "sh", "sz"),
-      s"$storePath/sigs/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(storePath, "sigs", v + 1))
     newDocs.unpersist()
     if (bFiles.nonEmpty || sFiles.nonEmpty || hist.length != all.length)
       FilesetLog.commit(spark, storePath, v + 1,
@@ -202,7 +202,7 @@ object NearDupStore {
         val n = df.count()
         val nf = math.max(1L, (n + targetRecords - 1) / targetRecords).toInt
         FilesetLog.writeFileset(parts(df)(nf),
-          s"$storePath/$sub/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+          FilesetLog.fileset(storePath, sub, v + 1))
       }
     }
     val bFiles = compactKind("B", "buckets",

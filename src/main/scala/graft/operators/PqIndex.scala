@@ -192,12 +192,11 @@ object PqIndex {
   //
   //   <path>/data/vNNNNN_<nonce>/cell=K/part-*.parquet   encoded rows
   //   <path>/tomb/vNNNNN_<nonce>/cell=K/part-*.parquet   (id, cell) masks
-  //   <path>/manifest/vNNNNN.manifest                    "D <file>" and
-  //                                                      "T <file>" lines
   //
-  // Every maintenance op (append, delete, compact) writes NEW filesets
-  // first and then publishes the next manifest with the atomic exclusive
-  // [[ManifestCommit]] — so a reader that planned against version v keeps
+  // and a version is a [[FilesetLog]] manifest of `D <file>` (data) and
+  // `T <file>` (tombstone) entries. Every maintenance op (append, delete,
+  // compact) writes NEW filesets first and then publishes the next
+  // manifest exclusively — so a reader that planned against version v keeps
   // serving v's immutable files however many maintenance ops land after
   // it; there is NO delete+rename window in which the live index is
   // missing files. A crash mid-op leaves orphan filesets (invisible;
@@ -206,71 +205,36 @@ object PqIndex {
   // manifest race surfaces as [[SnapshotTable.CommitConflict]] to the
   // maintainer instead of rebasing.
 
-  private val ManifestRe = """v(\d+)\.manifest""".r
-
-  private def manifestPath(path: String, v: Long) =
-    new org.apache.hadoop.fs.Path(s"$path/manifest/" + f"v$v%05d.manifest")
-
-  private def fsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def nonce(): String = java.util.UUID.randomUUID.toString.take(8)
-
   /** All committed index versions, ascending (a fileset without a
     * manifest — a crashed maintenance op — is not a version).
     */
-  def versions(spark: org.apache.spark.sql.SparkSession, path: String): Seq[Long] = {
-    val f = fsOf(spark, path)
-    val md = new org.apache.hadoop.fs.Path(s"$path/manifest")
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq.flatMap(_.getPath.getName match {
-      case ManifestRe(n) => Some(n.toLong)
-      case _ => None
-    }).sorted
-  }
+  def versions(spark: org.apache.spark.sql.SparkSession, path: String): Seq[Long] =
+    FilesetLog.versions(spark, path)
 
   def currentVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Long] = versions(spark, path).lastOption
+      path: String): Option[Long] = FilesetLog.current(spark, path)
 
   /** A version's live file lists: encoded data files and tombstone files. */
   private case class IndexFiles(data: Seq[String], tomb: Seq[String])
 
   private def filesOf(spark: org.apache.spark.sql.SparkSession, path: String,
       v: Long): IndexFiles = {
-    val f = fsOf(spark, path)
-    val p = manifestPath(path, v)
-    require(f.exists(p), s"index version $v does not exist under $path")
-    val len = f.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = f.open(p)
-    try in.readFully(0, buf) finally in.close()
-    val lines = new String(buf, "UTF-8").split("\n").map(_.trim).filter(_.nonEmpty)
-    IndexFiles(
-      lines.filter(_.startsWith("D ")).map(_.drop(2)).toSeq,
-      lines.filter(_.startsWith("T ")).map(_.drop(2)).toSeq)
+    val es = FilesetLog.entries(spark, path, v)
+    IndexFiles(es.filter(_.kind == "D").map(_.file), es.filter(_.kind == "T").map(_.file))
   }
 
   private def commit(spark: org.apache.spark.sql.SparkSession, path: String,
       v: Long, data: Seq[String], tomb: Seq[String]): Unit =
-    ManifestCommit.publish(fsOf(spark, path), manifestPath(path, v),
-      (data.sorted.map("D " + _) ++ tomb.sorted.map("T " + _)).mkString("\n") + "\n")
+    FilesetLog.commit(spark, path, v,
+      data.map(FilesetLog.Entry("D", None, _)) ++ tomb.map(FilesetLog.Entry("T", None, _)))
 
-  /** Write `df` cell-partitioned under `dest` and return the written
-    * files (possibly empty — partitionBy writes nothing for an empty
-    * frame). Filesets are immutable once a manifest references them.
+  /** Write `df` cell-partitioned as a new fileset under `<path>/<sub>` for
+    * version `v` and return the written files (possibly empty —
+    * partitionBy writes nothing for an empty frame). Filesets are
+    * immutable once a manifest references them.
     */
-  private def writeFileset(df: DataFrame, dest: String): Seq[String] = {
-    df.write.mode("overwrite").partitionBy("cell").parquet(dest)
-    val f = fsOf(df.sparkSession, dest)
-    val root = new org.apache.hadoop.fs.Path(dest)
-    f.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .flatMap(d => f.listStatus(d.getPath).toSeq)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).sorted
-  }
+  private def writeFileset(df: DataFrame, path: String, sub: String, v: Long): Seq[String] =
+    FilesetLog.writeFileset(df, FilesetLog.fileset(path, sub, v), Seq("cell"))
 
   private val CellRe = """.*/cell=(\d+)/[^/]*$""".r
   private def cellOfPath(p: String): Int = p match {
@@ -310,9 +274,8 @@ object PqIndex {
     */
   def writeIndex(encoded: DataFrame, path: String): Unit = {
     val spark = encoded.sparkSession
-    val f = fsOf(spark, path)
-    f.delete(new org.apache.hadoop.fs.Path(path), true)
-    val files = writeFileset(encoded, s"$path/data/" + f"v${1L}%05d" + s"_${nonce()}")
+    FilesetLog.fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    val files = writeFileset(encoded, path, "data", 1L)
     commit(spark, path, 1L, files, Nil)
   }
 
@@ -345,7 +308,7 @@ object PqIndex {
     val enc = encode(corpus, idCol, vecCol, model)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val encFiles = writeFileset(enc, s"$path/data/" + f"v${v + 1}%05d" + s"_${nonce()}")
+      val encFiles = writeFileset(enc, path, "data", v + 1)
       var dataFiles = fl.data ++ encFiles
       var tombFiles = fl.tomb
       if (fl.tomb.nonEmpty) {
@@ -365,13 +328,11 @@ object PqIndex {
               val survivors = readFiles(spark, path, affected,
                   Seq("id", "cell", "codes", "norm"))
                 .join(superseded, Seq("id", "cell"), "left_anti")
-              val survFiles = writeFileset(survivors,
-                s"$path/data/" + f"v${v + 1}%05d" + s"_${nonce()}")
+              val survFiles = writeFileset(survivors, path, "data", v + 1)
               dataFiles = fl.data.filterNot(affected.toSet) ++ survFiles ++ encFiles
               tombFiles = writeFileset(
                 masked.join(enc.select(col("id"), col("cell")),
-                  Seq("id", "cell"), "left_anti"),
-                s"$path/tomb/" + f"v${v + 1}%05d" + s"_${nonce()}")
+                  Seq("id", "cell"), "left_anti"), path, "tomb", v + 1)
             }
           } finally { superseded.unpersist(); () }
         } finally { masked.unpersist(); () }
@@ -402,8 +363,7 @@ object PqIndex {
     val affected = fl.data.filter(p => cells.contains(cellOfPath(p)))
     val survivors = readFiles(spark, path, affected, Seq("id", "cell", "codes", "norm"))
       .join(masked, Seq("id", "cell"), "left_anti")
-    val survFiles = writeFileset(survivors,
-      s"$path/data/" + f"v${v + 1}%05d" + s"_${nonce()}")
+    val survFiles = writeFileset(survivors, path, "data", v + 1)
     commit(spark, path, v + 1, fl.data.filterNot(affected.toSet) ++ survFiles, Nil)
   }
 
@@ -448,12 +408,12 @@ object PqIndex {
     val prune = SkippingIndex.Prune(fl.data.length, kept.length, kept)
     if (kept.isEmpty) return prune // no file can hold a deleted id: no-op
     val idx = readFiles(spark, path, kept, Seq("id", "cell"))
-    val dest = s"$path/tomb/" + f"v${v + 1}%05d" + s"_${nonce()}"
-    val newTomb = writeFileset(
-      idx.join(del.select(col("__k").as("id")), Seq("id")), dest)
+    val dest = FilesetLog.fileset(path, "tomb", v + 1)
+    val newTomb = FilesetLog.writeFileset(
+      idx.join(del.select(col("__k").as("id")), Seq("id")), dest, Seq("cell"))
     if (newTomb.isEmpty) {
       // nothing resolved to an index row: no-op, drop the empty fileset
-      fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(dest), true)
+      FilesetLog.fs(spark, path).delete(new org.apache.hadoop.fs.Path(dest), true)
     } else commit(spark, path, v + 1, fl.data, fl.tomb ++ newTomb)
     prune
   }
@@ -489,31 +449,8 @@ object PqIndex {
     */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       keepLast: Int = 1,
-      graceMs: Long = SnapshotTable.DefaultVacuumGraceMs): Seq[String] = {
-    require(keepLast >= 1, "keepLast >= 1")
-    val f = fsOf(spark, path)
-    val vs = versions(spark, path)
-    val (drop, keep) = vs.splitAt(math.max(0, vs.length - keepLast))
-    val referenced = keep.flatMap { k =>
-      val fl = filesOf(spark, path, k); fl.data ++ fl.tomb
-    }.toSet
-    val horizon = System.currentTimeMillis() - graceMs
-    def filesUnder(sub: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      if (!f.exists(root)) Seq.empty
-      else f.listStatus(root).toSeq.filter(_.isDirectory)
-        .flatMap(d => f.listStatus(d.getPath).toSeq.filter(_.isDirectory)
-          .flatMap(c => f.listStatus(c.getPath).toSeq))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
-    val doomed = (filesUnder("data") ++ filesUnder("tomb"))
-      .filter(_.getModificationTime <= horizon)
-      .map(_.getPath.toString)
-      .filterNot(referenced.contains).sorted
-    doomed.foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), false))
-    drop.foreach(v => f.delete(manifestPath(path, v), false))
-    doomed
-  }
+      graceMs: Long = SnapshotTable.DefaultVacuumGraceMs): Seq[String] =
+    FilesetLog.vacuum(spark, path, Seq("data", "tomb"), keepLast, graceMs)
 
   /** Top-k per query: ADC scan over the `nProbe` best cells' codes, then
     * exact cosine re-rank of the top `k * refine` shortlist against the

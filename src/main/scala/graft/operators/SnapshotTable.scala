@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -16,15 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * the Delta/Iceberg snapshot-isolation shape re-expressed over plain
   * parquet + Spark plans.
   *
-  * Layout:
-  * {{{
-  *   <dir>/data/v<N>_<nonce>/part-*.parquet  immutable data files, one
-  *                                    writer-unique subdir per commit attempt
-  *   <dir>/manifest/v<N>.manifest     newline-separated list of the files
-  *                                    that ARE version N (may span many
-  *                                    data/v* dirs — upserts reuse
-  *                                    untouched files)
-  * }}}
+  * Layout: immutable data files under `<dir>/data/v<N>_<nonce>/`, one
+  * writer-unique subdir per commit attempt, and version N's manifest in
+  * the store's [[FilesetLog]]: `#` headers (commit instant, schema,
+  * dropped columns, carried stats), then one entry per file that IS
+  * version N (files may span many data dirs — upserts reuse untouched
+  * files).
   *
   * Commit protocol (OPTIMISTIC concurrency): write the new data files
   * FIRST into a writer-unique directory, then publish the manifest with
@@ -68,38 +65,13 @@ object SnapshotTable {
     */
   final class CommitConflict(msg: String) extends RuntimeException(msg)
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def manifestPath(dir: String, v: Long) =
-    new Path(s"$dir/manifest/" + f"v$v%05d.manifest")
-
-  private val ManifestRe = """v(\d+)\.manifest""".r
-
-  /** All committed versions, ascending. A data/v* dir without a manifest
-    * (crashed commit) is NOT a version.
-    *
-    * COST BOUND: one directory listing of `<dir>/manifest`. The listing
-    * is the read path's only history-sized cost, and VACUUM RETENTION is
-    * its designed bound — [[vacuum]] deletes the manifests below
-    * `keepLast`, so the directory holds `keepLast` (+ in-flight) entries
-    * in steady state, never the table's lifetime commit count. A table
-    * that must retain ~10⁶ manifests for deep time travel would want a
-    * `_latest` pointer + listing fallback; this library's contract is
-    * retention-bounded history (the same bound every vacuum-era
-    * lakehouse documents), so the listing stays O(retained versions) by
-    * policy, and AS OF resolution within it is O(log retained) header
-    * reads ([[versionAsOf]]).
+  /** All committed versions, ascending ([[FilesetLog.versions]]: one
+    * listing, bounded by vacuum retention; AS OF resolution within it is
+    * O(log retained) header reads, [[versionAsOf]]). A data dir without a
+    * manifest (crashed commit) is NOT a version.
     */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val md = new Path(s"$dir/manifest")
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq.flatMap(_.getPath.getName match {
-      case ManifestRe(n) => Some(n.toLong)
-      case _ => None
-    }).sorted
-  }
+  def versions(spark: SparkSession, dir: String): Seq[Long] =
+    FilesetLog.versions(spark, dir)
 
   def currentVersion(spark: SparkSession, dir: String): Option[Long] =
     versions(spark, dir).lastOption
@@ -112,50 +84,13 @@ object SnapshotTable {
     try versions(spark, path).nonEmpty
     catch { case scala.util.control.NonFatal(_) => false }
 
-  private def manifestLines(spark: SparkSession, dir: String, v: Long): Seq[String] = {
-    val p = manifestPath(dir, v)
-    val f = fs(spark, dir)
-    require(f.exists(p), s"version $v does not exist under $dir")
-    // memoized per (qualified path, mtime, length), like the instant
-    // cache: manifests are immutable once published, and one upsert
-    // otherwise reads the SAME manifest several times (files, schemaOf,
-    // droppedOf, carried stats) — sub-ms on a local FS but a real
-    // round trip each on an object store. Keying on (mtime, len) means a
-    // table recreated at the same path can never serve stale lines.
-    val st = f.getFileStatus(p)
-    val key = s"${f.makeQualified(p)}#${st.getModificationTime}#${st.getLen}"
-    val cached = manifestLinesCache.get(key)
-    if (cached != null) cached
-    else {
-      manifestReads.incrementAndGet()
-      val len = st.getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = f.open(p)
-      try in.readFully(0, buf) finally in.close()
-      val lines = new String(buf, "UTF-8").split("\n")
-        .map(_.trim).filter(_.nonEmpty).toSeq
-      if (manifestLinesCache.size > 4096) manifestLinesCache.clear()
-      manifestLinesCache.put(key, lines)
-      lines
-    }
-  }
-
-  private val manifestLinesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  /** Test-visible cost evidence: full manifest reads performed (cache
-    * misses) — the upsert-reads-the-manifest-once assertion's counter.
-    */
-  private[graft] val manifestReads = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def clearManifestLinesCache(): Unit = manifestLinesCache.clear()
-
   /** The live files of `version` (default: current). `#`-prefixed
     * manifest header lines (the version's schema) are not files.
     */
   def files(spark: SparkSession, dir: String, version: Option[Long] = None): Seq[String] = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no committed version under $dir"))
-    manifestLines(spark, dir, v).filterNot(_.startsWith("#"))
+    FilesetLog.manifest(spark, dir, v).entries.map(_.file)
   }
 
   /** The schema committed WITH `version` — what makes ADD COLUMN work:
@@ -168,9 +103,8 @@ object SnapshotTable {
       version: Option[Long] = None): Option[StructType] = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no committed version under $dir"))
-    manifestLines(spark, dir, v).find(_.startsWith(SchemaHeader))
-      .map(l => org.apache.spark.sql.types.DataType.fromJson(
-        l.drop(SchemaHeader.length)).asInstanceOf[StructType])
+    FilesetLog.manifest(spark, dir, v).header(SchemaHeader)
+      .map(l => org.apache.spark.sql.types.DataType.fromJson(l).asInstanceOf[StructType])
   }
 
   private val SchemaHeader = "#schema:"
@@ -187,8 +121,8 @@ object SnapshotTable {
       version: Option[Long] = None): Seq[String] = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no committed version under $dir"))
-    manifestLines(spark, dir, v).find(_.startsWith(DroppedHeader))
-      .map(_.drop(DroppedHeader.length).split(",").map(_.trim)
+    FilesetLog.manifest(spark, dir, v).header(DroppedHeader)
+      .map(_.split(",").map(_.trim)
         .filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
   }
@@ -288,10 +222,10 @@ object SnapshotTable {
       version: Option[Long] = None): CarriedStats = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    val lines = manifestLines(spark, dir, v)
-    val fl = lines.filterNot(_.startsWith("#"))
+    val m = FilesetLog.manifest(spark, dir, v)
+    val fl = m.entries.map(_.file)
     val schema = schemaOf(spark, dir, Some(v))
-    lines.filter(_.startsWith(StatsHeader)).flatMap { l =>
+    m.headers.filter(_.startsWith(StatsHeader)).flatMap { l =>
       try {
         val Array(kind, encCol, payload) = l.drop(StatsHeader.length).split(":", 3)
         val colName = java.net.URLDecoder.decode(encCol, "UTF-8")
@@ -366,24 +300,13 @@ object SnapshotTable {
       schemaOf(spark, dir, v).getOrElse(spark.read.parquet(files(spark, dir, v): _*).schema))
   }
 
-  private def nonce(): String = java.util.UUID.randomUUID.toString.take(8)
-
   /** Write `df` as data files for a candidate version `v` and return
-    * their paths. The directory carries a WRITER-UNIQUE nonce: two
-    * writers racing for the same version number land in different
-    * directories, so the loser's files can never clobber the winner's
-    * (they become orphans, removed by [[vacuum]]). Manifests reference
-    * absolute paths, so the suffix is free-form.
+    * their paths, in a writer-unique directory ([[FilesetLog.fileset]]):
+    * a racing loser's files become orphans, removed by [[vacuum]].
     */
-  private def writeData(spark: SparkSession, df: DataFrame, dir: String,
-      v: Long): Seq[String] = {
-    val out = s"$dir/data/" + f"v$v%05d" + s"_${nonce()}"
-    df.write.mode("overwrite").parquet(out)
-    val f = fs(spark, dir)
-    f.listStatus(new Path(out))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).sorted.toSeq
-  }
+  private def writeData(df: DataFrame, dir: String, v: Long,
+      options: Map[String, String] = Map.empty): Seq[String] =
+    FilesetLog.writeFileset(df, FilesetLog.fileset(dir, "data", v), options = options)
 
   private val CommittedHeader = "#committed:"
 
@@ -403,54 +326,18 @@ object SnapshotTable {
     headerInstant(spark, dir, v)._2
 
   /** (carries `#committed:` header?, resolved instant) for version `v`,
-    * reading a BOUNDED manifest prefix — the header is always the FIRST
-    * line when present ([[commitManifest]] writes it first), so one
-    * 64-byte read answers both questions regardless of manifest size
-    * (a 10⁶-file manifest costs the same as a 10-file one; the old
-    * whole-manifest `readFully` made every AS OF resolution
-    * O(versions × manifest bytes)). Results are memoized per
-    * (qualified path, mtime, length): manifests are immutable once
-    * published, and keying on (mtime, len) means a table deleted and
-    * recreated at the same path, or copied with rewritten mtimes, can
-    * never serve a stale instant. [[headerReads]] counts actual prefix
-    * reads (cache misses) — the cost evidence SnapshotTableSpec asserts.
+    * from the manifest's first line alone ([[FilesetLog.firstLine]], a
+    * bounded prefix read memoized per path, mtime and length) — the
+    * header is always the FIRST line when present ([[commitManifest]]
+    * writes it first), so AS OF resolution costs the same on a 10⁶-file
+    * manifest as on a 10-file one.
     */
   private def headerInstant(spark: SparkSession, dir: String,
       v: Long): (Boolean, Long) = {
-    val f = fs(spark, dir)
-    val p = manifestPath(dir, v)
-    val st =
-      try f.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(s"version $v does not exist under $dir")
-      }
-    val key = s"${f.makeQualified(p)}#${st.getModificationTime}#${st.getLen}"
-    val cached = instantCache.get(key)
-    if (cached != null) cached
-    else {
-      headerReads.incrementAndGet()
-      val n = math.min(st.getLen, 64L).toInt
-      val buf = new Array[Byte](n)
-      val in = f.open(p)
-      try in.readFully(0, buf) finally in.close()
-      val firstLine = new String(buf, "UTF-8").takeWhile(_ != '\n').trim
-      val res: (Boolean, Long) =
-        if (firstLine.startsWith(CommittedHeader))
-          (true, firstLine.drop(CommittedHeader.length).trim.toLong)
-        else (false, st.getModificationTime)
-      if (instantCache.size > 65536) instantCache.clear()
-      instantCache.put(key, res)
-      res
-    }
+    val (first, mtime) = FilesetLog.firstLine(spark, dir, v)
+    if (first.startsWith(CommittedHeader)) (true, first.drop(CommittedHeader.length).trim.toLong)
+    else (false, mtime)
   }
-
-  private val instantCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Boolean, Long)]()
-
-  /** Test-visible cost evidence: manifest header prefix reads performed
-    * (cache misses). */
-  private[graft] val headerReads = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def clearInstantCache(): Unit = instantCache.clear()
 
   /** Atomically publish `fileList` as version `v`, or throw
     * [[CommitConflict]] if another writer committed `v` first — the
@@ -470,14 +357,13 @@ object SnapshotTable {
     val prevInstant = versions(spark, dir).filter(_ < v).lastOption
       .map(pv => commitInstantOf(spark, dir, pv)).getOrElse(0L)
     val stamp = math.max(System.currentTimeMillis(), prevInstant + 1L)
-    ManifestCommit.publish(fs(spark, dir), manifestPath(dir, v),
-      (Seq(CommittedHeader + stamp) ++
+    FilesetLog.publish(spark, dir, v,
+      Seq(CommittedHeader + stamp) ++
         schema.map(s => SchemaHeader + s.json).toSeq ++
         (if (dropped.nonEmpty) Seq(DroppedHeader + dropped.sorted.mkString(","))
          else Seq.empty) ++
-        statsHeaders(fileList, stats) ++
-        fileList)
-        .mkString("\n") + "\n")
+        statsHeaders(fileList, stats),
+      fileList.map(FilesetLog.Entry("", None, _)))
   }
 
   /** Create version 1 from `df`. Pre-shape the frame for later pruning
@@ -486,7 +372,7 @@ object SnapshotTable {
     */
   def create(spark: SparkSession, df: DataFrame, dir: String): Commit = {
     require(currentVersion(spark, dir).isEmpty, s"table already exists under $dir")
-    val fl = writeData(spark, df, dir, 1L)
+    val fl = writeData(df, dir, 1L)
     commitManifest(spark, dir, 1L, fl, Some(df.schema))
     Commit(1L, fl, 0)
   }
@@ -633,7 +519,7 @@ object SnapshotTable {
         df.withColumn(f.name, lit(null).cast(f.dataType)))
       val merged = Upsert.latestWins(base, changes, Seq(keyCol),
         versionCol, tieCol, deleteCol, keepVersionCol = true)
-      val fl = writeData(spark, merged, dir, v + 1)
+      val fl = writeData(merged, dir, v + 1)
       val all = (untouched ++ fl).sorted
       // carry stats forward for the files this commit KEEPS: the key
       // column's refreshed entries (carried ++ freshly scanned) plus
@@ -705,13 +591,8 @@ object SnapshotTable {
           df.repartitionByRange(nf, col(c)).sortWithinPartitions(c)
         case _ => df.repartition(nf)
       }
-      val out = s"$dir/data/" + f"v${v + 1}%05d" + s"_${nonce()}"
-      shaped.write.mode("overwrite")
-        .option("maxRecordsPerFile", targetRecords).parquet(out)
-      val f = fs(spark, dir)
-      val fl = f.listStatus(new Path(out))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).sorted.toSeq
+      val fl = writeData(shaped, dir, v + 1,
+        Map("maxRecordsPerFile" -> targetRecords.toString))
       try {
         commitManifest(spark, dir, v + 1, fl, Some(df.schema))
         return Commit(v + 1, fl, 0)
@@ -775,7 +656,7 @@ object SnapshotTable {
           s"${touched.length} manifest entries — path normalization bug")
       val survivors = readFiles(spark, new SnapshotFileIndex(spark, dir, v, touched.sorted))
         .filter(!coalesce(cond, lit(false)))
-      val fl = writeData(spark, survivors, dir, v + 1)
+      val fl = writeData(survivors, dir, v + 1)
       val all = (untouched ++ fl).sorted
       try {
         // delete rewrites only the affected files: the dropped set's
@@ -814,7 +695,7 @@ object SnapshotTable {
         throw new IllegalArgumentException(s"no table under $dir"))
       val fl = files(spark, dir, Some(toVersion))
       val schema = schemaOf(spark, dir, Some(toVersion))
-      val f = fs(spark, dir)
+      val f = FilesetLog.fs(spark, dir)
       val missing = fl.filterNot(p => f.exists(new Path(p)))
       require(missing.isEmpty,
         s"cannot restore to v$toVersion — ${missing.length} of its data " +
@@ -1091,13 +972,8 @@ object SnapshotTable {
       val df = read(spark, dir, Some(v)).withColumnRenamed(from, to)
       val n = df.count()
       val nf = math.max(1L, (n + targetRecords - 1) / targetRecords).toInt
-      val out = s"$dir/data/" + f"v${v + 1}%05d" + s"_${nonce()}"
-      df.repartition(nf).write.mode("overwrite")
-        .option("maxRecordsPerFile", targetRecords).parquet(out)
-      val f = fs(spark, dir)
-      val fl = f.listStatus(new Path(out))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).sorted.toSeq
+      val fl = writeData(df.repartition(nf), dir, v + 1,
+        Map("maxRecordsPerFile" -> targetRecords.toString))
       try {
         // full rewrite: dropped set cleared (no stale bytes survive)
         commitManifest(spark, dir, v + 1, fl, Some(df.schema))
@@ -1353,7 +1229,7 @@ object SnapshotTable {
       fpp: Double = 0.01): (Long, Long) = {
     val v = version.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no table under $dir"))
-    val f = fs(spark, dir)
+    val f = FilesetLog.fs(spark, dir)
     val nBits = SkippingIndex.bloomNumBits(expectedItemsPerFile, fpp)
     val prior = versions(spark, dir).filter(_ < v).reverse.find { pv =>
       val bp = new Path(bloomDir(dir, pv, column))
@@ -1398,7 +1274,7 @@ object SnapshotTable {
         // write via a temp dir: the union READS the prior index, which
         // may BE the target dir when re-attaching the same version
         val out = bloomDir(dir, v, column)
-        val tmp = out + s".tmp_${nonce()}"
+        val tmp = out + s".tmp_${FilesetLog.nonce()}"
         // repartition(1), not coalesce(1): the new files' bloom builds
         // SCAN their column data — coalesce would serialize them all
         // into the single writer task
@@ -1435,7 +1311,7 @@ object SnapshotTable {
       throw new IllegalArgumentException(s"no table under $dir"))
     val bp = new Path(bloomDir(dir, v, column))
     val equal = col(column) === lit(value)
-    if (!fs(spark, dir).exists(bp)) (read(spark, dir, Some(v)).filter(equal), None)
+    if (!FilesetLog.fs(spark, dir).exists(bp)) (read(spark, dir, Some(v)).filter(equal), None)
     else {
       val dt = schemaOf(spark, dir, Some(v))
         .getOrElse(read(spark, dir, Some(v)).schema)(column).dataType
@@ -1582,24 +1458,8 @@ object SnapshotTable {
     */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 1,
       graceMs: Long = DefaultVacuumGraceMs): Seq[String] = {
-    require(keepLast >= 1, "keepLast >= 1")
-    val vs = versions(spark, dir)
-    val (drop, keep) = vs.splitAt(math.max(0, vs.length - keepLast))
-    val referenced = keep.flatMap(k => files(spark, dir, Some(k))).toSet
-    val f = fs(spark, dir)
-    val dataDir = new Path(s"$dir/data")
-    val horizon = System.currentTimeMillis() - graceMs
-    val onDisk =
-      if (!f.exists(dataDir)) Seq.empty[String]
-      else f.listStatus(dataDir).filter(_.isDirectory).toSeq
-        .flatMap(d => f.listStatus(d.getPath).toSeq)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")
-          && s.getModificationTime <= horizon)
-        .map(_.getPath.toString)
-    val doomed = onDisk.filterNot(referenced.contains).sorted
-    doomed.foreach(p => f.delete(new Path(p), false))
-    drop.foreach { v =>
-      f.delete(manifestPath(dir, v), false)
+    val f = FilesetLog.fs(spark, dir)
+    FilesetLog.vacuum(spark, dir, Seq("data"), keepLast, graceMs, { v =>
       f.delete(new Path(statsDir(dir, v)), true) // version-scoped index goes with it
       // bloom indexes are version-scoped too (one dir per indexed
       // column, bloom/vNNNNN_<col>) — without this they accumulate
@@ -1609,7 +1469,6 @@ object SnapshotTable {
         f.listStatus(bloomRoot).toSeq
           .filter(_.getPath.getName.startsWith(f"v$v%05d" + "_"))
           .foreach(s => f.delete(s.getPath, true))
-    }
-    doomed
+    })
   }
 }

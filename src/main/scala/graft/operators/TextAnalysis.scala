@@ -221,7 +221,7 @@ object TextAnalysis {
     * — the DedupStore/NearDupStore treatment). ONE tokenize scan per
     * ingest batch writes:
     * {{{
-    *   <path>/manifest/vNNNNN.manifest    the committed version: P + S lines
+    *   [[FilesetLog]] manifest          the committed version: P + S lines
     *   <path>/postings/vNNNNN_<nonce>/bucket=<b>/   (w, id, tf, dl) — one
     *                        fileset per build/append, partitioned by
     *                        bucket = pmod(xxhash64(w), nBuckets)
@@ -307,7 +307,7 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val cur = FilesetLog.current(spark, path)
     val all = cur.map(FilesetLog.entries(spark, path, _)).getOrElse(Seq.empty)
-    val hist = all.filterNot(_.tag == tag)
+    val hist = all.filterNot(_.tag.contains(tag))
     // disjointness guards, FUSED into one job (r18; was two batch scans):
     // (1) the batch itself must not carry a doc id twice — a
     // within-batch duplicate double-counts its postings just as silently
@@ -355,7 +355,7 @@ object TextAnalysis {
     val v = cur.getOrElse(0L)
     val withDl = docs.select(col(idCol).as("id"), T.tokens(col(textCol)).as("ts"))
       .select(col("id"), col("ts"), size(col("ts")).cast("double").as("dl"))
-    val postingsDir = s"$path/postings/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}"
+    val postingsDir = FilesetLog.fileset(path, "postings", v + 1)
     withDl.select(col("id"), col("dl"), explode(col("ts")).as("w"))
       .groupBy("id", "w").agg(count(lit(1)).cast("double").as("tf"),
         any_value(col("dl")).as("dl"))
@@ -381,7 +381,7 @@ object TextAnalysis {
     // table, never rescanning the postings
     val idFiles = FilesetLog.writeFileset(
       withDl.select(col("id"), col("dl")),
-      s"$path/ids/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(path, "ids", v + 1))
     // the stats row aggregates the just-WRITTEN doc-count-sized ids
     // fileset instead of re-running the corpus tokenize scan a third
     // time (r17: a commit paid 3 full batch scans — postings, stats,
@@ -393,7 +393,7 @@ object TextAnalysis {
       spark.read.parquet(idFiles: _*)
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
         .withColumn("n_buckets", lit(nBuckets)).coalesce(1),
-      s"$path/stats/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(path, "stats", v + 1))
     // manifest lines carry the FILESYSTEM-QUALIFIED form (file:/…, like
     // writeFileset's listing) so vacuum's on-disk walk matches them
     val qualified = f.makeQualified(new Path(postingsDir)).toString
@@ -405,51 +405,15 @@ object TextAnalysis {
         idFiles.map(FilesetLog.Entry(IdsKind, tag, _)))
   }
 
-  /** Drop old store versions and unreferenced postings/stats/ids
+  /** Drop old store versions and unreferenced postings/stats/ids/tomb
     * filesets (crashed or superseded ingests) — [[FilesetLog.vacuum]]'s
-    * grace contract. Postings manifest lines reference fileset ROOT
-    * directories, so orphan detection walks directory roots.
+    * grace contract. Postings entries reference fileset ROOT directories,
+    * which keep every file under them.
     */
   def vacuumBm25Index(spark: org.apache.spark.sql.SparkSession, path: String,
       keepLast: Int = 1,
-      graceMs: Long = SnapshotTable.DefaultVacuumGraceMs): Seq[String] = {
-    require(keepLast >= 1, "keepLast >= 1")
-    val f = FilesetLog.fs(spark, path)
-    val vs = FilesetLog.versions(spark, path)
-    val keep = vs.takeRight(keepLast)
-    val referenced = keep.flatMap(FilesetLog.entries(spark, path, _))
-      .map(_.file).toSet
-    val horizon = System.currentTimeMillis() - graceMs
-    // postings roots are one level below <path>/postings; stats files
-    // one level below their fileset dirs under <path>/stats
-    val postingRoots = {
-      val root = new org.apache.hadoop.fs.Path(s"$path/postings")
-      if (!f.exists(root)) Seq.empty[String]
-      else f.listStatus(root).toSeq.filter(_.isDirectory)
-        .filter(_.getModificationTime <= horizon)
-        .map(_.getPath.toString)
-    }
-    // stats and ids filesets share a layout: parquet files one level
-    // below their fileset dirs under <path>/<sub>
-    def leafFiles(sub: String): Seq[String] = {
-      val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      if (!f.exists(root)) Seq.empty[String]
-      else f.listStatus(root).toSeq.filter(_.isDirectory)
-        .flatMap(d => f.listStatus(d.getPath).toSeq)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")
-          && s.getModificationTime <= horizon)
-        .map(_.getPath.toString)
-    }
-    val doomed =
-      (postingRoots ++ leafFiles("stats") ++ leafFiles("ids") ++
-        leafFiles("tomb"))
-        .filterNot(referenced.contains).sorted
-    doomed.foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true))
-    vs.dropRight(keepLast).foreach { v =>
-      f.delete(FilesetLog.manifestPath(path, v), false)
-    }
-    doomed
-  }
+      graceMs: Long = SnapshotTable.DefaultVacuumGraceMs): Seq[String] =
+    FilesetLog.vacuum(spark, path, Seq("postings", "stats", "ids", "tomb"), keepLast, graceMs)
 
   /** DELETE documents from a [[buildBm25Index]] store — the tombstone
     * sidecar face ([[PqIndex]]'s ann_ivfpq_delete pattern for text):
@@ -485,7 +449,7 @@ object TextAnalysis {
       throw new IllegalArgumentException(
         s"no BM25 store under $path — buildBm25Index first"))
     val all = FilesetLog.entries(spark, path, cur)
-    val hist = all.filterNot(_.tag == tag) // replay: supersede own commit
+    val hist = all.filterNot(_.tag.contains(tag)) // replay: supersede own commit
     val ids = docIds.select(col(docIds.columns.head).as("id")).distinct()
     val idFiles = hist.filter(_.kind == IdsKind).map(_.file)
     require(idFiles.nonEmpty,
@@ -559,12 +523,12 @@ object TextAnalysis {
       .parquet(hist.filter(_.kind == StatsKind).map(_.file): _*)
       .select("n_buckets").head.getInt(0)
     val tombOut = FilesetLog.writeFileset(withDl.select("id"),
-      s"$path/tomb/" + f"v${cur + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(path, "tomb", cur + 1))
     val statsOut = FilesetLog.writeFileset(
       spark.range(1).select(lit(-nDel).cast("long").as("n_docs"),
         lit(-sdl).cast("double").as("sum_dl"),
         lit(nBuckets).as("n_buckets")).coalesce(1),
-      s"$path/stats/" + f"v${cur + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(path, "stats", cur + 1))
     FilesetLog.commit(spark, path, cur + 1,
       hist ++ tombOut.map(FilesetLog.Entry(TombKind, tag, _)) ++
         statsOut.map(FilesetLog.Entry(StatsKind, tag, _)))
@@ -610,7 +574,7 @@ object TextAnalysis {
     val out = scala.collection.mutable.ArrayBuffer.empty[FilesetLog.Entry]
     val postingRoots = es.filter(_.kind == PostingsKind).map(_.file)
     if (postingRoots.nonEmpty) {
-      val dir = s"$path/postings/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}"
+      val dir = FilesetLog.fileset(path, "postings", v + 1)
       antiTomb(postingRoots.map(spark.read.parquet(_)).reduce(_ unionByName _))
         // pinned width: repartition(col) alone is AQE-coalesced to 1-2
         // tasks at modest sizes; one task per bucket keeps the rewrite
@@ -641,7 +605,7 @@ object TextAnalysis {
       val n = st.getLong(0)
       val nf = math.max(1L, (n + targetIdRecords - 1) / targetIdRecords).toInt
       out ++= FilesetLog.writeFileset(merged.repartition(nf),
-        s"$path/ids/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+        FilesetLog.fileset(path, "ids", v + 1))
         .map(FilesetLog.Entry(IdsKind, FilesetLog.CompactedTag, _))
     }
     // the summed stats already net the deletes out (negative rows): one
@@ -650,7 +614,7 @@ object TextAnalysis {
       spark.range(1).select(lit(st.getLong(0)).as("n_docs"),
         lit(st.getDouble(1)).as("sum_dl"),
         lit(nBuckets).as("n_buckets")).coalesce(1),
-      s"$path/stats/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(path, "stats", v + 1))
       .map(FilesetLog.Entry(StatsKind, FilesetLog.CompactedTag, _))
     FilesetLog.commit(spark, path, v + 1, out.toSeq)
     v + 1
@@ -773,13 +737,13 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val cur = FilesetLog.current(spark, path)
     val hist = cur.map(FilesetLog.entries(spark, path, _))
-      .getOrElse(Seq.empty).filterNot(_.tag == tag)
+      .getOrElse(Seq.empty).filterNot(_.tag.contains(tag))
     val toks = docs.select(T.tokens(col(textCol)).as("ts"))
     val v = cur.getOrElse(0L)
     val f = FilesetLog.fs(spark, path)
     def writeBucketed(counts: DataFrame, sub: String,
         bucketOf: org.apache.spark.sql.Column): Option[String] = {
-      val dir = s"$path/$sub/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}"
+      val dir = FilesetLog.fileset(path, sub, v + 1)
       counts.withColumn("bucket", pmod(bucketOf, lit(nBuckets.toLong)))
         // one task per bucket: parallel write, one file per bucket
         // (see commitBm25Batch's postings write)
@@ -819,7 +783,7 @@ object TextAnalysis {
         lit(sumOf(uniRoot, "c")).as("t_total"),
         lit(sumOf(bigRoot, "n")).as("b_total"),
         lit(nBuckets).as("n_buckets")).coalesce(1),
-      s"$path/tot/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(path, "tot", v + 1))
     FilesetLog.commit(spark, path, v + 1,
       hist ++
         uniRoot.map(FilesetLog.Entry(UniKind, tag, _)).toSeq ++
@@ -899,44 +863,14 @@ object TextAnalysis {
     }
   }
 
-  /** [[FilesetLog.vacuum]]-style reclamation: drop old store versions
-    * and unreferenced uni/big roots + totals files (crashed or
-    * superseded ingests). Returns deleted paths.
+  /** [[FilesetLog.vacuum]]: drop old store versions and unreferenced
+    * uni/big roots + totals files (crashed or superseded ingests).
+    * Returns deleted paths.
     */
   def vacuumCountStore(spark: org.apache.spark.sql.SparkSession,
       path: String, keepLast: Int = 1,
-      graceMs: Long = SnapshotTable.DefaultVacuumGraceMs): Seq[String] = {
-    require(keepLast >= 1, "keepLast >= 1")
-    val f = FilesetLog.fs(spark, path)
-    val vs = FilesetLog.versions(spark, path)
-    val keep = vs.takeRight(keepLast)
-    val referenced = keep.flatMap(FilesetLog.entries(spark, path, _))
-      .map(_.file).toSet
-    val horizon = System.currentTimeMillis() - graceMs
-    def roots(sub: String): Seq[String] = {
-      val root = new Path(s"$path/$sub")
-      if (!f.exists(root)) Seq.empty[String]
-      else f.listStatus(root).toSeq.filter(_.isDirectory)
-        .filter(_.getModificationTime <= horizon)
-        .map(_.getPath.toString)
-    }
-    def leaves(sub: String): Seq[String] = {
-      val root = new Path(s"$path/$sub")
-      if (!f.exists(root)) Seq.empty[String]
-      else f.listStatus(root).toSeq.filter(_.isDirectory)
-        .flatMap(d => f.listStatus(d.getPath).toSeq)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")
-          && s.getModificationTime <= horizon)
-        .map(_.getPath.toString)
-    }
-    val doomed = (roots("uni") ++ roots("big") ++ leaves("tot"))
-      .filterNot(referenced.contains).sorted
-    doomed.foreach(p => f.delete(new Path(p), true))
-    vs.dropRight(keepLast).foreach { v =>
-      f.delete(FilesetLog.manifestPath(path, v), false)
-    }
-    doomed
-  }
+      graceMs: Long = SnapshotTable.DefaultVacuumGraceMs): Seq[String] =
+    FilesetLog.vacuum(spark, path, Seq("uni", "big", "tot"), keepLast, graceMs)
 
   /** COMPACT a count store: merge the CURRENT version's per-batch
     * unigram/bigram/totals filesets into ONE each — counts summed (the
@@ -971,7 +905,7 @@ object TextAnalysis {
         val merged = roots.map(spark.read.parquet(_)).reduce(_ unionByName _)
           .groupBy(keyCols.map(col): _*).agg(sum(cntCol).as(cntCol))
           .withColumn("bucket", pmod(bucketOf, lit(nBuckets.toLong)))
-        val dir = s"$path/$sub/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}"
+        val dir = FilesetLog.fileset(path, sub, v + 1)
         merged.repartition(nBuckets, col("bucket"))
           .write.mode("overwrite").partitionBy("bucket").parquet(dir)
         val has = f.listStatus(new Path(dir))
@@ -987,7 +921,7 @@ object TextAnalysis {
       spark.range(1).select(lit(tot.getLong(0)).as("t_total"),
         lit(tot.getLong(1)).as("b_total"),
         lit(nBuckets).as("n_buckets")).coalesce(1),
-      s"$path/tot/" + f"v${v + 1}%05d" + s"_${FilesetLog.nonce()}")
+      FilesetLog.fileset(path, "tot", v + 1))
       .map(FilesetLog.Entry(TotKind, FilesetLog.CompactedTag, _))
     FilesetLog.commit(spark, path, v + 1, out.toSeq)
     v + 1

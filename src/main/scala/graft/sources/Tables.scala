@@ -80,11 +80,15 @@ object Tables {
   /** Compact a small-file table directory to `numFiles` files (the
     * perpetual lakehouse maintenance job: file listing + open overhead
     * dominates scans once file count ≫ executor count). Rewrites to a
-    * temp dir, then swaps live → __old, tmp → live, delete __old. A crash
-    * mid-swap always leaves a complete copy on disk (the original at
-    * `dir` or `dir__old`, or the compacted data at `dir`), though a
-    * reader listing the path between the two renames can still see it
-    * absent for that instant — single-maintainer jobs only.
+    * temp dir, then swaps live → __old, tmp → live, delete __old. The
+    * result stays a plain parquet directory that any reader can list,
+    * which is why this store swaps by rename instead of committing
+    * through a manifest log. A crash mid-swap always leaves a complete
+    * copy on disk (the original at `dir` or `dir__old`, or the compacted
+    * data at `dir`); the next call first moves a `dir__old` left by a
+    * crash between the renames back to `dir`. A reader listing the path
+    * between the two renames can still see it absent for that instant —
+    * single-maintainer jobs only.
     *
     * Note: HDFS rename is atomic; object stores (S3) emulate rename with
     * copy+delete — there, use a manifest/commit-marker layout instead.
@@ -93,9 +97,14 @@ object Tables {
     val tmp = new org.apache.hadoop.fs.Path(dir + "__compact_tmp")
     val old = new org.apache.hadoop.fs.Path(dir + "__old")
     val live = new org.apache.hadoop.fs.Path(dir)
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(live) && fs.exists(old)) { // a crash between the two renames
+      fs.delete(tmp, true)
+      if (!fs.rename(old, live))
+        throw new java.io.IOException(s"compact: cannot restore $old to $live")
+    }
     spark.read.parquet(dir).repartition(numFiles)
       .write.mode("overwrite").parquet(tmp.toString)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(old, true) // stale leftover from a previous crashed swap
     if (!fs.rename(live, old))
       throw new java.io.IOException(s"compact: cannot move $live aside")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.FilesetLog
+
 /** Incremental maintenance of a persisted sketch table — the streaming
   * half of the mergeable-summaries story (q50/q52/q53 build and merge
   * sketches in one batch job; this keeps the SAME store current as data
@@ -23,17 +25,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * merging a handful of blobs. Each update costs one scan of the NEW
   * batch only — O(batch + store), never O(history).
   *
-  * Store updates use the same crash-safe swap as
-  * [[graft.sources.Tables.compact]] (write tmp → move live aside →
-  * promote → drop old): a crash at any point leaves a complete store on
-  * disk. Single-maintainer (one writer), like every incremental-view
-  * maintainer.
+  * The store is a manifest log ([[graft.operators.FilesetLog]]): each
+  * merge writes the re-merged rows as a new fileset under
+  * `<store>/sketch/` and publishes them as the next version, so a crash
+  * before the publish leaves the last committed version as it was (plus
+  * orphan files the next merge's vacuum removes). A merge keeps the last
+  * two versions. A store written before the log (a plain parquet
+  * directory) reads as the version before the first commit. Single
+  * maintainer (one writer), like every incremental-view maintainer.
   */
 object SketchRollup {
 
   /** Merge one arrival batch (must carry `day` and `user_id`) into the
     * store at `storePath`. Reads the store (KB-sized), unions the
-    * batch's partial sketches, re-merges per day, swaps.
+    * batch's partial sketches, re-merges per day, commits.
     */
   def mergeInto(spark: SparkSession, batch: DataFrame, storePath: String): Unit =
     mergeKeyedInto(spark, batch, Seq("day"), "user_id", storePath)
@@ -42,7 +47,7 @@ object SketchRollup {
     * `valueCol` per distinct `keyCols` tuple (e.g. (cohort_day,
     * day_offset) for a retention triangle —
     * [[graft.operators.EventAnalytics.cohortRetentionFromSketches]]).
-    * Same crash-safe swap, same mergeability contract: the final store
+    * Same commit, same mergeability contract: the final store
     * is the same whether the activity arrived in 1 batch or 1000.
     */
   def mergeKeyedInto(spark: SparkSession, batch: DataFrame,
@@ -93,38 +98,51 @@ object SketchRollup {
   }
 
   /** Shared store-update shape: union the incoming per-day partials with
-    * the live store (when one exists), re-merge via `remerge`, then
-    * crash-safe swap (write tmp → move live aside → promote → drop old —
-    * a crash at any point leaves a complete store on disk).
+    * the current store (when one exists), re-merge via `remerge`, write
+    * the result as a new fileset and publish it as the next version.
     */
   private def mergeStore(spark: SparkSession, incoming: DataFrame,
       storePath: String)(remerge: DataFrame => DataFrame): Unit = {
-    val live = new Path(storePath)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val merged =
-      if (!fs.exists(live)) incoming
-      else remerge(spark.read.parquet(storePath).unionByName(incoming))
-    val tmp = new Path(storePath + "__tmp")
-    val old = new Path(storePath + "__old")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(old, true)
-    if (fs.exists(live) && !fs.rename(live, old))
-      throw new java.io.IOException(s"sketch store: cannot move $live aside")
-    if (!fs.rename(tmp, live)) {
-      if (fs.exists(old) && !fs.rename(old, live))
-        throw new java.io.IOException(
-          s"sketch store: cannot promote $tmp AND rollback failed — " +
-            s"original intact at $old, restore manually")
-      throw new java.io.IOException(s"sketch store: cannot promote $tmp (rolled back)")
-    }
-    fs.delete(old, true)
+    val cur = FilesetLog.current(spark, storePath)
+    val merged = rows(spark, storePath, cur).fold(incoming)(s => remerge(s.unionByName(incoming)))
+    val v = cur.getOrElse(0L) + 1
+    val files = FilesetLog.writeFileset(merged.coalesce(1),
+      FilesetLog.fileset(storePath, SketchDir, v))
+    FilesetLog.commit(spark, storePath, v, files.map(FilesetLog.Entry(SketchDir, None, _)))
+    FilesetLog.vacuum(spark, storePath, Seq(SketchDir), keepLast = 2, graceMs = 0L)
   }
+
+  private val SketchDir = "sketch"
+
+  /** The rows of committed version `v`; without one, the parquet files
+    * directly under `storePath` (a store written before it had a log).
+    * Files under `sketch/` that no version lists (a merge stopped before
+    * its publish) are never rows. None when there are no files.
+    */
+  private def rows(spark: SparkSession, storePath: String, v: Option[Long]): Option[DataFrame] = {
+    val files = v match {
+      case Some(n) => FilesetLog.entries(spark, storePath, n).map(_.file)
+      case None =>
+        val f = FilesetLog.fs(spark, storePath)
+        val root = new Path(storePath)
+        if (!f.exists(root)) Nil
+        else f.listStatus(root).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map(_.getPath.toString).sorted
+    }
+    Option.when(files.nonEmpty)(FilesetLog.read(spark, files))
+  }
+
+  /** The store's rows: the last committed version (or a plain parquet
+    * store written before the log). Throws if there is no store. */
+  def read(spark: SparkSession, storePath: String): DataFrame =
+    rows(spark, storePath, FilesetLog.current(spark, storePath)).getOrElse(
+      throw new IllegalArgumentException(s"no sketch store under $storePath"))
 
   /** Read the store and answer per-day estimates plus the merged-range
     * row — the serving query: merges persisted blobs, no raw scan.
     */
   def serve(spark: SparkSession, storePath: String): DataFrame = {
-    val sk = spark.read.parquet(storePath)
+    val sk = read(spark, storePath)
     val perDay = sk.select(col("day"), col("n_events"),
       hll_sketch_estimate(col("sk")).as("est_users"))
     val all = sk.agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_users"),
@@ -135,11 +153,11 @@ object SketchRollup {
 
   /** Keep the store current from a file-arrival stream: every micro-batch
     * merges into the store via foreachBatch — exactly-once per batch is
-    * inherited from the store swap being idempotent-at-rest plus Spark's
+    * inherited from the store commit being atomic plus Spark's
     * checkpointed batch IDs (a replayed batch re-merges the same rows —
     * HLL union is NOT idempotent per duplicate insert, but replay only
-    * happens when the previous attempt failed BEFORE the swap promoted,
-    * so the store never double-counts a promoted batch).
+    * happens when the previous attempt failed BEFORE its publish, so the
+    * store never double-counts a committed batch).
     */
   def maintainStream(spark: SparkSession, eventsDir: String,
       schema: org.apache.spark.sql.types.StructType,

@@ -118,6 +118,45 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("LSH band keys: the cast form equals the per-element transform form and generates code") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import graft.functions.HashFunctions
+    val (bands, rows) = (4, 3)
+    // the form band keys had before: a per-element cast inside transform
+    def reference(sig: org.apache.spark.sql.Column) =
+      array((0 until bands).map { b =>
+        struct(lit(b).as("band"), xxhash64(lit(b), concat_ws(",",
+          transform(slice(sig, b * rows + 1, rows), _.cast("string")))).as("key"))
+      }: _*)
+    val value = Gen.frequency(
+      8 -> Gen.chooseNum(Long.MinValue, Long.MaxValue),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, -1L, 0L))
+    val sigs = sample(Gen.listOfN(bands * rows, value), 300, 6006L)
+    val random = sigs.toDF("sig")
+    // the signature minhashSignature gives an empty shingle set
+    val empty = Seq(Seq.empty[String]).toDF("sh")
+      .select(GraftFunctions.minhashSignature(col("sh"), bands * rows).as("sig"))
+    // the exchange keeps the projections out of the optimizer's
+    // local-relation folding, so they run as planned
+    val all = random.unionByName(empty).repartition(2)
+    val both = all.select(HashFunctions.lshBandKeys(col("sig"), bands, rows).as("k"),
+      reference(col("sig")).as("r"))
+    val differing = both.filter(col("k") =!= col("r")).count()
+    assert(all.count() == 301 && differing == 0, s"$differing rows differ")
+    def fallbacks(df: org.apache.spark.sql.DataFrame) = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      plan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case e: CodegenFallback => e.prettyName })
+    }
+    assert(fallbacks(all.select(reference(col("sig")))).nonEmpty,
+      "the scan must see the reference form's interpreted lambda")
+    val got = fallbacks(all.select(HashFunctions.lshBandKeys(col("sig"), bands, rows)))
+    assert(got.isEmpty, s"band keys run interpreted: $got")
+  }
+
   test("simhash64 is order-invariant and identical inputs collide at hamming 0") {
     val tok = Gen.oneOf("w1", "w2", "w3", "w4", "w5")
     val arr = Gen.chooseNum(1, 12).flatMap(k => Gen.listOfN(k, tok))

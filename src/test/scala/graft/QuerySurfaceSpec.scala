@@ -468,6 +468,24 @@ class TableMaintenanceSpec extends AnyFunSuite {
     assert(!new java.io.File(dir + "__old").exists())
   }
 
+  test("compact recovers a swap that crashed between its two renames") {
+    val dir = TestSpark.scratch("compact_crashed")
+    val o = Tables.load(spark, TestSpark.sf, "orders")
+    o.repartition(5).write.mode("overwrite").parquet(dir)
+    val original = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    // the state a crash after `dir -> dir__old` leaves: no live dir, the
+    // original aside, and a compacted copy that was never promoted
+    val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    f.delete(new org.apache.hadoop.fs.Path(dir + "__old"), true)
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + "__old")))
+    o.limit(3).write.mode("overwrite").parquet(dir + "__compact_tmp")
+    Tables.compact(spark, dir, 2)
+    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == original)
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 2)
+    assert(!new java.io.File(dir + "__old").exists())
+    assert(!new java.io.File(dir + "__compact_tmp").exists())
+  }
+
   test("avro round-trips through open (Spark 4 bundles the avro source)") {
     val dir = TestSpark.scratch("avro_table")
     val r = Tables.load(spark, TestSpark.sf, "region")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.SnapshotTable
+import graft.operators.{FilesetLog, SnapshotTable}
 
 /** The index/CDC/materialized-view half of the snapshot-table suite —
   * split from [[SnapshotTableSpec]] so the two longest suites run in
@@ -216,16 +216,16 @@ class SnapshotTableIndexCdcMvSpec extends AnyFunSuite {
     // cost: a COLD resolution bisects — ≤ 1 (oldest-retained header probe)
     // + ceil(log2(16)) = 5 bounded header reads, never one per version
     // (the old linear walk opened all 16 manifests in full)
-    SnapshotTable.clearInstantCache()
-    val r0 = SnapshotTable.headerReads.get()
+    FilesetLog.clearFirstLineCache()
+    val r0 = FilesetLog.headerReads.get()
     assert(SnapshotTable.versionAsOf(spark, dir, instants(9L)).contains(9L))
-    val cold = SnapshotTable.headerReads.get() - r0
+    val cold = FilesetLog.headerReads.get() - r0
     assert(cold <= 6, s"bisection over 16 versions must need ≤ 6 header reads, got $cold")
     // WARM: repeating the resolution touches the same manifests — the
     // instant cache answers every probe, zero reads
-    val r1 = SnapshotTable.headerReads.get()
+    val r1 = FilesetLog.headerReads.get()
     assert(SnapshotTable.versionAsOf(spark, dir, instants(9L)).contains(9L))
-    assert(SnapshotTable.headerReads.get() == r1,
+    assert(FilesetLog.headerReads.get() == r1,
       "a repeat resolution must be served from the instant cache")
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.SnapshotTable
+import graft.operators.{FilesetLog, SnapshotTable}
 import graft.TestSpark.jobsDuring
 
 class SnapshotTableSpec extends AnyFunSuite {
@@ -789,11 +789,11 @@ class SnapshotTableSpec extends AnyFunSuite {
     val dir = freshDir("snap-manifest-reads")
     SnapshotTable.create(spark,
       mkBase(1000).repartitionByRange(4, col("k")), dir)
-    SnapshotTable.clearManifestLinesCache()
+    FilesetLog.clearManifestCache()
     val ch = Seq((5L, "x", 1L, false)).toDF("k", "payload", "commit_v", "_deleted")
-    val r0 = SnapshotTable.manifestReads.get()
+    val r0 = FilesetLog.manifestReads.get()
     SnapshotTable.upsert(spark, dir, ch, "k", "commit_v", "payload")
-    val reads = SnapshotTable.manifestReads.get() - r0
+    val reads = FilesetLog.manifestReads.get() - r0
     // one read of v1's manifest (files + schema + dropped + stats all
     // come from the memoized lines) — the commit itself reads nothing
     assert(reads <= 1L,

@@ -10,7 +10,7 @@ class SourceGuardSpec extends AnyFunSuite {
     * `code`, comments stripped first.
     */
   private def calls(code: String, marker: String): Seq[String] = {
-    val bare = code.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val bare = uncommented(code)
     Iterator.iterate(bare.indexOf(marker))(i => bare.indexOf(marker, i + 1))
       .takeWhile(_ >= 0).map { i =>
         val start = i + marker.length
@@ -26,6 +26,10 @@ class SourceGuardSpec extends AnyFunSuite {
         bare.substring(start, j - 1)
       }.toSeq
   }
+
+  /** `code` with its comments removed. */
+  private def uncommented(code: String): String =
+    code.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
 
   private def openCalls(code: String): Seq[String] = calls(code, "ParquetFileReader.open(")
 
@@ -178,6 +182,50 @@ class SourceGuardSpec extends AnyFunSuite {
     val offenders = calls(code, "parquet(").filterNot(allowed.contains)
     assert(offenders.isEmpty, offenders.map(a => s"parquet($a)").mkString("\n"))
     assert(calls(code, "parquetRelation(").length == 1, "readFiles builds every snapshot relation")
+  }
+
+  /** The markers of the manifest layout found in `code`, outside comments. */
+  private def manifestLayout(code: String): Seq[String] =
+    Seq("ManifestRe", "manifest/", "v%05d.manifest").filter(uncommented(code).contains)
+
+  test("the scan finds the manifest layout in code, not in comments") {
+    val found = manifestLayout(
+      """private val ManifestRe = "x".r
+        |// the manifest/ dir and v%05d.manifest in a comment are not code
+        |def p(v: Long) = new Path(s"$dir/manifest/" + f"v$v%05d.manifest")""".stripMargin)
+    assert(found == Seq("ManifestRe", "manifest/", "v%05d.manifest"), found)
+    assert(manifestLayout("/* ManifestRe, manifest/ */ val a = 1").isEmpty)
+  }
+
+  test("only the manifest log lays out, lists and names manifests in src/main") {
+    // FilesetLog is the one manifest log: a store that spells the layout
+    // itself grows its own listing, read loop or vacuum beside it
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val offenders = scalaFiles(root).filter(_.getName != "FilesetLog.scala").flatMap { f =>
+      manifestLayout(source(f)).map(m => s"${f.getPath}: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the scan finds rename calls, not renames in comments") {
+    val found = calls(
+      """fs.rename(tmp, live)
+        |// fs.rename(live, old) in a comment is not a call
+        |if (!f.rename(new Path(a), new Path(b))) throw e""".stripMargin, ".rename(")
+    assert(found == Seq("tmp, live", "new Path(a), new Path(b)"), found)
+  }
+
+  test("src/main renames only to publish a manifest, place an index or swap Tables.compact") {
+    // a store that swaps directories by rename can lose its only committed
+    // copy between the renames; stores commit through the manifest log
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val allowed = Set("ManifestCommit.scala", "SkippingIndex.scala", "SnapshotTable.scala",
+      "Tables.scala")
+    val offenders = scalaFiles(root).filterNot(f => allowed.contains(f.getName))
+      .filter(f => calls(source(f), ".rename(").nonEmpty).map(_.getPath)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   /** Files under `src` that contain `text`, with how often. */

@@ -1,8 +1,9 @@
 #!/bin/bash
 # Run a graft main class directly against compiled classes + Spark jars.
-# Usage: tools/run.sh graft.Verify /root/testdata/sf0.001 /root/repo/target/verify_out
+# Usage: tools/run.sh graft.Verify <sfDir> <outDir>
+# Runs the classes of the checkout this script lives in.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
